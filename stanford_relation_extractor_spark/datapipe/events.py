@@ -43,11 +43,12 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     applyInPandasWithState/session_window.
     """
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    epoch = F.col("ts").cast("timestamp").cast("long")
+    # microseconds, not whole seconds: a 1,800.5 s gap exceeds 30 minutes
+    epoch = F.unix_micros(F.col("ts").cast("timestamp"))
     gap = epoch - F.lag(epoch).over(w)
     with_breaks = events.withColumn(
         "is_new",
-        F.when(gap.isNull() | (gap > gap_minutes * 60), F.lit(1)).otherwise(F.lit(0)),
+        F.when(gap.isNull() | (gap > gap_minutes * 60_000_000), F.lit(1)).otherwise(F.lit(0)),
     )
     with_sessions = with_breaks.withColumn(
         "session_idx", F.sum("is_new").over(w.rowsBetween(Window.unboundedPreceding, 0)).cast("int")

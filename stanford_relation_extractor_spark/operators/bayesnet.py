@@ -49,7 +49,8 @@ reference's own `BayesNetTest.java:139-244` asserts — the two agree;
 our tests re-assert those cases against this solver.
 
 Spark shape: grounding + solving run per entity-graph cluster inside
-ONE ``applyInPandas`` (Arrow-batched); clusters come from a
+ONE ``map_groups_in_pandas`` pass (one shuffle on the cluster id, then
+every cluster of an Arrow batch solved inside it); clusters come from a
 connected-components pass over entity<->entity-typed-slot edges, so the
 stage scales with the number of clusters, not their count x rules. The
 gazetteer world-knowledge table rides along as a broadcast dict.
@@ -463,7 +464,7 @@ def infer_map_triples(
     the input store).
 
     Scale: clusters are the unit of work — thousands of independent
-    small nets, one ``applyInPandas`` over the cluster id. The
+    small nets, one ``map_groups_in_pandas`` pass over the cluster id. The
     gazetteer broadcasts as plain Python (bounded: a dimension table).
     """
     from .canonicalize import connected_components

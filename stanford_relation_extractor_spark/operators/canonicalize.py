@@ -751,30 +751,3 @@ def same_entity_edges(
             yield pdf[pd.Series(mask, index=pdf.index)][["src", "dst"]]
 
     return pairs.mapInPandas(judge, schema="src string, dst string")
-
-
-def canonicalize_entities(triples: DataFrame, entities: DataFrame | None = None) -> DataFrame:
-    """Full stage-5: blocking pairs -> cascade edges -> connected
-    components -> rewrite entity_name to the component representative."""
-    ents = (
-        entities
-        if entities is not None
-        else triples.select("entity_name", "entity_type").distinct()
-    )
-    comps = connected_components(same_entity_edges(ents))
-    return rewrite_with_components(triples, comps)
-
-
-def rewrite_with_components(
-    triples: DataFrame, components: DataFrame, col: str = "entity_name"
-) -> DataFrame:
-    """Replace ``col`` with its component representative (left join —
-    nodes outside the merge graph keep their name)."""
-    comp = components.select(
-        F.col("node").alias("_n"), F.col("component").alias("_c")
-    )
-    return (
-        triples.join(comp, triples[col] == F.col("_n"), "left")
-        .withColumn(col, F.coalesce(F.col("_c"), F.col(col)))
-        .drop("_n", "_c")
-    )

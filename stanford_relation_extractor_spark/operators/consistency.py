@@ -10,7 +10,8 @@ early:
   — broadcast join against the relation-schema dimension.
 * P7  FilterVeryLowProbabilitySlots (`:139-147`, threshold
   `common/Props.java:480`) — score >= 0.5.
-* O2  NoDuplicates (`:655-670`) — exact triple dedup.
+* O2  NoDuplicates (`:655-670`) — holds by construction: the ensemble
+  emits one row per triple key.
 * W2  single-value top-1 (`:742-756`) — cardinality-gated
   row_number window.
 * W4  deterministic tie-breaking (`common/KBPSlotFill.java:69-91`) —
@@ -73,18 +74,6 @@ def threshold_filter(
         F.create_map(*flat).getItem(F.col("relation")), F.lit(threshold)
     )
     return triples.filter(F.col("score") >= floor)
-
-
-def dedup_exact(triples: DataFrame) -> DataFrame:
-    """O2: one row per (entity, relation, slot) — keep deterministic best."""
-    w = Window.partitionBy("entity_name", "entity_type", "relation", "slot_value").orderBy(
-        F.desc("score"), F.asc("conv_id"), F.asc("turn_idx"), F.asc("sent_idx")
-    )
-    return (
-        triples.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
 
 
 def tiebreak_order() -> list:
@@ -151,62 +140,6 @@ def remove_low_weight_competitors(triples: DataFrame, floor: float = 0.01) -> Da
     )
 
 
-def respect_incompatibilities(triples: DataFrame, spark: SparkSession) -> DataFrame:
-    """O6 RespectDeclaredIncompatibilities (`:766-791`): among fills
-    sharing (entity, slotValue), a lower-ranked fill whose relation does
-    not plausibly co-occur with a higher-ranked one is dropped.
-
-    Rank-aware self-join on the tiny per-(entity, slot) groups + a
-    broadcast incompatible-pair table (RelationType.java:228-230 matrix)."""
-    incompat = spark.createDataFrame(
-        list(incompatible_pairs()), "inc_hi string, inc_lo string"
-    )
-    had_cardinality = "cardinality" in triples.columns
-    if not had_cardinality:
-        card = F.broadcast(relation_schema_df(spark).select("relation", "cardinality"))
-        triples = triples.join(card, "relation", "left")
-    w = Window.partitionBy("entity_name", "entity_type", "slot_value").orderBy(
-        *tiebreak_order()
-    )
-    ranked = triples.withColumn("_rk", F.row_number().over(w))
-    # The blocking ("higher") side is restricted to fills that survive
-    # their own relation's cardinality top-1: in the reference's greedy
-    # loop a fill rejected for cardinality is never in the accepted set,
-    # so it cannot block others (exact for conflict chains <= 2; see
-    # greedy_consistency for the per-entity exact form).
-    w_rel = Window.partitionBy("entity_name", "entity_type", "relation").orderBy(
-        *tiebreak_order()
-    )
-    ranked = ranked.withColumn("_rel_rn", F.row_number().over(w_rel))
-    hi = ranked.filter(
-        (F.col("cardinality") == "LIST") | (F.col("_rel_rn") == 1)
-    ).select(
-        F.col("entity_name").alias("e"), F.col("entity_type").alias("et"),
-        F.col("slot_value").alias("s"), F.col("relation").alias("rel_hi"),
-        F.col("_rk").alias("rk_hi"),
-    )
-    conflicts = (
-        ranked.join(
-            hi,
-            (F.col("entity_name") == F.col("e"))
-            & (F.col("entity_type") == F.col("et"))
-            & (F.col("slot_value") == F.col("s"))
-            & (F.col("rk_hi") < F.col("_rk")),
-        )
-        .join(
-            F.broadcast(incompat),
-            (F.col("rel_hi") == F.col("inc_hi")) & (F.col("relation") == F.col("inc_lo")),
-            "left_semi",
-        )
-        .select("entity_name", "entity_type", "relation", "slot_value")
-        .distinct()
-    )
-    out = ranked.join(
-        conflicts, ["entity_name", "entity_type", "relation", "slot_value"], "left_anti"
-    ).drop("_rk", "_rel_rn")
-    return out if had_cardinality else out.drop("cardinality")
-
-
 def respect_incompatibilities_window(triples: DataFrame) -> DataFrame:
     """O6 as a pure window pass (no self-join, no plan branching).
 
@@ -214,8 +147,8 @@ def respect_incompatibilities_window(triples: DataFrame) -> DataFrame:
     cardinality-surviving relations via a windowed collect_list and
     drops itself when any of them is declared incompatible — the
     incompatibility matrix rides the plan as a map literal (41 keys).
-    Same semantics as ``respect_incompatibilities``; one window instead
-    of a join, so the whole consistency tail shares one exchange.
+    One window instead of a self-join, so the whole consistency tail
+    shares one exchange.
     """
     from ..ontology import RELATION_BY_NAME
 
@@ -280,21 +213,6 @@ def mitigate_loc_of_death_window(triples: DataFrame) -> DataFrame:
 
 
 LOC_OF_DEATH = ("per:city_of_death", "per:country_of_death", "per:stateorprovince_of_death")
-
-
-def mitigate_loc_of_death(triples: DataFrame) -> DataFrame:
-    """MitigateLocOfDeath hold-one-out (`:793-820`): keep LOC_of_death
-    only when a per:date_of_death fill survives for the same entity."""
-    has_date = (
-        triples.filter(F.col("relation") == "per:date_of_death")
-        .select("entity_name", "entity_type")
-        .distinct()
-    )
-    locs = F.col("relation").isin(*LOC_OF_DEATH)
-    kept_locs = triples.filter(locs).join(
-        has_date, ["entity_name", "entity_type"], "left_semi"
-    )
-    return triples.filter(~locs).unionByName(kept_locs)
 
 
 def enforce_cardinality(triples: DataFrame) -> DataFrame:
@@ -529,7 +447,6 @@ def apply_consistency(
     triples: DataFrame,
     spark: SparkSession,
     threshold: float = GLOBAL_SCORE_THRESHOLD,
-    assume_unique: bool = False,
 ) -> DataFrame:
     """The full stage-6 battery, reference order: unary filters first
     (cheap, prunes early), then pairwise/windowed checks, then the
@@ -539,16 +456,15 @@ def apply_consistency(
     every window/join key downstream is a superset of that prefix, so
     Catalyst's EnsureRequirements reuses the exchange for the collapse /
     cardinality / incompatibility / mitigation passes instead of
-    re-shuffling per operator. ``assume_unique=True`` (the ensemble
-    output is already unique on the triple key) skips the O2 pass.
+    re-shuffling per operator.
+
+    The input is ensemble output: already unique on the triple key (so
+    no O2 pass) and sanity-gated at vote time
+    (``extractors.slot_sanity_ok`` — equivalent to ``sanity_check`` and
+    immune to Catalyst pushing an expensive predicate below the
+    aggregation onto the full vote stream).
     """
     out = type_check(triples, spark)
-    if not assume_unique:
-        # full SQL-side sanity battery; the hot pipeline instead gates
-        # sanity at vote time (extractors.slot_sanity_ok — equivalent,
-        # and immune to Catalyst pushing an expensive predicate below
-        # the aggregation onto the full vote stream)
-        out = sanity_check(out)
     # post-canonicalization self-fill check stays SQL-side (cheap)
     out = out.filter(F.col("entity_name") != F.col("slot_value"))
     # P8/P9 guideline hygiene — unary predicates, corpus-active via the
@@ -561,8 +477,6 @@ def apply_consistency(
     # adaptive (cluster parallelism), not a local[32] constant.
     n_parts = triples.sparkSession.sparkContext.defaultParallelism
     out = out.repartition(n_parts, F.col("entity_name"), F.col("entity_type"))
-    if not assume_unique:
-        out = dedup_exact(out)
     out = collapse_employee_member(out)
     out = remove_low_weight_competitors(out)
     # O6 runs BEFORE the cardinality top-1 so that, like the reference's

@@ -66,40 +66,17 @@ def _vote_key_expr() -> F.Column:
     )
 
 
-def pre_aggregate_votes(votes: DataFrame) -> DataFrame:
-    """Phase 1 of the two-phase ensemble: collapse the raw vote stream
-    to one row per (RAW triple key, extractor) carrying that extractor's
-    max score and min vote key.
-
-    max and min are associative, so re-aggregating this table after the
-    canonical rewrite is bit-identical to aggregating the rewritten
-    stream — but the rewrite joins then touch |distinct raw triples|
-    rows instead of the full stream, and THIS scan (the pipeline's
-    biggest) has no dependency on the canon map, so it can run
-    concurrently with the canonicalization window."""
-    keyed = votes.withColumn("_vote_key", _vote_key_expr())
-    return keyed.groupBy(*GROUP_KEY, "extractor").agg(
-        F.max("score").alias("score"), F.min("_vote_key").alias("_vote_key")
-    )
-
-
 def combine_votes(
     votes: DataFrame,
     n_extractors: int | None = None,
     combination: str = AGREE_MOST,
     round_digits: int = 6,
     extractors: tuple[str, ...] = EXTRACTORS,
-    pre_aggregated: bool = False,
 ) -> DataFrame:
-    """votes -> gated, noisy-or-scored candidate triples with provenance.
-
-    With ``pre_aggregated`` the input is ``pre_aggregate_votes`` output
-    (already carrying ``_vote_key``); the same conditional aggregation
-    recombines the per-extractor partials (max of maxes, min of mins).
-    """
+    """votes -> gated, noisy-or-scored candidate triples with provenance."""
     n_ext = n_extractors if n_extractors is not None else len(extractors)
 
-    keyed = votes if pre_aggregated else votes.withColumn("_vote_key", _vote_key_expr())
+    keyed = votes.withColumn("_vote_key", _vote_key_expr())
     aggs = []
     for i, ex in enumerate(extractors):
         cond = F.col("extractor") == ex

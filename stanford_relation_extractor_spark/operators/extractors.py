@@ -434,114 +434,75 @@ def votes_for_sentence(
 
 
 def extract_votes(
-    sentences: DataFrame,
+    source: DataFrame,
+    config: list[tuple[str, str]] | None = None,
     with_statistical: bool = True,
     resolve_pronouns: bool = True,
 ) -> DataFrame:
-    """sentences (stage 1 output) -> long votes table.
+    """Sentences or transcripts -> long votes table, in ONE Arrow pass.
 
-    With ``resolve_pronouns`` the sentences are clustered per
-    conversation (one repartition + in-partition sort on
-    (conv_id, turn_idx, sent_idx)) so the Arrow pass can carry the J2
+    A ``mentions`` column in ``source`` (stage-1 sentences, such as the
+    resumable pipeline's stored table) is read as is. Otherwise
+    ``source`` is transcripts and the pass splits and detects mentions
+    itself with the detector ``config`` — sentence split, detection, J2
+    antecedent resolution, pairing and all four extractors fused,
+    skipping the Arrow round trip of the mentions column (the in-session
+    hot path). The statistical member rides the same pass.
+
+    ``resolve_pronouns`` clusters the input per conversation (one
+    repartition + in-partition sort) so the pass can carry the
     antecedent state across a conversation's turns; without it the pass
-    is shuffle-free and pronoun mentions are dropped.
+    is shuffle-free and pronoun mentions drop. At 10^12-turn scale a
+    single giant conversation would bottleneck its partition; shard such
+    conversations upstream on (conv_id, turn_idx div B) — antecedents
+    then reset per B-turn block, the per-document propagation scope the
+    reference uses (PostIRAnnotator is per-document too).
     """
-    src = sentences
-    if resolve_pronouns:
-        n_parts = 2 * sentences.sparkSession.sparkContext.defaultParallelism
-        src = sentences.repartition(n_parts, "conv_id").sortWithinPartitions(
-            "conv_id", "turn_idx", "sent_idx"
-        )
+    from .mentions import sentence_mentions
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pbank = _compiled_pattern_bank()
-        tbank = _compiled_trigger_bank()
-        stat = _stat_context() if with_statistical else None
-        state = AntecedentState()
-        for pdf in batches:
-            rows: list[tuple[Any, ...]] = []
-            for conv_id, turn_idx, sent_idx, sent, mentions in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["sent_idx"],
-                pdf["sent_text"], pdf["mentions"],
-            ):
-                if mentions is None:
-                    continue
-                mlist = [dict(m) for m in mentions]
-                if resolve_pronouns:
-                    mlist = state.resolve(conv_id, mlist)
-                if len(mlist) < 2:
-                    continue
-                for vote in votes_for_sentence(sent, mlist, pbank, tbank, stat):
-                    (en, et, eb, ee, sv, sn, sb, se, rel, ex, sc) = vote
-                    rows.append(
-                        (conv_id, turn_idx, sent_idx, en, et, eb, ee, sv, sn, sb, se, rel, ex, sc)
-                    )
-            yield pd.DataFrame(rows, columns=VOTE_COLUMNS)
-
-    return src.mapInPandas(run, schema=VOTES_SCHEMA)
-
-
-def extract_votes_fused(
-    transcripts: DataFrame,
-    config: list[tuple[str, str]],
-    with_statistical: bool = True,
-    resolve_pronouns: bool = True,
-) -> DataFrame:
-    """transcripts -> votes in ONE Arrow pass (sentence split + mention
-    detection + J2 antecedent resolution + pairing + all four extractors
-    fused).
-
-    Functionally identical to ``detect_mentions |> extract_votes`` but
-    skips the intermediate Arrow serialization of the mentions column —
-    the hot path for the materialized pipeline and the benchmark. The
-    statistical member rides the same pass (no extra stage or scan).
-
-    ``resolve_pronouns`` costs exactly one shuffle of the narrow
-    (conv_id, turn_idx, text) projection — the conversation clustering
-    the antecedent state needs. At 10^12-turn scale a single giant
-    conversation would bottleneck its partition; shard such conversations
-    upstream on (conv_id, turn_idx div B) — antecedents then reset per
-    B-turn block, the per-document propagation scope the reference uses
-    (PostIRAnnotator is per-document too).
-    """
-    import re as _re
-
-    from .mentions import MAX_SENT_TOKENS, detect, split_sentences
-
-    src = transcripts.select("conv_id", "turn_idx", "text")
+    stored = "mentions" in source.columns
+    if stored:
+        keys = ("conv_id", "turn_idx", "sent_idx")
+        src = source.select(*keys, "sent_text", "mentions")
+    else:
+        keys = ("conv_id", "turn_idx")
+        src = source.select(*keys, "text")
     if resolve_pronouns:
         # EXPLICIT partition count: a bare repartition("conv_id") lets
         # AQE coalesce the exchange to ~64MB partitions — sized for
         # JVM-cheap operators, catastrophically coarse for a Python
         # regex stage (measured: extraction pinned at ~8-wide no matter
         # how many executors). 2x total cores keeps every slot fed.
-        n_parts = 2 * transcripts.sparkSession.sparkContext.defaultParallelism
-        src = src.repartition(n_parts, "conv_id").sortWithinPartitions(
-            "conv_id", "turn_idx"
-        )
+        n_parts = 2 * source.sparkSession.sparkContext.defaultParallelism
+        src = src.repartition(n_parts, "conv_id").sortWithinPartitions(*keys)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        matchers = [(ner, _re.compile(rx)) for ner, rx in config]
+        matchers = None if stored else [(ner, re.compile(rx)) for ner, rx in config]
         pbank = _compiled_pattern_bank()
         tbank = _compiled_trigger_bank()
         stat = _stat_context() if with_statistical else None
         state = AntecedentState()
         for pdf in batches:
+            if stored:
+                sentences = zip(
+                    pdf["conv_id"], pdf["turn_idx"], pdf["sent_idx"],
+                    pdf["sent_text"], pdf["mentions"],
+                )
+            else:
+                sentences = sentence_mentions(pdf, keys, matchers)
             rows: list[tuple[Any, ...]] = []
-            for conv_id, turn_idx, text in zip(pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
-                for sent_idx, sent in enumerate(split_sentences(text)):
-                    if sent.count(" ") >= MAX_SENT_TOKENS:
-                        continue
-                    mentions = detect(sent, matchers)
-                    if resolve_pronouns:
-                        mentions = state.resolve(conv_id, mentions)
-                    if len(mentions) < 2:
-                        continue
-                    for vote in votes_for_sentence(sent, mentions, pbank, tbank, stat):
-                        (en, et, eb, ee, sv, sn, sb, se, rel, ex, sc) = vote
-                        rows.append(
-                            (conv_id, turn_idx, sent_idx, en, et, eb, ee, sv, sn, sb, se, rel, ex, sc)
-                        )
+            for conv_id, turn_idx, sent_idx, sent, mentions in sentences:
+                if mentions is None:
+                    continue
+                if stored:
+                    mentions = [dict(m) for m in mentions]
+                if resolve_pronouns:
+                    mentions = state.resolve(conv_id, mentions)
+                if len(mentions) < 2:
+                    continue
+                head = (conv_id, turn_idx, sent_idx)
+                for vote in votes_for_sentence(sent, mentions, pbank, tbank, stat):
+                    rows.append(head + vote)
             yield pd.DataFrame(rows, columns=VOTE_COLUMNS)
 
     return src.mapInPandas(run, schema=VOTES_SCHEMA)
@@ -560,39 +521,35 @@ def extract_pair_features(
     feature template the statistical inference path uses, emitted as a
     long (mention key, feature) table for the distributed trainer
     (statistical.miml_train / train_weights_df)."""
-    import re as _re
-
-    from .mentions import MAX_SENT_TOKENS, detect, split_sentences
+    from .mentions import sentence_mentions
     from .statistical import pair_feature_list
 
+    keys = ("conv_id", "turn_idx")
+
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        matchers = [(ner, _re.compile(rx)) for ner, rx in config]
+        matchers = [(ner, re.compile(rx)) for ner, rx in config]
         for pdf in batches:
             rows: list[tuple[Any, ...]] = []
-            for conv_id, turn_idx, text in zip(pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
-                for sent_idx, sent in enumerate(split_sentences(text)):
-                    if sent.count(" ") >= MAX_SENT_TOKENS:
+            for conv_id, turn_idx, sent_idx, sent, mentions in sentence_mentions(
+                pdf, keys, matchers
+            ):
+                if len(mentions) < 2:
+                    continue
+                for ent in mentions:
+                    if ent["ner"] not in ENTITY_TYPES:
                         continue
-                    mentions = detect(sent, matchers)
-                    if len(mentions) < 2:
-                        continue
-                    for ent in mentions:
-                        if ent["ner"] not in ENTITY_TYPES:
+                    for slot in mentions:
+                        if slot is ent or not compatible_relations(ent["ner"], slot["ner"]):
                             continue
-                        for slot in mentions:
-                            if slot is ent or not compatible_relations(ent["ner"], slot["ner"]):
-                                continue
-                            for f in pair_feature_list(sent, mentions, ent, slot):
-                                rows.append(
-                                    (conv_id, turn_idx, sent_idx, ent["surface"],
-                                     ent["ner"], slot["surface"], slot["ner"], f)
-                                )
+                        for f in pair_feature_list(sent, mentions, ent, slot):
+                            rows.append(
+                                (conv_id, turn_idx, sent_idx, ent["surface"],
+                                 ent["ner"], slot["surface"], slot["ner"], f)
+                            )
             yield pd.DataFrame(
                 rows,
                 columns=["conv_id", "turn_idx", "sent_idx", "entity_name",
                          "entity_type", "slot_value", "slot_ner", "feature"],
             )
 
-    return transcripts.select("conv_id", "turn_idx", "text").mapInPandas(
-        run, schema=PAIR_FEATURES_SCHEMA
-    )
+    return transcripts.select(*keys, "text").mapInPandas(run, schema=PAIR_FEATURES_SCHEMA)

@@ -14,9 +14,7 @@ Re-expresses the reference's linker cascade as Spark joins/expressions:
   >= 0.4 AND top-1 >= 1.5 x top-2. Broadcast join against the alias
   dictionary — with a broadcast build side, probe-side skew (hot
   surface forms like country names) costs nothing because no shuffle
-  occurs; `salted_equi_join` is the fallback for dictionaries beyond
-  the broadcast threshold, salting the build side so one hot key
-  spreads over N shuffle partitions.
+  occurs.
 """
 
 from __future__ import annotations
@@ -41,20 +39,6 @@ def nickname_canonical(name: str, nicknames: dict[str, str]) -> Column:
         mapped = F.when(first == nick, F.lit(full)).otherwise(mapped)
     rest = F.expr(f"substring({name}, length(split({name}, ' ')[0]) + 1)")
     return F.concat(mapped, rest)
-
-
-def canonicalize_names(
-    df: DataFrame,
-    cols: list[str],
-    nicknames: dict[str, str],
-    suffixes: tuple[str, ...],
-) -> DataFrame:
-    """Apply J6 + F5 to the given name columns (pure expressions)."""
-    for c in cols:
-        df = df.withColumn(
-            c, strip_corporate_suffix(nickname_canonical(c, nicknames), suffixes)
-        )
-    return df
 
 
 def nickname_join(df: DataFrame, col: str, nick_df: DataFrame) -> DataFrame:
@@ -112,31 +96,3 @@ def wikidict_link(
     return grouped.withColumn(
         "linked", F.when(accept, F.col("_best.canonical"))
     ).drop("_best", "_scores")
-
-
-def salted_equi_join(
-    large: DataFrame,
-    small: DataFrame,
-    large_key: str,
-    small_key: str,
-    n_salt: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-resistant equi-join for build sides beyond broadcast size.
-
-    Probe rows get a deterministic salt from their full row hash; the
-    build side is replicated n_salt times, so one hot key spreads over
-    n_salt shuffle partitions (SURVEY.md §4 skew note).
-    """
-    salted_large = large.withColumn(
-        "_salt", F.pmod(F.hash(*[F.col(c) for c in large.columns]), F.lit(n_salt))
-    )
-    salted_small = small.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salt)]))
-    )
-    out = salted_large.join(
-        salted_small,
-        (F.col(large_key) == F.col(small_key)) & (salted_large["_salt"] == salted_small["_salt"]),
-        how,
-    )
-    return out.drop("_salt")

@@ -79,27 +79,28 @@ def mention_sanity_ok(surface: str, ner: str) -> bool:
     return True
 
 
+def sentence_mentions(
+    pdf: pd.DataFrame, keys: tuple[str, ...], matchers: list[tuple[str, re.Pattern[str]]]
+) -> Iterator[tuple[Any, ...]]:
+    """Stage 1 over one Arrow batch of transcripts: a
+    (*keys, sent_idx, sentence, mentions) row per sentence under the
+    length cap."""
+    for *key, text in zip(*(pdf[k] for k in keys), pdf["text"]):
+        for sent_idx, sent in enumerate(split_sentences(text)):
+            if sent.count(" ") < MAX_SENT_TOKENS:
+                yield (*key, sent_idx, sent, detect(sent, matchers))
+
+
 def detect_mentions(transcripts: DataFrame, config: list[tuple[str, str]]) -> DataFrame:
     """transcripts -> per-sentence rows with detected mention structs."""
+    keys = ("conv_id", "turn_idx", "role")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         matchers = [(ner, re.compile(rx)) for ner, rx in config]
         for pdf in batches:
-            rows: list[tuple[Any, ...]] = []
-            for conv_id, turn_idx, role, text in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["role"], pdf["text"]
-            ):
-                for sent_idx, sent in enumerate(split_sentences(text)):
-                    if sent.count(" ") >= MAX_SENT_TOKENS:
-                        continue
-                    rows.append(
-                        (conv_id, turn_idx, role, sent_idx, sent, detect(sent, matchers))
-                    )
             yield pd.DataFrame(
-                rows,
-                columns=["conv_id", "turn_idx", "role", "sent_idx", "sent_text", "mentions"],
+                list(sentence_mentions(pdf, keys, matchers)),
+                columns=[*keys, "sent_idx", "sent_text", "mentions"],
             )
 
-    return transcripts.select("conv_id", "turn_idx", "role", "text").mapInPandas(
-        run, schema=SENTENCES_SCHEMA
-    )
+    return transcripts.select(*keys, "text").mapInPandas(run, schema=SENTENCES_SCHEMA)

@@ -1,8 +1,9 @@
 """End-to-end extraction pipeline assembly (SURVEY.md §7 stage graph).
 
-Builds the lazy DataFrame DAG; materialization/checkpointing lives in
-sources/sinks.py so each stage boundary can be persisted as an
-idempotent, lineage-stamped table (the reference's Postgres caches, S9).
+The stage graph is defined once (``stage_graph``). ``build_stages``
+materializes it in-session; ``run_pipeline`` persists its stage
+boundaries as idempotent, lineage-stamped tables through
+sources/sinks.py (the reference's Postgres caches, S9).
 
 Stage 4/5 (LINK + CANON) is the reference's flagship entity-merging
 path (`evaluate/GraphConsistencyPostProcessors.java:53-249`): distinct
@@ -16,7 +17,9 @@ stages are built lazily on first access.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -28,7 +31,7 @@ from ..operators.canonicalize import (
 )
 from ..operators.consistency import apply_consistency
 from ..operators.ensemble import AGREE_MOST, combine_votes
-from ..operators.extractors import extract_votes, extract_votes_fused
+from ..operators.extractors import extract_votes
 from ..operators.mentions import detect_mentions
 from ..sources.synthetic import (
     CORP_SUFFIXES,
@@ -134,17 +137,79 @@ class LazyStages(dict):
     access — canonicalization runs Spark actions, so building it at
     graph-construction time would charge every caller for it."""
 
-    def __init__(self, eager: dict, builders: dict[str, Callable[[], DataFrame]]):
-        super().__init__(eager)
-        self._builders = builders
+    def __init__(self) -> None:
+        super().__init__()
+        self.builders: dict[str, Callable[[], DataFrame]] = {}
 
     def __getitem__(self, key):  # noqa: D105
-        if not super().__contains__(key) and key in self._builders:
-            self[key] = self._builders[key]()
+        if not super().__contains__(key) and key in self.builders:
+            self[key] = self.builders[key]()
         return super().__getitem__(key)
 
     def __contains__(self, key):  # noqa: D105
-        return super().__contains__(key) or key in self._builders
+        return super().__contains__(key) or key in self.builders
+
+
+@dataclass(frozen=True)
+class Stage:
+    """One node of the stage graph: ``build`` maps the tables of
+    ``inputs``, in order, to this stage's table."""
+
+    name: str
+    inputs: tuple[str, ...]
+    build: Callable[..., DataFrame]
+
+
+def stage_graph(spark: SparkSession, sf_dir: str, combination: str) -> list[Stage]:
+    """The KG stage graph (SURVEY.md §7), in topological order. Both
+    entry points walk it: ``build_stages`` in-session, ``run_pipeline``
+    through checkpointed tables."""
+
+    @functools.cache
+    def config() -> list[tuple[str, str]]:
+        return detector_config(country_gazetteer(spark, sf_dir))
+
+    return [
+        Stage("transcripts", (), lambda: transcripts_df(spark, sf_dir)),
+        Stage("sentences", ("transcripts",), lambda t: detect_mentions(t, config())),
+        # reads the sentences' mentions column when handed stored
+        # sentences; handed the transcripts, it detects mentions inside
+        # the same Arrow pass
+        Stage("votes", ("sentences",), lambda s: extract_votes(s, config())),
+        Stage("surfaces", ("votes",), vote_surfaces),
+        Stage("canon_map", ("surfaces",), lambda s: build_canon_map(
+            s, alias_dict_df(spark, sf_dir), NICKNAMES, CORP_SUFFIXES
+        )),
+        Stage("linked_votes", ("votes", "canon_map"), rewrite_votes),
+        # single-phase ensemble: the canonical rewrite is two broadcast
+        # hash joins riding the same codegen stage as the aggregation's
+        # map side, so pre-aggregating before the rewrite saves nothing
+        Stage("candidates", ("linked_votes",), lambda v: combine_votes(
+            v, combination=combination
+        )),
+        Stage("alt_names", ("canon_map", "surfaces"), emit_alternate_names),
+        Stage("triples", ("candidates", "alt_names"), lambda c, a: apply_consistency(
+            c.unionByName(a, allowMissingColumns=True), spark
+        )),
+    ]
+
+
+def _walk(
+    graph: list[Stage],
+    reads: dict[str, str],
+    materialize: Callable[[str, Callable[[], DataFrame]], DataFrame],
+) -> LazyStages:
+    """Lazy stage dict over ``graph``. A stage reads ``reads.get(i, i)``
+    for each input ``i``; ``materialize(name, build)`` turns the stage's
+    builder into its table (policy: in-session cuts or stored tables)."""
+    stages = LazyStages()
+    for st in graph:
+
+        def build(st: Stage = st) -> DataFrame:
+            return st.build(*(stages[reads.get(i, i)] for i in st.inputs))
+
+        stages.builders[st.name] = functools.partial(materialize, st.name, build)
+    return stages
 
 
 def build_stages(
@@ -153,73 +218,50 @@ def build_stages(
     combination: str = AGREE_MOST,
     transcripts: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
-    """The full lazy stage graph over the (synthetic) transcripts table."""
-    t = transcripts if transcripts is not None else transcripts_df(spark, sf_dir)
-    config = detector_config(country_gazetteer(spark, sf_dir))
-    sentences = detect_mentions(t, config)
-    # hot path: sentence split + detection + pairing + extractors fused
-    # into one Arrow pass (identical semantics to extract_votes(sentences))
-    votes = extract_votes_fused(t, config)
+    """The stage graph materialized in-session over the (synthetic)
+    transcripts table.
 
-    stages: LazyStages = LazyStages({}, {})
-    builders: dict[str, Callable[[], DataFrame]] = {
-        # one materialization of the extraction scan — the
-        # canonicalization actions AND the ensemble-bound rewrite both
-        # reuse the spooled vote table instead of re-running the Arrow
-        # extraction. The spool is a PARQUET round-trip, not
-        # localCheckpoint: block-manager storage of tens of millions of
-        # deserialized rows bloats the shared local-mode heap and the
-        # following stage pays a GC storm that grows with thread count
-        # (measured: the ensemble's first run at local[32] was 10-20x
-        # slower with checkpoint blocks resident; columnar spool keeps
-        # the heap flat and the re-scan in whole-stage codegen).
-        # The spool keeps the 14 RAW narrow columns — a measured
-        # negative result pinned this (BENCH/BASELINE.md r5):
-        # collapsing the 7 provenance columns into the sortable
-        # _vote_key string BEFORE the spool shrank the schema to 8
-        # columns but grew the parquet bytes 300MB -> 1.1GB at x128
-        # (the high-cardinality concat defeats dictionary encoding)
-        # and made the 4N ensemble tail GC-bound on string decode
-        # (32s -> 103s best). The key is instead computed inside the
-        # ensemble scan's codegen stage (combine_votes) and never
-        # stored.
-        "votes_cut": lambda: _parquet_spool(votes, spark, "votes"),
-        # materialized: the surface set feeds the dictionary-edge,
-        # wikidict, cascade AND alternate-name branches — one tiny cut
-        # beats re-scanning the vote spool per branch
-        "surfaces": lambda: _surfaces_cut(vote_surfaces(stages["votes_cut"]), spark),
-        "canon_map": lambda: build_canon_map(
-            stages["surfaces"], alias_dict_df(spark, sf_dir), NICKNAMES, CORP_SUFFIXES
+    * ``votes`` is ONE Arrow pass over the transcripts: sentence split,
+      mention detection, pairing and the extractors fused, skipping the
+      Arrow round trip of the mentions column (``sentences`` stays
+      available as its own table for the queries that read it).
+    * ``votes_cut`` materializes that scan once: the canonicalization
+      actions AND the ensemble-bound rewrite re-scan it instead of
+      re-running the extraction. It is a PARQUET spool, not
+      localCheckpoint: block-manager storage of tens of millions of
+      deserialized rows bloats the shared local-mode heap and the
+      following stage pays a GC storm that grows with thread count
+      (measured: the ensemble's first run at local[32] was 10-20x
+      slower). The spool keeps the 14 RAW narrow columns: collapsing
+      the provenance columns into the ``_vote_key`` string before the
+      spool grew the parquet bytes 300MB -> 1.1GB at x128 (the concat
+      defeats dictionary encoding) and made the 4N ensemble tail
+      GC-bound (BENCH/BASELINE.md r5); ``combine_votes`` computes the
+      key inside its own scan instead.
+    * ``surfaces`` is cut once (``_surfaces_cut``) for the dictionary,
+      wikidict, cascade and alternate-name branches.
+    """
+    stages = _walk(
+        stage_graph(spark, sf_dir, combination),
+        reads={"sentences": "transcripts", "votes": "votes_cut"},
+        materialize=lambda name, build: (
+            _surfaces_cut(build(), spark) if name == "surfaces" else build()
         ),
-        "linked_votes": lambda: rewrite_votes(stages["votes_cut"], stages["canon_map"]),
-        # single-phase ensemble: the canonical rewrite is two broadcast
-        # hash joins riding the same codegen stage as the aggregation's
-        # map side — a measured two-phase variant (pre_aggregate_votes +
-        # recombine, optionally overlapping the canon window on a
-        # second job thread) saved nothing here and added a spool write
-        # plus scheduling nondeterminism; it remains available in
-        # operators/ensemble.py for canon maps too big to broadcast
-        "candidates": lambda: combine_votes(
-            stages["linked_votes"], combination=combination
-        ),
-        "alt_names": lambda: emit_alternate_names(
-            stages["canon_map"], stages["surfaces"]
-        ),
-        "triples": lambda: apply_consistency(
-            stages["candidates"].unionByName(
-                stages["alt_names"], allowMissingColumns=True
-            ),
-            spark,
-            assume_unique=True,
-        ),
-    }
-    stages._builders = builders
-    stages.update({"transcripts": t, "sentences": sentences, "votes": votes})
+    )
+    stages.builders["votes_cut"] = lambda: _parquet_spool(stages["votes"], spark, "votes")
+    if transcripts is not None:
+        stages["transcripts"] = transcripts
     return stages
 
 
 def final_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     return build_stages(spark, sf_dir)["triples"]
+
+
+# Stages run_pipeline persists, in graph order; the others stay lazy
+# views over them (the surface set and alternate names are cheap
+# aggregates of the stored votes and canon map).
+STORED_STAGES = ("sentences", "votes", "canon_map", "linked_votes", "candidates", "triples")
 
 
 def run_pipeline(
@@ -228,86 +270,38 @@ def run_pipeline(
     checkpoint_dir: str,
     combination: str = AGREE_MOST,
 ) -> dict[str, object]:
-    """Materialized, resumable execution (SURVEY.md §7 stage graph).
+    """Materialized, resumable execution of the stage graph.
 
-    Each stage lands as a parquet table + lineage manifest under
+    Each stored stage lands as a parquet table + lineage manifest under
     ``checkpoint_dir``; re-running after a crash (or with some stages
     deleted) recomputes only invalid stages — the Spark analog of the
-    reference's Postgres caches (S9). The final triple store is
-    partitioned by relation (S11 predictions.tab analog).
+    reference's Postgres caches (S9). A stage's fingerprint chains its
+    inputs' along the graph's edges. ``votes`` reads the stored
+    sentences, so the extraction runs once per fresh build. The final
+    triple store is partitioned by relation (S11 predictions.tab analog).
     """
     import os
 
     from ..sources.sinks import checkpoint_stage, fingerprint, read_manifest
 
-    cfg = {"sf_dir": sf_dir, "combination": combination, "version": 3}
+    cfg = {"sf_dir": sf_dir, "combination": combination, "version": 4}
+    graph = stage_graph(spark, sf_dir, combination)
+    fps: dict[str, str] = {}
+    for st in graph:
+        fps[st.name] = fingerprint(st.name, cfg, [fps[i] for i in st.inputs])
 
-    fp_sent = fingerprint("sentences", cfg, [])
-    sentences = checkpoint_stage(
-        spark,
-        lambda: build_stages(spark, sf_dir, combination)["sentences"],
-        os.path.join(checkpoint_dir, "sentences"),
-        fp_sent,
-    )
-
-    # ONE extraction: the Arrow pass (the pipeline's most expensive
-    # stage) lands as its own checkpointed table; the canon-map build,
-    # the vote rewrite AND the alternate-name surface set all read this
-    # parquet scan instead of re-running the extraction (three times,
-    # as the pre-v3 layout did).
-    fp_votes_raw = fingerprint("votes", cfg, [fp_sent])
-    votes = checkpoint_stage(
-        spark,
-        lambda: extract_votes(sentences),
-        os.path.join(checkpoint_dir, "votes"),
-        fp_votes_raw,
-    )
-
-    fp_canon = fingerprint("canon_map", cfg, [fp_votes_raw])
-    canon_map = checkpoint_stage(
-        spark,
-        lambda: build_canon_map(
-            vote_surfaces(votes).localCheckpoint(eager=True),
-            alias_dict_df(spark, sf_dir),
-            NICKNAMES,
-            CORP_SUFFIXES,
-        ),
-        os.path.join(checkpoint_dir, "canon_map"),
-        fp_canon,
-    )
-
-    fp_votes = fingerprint("linked_votes", cfg, [fp_votes_raw, fp_canon])
-    linked_votes = checkpoint_stage(
-        spark,
-        lambda: rewrite_votes(votes, canon_map),
-        os.path.join(checkpoint_dir, "linked_votes"),
-        fp_votes,
-    )
-
-    fp_cand = fingerprint("candidates", cfg, [fp_votes, fp_canon])
-    candidates = checkpoint_stage(
-        spark,
-        lambda: combine_votes(linked_votes, combination=combination).unionByName(
-            emit_alternate_names(canon_map, vote_surfaces(votes)),
-            allowMissingColumns=True,
-        ),
-        os.path.join(checkpoint_dir, "candidates"),
-        fp_cand,
-    )
-
-    fp_triples = fingerprint("triples", cfg, [fp_cand])
-    triples = checkpoint_stage(
-        spark,
-        lambda: apply_consistency(candidates, spark),
-        os.path.join(checkpoint_dir, "triples"),
-        fp_triples,
-        partition_by="relation",
-    )
-
-    manifests = {
-        name: read_manifest(os.path.join(checkpoint_dir, name))
-        for name in (
-            "sentences", "votes", "canon_map", "linked_votes", "candidates", "triples"
+    def materialize(name: str, build: Callable[[], DataFrame]) -> DataFrame:
+        if name not in STORED_STAGES:
+            return build()
+        return checkpoint_stage(
+            spark, build, os.path.join(checkpoint_dir, name), fps[name],
+            partition_by="relation" if name == "triples" else None,
         )
+
+    stages = _walk(graph, reads={}, materialize=materialize)
+    for name in STORED_STAGES:
+        stages[name]  # noqa: B018 -- builds or validates the stored table
+    manifests = {
+        name: read_manifest(os.path.join(checkpoint_dir, name)) for name in STORED_STAGES
     }
-    return {"triples": triples, "manifests": manifests}
+    return {"triples": stages["triples"], "manifests": manifests}

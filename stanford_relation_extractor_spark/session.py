@@ -12,7 +12,17 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+# CPUs this process may run on: its affinity mask, not the host's core
+# count (containers and taskset narrow it). The env var wins.
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def driver_memory(phys_bytes: int) -> str:
+    """Default driver heap for a host with ``phys_bytes`` of RAM: half
+    of it in whole GiB, at least 1g and at most 48g. The local-mode JVM
+    holds every executor's heap; the Python workers need the rest."""
+    return f"{min(48, max(1, phys_bytes // 2**31))}g"
 
 
 def get_spark(
@@ -38,7 +48,11 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or driver_memory(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")),
+        )
         # batch-throughput GC: G1's pause-time goal costs wall time on
         # this many-threads-one-heap local mode (BENCH/BASELINE.md)
         .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.extractors import extract_votes_fused
+from ..operators.extractors import extract_votes
 from ..sources.synthetic import detector_config
 
 TRANSCRIPT_DDL = (
@@ -42,7 +42,7 @@ def streaming_votes(transcripts: DataFrame, countries: list[str]) -> DataFrame:
     sort per conversation, so unresolved pronouns drop here; a stateful
     stream variant would carry AntecedentState in
     applyInPandasWithState keyed by conv_id."""
-    return extract_votes_fused(
+    return extract_votes(
         transcripts, detector_config(countries), resolve_pronouns=False
     )
 

@@ -93,7 +93,7 @@ def test_cross_sentence_pair_never_votes(spark):
     """k24: entity in sentence 0, CITY in sentence 1 — pair generation
     is per-sentence, so the turn contributes NO votes at all."""
     from stanford_relation_extractor_spark.operators.extractors import (
-        extract_votes_fused,
+        extract_votes,
     )
     from stanford_relation_extractor_spark.sources.synthetic import (
         country_gazetteer,
@@ -106,7 +106,7 @@ def test_cross_sentence_pair_never_votes(spark):
           None)],
         "conv_id string, turn_idx int, role string, text string, tool string",
     )
-    votes = extract_votes_fused(t, detector_config(country_gazetteer(spark, SF_DIR)))
+    votes = extract_votes(t, detector_config(country_gazetteer(spark, SF_DIR)))
     assert votes.count() == 0
 
 
@@ -115,7 +115,7 @@ def test_cross_sentence_person_still_updates_antecedent(spark):
     pronoun turn — suppression of cross-sentence pairs must not
     suppress antecedent tracking."""
     from stanford_relation_extractor_spark.operators.extractors import (
-        extract_votes_fused,
+        extract_votes,
     )
     from stanford_relation_extractor_spark.sources.synthetic import (
         country_gazetteer,
@@ -131,6 +131,6 @@ def test_cross_sentence_person_still_updates_antecedent(spark):
         ],
         "conv_id string, turn_idx int, role string, text string, tool string",
     )
-    votes = extract_votes_fused(t, detector_config(country_gazetteer(spark, SF_DIR)))
+    votes = extract_votes(t, detector_config(country_gazetteer(spark, SF_DIR)))
     ents = {r.entity_name for r in votes.select("entity_name").distinct().collect()}
     assert ents == {"Alice Person000001"}

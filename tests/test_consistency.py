@@ -4,7 +4,6 @@ from __future__ import annotations
 
 from stanford_relation_extractor_spark.operators.consistency import (
     apply_consistency,
-    dedup_exact,
     enforce_cardinality,
     threshold_filter,
     type_check,
@@ -65,18 +64,6 @@ def test_single_cardinality_top1_with_tiebreak(spark):
     assert emp == {"Org001", "Org002"}
 
 
-def test_dedup_exact_keeps_best_provenance(spark):
-    df = spark.createDataFrame(
-        [
-            ("E", "PERSON", "per:age", "34", "NUMBER", 1, 0.9, "c2", 5, 0),
-            ("E", "PERSON", "per:age", "34", "NUMBER", 1, 0.9, "c1", 3, 0),
-        ],
-        TRIPLE_SCHEMA,
-    )
-    out = dedup_exact(df).collect()
-    assert len(out) == 1 and out[0]["conv_id"] == "c1"
-
-
 def test_full_battery_composes(spark):
     rows = [
         ("E", "PERSON", "per:age", "34", "NUMBER", 2, 0.97),  # above the 0.96 floor
@@ -106,7 +93,7 @@ def test_sanity_check_filters(spark):
 
 def test_incompatibilities_drop_lower_ranked(spark):
     from stanford_relation_extractor_spark.operators.consistency import (
-        respect_incompatibilities,
+        respect_incompatibilities_window,
     )
 
     rows = [
@@ -118,12 +105,15 @@ def test_incompatibilities_drop_lower_ranked(spark):
         ("E", "PERSON", "per:country_of_birth", "NATION_2", "COUNTRY", 2, 0.9),
         ("E", "PERSON", "per:country_of_death", "NATION_2", "COUNTRY", 2, 0.8),
     ]
-    out = {r["relation"] for r in respect_incompatibilities(_triples(spark, rows), spark).collect()}
+    ranked = type_check(_triples(spark, rows), spark)  # adds the cardinality column
+    out = {r["relation"] for r in respect_incompatibilities_window(ranked).collect()}
     assert out == {"per:date_of_birth", "per:country_of_birth", "per:country_of_death"}
 
 
 def test_mitigate_loc_of_death(spark):
-    from stanford_relation_extractor_spark.operators.consistency import mitigate_loc_of_death
+    from stanford_relation_extractor_spark.operators.consistency import (
+        mitigate_loc_of_death_window,
+    )
 
     rows = [
         ("A", "PERSON", "per:country_of_death", "NATION_2", "COUNTRY", 2, 0.9),
@@ -131,7 +121,10 @@ def test_mitigate_loc_of_death(spark):
         ("B", "PERSON", "per:country_of_death", "NATION_3", "COUNTRY", 2, 0.9),  # no date
         ("B", "PERSON", "per:age", "30", "NUMBER", 2, 0.9),
     ]
-    out = {(r["entity_name"], r["relation"]) for r in mitigate_loc_of_death(_triples(spark, rows)).collect()}
+    out = {
+        (r["entity_name"], r["relation"])
+        for r in mitigate_loc_of_death_window(_triples(spark, rows)).collect()
+    }
     assert ("A", "per:country_of_death") in out
     assert ("B", "per:country_of_death") not in out
     assert ("B", "per:age") in out

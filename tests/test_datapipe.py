@@ -120,12 +120,16 @@ def test_sessionize_gap_semantics(spark):
         (2, base + dt.timedelta(minutes=10), 7, "c", 1.0, None),
         (3, base + dt.timedelta(minutes=50), 7, "c", 1.0, None),  # 40min gap -> new session
         (4, base, 8, "c", 1.0, None),
+        # fractional gaps: 1,800 s exactly stays in the session, 1,800.5 s starts one
+        (5, base, 9, "c", 1.0, None),
+        (6, base + dt.timedelta(seconds=1800), 9, "c", 1.0, None),
+        (7, base + dt.timedelta(seconds=3600.5), 9, "c", 1.0, None),
     ]
     df = spark.createDataFrame(
         rows, "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
     )
     out = {(r["user_id"], r["session_idx"]): r["n_events"] for r in sessionize(df).collect()}
-    assert out == {(7, 1): 2, (7, 2): 1, (8, 1): 1}
+    assert out == {(7, 1): 2, (7, 2): 1, (8, 1): 1, (9, 1): 2, (9, 2): 1}
 
 
 def test_multimodal_decode_stubs_raise():

@@ -30,30 +30,21 @@ def test_date_normalization():
     assert normalize_date_slot("next year") is None
 
 
-def test_antecedent_propagation(spark):
-    from stanford_relation_extractor_spark.operators.antecedents import (
-        propagate_antecedents,
-    )
+def test_antecedent_propagation():
+    from stanford_relation_extractor_spark.operators.extractors import AntecedentState
 
-    rows = [
-        ("c1", 0, 0, 0, 5, "Alice Person000001", "PERSON"),
-        ("c1", 1, 0, 0, 3, "She", "PRONOUN"),
-        ("c1", 2, 0, 0, 6, "Org001", "ORGANIZATION"),
-        ("c1", 3, 0, 0, 2, "It", "PRONOUN"),
-        ("c2", 0, 0, 0, 2, "He", "PRONOUN"),  # no antecedent in this conv
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "conv_id string, turn_idx int, sent_idx int, begin int, end int, surface string, ner string",
-    )
-    got = {
-        (r["conv_id"], r["turn_idx"]): r["canonical_name"]
-        for r in propagate_antecedents(df).collect()
-    }
-    assert got[("c1", 1)] == "Alice Person000001"
-    assert got[("c1", 3)] == "Org001"
-    assert got[("c2", 0)] is None
-    assert got[("c1", 0)] == "Alice Person000001"
+    def m(surface, ner):
+        return {"begin": 0, "end": len(surface), "surface": surface, "ner": ner}
+
+    alice, org = m("Alice Person000001", "PERSON"), m("Org001", "ORGANIZATION")
+    state = AntecedentState()
+    # turns of one conversation, fed in (conv_id, turn_idx) order
+    assert state.resolve("c1", [alice]) == [alice]
+    assert state.resolve("c1", [m("She", "PRONOUN")]) == [{**alice, "end": 3}]
+    assert state.resolve("c1", [org]) == [org]
+    assert state.resolve("c1", [m("It", "PRONOUN")]) == [{**org, "end": 2}]
+    # a new conversation starts without antecedents: the pronoun drops
+    assert state.resolve("c2", [m("He", "PRONOUN")]) == []
 
 
 def test_dedup_approximate_collapses_variants(spark):

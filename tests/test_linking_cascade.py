@@ -50,7 +50,9 @@ def test_blocking_key_groups_variants():
 
 def test_canonicalize_entities_merges_variants(spark):
     from stanford_relation_extractor_spark.operators.canonicalize import (
-        canonicalize_entities,
+        build_canon_map,
+        rewrite_votes,
+        vote_surfaces,
     )
 
     triples = spark.createDataFrame(
@@ -62,7 +64,9 @@ def test_canonicalize_entities_merges_variants(spark):
         "entity_name string, entity_type string, relation string, slot_value string, "
         "slot_ner string, n_agree int, score double",
     )
-    out = canonicalize_entities(triples).collect()
+    no_aliases = spark.createDataFrame([], "alias string, canonical string, link_score double")
+    canon_map = build_canon_map(vote_surfaces(triples), no_aliases, {}, ())
+    out = rewrite_votes(triples, canon_map).collect()
     names = {r["entity_name"] for r in out}
     # the two Acme variants collapse onto one representative; Zenith untouched
     assert len(names) == 2

@@ -312,37 +312,6 @@ def test_per_relation_threshold_binds(spark):
     assert kept == {("per:age", "45"), ("per:spouse", "S")}
 
 
-def test_ensemble_two_phase_matches_single_phase(spark):
-    """pre_aggregate_votes + combine_votes(pre_aggregated=True) is
-    bit-identical to the single-phase aggregation (max of maxes, min of
-    mins)."""
-    from stanford_relation_extractor_spark.operators.ensemble import (
-        combine_votes,
-        pre_aggregate_votes,
-    )
-
-    rows = []
-    for i, (ex, sc) in enumerate(
-        [("pattern", 0.9), ("trigger", 0.8), ("window", 0.1), ("pattern", 0.85)]
-    ):
-        rows.append(("c1", i, 0, "E", "PERSON", 0, 5, "S", "NUMBER", 10, 12,
-                     "per:age", ex, sc))
-    rows.append(("c2", 0, 1, "E2", "PERSON", 0, 5, "S2", "NUMBER", 10, 12,
-                 "per:age", "pattern", 0.9))
-    votes = spark.createDataFrame(
-        rows,
-        "conv_id string, turn_idx int, sent_idx int, entity_name string, "
-        "entity_type string, entity_begin int, entity_end int, slot_value string, "
-        "slot_ner string, slot_begin int, slot_end int, relation string, "
-        "extractor string, score double",
-    )
-    one = sorted(map(tuple, combine_votes(votes, combination="AGREE_ANY").collect()))
-    two = sorted(map(tuple, combine_votes(
-        pre_aggregate_votes(votes), combination="AGREE_ANY", pre_aggregated=True
-    ).collect()))
-    assert one == two
-
-
 def test_dead_spool_sweep(tmp_path):
     """Spools of SIGKILLed sessions (pid embedded in the dir name, pid
     gone) are swept; live-pid dirs are untouched."""

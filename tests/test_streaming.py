@@ -10,7 +10,7 @@ from conftest import SF_DIR
 
 def test_streaming_votes_match_batch(spark, tmp_path):
     from stanford_relation_extractor_spark.operators.extractors import (
-        extract_votes_fused,
+        extract_votes,
     )
     from stanford_relation_extractor_spark.sources.synthetic import (
         country_gazetteer,
@@ -40,7 +40,7 @@ def test_streaming_votes_match_batch(spark, tmp_path):
         for r in spark.sql("SELECT * FROM stream_votes").collect()
     }
     batch = (
-        extract_votes_fused(
+        extract_votes(
             spark.read.parquet(src), detector_config(countries), resolve_pronouns=False
         )
         .groupBy("entity_name", "entity_type", "relation", "slot_value", "extractor")
