@@ -3,6 +3,8 @@
 Runs the headline pipeline stages at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]. Each stage is forced
 with a `noop` format write (full computation, no driver collect).
+$SPARK_GRAFT_CPUS defaults to the CPUs of the process's affinity mask
+(session.DEFAULT_CPUS).
 
 Scaling-efficiency evidence (north rule: >=0.8 from N to 4N executors)
 is produced by scripts/scaling_bench.py which re-invokes the same
@@ -19,7 +21,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def force(df) -> None:
@@ -28,9 +29,9 @@ def force(df) -> None:
 
 def main() -> None:
     from stanford_relation_extractor_spark.plans.pipeline import build_stages
-    from stanford_relation_extractor_spark.session import get_spark
+    from stanford_relation_extractor_spark.session import DEFAULT_CPUS, get_spark
 
-    spark = get_spark("bench", cpus=CPUS, shuffle_partitions=CPUS)
+    spark = get_spark("bench", cpus=DEFAULT_CPUS, shuffle_partitions=DEFAULT_CPUS)
 
     stages = build_stages(spark, SF_DIR)
     n_turns = stages["transcripts"].count()  # also warms the JVM/scan
@@ -85,7 +86,7 @@ def main() -> None:
                 "sf": float(sf),
                 "turns": n_turns,
                 "turns_per_sec": round(n_turns / e2e, 1) if e2e else None,
-                "cpus": CPUS,
+                "cpus": DEFAULT_CPUS,
             }
         )
     )

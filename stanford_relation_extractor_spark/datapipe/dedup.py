@@ -263,6 +263,10 @@ def simhash_near_dups(
     ``bands > max_hamming`` they MUST agree on at least one exact band —
     the band equi-join loses NO pairs under the threshold (no recall
     trade, unlike capped prefix blocking). Never an all-pairs join.
+
+    Raises ``ValueError`` when ``bands <= max_hamming`` (no pigeonhole
+    guarantee) or when ``bits > 63``: the Hamming distance is a
+    ``bit_count`` over the signature as one signed long.
     """
     if bands <= max_hamming:
         raise ValueError("need bands > max_hamming for the pigeonhole guarantee")

@@ -24,6 +24,7 @@ from collections.abc import Callable, Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import ArrayType, MapType, StructType
 
 _EMIT_ROWS = 4096
 
@@ -39,7 +40,19 @@ def map_groups_in_pandas(
 
     ``fn`` receives the group's complete rows (a pandas frame with the
     input columns) and returns a frame matching ``schema``.
+
+    Keys must be atomic columns (string, number, date, ...): an array,
+    map or struct key raises ``ValueError`` at call time, since its pandas
+    values (ndarrays, dicts, Rows) cannot be compared as scalars when
+    a group is carried across Arrow batches.
     """
+    for k in keys:
+        t = df.schema[k].dataType
+        if isinstance(t, (ArrayType, MapType, StructType)):
+            raise ValueError(
+                f"map_groups_in_pandas: key column {k!r} has non-atomic type "
+                f"{t.simpleString()}"
+            )
     parts = (
         n_parts
         if n_parts is not None

@@ -17,6 +17,16 @@ from pyspark.sql import SparkSession
 # count (containers and taskset narrow it). The env var wins.
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
+# Generated classes the JVM keeps compiled (Spark's default is 100).
+# Measured distinct classes: one in-session pipeline run at 40k turns
+# needs 140; a session of in-session run, store, resume, consumers and
+# datapipe queries at 15k turns needs 779; the whole pytest suite, which
+# runs each plan about once, compiles 2,275. At 100 the LRU cache
+# thrashed and every rerun of the pipeline recompiled ~110 classes
+# through Janino and the JIT. Generated code depends on the plan, not
+# the rows, so at this size every plan shape compiles once per session.
+CODEGEN_CACHE_ENTRIES = 4096
+
 
 def driver_memory(phys_bytes: int) -> str:
     """Default driver heap for a host with ``phys_bytes`` of RAM: half
@@ -48,6 +58,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM")

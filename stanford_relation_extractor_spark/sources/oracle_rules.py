@@ -71,11 +71,12 @@ WINDOW_WEIGHT = 0.4
 def _pattern_weight(rel: str) -> float:
     """Pattern vote score: the relation's shipped `.rules` trailing
     confidence (max of the file) where one exists, else PATTERN_WEIGHT
-    — mirrors extractors._pattern_weights via the SAME parse of the
-    reference's files-as-data (rulesfiles.relation_pattern_weights)."""
-    from .rulesfiles import relation_pattern_weights
+    — read from the engine's own weight source
+    (extractors._pattern_weights), so oracle and engine share one
+    parse and one fallback when the reference data is not mounted."""
+    from ..operators.extractors import _pattern_weights
 
-    return relation_pattern_weights().get(rel, PATTERN_WEIGHT)
+    return _pattern_weights().get(rel, PATTERN_WEIGHT)
 
 # column -> entity/NER type of each planted mention, per template k
 TEMPLATE_MENTIONS: dict[int, list[tuple[str, str]]] = {

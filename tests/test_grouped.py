@@ -112,6 +112,20 @@ def test_null_keys_match_apply_in_pandas(spark):
     assert got.agg(F.sum("n")).collect()[0][0] == 24000
 
 
+def test_array_key_rejected_at_call_time(spark):
+    """A non-atomic key fails when the plan is built, naming the column,
+    not inside a task where pandas cannot compare its values."""
+    from stanford_relation_extractor_spark.functions.grouped import (
+        map_groups_in_pandas,
+    )
+
+    df = spark.range(10).select(
+        F.array(F.col("id") % 2).alias("ks"), F.col("id").cast("int").alias("v")
+    )
+    with pytest.raises(ValueError, match="'ks'.*array<bigint>"):
+        map_groups_in_pandas(df, ["ks"], lambda pdf: pdf, "ks array<bigint>, v int")
+
+
 def test_greedy_consistency_unchanged_vs_apply_in_pandas(spark):
     """The r6 greedy rewrite must keep the accepted set bit-identical."""
     import stanford_relation_extractor_spark.operators.consistency as C
