@@ -177,24 +177,6 @@ def _nil_padded(spark: SparkSession, sf_dir: str) -> DataFrame:
     return nil_padded_output(triples, queries_df, spark)
 
 
-def _greedy_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W1 exact greedy activation loop — same oracle as the battery
-    (set-equal on this corpus; the driver proves it independently)."""
-    from stanford_relation_extractor_spark.operators.consistency import (
-        apply_consistency_greedy,
-    )
-    from stanford_relation_extractor_spark.plans.pipeline import build_stages
-
-    stages = build_stages(spark, sf_dir)
-    cand = stages["candidates"].unionByName(
-        stages["alt_names"], allowMissingColumns=True
-    )
-    return apply_consistency_greedy(cand, spark).select(
-        "entity_name", "entity_type", "relation", "slot_value", "slot_ner",
-        "n_agree", "score",
-    )
-
-
 def _sentence_competition(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stanford_relation_extractor_spark.operators.selection import (
         sentence_competition,
@@ -500,7 +482,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "topk_sentences": _topk_sentences,
         "ner_majority": _ner_majority,
         "nil_padded_output": _nil_padded,
-        "greedy_consistency": _greedy_consistency,
+        # W1 greedy activation is the production stage 6
+        "greedy_consistency": _final_triples,
         "sentence_competition": _sentence_competition,
         "conform_guidelines": _conform_guidelines,
         "dedup_approximate_fills": _dedup_approx,

@@ -5,10 +5,6 @@ Runs the headline pipeline stages at $SPARK_GRAFT_SF_DIR (default
 with a `noop` format write (full computation, no driver collect).
 $SPARK_GRAFT_CPUS defaults to the CPUs of the process's affinity mask
 (session.DEFAULT_CPUS).
-
-Scaling-efficiency evidence (north rule: >=0.8 from N to 4N executors)
-is produced by scripts/scaling_bench.py which re-invokes the same
-pipeline at two parallelism levels and writes BENCH/BASELINE.md.
 """
 
 from __future__ import annotations

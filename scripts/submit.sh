@@ -4,10 +4,6 @@
 # materialized pipeline entry point.
 #
 #   scripts/submit.sh <master> <num_executors> <transcripts_path> <out_dir>
-#
-# In this sandbox there is no cluster manager; scripts/scaling_bench.py
-# is the local[N]-vs-local[4N] proxy that produces the efficiency
-# evidence in BENCH/BASELINE.md.
 set -euo pipefail
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 MASTER="${1:?master url}"; EXECUTORS="${2:?num executors}"

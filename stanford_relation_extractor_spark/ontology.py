@@ -190,20 +190,6 @@ def plausibly_cooccurs(a: str, b: str) -> bool:
     return a in m and b in m and (b in m[a] or a in m[b])
 
 
-@lru_cache(maxsize=1)
-def incompatible_pairs() -> tuple[tuple[str, str], ...]:
-    """Ordered (higher_rel, lower_rel) pairs that may NOT share the same
-    (entity, slotValue) — the drop condition of
-    RespectDeclaredIncompatibilities (HeuristicSlotfillPostProcessors.java:766-791)."""
-    out = []
-    for a in RELATION_BY_NAME:
-        for b in RELATION_BY_NAME:
-            if a != b and RELATION_BY_NAME[a].entity_type == RELATION_BY_NAME[b].entity_type:
-                if not plausibly_cooccurs(a, b):
-                    out.append((a, b))
-    return tuple(out)
-
-
 @lru_cache(maxsize=None)
 def compatible_relations(entity_type: str, slot_ner: str) -> tuple[str, ...]:
     """Relations whose signature admits (entity_type, slot_ner).

@@ -1,10 +1,12 @@
-"""Stage 6 — consistency filter/rewrite battery (SURVEY.md §2b/§2e/§2f).
+"""Stage 6 — consistency filters and the greedy activation pass
+(SURVEY.md §2b/§2e/§2f).
 
-The reference applies ordered rewrites-then-filters
+The reference applies ordered filters, then one greedy activation loop
 (`stanford-kbp/.../slotfilling/evaluate/SlotfillPostProcessor.java:83-190`,
-`HeuristicSlotfillPostProcessors.java`). Re-expressed as window + join
-passes, ordered cheap-before-expensive so Catalyst keeps predicates
-early:
+`HeuristicSlotfillPostProcessor.java:69-200`,
+`HeuristicSlotfillPostProcessors.java`). Here the unary filters are
+SQL predicates, ordered cheap-before-expensive so Catalyst keeps them
+early, and the loop is one clustered Arrow pass:
 
 * P6  RespectRelationTypes (`HeuristicSlotfillPostProcessors.java:47-89`)
   — broadcast join against the relation-schema dimension.
@@ -12,8 +14,12 @@ early:
   `common/Props.java:480`) — score >= 0.5.
 * O2  NoDuplicates (`:655-670`) — holds by construction: the ensemble
   emits one row per triple key.
-* W2  single-value top-1 (`:742-756`) — cardinality-gated
-  row_number window.
+* W1  the greedy activation loop (``greedy_consistency``): per entity,
+  fills in W4 order are kept only if consistent with the fills already
+  accepted. The pairwise checks inside it are W2 single-value top-1
+  (`:742-756`), the employee/member collapse (`:655-670`) and O6
+  RespectDeclaredIncompatibilities (`:766-791`); the hold-one-out check
+  is MitigateLocOfDeath.
 * W4  deterministic tie-breaking (`common/KBPSlotFill.java:69-91`) —
   score desc, slot token count desc, slot length desc, slot value asc.
 """
@@ -26,9 +32,10 @@ from pyspark.sql import functions as F
 from ..ontology import (
     GLOBAL_SCORE_THRESHOLD,
     PER_RELATION_THRESHOLDS,
-    incompatible_pairs,
     relation_schema_df,
 )
+
+LOC_OF_DEATH = ("per:city_of_death", "per:country_of_death", "per:stateorprovince_of_death")
 
 
 def type_check(triples: DataFrame, spark: SparkSession) -> DataFrame:
@@ -37,7 +44,6 @@ def type_check(triples: DataFrame, spark: SparkSession) -> DataFrame:
         relation_schema_df(spark).select(
             "relation",
             F.col("entity_type").alias("rs_entity_type"),
-            "cardinality",
             "valid_slot_ners",
         )
     )
@@ -78,7 +84,7 @@ def threshold_filter(
 
 def tiebreak_order() -> list:
     """W4 total order (KBPSlotFill.compareTo, common/KBPSlotFill.java:69-91)
-    extended with relation asc so EVERY window is bit-deterministic."""
+    extended with relation asc so every ordering is bit-deterministic."""
     slot_tokens = F.size(F.split(F.col("slot_value"), " "))
     return [
         F.desc("score"),
@@ -109,123 +115,6 @@ def sanity_check(triples: DataFrame) -> DataFrame:
         ).otherwise(F.lit(True))
     )
     return triples.filter(keep)
-
-
-def collapse_employee_member(triples: DataFrame) -> DataFrame:
-    """NoDuplicates employee/member special case
-    (HeuristicSlotfillPostProcessors.java:655-670): per:employee_of and
-    per:member_of with the same (entity, slot) collapse to the better one."""
-    pair = F.col("relation").isin("per:employee_of", "per:member_of")
-    ranked = triples.withColumn(
-        "_emp_rn",
-        F.when(pair, F.row_number().over(
-            Window.partitionBy(
-                "entity_name", "entity_type", "slot_value",
-                F.when(pair, F.lit("emp")).otherwise(F.col("relation")),
-            ).orderBy(*tiebreak_order())
-        )).otherwise(F.lit(1)),
-    )
-    return ranked.filter(F.col("_emp_rn") == 1).drop("_emp_rn")
-
-
-def remove_low_weight_competitors(triples: DataFrame, floor: float = 0.01) -> DataFrame:
-    """W3 RemoveLowWeightRelationUnlessOnlyOneOfType (`:757-765`)."""
-    w = Window.partitionBy("entity_name", "entity_type", "relation")
-    best = F.max("score").over(w)
-    n = F.count("*").over(w)
-    return (
-        triples.withColumn("_best", best).withColumn("_n", n)
-        .filter((F.col("score") >= floor) | (F.col("_n") == 1) | (F.col("score") == F.col("_best")))
-        .drop("_best", "_n")
-    )
-
-
-def respect_incompatibilities_window(triples: DataFrame) -> DataFrame:
-    """O6 as a pure window pass (no self-join, no plan branching).
-
-    Per (entity, slotValue) partition, every row sees the higher-ranked
-    cardinality-surviving relations via a windowed collect_list and
-    drops itself when any of them is declared incompatible — the
-    incompatibility matrix rides the plan as a map literal (41 keys).
-    One window instead of a self-join, so the whole consistency tail
-    shares one exchange.
-    """
-    from ..ontology import RELATION_BY_NAME
-
-    # rel -> array of relations it may NOT share a slot with
-    incompat_of: dict[str, list[str]] = {}
-    for hi, lo in incompatible_pairs():
-        incompat_of.setdefault(hi, []).append(lo)
-    flat: list = []
-    for rel in sorted(incompat_of):
-        flat.append(F.lit(rel))
-        flat.append(F.array(*[F.lit(x) for x in sorted(incompat_of[rel])]))
-    incompat_map = F.create_map(*flat)
-
-    w_slot = Window.partitionBy("entity_name", "entity_type", "slot_value").orderBy(
-        *tiebreak_order()
-    )
-    w_rel = Window.partitionBy("entity_name", "entity_type", "relation").orderBy(
-        *tiebreak_order()
-    )
-    w_slot_all = w_slot.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-
-    ranked = (
-        triples.withColumn("_rk", F.row_number().over(w_slot))
-        .withColumn("_rel_rn", F.row_number().over(w_rel))
-        .withColumn(
-            "_hi",
-            F.collect_list(
-                F.when(
-                    (F.col("cardinality") == "LIST") | (F.col("_rel_rn") == 1),
-                    F.struct(F.col("_rk").alias("rk"), F.col("relation").alias("rel")),
-                )
-            ).over(w_slot_all),
-        )
-    )
-    conflict = F.exists(
-        F.col("_hi"),
-        lambda x: (x["rk"] < F.col("_rk"))
-        & (x["rel"] != F.col("relation"))
-        & F.coalesce(
-            F.array_contains(incompat_map.getItem(x["rel"]), F.col("relation")),
-            F.lit(False),
-        ),
-    )
-    return ranked.filter(~conflict).drop("_rk", "_rel_rn", "_hi")
-
-
-def mitigate_loc_of_death_window(triples: DataFrame) -> DataFrame:
-    """MitigateLocOfDeath as a window pass (no join/branch): an entity's
-    death-location fills survive only when a per:date_of_death fill is
-    present in the same partition."""
-    w = Window.partitionBy("entity_name", "entity_type").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    has_dod = F.max(
-        F.when(F.col("relation") == "per:date_of_death", F.lit(1)).otherwise(F.lit(0))
-    ).over(w)
-    return (
-        triples.withColumn("_has_dod", has_dod)
-        .filter((~F.col("relation").isin(*LOC_OF_DEATH)) | (F.col("_has_dod") == 1))
-        .drop("_has_dod")
-    )
-
-
-LOC_OF_DEATH = ("per:city_of_death", "per:country_of_death", "per:stateorprovince_of_death")
-
-
-def enforce_cardinality(triples: DataFrame) -> DataFrame:
-    """W2: SINGLE-cardinality relations keep only the top-1 fill.
-
-    Requires a ``cardinality`` column (added by ``type_check``).
-    """
-    w = Window.partitionBy("entity_name", "entity_type", "relation").orderBy(*tiebreak_order())
-    return (
-        triples.withColumn("_rn", F.row_number().over(w))
-        .filter((F.col("cardinality") == "LIST") | (F.col("_rn") == 1))
-        .drop("_rn")
-    )
 
 
 def dedup_approximate(triples: DataFrame) -> DataFrame:
@@ -351,96 +240,92 @@ def normalize_scores(df: DataFrame, group_cols: list[str], score_col: str = "sco
     )
 
 
+
+
 def greedy_consistency(triples: DataFrame) -> DataFrame:
     """W1 — the reference's greedy activation loop
-    (`HeuristicSlotfillPostProcessor.java:69-200`) as a grouped
-    ``applyInPandas``: per entity, walk fills in W4 score order and keep
-    each only if consistent with everything already accepted (pairwise:
-    single-cardinality, employee/member collapse, declared
-    incompatibilities; hold-one-out: loc-of-death needs date-of-death).
+    (`HeuristicSlotfillPostProcessor.java:69-200`): per entity, walk
+    fills in W4 order and keep each only if consistent with everything
+    already accepted (pairwise: single-cardinality, employee/member
+    collapse, declared incompatibilities; hold-one-out: loc-of-death
+    needs an accepted date-of-death).
 
-    Entity groups are tiny (dozens of fills), so the per-group quadratic
-    is fine — the distribution over entities is the win (SURVEY.md §4).
-    Semantically equivalent to the join/window battery of
-    ``apply_consistency`` on conflict chains of depth <= 2; on deeper
-    chains this variant is the exact greedy semantics.
+    ONE repartition on (entity_name, entity_type), an in-partition sort
+    by entity then W4, and one ``mapInPandas`` pass that scans the sorted
+    rows linearly: the Python boundary is paid once per Arrow batch, not
+    once per entity group (a pandas call per group made the in-session
+    pipeline's warm run ~1.6x dearer). The entity group at the
+    end of a batch may continue in the next one, so it is carried over
+    and judged there on complete rows.
     """
     import pandas as pd
 
     from ..ontology import RELATION_BY_NAME, plausibly_cooccurs
 
-    cardinality = {name: r.cardinality for name, r in RELATION_BY_NAME.items()}
+    single = {n for n, r in RELATION_BY_NAME.items() if r.cardinality == "SINGLE"}
+    other_of = {"per:employee_of": "per:member_of", "per:member_of": "per:employee_of"}
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        order = pdf.assign(
-            _tok=pdf["slot_value"].str.split(" ").str.len(),
-            _len=pdf["slot_value"].str.len(),
-        ).sort_values(
-            ["score", "_tok", "_len", "slot_value", "relation"],
-            ascending=[False, False, False, True, True],
-            kind="mergesort",
-        )
-        # hash-indexed accepted set: O(1) checks per fill instead of the
-        # naive O(|accepted|) scan — entity groups can hold thousands of
-        # fills in bulk mode (celebrity orgs), unlike the reference's
-        # per-query handfuls.
-        accepted: list = []
-        filled_single: set[str] = set()
-        rels_by_slot: dict[str, set[str]] = {}
-        emp_member_slots: dict[str, set[str]] = {"per:employee_of": set(), "per:member_of": set()}
-        for row in order.itertuples(index=False):
-            rel, slot = row.relation, row.slot_value
-            ok = not (cardinality.get(rel) == "SINGLE" and rel in filled_single)
-            if ok and rel in emp_member_slots:
-                other = "per:member_of" if rel == "per:employee_of" else "per:employee_of"
-                ok = slot not in emp_member_slots[other]
+    def keep_mask(pdf: pd.DataFrame) -> list[bool]:
+        """The loop over complete entity groups, rows in W4 order."""
+        keep: list[bool] = []
+        group, n_group = None, 0
+        dod_groups: set[int] = set()
+        loc_rows: list[tuple[int, int]] = []
+        cols = ("entity_name", "entity_type", "relation", "slot_value")
+        for i, (name, etype, rel, slot) in enumerate(zip(*(pdf[c].tolist() for c in cols))):
+            if (name, etype) != group:
+                group, n_group = (name, etype), n_group + 1
+                filled_single: set[str] = set()
+                emp_member_slots: dict[str, set[str]] = {r: set() for r in other_of}
+                rels_by_slot: dict[str, set[str]] = {}
+            ok = rel not in filled_single
+            if ok and rel in other_of:
+                ok = slot not in emp_member_slots[other_of[rel]]
             if ok:
-                for prev_rel in rels_by_slot.get(slot, ()):
-                    if prev_rel != rel and not plausibly_cooccurs(prev_rel, rel):
-                        ok = False
-                        break
+                ok = all(
+                    prev == rel or plausibly_cooccurs(prev, rel)
+                    for prev in rels_by_slot.get(slot, ())
+                )
+            keep.append(ok)
             if ok:
-                accepted.append(row)
-                if cardinality.get(rel) == "SINGLE":
+                if rel in single:
                     filled_single.add(rel)
-                if rel in emp_member_slots:
+                if rel in other_of:
                     emp_member_slots[rel].add(slot)
                 rels_by_slot.setdefault(slot, set()).add(rel)
-        # hold-one-out: loc_of_death requires an accepted date_of_death
-        has_dod = any(r.relation == "per:date_of_death" for r in accepted)
-        if not has_dod:
-            accepted = [r for r in accepted if r.relation not in LOC_OF_DEATH]
-        out = pd.DataFrame(accepted, columns=list(order.columns))
-        return out.drop(columns=["_tok", "_len"])
+                if rel == "per:date_of_death":
+                    dod_groups.add(n_group)
+                elif rel in LOC_OF_DEATH:
+                    loc_rows.append((i, n_group))
+        # hold-one-out: a loc-of-death fill needs an accepted date-of-death
+        for i, g in loc_rows:
+            keep[i] = g in dod_groups
+        return keep
 
-    # ONE shuffle + ONE Arrow pass, groups iterated INSIDE the batch
-    # (functions/grouped.py): groupBy().applyInPandas ships every
-    # (entity, type) group as its own Arrow exchange + Python call —
-    # measured ~15s at sf0.01 for 3.4k tiny groups (per-group overhead,
-    # not compute; guide §4). 15s -> 2s.
-    from ..functions.grouped import map_groups_in_pandas
+    def scan(batches):
+        carry = None
+        for pdf in batches:
+            if carry is not None:
+                pdf = pd.concat([carry, pdf], ignore_index=True)
+            if not len(pdf):
+                continue
+            last = (pdf["entity_name"] == pdf["entity_name"].iloc[-1]) & (
+                pdf["entity_type"] == pdf["entity_type"].iloc[-1]
+            )
+            carry, body = pdf[last], pdf[~last]
+            yield body.loc[keep_mask(body)]
+        if carry is not None:
+            yield carry.loc[keep_mask(carry)]
 
-    return map_groups_in_pandas(
-        triples, ["entity_name", "entity_type"], run, triples.schema
+    # EXPLICIT partition count: a bare keyed repartition is AQE-coalesced
+    # to ~64MB partitions — measured 4 tasks carrying the whole tail at
+    # local[32]. Scale-adaptive (cluster parallelism), not a constant.
+    n_parts = triples.sparkSession.sparkContext.defaultParallelism
+    return (
+        triples.repartition(n_parts, "entity_name", "entity_type")
+        .sortWithinPartitions("entity_name", "entity_type", *tiebreak_order())
+        .mapInPandas(scan, schema=triples.schema)
     )
-
-
-def apply_consistency_greedy(
-    triples: DataFrame,
-    spark: SparkSession,
-    threshold: float = GLOBAL_SCORE_THRESHOLD,
-) -> DataFrame:
-    """Stage-6 production path: unary filters (narrow, pushed early) +
-    the exact greedy activation pass — ONE shuffle on (entity, type) and
-    one Arrow pass, versus the ~8 window/join stages of the expanded
-    battery. Equivalent output (tests assert set equality); far lower
-    fixed stage cost, which is what the scaling-efficiency budget at
-    small-per-core workloads is most sensitive to."""
-    out = type_check(triples, spark)
-    out = sanity_check(out)
-    out = conform_to_guidelines(out)
-    out = threshold_filter(out, threshold)
-    return greedy_consistency(out.drop("cardinality"))
 
 
 def apply_consistency(
@@ -448,15 +333,9 @@ def apply_consistency(
     spark: SparkSession,
     threshold: float = GLOBAL_SCORE_THRESHOLD,
 ) -> DataFrame:
-    """The full stage-6 battery, reference order: unary filters first
-    (cheap, prunes early), then pairwise/windowed checks, then the
-    hold-one-out pass (SlotfillPostProcessor.java:83-190).
-
-    Shuffle plan: ONE explicit repartition on (entity_name, entity_type);
-    every window/join key downstream is a superset of that prefix, so
-    Catalyst's EnsureRequirements reuses the exchange for the collapse /
-    cardinality / incompatibility / mitigation passes instead of
-    re-shuffling per operator.
+    """Stage 6 in reference order (SlotfillPostProcessor.java:83-190):
+    the unary filters first (cheap, prunes early), then the W1 greedy
+    pass.
 
     The input is ensemble output: already unique on the triple key (so
     no O2 pass) and sanity-gated at vote time
@@ -471,23 +350,4 @@ def apply_consistency(
     # k18 (unrelated org:website) and k19 (invalid per:title) templates
     out = conform_to_guidelines(out)
     out = threshold_filter(out, threshold)
-    # EXPLICIT partition count: a bare keyed repartition is AQE-coalesced
-    # to ~64MB partitions — measured 4 tasks carrying the whole 5-window
-    # tail at local[32] (1.0s for what 32 slots do in ~0.3s). Scale-
-    # adaptive (cluster parallelism), not a local[32] constant.
-    n_parts = triples.sparkSession.sparkContext.defaultParallelism
-    out = out.repartition(n_parts, F.col("entity_name"), F.col("entity_type"))
-    out = collapse_employee_member(out)
-    out = remove_low_weight_competitors(out)
-    # O6 runs BEFORE the cardinality top-1 so that, like the reference's
-    # greedy activation loop, a rejected best fill lets the next-best
-    # fill of the same SINGLE relation take its place
-    # (HeuristicSlotfillPostProcessor.java:69-137; see greedy_consistency
-    # for the exact per-entity form — equivalent on chains <= 2). The
-    # window forms keep the whole tail join-free and branch-free: every
-    # pass clusters on an (entity_name, entity_type) prefix, so the one
-    # repartition above is the tail's only exchange.
-    out = respect_incompatibilities_window(out)
-    out = enforce_cardinality(out)
-    out = mitigate_loc_of_death_window(out)
-    return out.drop("cardinality")
+    return greedy_consistency(out)

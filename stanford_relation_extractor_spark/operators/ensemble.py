@@ -4,11 +4,14 @@ Re-expresses `stanford-kbp/.../slotfilling/classify/EnsembleRelationExtractor.ja
 (noisy-or at `:293`, agreement gates at `:303-332`) as pure built-in
 aggregates — no UDAF:
 
-1. ONE hash aggregation over the triple group key pivots the (small,
+1. ONE aggregation over the triple group key pivots the (small,
    fixed) extractor set into per-extractor max-score and best-vote
    columns — a single shuffle with map-side partial aggregation (the
    naive per-(group, extractor) pre-aggregation costs a second
-   exchange; pivoting removes it).
+   exchange; pivoting removes it). On Spark 4.1.2 it plans as a
+   SortAggregate, not a HashAggregate: sort + partial aggregate before
+   the exchange, sort + final aggregate after it (see
+   ``_vote_key_expr``).
 2. per group: ``n_agree`` = #extractors voting, combined score =
    noisy-or ``1 - prod(1 - w_i)``, gate per AGREE_{ANY,ALL,MOST,TWO,
    FIRST} (default AGREE_MOST, `common/Props.java:495`).
@@ -40,10 +43,11 @@ AGREE_FIRST = "AGREE_FIRST"
 
 
 def _vote_key_expr() -> F.Column:
-    # The best-vote key is ONE sortable string instead of a struct:
-    # min(struct) forces Spark onto SortAggregate, while min(string)
-    # keeps the ensemble a hash aggregation with map-side partial
-    # combine (the pipeline's main shuffle). Field order = (quantized
+    # The best-vote key is ONE sortable string. ``min`` over a string
+    # has no fixed-width mutable buffer, so HashAggregate cannot take
+    # it: the aggregation plans as partial and final SortAggregates,
+    # each behind a Sort (ObjectHashAggregate measured slower in r6).
+    # The partial combine still runs map-side. Field order = (quantized
     # descending weight, conv_id, turn_idx, sent_idx, spans) — a total
     # order, so provenance selection stays bit-deterministic.
     # lpad(cast) rather than format_string (java.util.Formatter is an

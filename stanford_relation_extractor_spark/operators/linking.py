@@ -6,8 +6,7 @@ Re-expresses the reference's linker cascade as Spark joins/expressions:
   — `regexp_replace` column expression (JVM-side, codegen).
 * J6 nickname canonicalization (`EntityLinker.java:46-55,135-161`) —
   for small nickname maps a codegen CASE expression beats a join (the
-  dict rides the plan); `nickname_join` provides the broadcast-join
-  form for large dictionaries.
+  dict rides the plan).
 * J5 wikidict alias link with margin rule
   (`.../shallowdive/TextOps.java:304-349`,
   `WikidictEntityLinker.java:76-115`): accept a link iff top-1 score
@@ -39,22 +38,6 @@ def nickname_canonical(name: str, nicknames: dict[str, str]) -> Column:
         mapped = F.when(first == nick, F.lit(full)).otherwise(mapped)
     rest = F.expr(f"substring({name}, length(split({name}, ' ')[0]) + 1)")
     return F.concat(mapped, rest)
-
-
-def nickname_join(df: DataFrame, col: str, nick_df: DataFrame) -> DataFrame:
-    """Broadcast-join form of J6 for large nickname dictionaries.
-
-    ``nick_df``: (nick string, full string).
-    """
-    first = F.split(F.col(col), " ").getItem(0)
-    rest = F.expr(f"substring({col}, length(split({col}, ' ')[0]) + 1)")
-    joined = df.withColumn("_first", first).join(
-        F.broadcast(nick_df), F.col("_first") == F.col("nick"), "left"
-    )
-    return (
-        joined.withColumn(col, F.concat(F.coalesce(F.col("full"), F.col("_first")), rest))
-        .drop("_first", "nick", "full")
-    )
 
 
 def wikidict_link(

@@ -1,10 +1,10 @@
-"""Consistency battery — mirrors HeuristicSlotfillPostProcessorsTest fixtures."""
+"""Stage 6 consistency — mirrors HeuristicSlotfillPostProcessorsTest fixtures."""
 
 from __future__ import annotations
 
 from stanford_relation_extractor_spark.operators.consistency import (
     apply_consistency,
-    enforce_cardinality,
+    greedy_consistency,
     threshold_filter,
     type_check,
 )
@@ -57,7 +57,7 @@ def test_single_cardinality_top1_with_tiebreak(spark):
         ("E", "PERSON", "per:employee_of", "Org002", "ORGANIZATION", 2, 0.8),  # LIST keeps both
     ]
     df = type_check(_triples(spark, rows), spark)
-    out = enforce_cardinality(df)
+    out = greedy_consistency(df)
     ages = [r["slot_value"] for r in out.filter("relation = 'per:age'").collect()]
     assert ages == ["34"]
     emp = {r["slot_value"] for r in out.filter("relation = 'per:employee_of'").collect()}
@@ -92,29 +92,23 @@ def test_sanity_check_filters(spark):
 
 
 def test_incompatibilities_drop_lower_ranked(spark):
-    from stanford_relation_extractor_spark.operators.consistency import (
-        respect_incompatibilities_window,
-    )
-
     rows = [
         # same (entity, slot): date_of_death is NOT declared overlapping
         # with date_of_birth -> lower (death, by relation-asc tiebreak) drops
         ("E", "PERSON", "per:date_of_birth", "1996", "DATE", 2, 0.984),
         ("E", "PERSON", "per:date_of_death", "1996", "DATE", 2, 0.984),
-        # declared-overlapping pair survives together
+        # declared-overlapping pair: passes the pairwise check
         ("E", "PERSON", "per:country_of_birth", "NATION_2", "COUNTRY", 2, 0.9),
         ("E", "PERSON", "per:country_of_death", "NATION_2", "COUNTRY", 2, 0.8),
     ]
-    ranked = type_check(_triples(spark, rows), spark)  # adds the cardinality column
-    out = {r["relation"] for r in respect_incompatibilities_window(ranked).collect()}
-    assert out == {"per:date_of_birth", "per:country_of_birth", "per:country_of_death"}
+    ranked = type_check(_triples(spark, rows), spark)
+    out = {r["relation"] for r in greedy_consistency(ranked).collect()}
+    # country_of_death passes the pairwise check but then falls to the
+    # loc-of-death hold-one-out: its entity's only date_of_death dropped
+    assert out == {"per:date_of_birth", "per:country_of_birth"}
 
 
 def test_mitigate_loc_of_death(spark):
-    from stanford_relation_extractor_spark.operators.consistency import (
-        mitigate_loc_of_death_window,
-    )
-
     rows = [
         ("A", "PERSON", "per:country_of_death", "NATION_2", "COUNTRY", 2, 0.9),
         ("A", "PERSON", "per:date_of_death", "1996", "DATE", 2, 0.9),
@@ -123,7 +117,7 @@ def test_mitigate_loc_of_death(spark):
     ]
     out = {
         (r["entity_name"], r["relation"])
-        for r in mitigate_loc_of_death_window(_triples(spark, rows)).collect()
+        for r in greedy_consistency(_triples(spark, rows)).collect()
     }
     assert ("A", "per:country_of_death") in out
     assert ("B", "per:country_of_death") not in out
@@ -131,16 +125,12 @@ def test_mitigate_loc_of_death(spark):
 
 
 def test_collapse_employee_member(spark):
-    from stanford_relation_extractor_spark.operators.consistency import (
-        collapse_employee_member,
-    )
-
     rows = [
         ("E", "PERSON", "per:employee_of", "Org001", "ORGANIZATION", 2, 0.9),
         ("E", "PERSON", "per:member_of", "Org001", "ORGANIZATION", 2, 0.8),
         ("E", "PERSON", "per:member_of", "Org002", "ORGANIZATION", 2, 0.7),
     ]
-    out = {(r["relation"], r["slot_value"]) for r in collapse_employee_member(_triples(spark, rows)).collect()}
+    out = {(r["relation"], r["slot_value"]) for r in greedy_consistency(_triples(spark, rows)).collect()}
     assert out == {("per:employee_of", "Org001"), ("per:member_of", "Org002")}
 
 
@@ -155,30 +145,16 @@ def test_cooccurrence_matrix_semantics():
     assert not plausibly_cooccurs("org:founded_by", "org:top_members/employees")
 
 
-def test_greedy_consistency_matches_battery_on_corpus(spark):
-    """W1 greedy (applyInPandas) vs the join/window battery: identical
-    surviving triple sets on the synthetic corpus."""
-    from pyspark.sql import functions as F
-
-    from stanford_relation_extractor_spark.operators.consistency import (
-        conform_to_guidelines,
-        greedy_consistency,
-        type_check,
-        threshold_filter,
-        sanity_check,
-    )
-    from stanford_relation_extractor_spark.plans.pipeline import build_stages
-
-    stages = build_stages(spark, "/root/testdata/sf0.001")
-    cand = stages["candidates"].unionByName(
-        stages["alt_names"], allowMissingColumns=True
-    )
-    pre = threshold_filter(
-        conform_to_guidelines(sanity_check(type_check(cand, spark)))
-    ).drop("cardinality")
-    greedy = greedy_consistency(pre)
-    battery = stages["triples"]
-    key = ["entity_name", "entity_type", "relation", "slot_value"]
-    g = {tuple(r) for r in greedy.select(*key).collect()}
-    b = {tuple(r) for r in battery.select(*key).collect()}
-    assert g == b
+def test_greedy_follows_w1_on_depth3_chain(spark):
+    """residence > origin > employee_of on one slot: origin conflicts with
+    both neighbours, residence and employee_of co-occur. W1 drops origin
+    and then judges employee_of against the accepted fills only, so it
+    stays; a fill is never dropped for a higher fill that was itself
+    dropped."""
+    rows = [
+        ("E", "PERSON", "per:countries_of_residence", "NATION_2", "COUNTRY", 2, 0.99),
+        ("E", "PERSON", "per:origin", "NATION_2", "COUNTRY", 2, 0.98),
+        ("E", "PERSON", "per:employee_of", "NATION_2", "COUNTRY", 2, 0.97),
+    ]
+    out = {r["relation"] for r in apply_consistency(_triples(spark, rows), spark).collect()}
+    assert out == {"per:countries_of_residence", "per:employee_of"}

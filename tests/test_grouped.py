@@ -127,7 +127,9 @@ def test_array_key_rejected_at_call_time(spark):
 
 
 def test_greedy_consistency_unchanged_vs_apply_in_pandas(spark):
-    """The r6 greedy rewrite must keep the accepted set bit-identical."""
+    """The flat greedy scan keeps the per-group greedy's accepted set
+    bit-identical, also with 7-row Arrow batches, where most entity
+    groups straddle a batch boundary and take the carry-over path."""
     import stanford_relation_extractor_spark.operators.consistency as C
 
     rows = []
@@ -145,9 +147,7 @@ def test_greedy_consistency_unchanged_vs_apply_in_pandas(spark):
         "entity_name string, entity_type string, relation string, "
         "slot_value string, slot_ner string, score double",
     )
-    got = C.greedy_consistency(df)
-
-    # reference: the pre-r6 applyInPandas dispatch over the same group fn
+    # reference: the per-group greedy, one applyInPandas call per entity
     import pandas as pd
 
     from stanford_relation_extractor_spark.ontology import (
@@ -195,5 +195,14 @@ def test_greedy_consistency_unchanged_vs_apply_in_pandas(spark):
         out = pd.DataFrame(accepted, columns=list(order.columns))
         return out.drop(columns=["_tok", "_len"])
 
-    ref = df.groupBy("entity_name", "entity_type").applyInPandas(ref_run, df.schema)
-    assert _rowset(got) == _rowset(ref)
+    ref = _rowset(
+        df.groupBy("entity_name", "entity_type").applyInPandas(ref_run, df.schema)
+    )
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = spark.conf.get(conf)
+    try:
+        for batch_rows in (default, "7"):
+            spark.conf.set(conf, batch_rows)
+            assert _rowset(C.greedy_consistency(df)) == ref, batch_rows
+    finally:
+        spark.conf.set(conf, default)

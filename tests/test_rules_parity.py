@@ -124,6 +124,7 @@ def test_ledger_binds_on_bank_drift():
     assert "wedded" in eo.get("per:spouse", set())
 
 
+@needs_reference
 def test_weighted_rules_vote_their_file_weight():
     """Round-5: where a shipped `.rules` file carries trailing
     confidences, the relation's pattern votes score the file's MAX
