@@ -502,9 +502,7 @@ def infer_map_triples(
         )
         .distinct()
     )
-    # batched convergence checks / lineage cuts, as in the canon CC call
-    # (each check is a driver round-trip; cluster graphs are shallow)
-    comp = connected_components(edges, check_every=4, checkpoint_every=8)
+    comp = connected_components(edges)
     keyed = t.join(
         comp.withColumnRenamed("node", "entity_name").withColumnRenamed(
             "component", "_cluster"

@@ -7,18 +7,10 @@ representative, rewrite edges) as:
 1. an undirected same-entity edge table (produced by the linker cascade
    or supplied directly);
 2. deterministic connected components (no GraphFrames dependency,
-   SURVEY.md §4) with TWO interchangeable algorithms behind one
-   signature:
-   * ``algorithm="label"`` — min-label propagation: each node adopts
-     the minimum component id among itself and its neighbors.
-     O(diameter) rounds of one co-partitioned join each — the right
-     choice for alias/link chains (diameter <= 3 on transcripts).
-   * ``algorithm="star"`` — alternating large-star/small-star
-     contraction (Kiveris et al., "Connected Components in MapReduce
-     and Beyond"): O(log^2 n) rounds regardless of diameter — the
-     scale path for adversarial graphs (long chains, giant
-     components).
-   Lineage is cut every ``checkpoint_every`` rounds; with a
+   SURVEY.md §4) by min-label propagation: each node adopts the minimum
+   component id among itself and its neighbors. O(diameter) rounds of
+   one co-partitioned join each — alias/link chains have diameter <= 3
+   on transcripts. Lineage is cut every 8 rounds; with a
    ``checkpoint_dir`` the cut is a *reliable* ``checkpoint()`` (HDFS/
    object-store) so executor loss mid-computation cannot kill the job
    — ``localCheckpoint`` (executor-local) is only the sandbox default.
@@ -41,48 +33,31 @@ def _lineage_cut(df: DataFrame, checkpoint_dir: str | None) -> DataFrame:
 
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 25,
-    algorithm: str = "label",
-    check_every: int = 1,
-    checkpoint_every: int = 1,
-    checkpoint_dir: str | None = None,
+    edges: DataFrame, max_iter: int = 25, checkpoint_dir: str | None = None
 ) -> DataFrame:
     """(node, component) with component = min node id in the component.
 
-    ``edges`` is treated as undirected; node ids are strings ordered
-    lexicographically (deterministic representative selection).
-    ``check_every`` batches the convergence-test action (each test is a
-    driver round-trip); ``checkpoint_every``/``checkpoint_dir`` control
-    lineage cuts (see module docstring).
+    ``edges`` (src, dst) is treated as undirected; node ids are strings
+    ordered lexicographically (deterministic representative selection).
+    Convergence is tested every 4 rounds (each test is a driver
+    round-trip) and lineage is cut every 8 (see module docstring).
+    Raises ``RuntimeError`` when labels still change in round
+    ``max_iter``: truncated labels would map nodes onto
+    non-representatives.
     """
     sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+        .union(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    if algorithm == "star":
-        return _cc_star(sym, max_iter, checkpoint_every, checkpoint_dir)
-    if algorithm != "label":
-        raise ValueError(f"unknown connected-components algorithm {algorithm!r}")
-
     labels = (
         sym.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
     )
-    # checkpoint_every > max_iter (with check_every likewise) selects
-    # the fully-LAZY mode: no cuts, no convergence actions — the whole
-    # fixed-iteration loop lands in the caller's next job. The right
-    # mode for small bounded-diameter graphs (alias chains), where every
-    # extra Spark job is pure fixed scheduling cost.
-    lazy_mode = checkpoint_every > max_iter and check_every > max_iter
-    if not lazy_mode:
-        labels = _lineage_cut(labels, checkpoint_dir)
-        sym = _lineage_cut(sym, checkpoint_dir)
+    labels = _lineage_cut(labels, checkpoint_dir)
+    sym = _lineage_cut(sym, checkpoint_dir)
 
     for it in range(max_iter):
         nbr_min = (
@@ -100,76 +75,17 @@ def connected_components(
                 (F.col("nbr_component") < F.col("component")).alias("_changed"),
             )
         )
-        if not lazy_mode and ((it + 1) % checkpoint_every == 0 or it == max_iter - 1):
+        last = it == max_iter - 1
+        if (it + 1) % 8 == 0 or last:
             new_labels = _lineage_cut(new_labels, checkpoint_dir)
-        do_check = not lazy_mode and (
-            (it + 1) % check_every == 0 or it == max_iter - 1
-        )
-        if do_check:
-            changed = new_labels.filter(F.col("_changed")).limit(1).count()
         labels = new_labels.drop("_changed")
-        if do_check and changed == 0:
-            break
-    return labels
-
-
-def _cc_star(
-    sym: DataFrame,
-    max_iter: int,
-    checkpoint_every: int,
-    checkpoint_dir: str | None,
-) -> DataFrame:
-    """Alternating large-star/small-star rounds until the edge set is a
-    fixpoint (a forest of stars centered at component minima).
-
-    Each round is two join+agg passes over the current edge set; one
-    tiny agg action per round tests the fixpoint via a deterministic
-    (count, xor-free hash-sum) signature.
-    """
-    nodes = sym.select(F.col("a").alias("node")).distinct()
-    nodes = _lineage_cut(nodes, checkpoint_dir)
-    e = _lineage_cut(sym, checkpoint_dir)
-    prev_sig = None
-    for it in range(max_iter):
-        # large-star: attach every strictly-larger neighbor of u to
-        # m(u) = min(N(u) ∪ {u})
-        s = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        mn = s.groupBy("a").agg(F.min("b").alias("_mb"))
-        mn = mn.select("a", F.least(F.col("_mb"), F.col("a")).alias("m"))
-        e1 = (
-            s.join(mn, "a")
-            .filter(F.col("b") > F.col("a"))
-            .select(F.col("b").alias("a"), F.col("m").alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-        )
-        # small-star: attach every smaller-or-equal neighbor (and u) to
-        # m(u) = min(N<=(u) ∪ {u})
-        s1 = e1.union(e1.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        smaller = s1.filter(F.col("b") < F.col("a"))
-        mn2 = smaller.groupBy("a").agg(F.min("b").alias("m"))
-        e2 = (
-            smaller.join(mn2, "a")
-            .select(F.col("b").alias("a"), F.col("m").alias("b"))
-            .union(mn2.select("a", F.col("m").alias("b")))
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-        )
-        if (it + 1) % checkpoint_every == 0 or it == max_iter - 1:
-            e2 = _lineage_cut(e2, checkpoint_dir)
-        sig = tuple(
-            e2.agg(
-                F.count("*").alias("n"), F.sum(F.hash("a", "b")).alias("h")
-            ).collect()[0]
-        )
-        e = e2
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    # star edges point node -> center; centers / isolated nodes label themselves
-    centers = e.groupBy(F.col("a").alias("node")).agg(F.min("b").alias("_c"))
-    return nodes.join(centers, "node", "left").select(
-        "node", F.coalesce(F.col("_c"), F.col("node")).alias("component")
+        if ((it + 1) % 4 == 0 or last) and new_labels.filter(
+            F.col("_changed")
+        ).limit(1).count() == 0:
+            return labels
+    raise RuntimeError(
+        f"connected components did not converge: labels of {labels.count()} "
+        f"nodes still changed in round max_iter={max_iter}"
     )
 
 
@@ -199,25 +115,14 @@ def vote_surfaces(votes: DataFrame) -> DataFrame:
 # of only ~75k rows — THE Amdahl term that held N->4N efficiency at
 # 0.74). Above the gate (real corpora: surfaces grow with data) the
 # distributed path runs and the window scales with executors instead of
-# being fixed. Override with SPARK_GRAFT_CANON_LOCAL_MAX=0 to force
-# the distributed path.
+# being fixed. Read at call time, so a test can lower it to force the
+# distributed path.
 CANON_LOCAL_MAX_SURFACES = 250_000
 
-
-def _canon_local_max() -> int:
-    import os
-
-    raw = os.environ.get("SPARK_GRAFT_CANON_LOCAL_MAX")
-    if raw is None:
-        return CANON_LOCAL_MAX_SURFACES
-    try:
-        return int(raw)
-    except ValueError:
-        # a typo'd "=0 forces distributed" override must not silently
-        # keep the local path
-        raise ValueError(
-            f"SPARK_GRAFT_CANON_LOCAL_MAX={raw!r} is not an integer"
-        ) from None
+# J8 candidate-block cap and sorted-neighborhood width, shared by the
+# distributed cascade (``blocked_candidate_pairs``) and its driver twin
+MAX_BLOCK = 64
+NEIGHBORHOOD = 8
 
 
 def _local_wikidict_link(
@@ -261,9 +166,7 @@ def _local_dict_rewrite(
     return re.sub(f" ({'|'.join(suffixes)})$", "", s)
 
 
-def _local_cascade_edges(
-    surfaces: list[tuple[str, str]], max_block: int, neighborhood: int
-) -> list[tuple[str, str]]:
+def _local_cascade_edges(surfaces: list[tuple[str, str]]) -> list[tuple[str, str]]:
     """Driver twin of blocked_candidate_pairs + same_entity judging
     (both key families, hot-block re-key, sorted-neighborhood tier)."""
     from ..functions.text import (
@@ -287,14 +190,14 @@ def _local_cascade_edges(
     for _n, et, b, _e in keyed:
         counts[(et, b)] = counts.get((et, b), 0) + 1
     rekeyed = [
-        (n, et, e if counts[(et, b)] > max_block else b) for n, et, b, e in keyed
+        (n, et, e if counts[(et, b)] > MAX_BLOCK else b) for n, et, b, e in keyed
     ]
     blocks: dict[tuple[str, str], list[str]] = {}
     for n, et, b in rekeyed:
         blocks.setdefault((et, b), []).append(n)
     edges: list[tuple[str, str]] = []
     for (et, _b), members in blocks.items():
-        if len(members) <= max_block:
+        if len(members) <= MAX_BLOCK:
             ms = sorted(members)
             for i, a in enumerate(ms):
                 for b2 in ms[i + 1:]:
@@ -303,7 +206,7 @@ def _local_cascade_edges(
         else:
             ms = sorted(members)
             for i, a in enumerate(ms):
-                for d in range(1, neighborhood + 1):
+                for d in range(1, NEIGHBORHOOD + 1):
                     if i + d < len(ms) and same_entity(a, ms[i + d], et):
                         edges.append((a, ms[i + d]))
     return edges
@@ -339,9 +242,6 @@ def build_canon_map_local(
     alias_rows: list[tuple[str, str, float]],
     nicknames: dict[str, str],
     suffixes: tuple[str, ...],
-    include_cascade: bool = True,
-    max_block: int = 64,
-    neighborhood: int = 8,
 ) -> DataFrame:
     """Driver-local twin of ``build_canon_map`` for surface sets under
     the size gate: identical edge generation (dictionary rewrites,
@@ -358,10 +258,7 @@ def build_canon_map_local(
             directed.append((s, dst))
     linked = _local_wikidict_link(sorted(set(names)), alias_rows)
     directed += [(s, c) for s, c in linked.items()]
-    edges = list(directed)
-    if include_cascade:
-        edges += _local_cascade_edges(surfaces, max_block, neighborhood)
-    comp = _local_components(edges)
+    comp = _local_components(directed + _local_cascade_edges(surfaces))
     sources = {s for s, _d in directed}
     targets = {d for _s, d in directed}
     pure = targets - sources
@@ -388,8 +285,6 @@ def build_canon_map(
     alias_dict: DataFrame,
     nicknames: dict[str, str],
     suffixes: tuple[str, ...],
-    include_cascade: bool = True,
-    max_iter: int = 50,
 ) -> DataFrame:
     """Stage 4+5 production canonicalization — the reference's flagship
     entity-merging path (`evaluate/GraphConsistencyPostProcessors.java:53-249`
@@ -423,36 +318,34 @@ def build_canon_map(
     # sequenced small jobs; falls through to the distributed path the
     # moment either the surface set or the alias dictionary exceeds the
     # gate (the limit(n+1) makes the probe itself O(gate))
-    local_max = _canon_local_max()
-    if local_max > 0:
-        # Arrow transfers (guide §6): .collect() pickles row-by-row —
-        # measured ~0.5s on the 75k-surface probe at sf0.1; toPandas()
-        # with arrow.pyspark.enabled moves the same rows as one Arrow
-        # batch stream. Values are converted back to plain Python
-        # str/float, so the local twin sees identical inputs.
-        sample = surfaces.select("surface", "ner").limit(local_max + 1).toPandas()
-        if len(sample) <= local_max:
-            alias_pdf = (
-                alias_dict.select("alias", "canonical", "link_score")
-                .limit(4 * local_max + 1)
-                .toPandas()
+    local_max = CANON_LOCAL_MAX_SURFACES
+    # Arrow transfers (guide §6): .collect() pickles row-by-row —
+    # measured ~0.5s on the 75k-surface probe at sf0.1; toPandas()
+    # with arrow.pyspark.enabled moves the same rows as one Arrow
+    # batch stream. Values are converted back to plain Python
+    # str/float, so the local twin sees identical inputs.
+    sample = surfaces.select("surface", "ner").limit(local_max + 1).toPandas()
+    if len(sample) <= local_max:
+        alias_pdf = (
+            alias_dict.select("alias", "canonical", "link_score")
+            .limit(4 * local_max + 1)
+            .toPandas()
+        )
+        if len(alias_pdf) <= 4 * local_max:
+            return build_canon_map_local(
+                surfaces.sparkSession,
+                list(zip(sample["surface"], sample["ner"])),
+                [
+                    (a, c, float(s))
+                    for a, c, s in zip(
+                        alias_pdf["alias"],
+                        alias_pdf["canonical"],
+                        alias_pdf["link_score"],
+                    )
+                ],
+                nicknames,
+                suffixes,
             )
-            if len(alias_pdf) <= 4 * local_max:
-                return build_canon_map_local(
-                    surfaces.sparkSession,
-                    list(zip(sample["surface"], sample["ner"])),
-                    [
-                        (a, c, float(s))
-                        for a, c, s in zip(
-                            alias_pdf["alias"],
-                            alias_pdf["canonical"],
-                            alias_pdf["link_score"],
-                        )
-                    ],
-                    nicknames,
-                    suffixes,
-                    include_cascade,
-                )
 
     surf = surfaces.select("surface", "ner").distinct()
     dict_dst = strip_corporate_suffix(
@@ -467,34 +360,32 @@ def build_canon_map(
     ).select(F.col("surface").alias("src"), F.col("linked").alias("dst"))
     # ONE lineage cut at the (tiny) tagged edge set: the directed edges
     # feed FOUR plan branches (CC sym, sources, targets, rep selection)
-    # and the cascade edges are re-consumed by EVERY lazy-CC iteration —
+    # and the cascade edges are re-consumed by EVERY CC iteration —
     # without the cut Catalyst replays the wikidict aggregation and the
     # whole blocked-pair cascade (joins + window + Arrow judge) per
     # branch per iteration (measured: canon build 145s -> ~10s at
     # sf0.001 when the cascade subtree is cut before CC).
-    all_edges = e_dict.unionByName(e_link).select(
-        "src", "dst", F.lit("d").alias("_tag")
+    cascade = same_entity_edges(
+        surf.select(
+            F.col("surface").alias("entity_name"), F.col("ner").alias("entity_type")
+        )
+    ).select("src", "dst", F.lit("c").alias("_tag"))
+    all_edges = (
+        e_dict.unionByName(e_link)
+        .select("src", "dst", F.lit("d").alias("_tag"))
+        .unionByName(cascade)
+        .localCheckpoint(eager=True)
     )
-    if include_cascade:
-        cascade = same_entity_edges(
-            surf.select(
-                F.col("surface").alias("entity_name"), F.col("ner").alias("entity_type")
-            )
-        ).select("src", "dst", F.lit("c").alias("_tag"))
-        all_edges = all_edges.unionByName(cascade)
-    all_edges = all_edges.localCheckpoint(eager=True)
     directed = all_edges.filter(F.col("_tag") == "d").drop("_tag")
     edges = all_edges.drop("_tag")
     # CC to CONVERGENCE, not a fixed truncation: a cascade chain of
     # edit-distance-1 surfaces can have arbitrary diameter, and a
     # truncated label propagation maps nodes onto non-representatives
-    # (divergent from the driver-local union-find twin — r4 ADVICE).
-    # check_every=4 keeps the convergence test to ONE extra action on
-    # the typical diameter<=3 alias/link graph (checks fire at
-    # iterations 4, 8, ...; the first quiet check breaks the loop).
-    comps = connected_components(
-        edges, max_iter=max_iter, check_every=4, checkpoint_every=8,
-    )
+    # (divergent from the driver-local union-find twin — r4 ADVICE);
+    # connected_components raises rather than truncate. Its first
+    # convergence test (round 4) already passes on the typical
+    # diameter<=3 alias/link graph.
+    comps = connected_components(edges, max_iter=50)
     sources = directed.select(F.col("src").alias("node")).distinct()
     targets = directed.select(F.col("dst").alias("node")).distinct()
     pure = targets.join(sources, "node", "left_anti")
@@ -587,7 +478,7 @@ def emit_alternate_names(
 
 
 def blocked_candidate_pairs(
-    entities: DataFrame, max_block: int = 64, neighborhood: int = 8
+    entities: DataFrame, max_block: int = MAX_BLOCK, neighborhood: int = NEIGHBORHOOD
 ) -> DataFrame:
     """J8 candidate generation with a hot-block cap — never O(n^2).
 
@@ -727,7 +618,7 @@ def blocked_candidate_pairs(
 
 
 def same_entity_edges(
-    entities: DataFrame, max_block: int = 64, neighborhood: int = 8
+    entities: DataFrame, max_block: int = MAX_BLOCK, neighborhood: int = NEIGHBORHOOD
 ) -> DataFrame:
     """J8 at scale: candidate pairs by capped blocking
     (``blocked_candidate_pairs``), judged by ``same_entity``

@@ -77,7 +77,7 @@ def threshold_filter(
         flat.append(F.lit(rel))
         flat.append(F.lit(table[rel]))
     floor = F.coalesce(
-        F.create_map(*flat).getItem(F.col("relation")), F.lit(threshold)
+        F.create_map(*flat)[F.col("relation")], F.lit(threshold)
     )
     return triples.filter(F.col("score") >= floor)
 
@@ -93,28 +93,6 @@ def tiebreak_order() -> list:
         F.asc("slot_value"),
         F.asc("relation"),
     ]
-
-
-def sanity_check(triples: DataFrame) -> DataFrame:
-    """SanityCheckFilter (HeuristicSlotfillPostProcessors.java:148-172):
-    slot length cap, numeric plausibility bands for ages / employee
-    counts, no self-referential fills."""
-    # numeric plausibility bands as pure anchored regexes — a cast-based
-    # form knocks the filter out of whole-stage codegen (interpreted
-    # fallback measured ~10x slower on the pushed-down vote stream)
-    age_ok = F.col("slot_value").rlike(r"^0*(12[0-5]|1[01][0-9]|[1-9][0-9]?)$")
-    emp_ok = F.col("slot_value").rlike(
-        r"^0*(2[5-9]|[3-9][0-9]|[1-9][0-9]{2,4}|[1-4][0-9]{5}|500000)$"
-    )
-    keep = (
-        (F.length("slot_value") <= 80)
-        & (F.col("entity_name") != F.col("slot_value"))
-        & F.when(F.col("relation") == "per:age", age_ok).otherwise(F.lit(True))
-        & F.when(
-            F.col("relation") == "org:number_of_employees/members", emp_ok
-        ).otherwise(F.lit(True))
-    )
-    return triples.filter(keep)
 
 
 def dedup_approximate(triples: DataFrame) -> DataFrame:
@@ -339,8 +317,9 @@ def apply_consistency(
 
     The input is ensemble output: already unique on the triple key (so
     no O2 pass) and sanity-gated at vote time
-    (``extractors.slot_sanity_ok`` — equivalent to ``sanity_check`` and
-    immune to Catalyst pushing an expensive predicate below the
+    (``extractors.slot_sanity_ok``, the SanityCheckFilter of
+    `HeuristicSlotfillPostProcessors.java:148-172`; gating votes in
+    Python keeps Catalyst from pushing an expensive predicate below the
     aggregation onto the full vote stream).
     """
     out = type_check(triples, spark)

@@ -39,7 +39,7 @@ def slot_given_relation_probs(triples: DataFrame, smoothing: float = 0.0) -> Dat
             / (F.sum("n").over(totals) + F.lit(smoothing) * F.count("*").over(totals)),
             6,
         ).alias("p_slot_given_rel"),
-        prior_col.getItem(F.col("relation")).alias("prior"),
+        prior_col[F.col("relation")].alias("prior"),
     )
 
 

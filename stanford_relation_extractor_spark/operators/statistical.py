@@ -1,32 +1,28 @@
 """Statistical relation extractor — the trained-classifier member of the
-ensemble (SURVEY.md A6/A8/F8, §2i `score_statistical`).
+ensemble (SURVEY.md A6/A7/A8/F8).
 
 Re-expresses the shape of
 `stanford-kbp/.../slotfilling/classify/OneVsAllRelationExtractor.java:77-140`:
-per-mention features -> linear scores against a broadcast weight matrix
+per-mention features -> linear scores against frozen weight tables
 -> softmax over relations (`RelationClassifier.java:109-115`, gamma=1)
--> at-least-once max-pool per (entity, relation, slot) group. Training
-is a Spark-side frequency-based weight estimation (the MIML JointBayes
-EM of the reference is out of scope; the inference surface is what the
-ensemble consumes).
+-> noisy-or over the bagged models (`EnsembleRelationExtractor:293`).
 
-* ``featurize_pairs`` — the surface-feature subset of
-  `FeatureFactory.createDatum` (`process/FeatureFactory.java:171-972`):
-  arg order, NER-type pair, between-words unigrams, surface distance
-  bins, adjacent words. Dependency-path features are re-expressed as
-  between-span token paths (documented stand-in, SURVEY.md F12).
-* ``feature_count_filter`` — A8: drop features with corpus frequency
-  < 5 (`Props.featureCountThreshold`, `common/Props.java:227`).
-* ``train_weights`` / ``score_statistical`` — per-relation log-odds
-  weights from labeled pairs; inference via numpy inside an
-  Arrow-batched UDF.
+* Inference runs inside the extraction pass:
+  ``extractors.votes_for_sentence`` featurizes each pair with
+  ``pair_feature_list`` (the surface subset of
+  `FeatureFactory.createDatum`, `process/FeatureFactory.java:171-972`,
+  over a between-span whose other mentions are masked by their NER) and
+  scores it with ``combined_relation_probs`` against
+  ``models.frozen_statistical.BAG_WEIGHTS``. Dependency-path features
+  are re-expressed as between-span token paths (SURVEY.md F12).
+* Training is offline (scripts/train_statistical.py):
+  ``feature_count_filter`` (A8, drop features with corpus frequency < 5,
+  `Props.featureCountThreshold`, `common/Props.java:227`), then
+  ``miml_train`` — distributed EM over (entity, slot) bags, refitting the
+  log-odds table ``train_weights_df`` each round.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -35,18 +31,14 @@ FEATURE_COUNT_THRESHOLD = 5  # common/Props.java:227
 
 
 def features_from_between(
-    order: str,
-    et: str,
-    sn: str,
-    between: list[str],
-    clusters: dict[str, int] | None = None,
+    order: str, et: str, sn: str, between: list[str]
 ) -> list[str]:
     """The shared feature template (the surface subset of
     `FeatureFactory.createDatum`, `process/FeatureFactory.java:171-972`):
     arg order, NER type pair, surface-distance bin, between-words
-    unigrams, between-path, optional word clusters (F13). Construction
-    ORDER is part of the spec — scoring sums weights in list order, so
-    the oracle's re-derivation must produce the identical sequence."""
+    unigrams, between-path. Construction ORDER is part of the spec —
+    scoring sums weights in list order, so the oracle's re-derivation
+    must produce the identical sequence."""
     dist_bin = "adj" if len(between) == 0 else ("near" if len(between) <= 3 else "far")
     feats = [
         f"arg_order:{order}",
@@ -56,34 +48,11 @@ def features_from_between(
     feats.extend(f"between:{w.lower()}" for w in between[:8])
     if between:
         feats.append(f"between_path:{'_'.join(w.lower() for w in between[:4])}")
-    if clusters:
-        # F13 word-cluster features (FeatureFactory.java:65-76; the
-        # reference's Brown-cluster file egw4-reut.512.clusters) — the
-        # cluster map is a broadcast dict
-        for w in between[:8]:
-            c = clusters.get(w.lower())
-            if c is not None:
-                feats.append(f"between_cluster:{c}")
     return feats
 
 
-def _pair_features(
-    sent: str, eb: int, ee: int, sb: int, se: int, et: str, sn: str,
-    clusters: dict[str, int] | None = None,
-) -> list[str]:
-    """Surface features for one (entity, slot) pair in a sentence."""
-    order = "e_before_s" if eb < sb else "s_before_e"
-    lo, hi = (ee, sb) if eb < sb else (se, eb)
-    between = sent[lo:hi].strip().split() if hi > lo else []
-    return features_from_between(order, et, sn, between, clusters)
-
-
 def pair_feature_list(
-    sent: str,
-    mentions: list[dict],
-    ent: dict,
-    slot: dict,
-    clusters: dict[str, int] | None = None,
+    sent: str, mentions: list[dict], ent: dict, slot: dict
 ) -> list[str]:
     """Masked pair features: every OTHER mention inside the between-span
     is replaced by its ⟨NER⟩ sentinel — the Spark analog of the
@@ -95,7 +64,7 @@ def pair_feature_list(
     order = "e_before_s" if eb < sb else "s_before_e"
     lo, hi = (ent["end"], sb) if eb < sb else (slot["end"], eb)
     if hi <= lo:
-        return features_from_between(order, ent["ner"], slot["ner"], [], clusters)
+        return features_from_between(order, ent["ner"], slot["ner"], [])
     pieces: list[str] = []
     pos = lo
     for m in mentions:
@@ -107,7 +76,7 @@ def pair_feature_list(
             pos = m["end"]
     pieces.append(sent[pos:hi])
     between = "".join(pieces).strip().split()
-    return features_from_between(order, ent["ner"], slot["ner"], between, clusters)
+    return features_from_between(order, ent["ner"], slot["ner"], between)
 
 
 def softmax_relations() -> list[str]:
@@ -169,52 +138,6 @@ def combined_relation_probs(
     # which 6-digit rounding turns into an exact 1.0 — degenerate for
     # every downstream noisy-or (and the oracle's log-product form)
     return {rel: min(1.0 - acc[rel], 0.999999) for rel in relations}
-
-
-def featurize_pairs(
-    votes_or_pairs: DataFrame,
-    sentences: DataFrame,
-    clusters: dict[str, int] | None = None,
-) -> DataFrame:
-    """(pair key cols, feature) long table from sentence rows + spans."""
-    pairs = votes_or_pairs.select(
-        "conv_id", "turn_idx", "sent_idx",
-        "entity_name", "entity_type", "entity_begin", "entity_end",
-        "slot_value", "slot_ner", "slot_begin", "slot_end",
-    ).distinct()
-    joined = pairs.join(
-        sentences.select("conv_id", "turn_idx", "sent_idx", "sent_text"),
-        ["conv_id", "turn_idx", "sent_idx"],
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                for f in _pair_features(
-                    r.sent_text, r.entity_begin, r.entity_end,
-                    r.slot_begin, r.slot_end, r.entity_type, r.slot_ner,
-                    clusters,
-                ):
-                    rows.append(
-                        (r.conv_id, r.turn_idx, r.sent_idx, r.entity_name,
-                         r.entity_type, r.slot_value, r.slot_ner, f)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "conv_id", "turn_idx", "sent_idx", "entity_name",
-                    "entity_type", "slot_value", "slot_ner", "feature",
-                ],
-            )
-
-    return joined.mapInPandas(
-        run,
-        schema=(
-            "conv_id string, turn_idx int, sent_idx int, entity_name string, "
-            "entity_type string, slot_value string, slot_ner string, feature string"
-        ),
-    )
 
 
 def feature_count_filter(features: DataFrame, threshold: int = FEATURE_COUNT_THRESHOLD) -> DataFrame:
@@ -283,8 +206,7 @@ def train_weights_df(
     for the per-feature totals — the weight estimation never leaves the
     cluster (the round-1 driver `.collect()` of the raw count table was
     a 100 TB scale-killer: the pre-threshold feature vocabulary is
-    unbounded). Apply ``feature_count_filter`` (A8) upstream and
-    ``top_k_weights`` downstream before broadcasting.
+    unbounded). Apply ``feature_count_filter`` (A8) upstream.
 
     With ``weight_col`` the counts are fractional — each row contributes
     its posterior mass instead of 1 (the soft-EM M-step).
@@ -306,53 +228,65 @@ def train_weights_df(
     )
 
 
-def top_k_weights(weights: DataFrame, k: int) -> DataFrame:
-    """Keep the k highest-|weight| features per relation — bounds the
-    broadcast model size independently of corpus vocabulary."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("relation").orderBy(
-        F.abs(F.col("weight")).desc(), F.col("feature").asc()
-    )
-    return (
-        weights.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= k)
-        .drop("_r")
-    )
-
-
-def weights_to_map(weights: DataFrame, max_features_per_relation: int | None = None) -> dict[str, dict[str, float]]:
-    """Collect a (bounded) weight table into the broadcastable
-    feature -> relation -> weight nested dict consumed by
-    ``score_statistical``. The collect is explicitly size-capped — the
-    unbounded form is only safe after A8 thresholding."""
-    if max_features_per_relation is not None:
-        weights = top_k_weights(weights, max_features_per_relation)
-    out: dict[str, dict[str, float]] = {}
-    for r in weights.select("feature", "relation", "weight").collect():
-        out.setdefault(r["feature"], {})[r["relation"]] = r["weight"]
-    return out
-
-
-def train_weights(
-    labeled_features: DataFrame, max_features_per_relation: int | None = None
-) -> dict[str, dict[str, float]]:
-    """feature -> relation -> log-odds weight (naive-Bayes-flavored
-    stand-in for the reference's LR fit,
-    `classify/OneVsAllRelationExtractor.java:77-140`). The aggregation
-    runs distributed (``train_weights_df``); only the bounded weight
-    table is collected for broadcast."""
-    return weights_to_map(
-        train_weights_df(labeled_features), max_features_per_relation
-    )
-
-
 MENTION_KEY = [
     "conv_id", "turn_idx", "sent_idx", "entity_name", "entity_type",
     "slot_value", "slot_ner",
 ]
 BAG_KEY = ["entity_name", "slot_value"]
 NIL = "NIL"
+
+
+def _score_candidates(
+    features: DataFrame, mentions: DataFrame, labels: DataFrame, weights: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """The E-step both training modes share. Returns ``(cscored,
+    forced)``: every mention paired with each candidate label (its bag's
+    labels plus NIL) and the summed feature weight ``s``; and the
+    at-least-once pins, the best-scoring mention of each (bag, positive
+    label) assigned that label
+    (`JointBayesRelationExtractor.java:1500-1560`)."""
+    from pyspark.sql import Window
+
+    scores = (
+        features.join(weights, "feature")
+        .groupBy(*MENTION_KEY, "relation")
+        .agg(F.sum("weight").alias("s"))
+    )
+    cand = (
+        mentions.join(labels, BAG_KEY)
+        .select(*MENTION_KEY, "relation")
+        .unionByName(mentions.select(*MENTION_KEY, F.lit(NIL).alias("relation")))
+    )
+    cscored = cand.join(scores, [*MENTION_KEY, "relation"], "left").fillna({"s": 0.0})
+    w_rel = Window.partitionBy(*BAG_KEY, "relation").orderBy(
+        F.col("s").desc(), *[F.col(c).asc() for c in MENTION_KEY]
+    )
+    forced = (
+        cscored.filter(F.col("relation") != NIL)
+        .withColumn("_rn", F.row_number().over(w_rel))
+        .filter(F.col("_rn") == 1)
+        .select(*MENTION_KEY, F.col("relation").alias("z"))
+    )
+    return cscored, forced
+
+
+def _hard_assignment(cscored: DataFrame, forced: DataFrame) -> DataFrame:
+    """(mention key, z): the pins, and the argmax label (NIL admissible)
+    for every other mention."""
+    from pyspark.sql import Window
+
+    w_m = Window.partitionBy(*MENTION_KEY).orderBy(
+        F.col("s").desc(), F.col("relation").asc()
+    )
+    argmax = (
+        cscored.withColumn("_rn", F.row_number().over(w_m))
+        .filter(F.col("_rn") == 1)
+        .select(*MENTION_KEY, F.col("relation").alias("z"))
+    )
+    rest = argmax.join(
+        forced.select(*MENTION_KEY).distinct(), MENTION_KEY, "left_anti"
+    )
+    return forced.unionByName(rest)
 
 
 def miml_train(
@@ -415,48 +349,10 @@ def miml_train(
     # replaying the whole EM history
     weights = refit(init, weighted=False).localCheckpoint(eager=True)
 
-    tie_order = [F.col(c).asc() for c in MENTION_KEY]
     for _ in range(epochs):
-        scores = (
-            features.join(weights, "feature")
-            .groupBy(*MENTION_KEY, "relation")
-            .agg(F.sum("weight").alias("s"))
-        )
-        cand = (
-            mentions.join(labels, BAG_KEY)
-            .select(*MENTION_KEY, "relation")
-            .unionByName(mentions.select(*MENTION_KEY, F.lit(NIL).alias("relation")))
-        )
-        cscored = cand.join(scores, [*MENTION_KEY, "relation"], "left").fillna(
-            {"s": 0.0}
-        )
-        # at-least-once: the best mention per (bag, positive label) is
-        # pinned to that label
-        w_rel = Window.partitionBy(*BAG_KEY, "relation").orderBy(
-            F.col("s").desc(), *tie_order
-        )
-        forced = (
-            cscored.filter(F.col("relation") != NIL)
-            .withColumn("_rn", F.row_number().over(w_rel))
-            .filter(F.col("_rn") == 1)
-            .select(*MENTION_KEY, F.col("relation").alias("z"))
-        )
+        cscored, forced = _score_candidates(features, mentions, labels, weights)
         if mode == "hard":
-            # argmax z for every other mention (NIL admissible)
-            w_m = Window.partitionBy(*MENTION_KEY).orderBy(
-                F.col("s").desc(), F.col("relation").asc()
-            )
-            argmax = (
-                cscored.withColumn("_rn", F.row_number().over(w_m))
-                .filter(F.col("_rn") == 1)
-                .select(*MENTION_KEY, F.col("relation").alias("z"))
-            )
-            rest = argmax.join(
-                forced.select(*MENTION_KEY).distinct(), MENTION_KEY, "left_anti"
-            )
-            weights = refit(forced.unionByName(rest), weighted=False).localCheckpoint(
-                eager=True
-            )
+            weights = refit(_hard_assignment(cscored, forced), weighted=False)
         else:
             # soft posterior over the candidate set: softmax of the
             # linear scores within each mention's window
@@ -468,66 +364,9 @@ def miml_train(
                 forced.select(*MENTION_KEY).distinct(), MENTION_KEY, "left_anti"
             ).select(*MENTION_KEY, F.col("relation").alias("z"), "wt")
             assign = forced.withColumn("wt", F.lit(1.0)).unionByName(rest)
-            weights = refit(assign, weighted=True).localCheckpoint(eager=True)
+            weights = refit(assign, weighted=True)
+        weights = weights.localCheckpoint(eager=True)
     return weights
-
-
-def score_statistical(
-    features: DataFrame,
-    weights: dict[str, dict[str, float]],
-    relations: list[str],
-    gamma: float = 1.0,
-    extractor_name: str = "statistical",
-) -> DataFrame:
-    """Per-pair relation distribution: sum feature weights per relation,
-    softmax rescale (RelationClassifier.java:109-115), emit vote rows.
-
-    The weight table is broadcast by closure; scoring is pure numpy over
-    Arrow batches.
-    """
-    import numpy as np
-
-    rel_idx = {rel: i for i, rel in enumerate(relations)}
-    pair_key = [
-        "conv_id", "turn_idx", "sent_idx", "entity_name", "entity_type",
-        "slot_value", "slot_ner",
-    ]
-    grouped = features.groupBy(*pair_key).agg(
-        F.collect_list("feature").alias("feats")
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                scores = np.zeros(len(relations))
-                for f in r.feats:
-                    for rel, w in weights.get(f, {}).items():
-                        i = rel_idx.get(rel)
-                        if i is not None:
-                            scores[i] += w
-                e = np.exp(gamma * (scores - scores.max()))
-                probs = e / e.sum()
-                for rel, p in zip(relations, probs):
-                    if p > 1e-6:
-                        rows.append(
-                            (r.conv_id, r.turn_idx, r.sent_idx, r.entity_name,
-                             r.entity_type, r.slot_value, r.slot_ner, rel,
-                             extractor_name, round(float(p), 6))
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=pair_key + ["relation", "extractor", "score"],
-            )
-
-    return grouped.mapInPandas(
-        run,
-        schema=(
-            "conv_id string, turn_idx int, sent_idx int, entity_name string, "
-            "entity_type string, slot_value string, slot_ner string, "
-            "relation string, extractor string, score double"
-        ),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -692,43 +531,9 @@ def final_z_assignment(
     """One hard E-step against a fitted z-weight table: candidate set =
     bag labels + NIL, at-least-once pinning, argmax elsewhere — the
     assignment the last EM epoch trained on."""
-    from pyspark.sql import Window
-
     mentions = features.select(*MENTION_KEY).distinct()
     labels = bag_labels.select(*BAG_KEY, "relation").distinct()
-    scores = (
-        features.join(weights, "feature")
-        .groupBy(*MENTION_KEY, "relation")
-        .agg(F.sum("weight").alias("s"))
-    )
-    cand = (
-        mentions.join(labels, BAG_KEY)
-        .select(*MENTION_KEY, "relation")
-        .unionByName(mentions.select(*MENTION_KEY, F.lit(NIL).alias("relation")))
-    )
-    cscored = cand.join(scores, [*MENTION_KEY, "relation"], "left").fillna({"s": 0.0})
-    tie_order = [F.col(c).asc() for c in MENTION_KEY]
-    w_rel = Window.partitionBy(*BAG_KEY, "relation").orderBy(
-        F.col("s").desc(), *tie_order
-    )
-    forced = (
-        cscored.filter(F.col("relation") != NIL)
-        .withColumn("_rn", F.row_number().over(w_rel))
-        .filter(F.col("_rn") == 1)
-        .select(*MENTION_KEY, F.col("relation").alias("z"))
-    )
-    w_m = Window.partitionBy(*MENTION_KEY).orderBy(
-        F.col("s").desc(), F.col("relation").asc()
-    )
-    argmax = (
-        cscored.withColumn("_rn", F.row_number().over(w_m))
-        .filter(F.col("_rn") == 1)
-        .select(*MENTION_KEY, F.col("relation").alias("z"))
-    )
-    rest = argmax.join(
-        forced.select(*MENTION_KEY).distinct(), MENTION_KEY, "left_anti"
-    )
-    return forced.unionByName(rest)
+    return _hard_assignment(*_score_candidates(features, mentions, labels, weights))
 
 
 def miml_train_zy(

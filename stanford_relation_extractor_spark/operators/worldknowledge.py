@@ -172,7 +172,7 @@ def check_geo_consistency(triples: DataFrame, geo_cities: DataFrame) -> DataFram
     )
     city_rows = triples.filter(
         F.col("relation").isin(*CITY_TO_COUNTRY_REL)
-    ).withColumn("_country_rel", fam.getItem(F.col("relation")))
+    ).withColumn("_country_rel", fam[F.col("relation")])
     mapped = city_rows.join(
         F.broadcast(geo_cities.select(F.col("city").alias("_city"), F.col("country").alias("_geo_country"))),
         F.col("slot_value") == F.col("_city"),

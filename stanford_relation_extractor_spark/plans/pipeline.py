@@ -122,13 +122,12 @@ def _surfaces_cut(df: DataFrame, spark: SparkSession) -> DataFrame:
     checkpoint job + separate probe job with a single job at sandbox
     scale, with no behavior change beyond the gate.
     """
-    from ..operators.canonicalize import _canon_local_max
+    from ..operators import canonicalize
 
-    gate = _canon_local_max()
-    if gate > 0:
-        pdf = df.limit(gate + 1).toPandas()
-        if len(pdf) <= gate:
-            return spark.createDataFrame(pdf, df.schema)
+    gate = canonicalize.CANON_LOCAL_MAX_SURFACES
+    pdf = df.limit(gate + 1).toPandas()
+    if len(pdf) <= gate:
+        return spark.createDataFrame(pdf, df.schema)
     return df.localCheckpoint(eager=True)
 
 

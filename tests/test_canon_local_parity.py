@@ -5,44 +5,33 @@ representative selection)."""
 
 from __future__ import annotations
 
-import os
-
-import pytest
-
-from pyspark.sql import functions as F
+from stanford_relation_extractor_spark.operators import canonicalize
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def _both_paths(spark, surfaces, alias_dict):
-    from stanford_relation_extractor_spark.operators.canonicalize import (
-        build_canon_map,
-    )
+def _canon_map(surfaces, alias_dict) -> set[tuple[str, str]]:
     from stanford_relation_extractor_spark.sources.synthetic import (
         CORP_SUFFIXES,
         NICKNAMES,
     )
 
-    os.environ["SPARK_GRAFT_CANON_LOCAL_MAX"] = "0"  # force distributed
-    try:
-        dist = {
-            (r.node, r.rep)
-            for r in build_canon_map(
-                surfaces, alias_dict, NICKNAMES, CORP_SUFFIXES
-            ).collect()
-        }
-    finally:
-        del os.environ["SPARK_GRAFT_CANON_LOCAL_MAX"]
-    local = {
+    return {
         (r.node, r.rep)
-        for r in build_canon_map(
+        for r in canonicalize.build_canon_map(
             surfaces, alias_dict, NICKNAMES, CORP_SUFFIXES
         ).collect()
     }
-    return dist, local
 
 
-def test_local_path_matches_distributed_on_corpus(spark):
+def _both_paths(monkeypatch, surfaces, alias_dict):
+    with monkeypatch.context() as m:
+        m.setattr(canonicalize, "CANON_LOCAL_MAX_SURFACES", 0)  # force distributed
+        dist = _canon_map(surfaces, alias_dict)
+    return dist, _canon_map(surfaces, alias_dict)
+
+
+def test_local_path_matches_distributed_on_corpus(spark, monkeypatch):
     from stanford_relation_extractor_spark.operators.canonicalize import (
         vote_surfaces,
     )
@@ -51,12 +40,12 @@ def test_local_path_matches_distributed_on_corpus(spark):
 
     stages = build_stages(spark, SF_DIR)
     surfaces = vote_surfaces(stages["votes"]).localCheckpoint(eager=True)
-    dist, local = _both_paths(spark, surfaces, alias_dict_df(spark, SF_DIR))
+    dist, local = _both_paths(monkeypatch, surfaces, alias_dict_df(spark, SF_DIR))
     assert dist == local
     assert len(local) > 50  # the corpus genuinely exercises the map
 
 
-def test_local_path_matches_distributed_on_hot_blocks_and_margins(spark):
+def test_local_path_matches_distributed_on_hot_blocks_and_margins(spark, monkeypatch):
     """Constructed stress set: hot block beyond the cap (sorted
     neighborhood tier), margin-rule rejections/ties, nested orgs,
     corporate suffixes, digit-guarded near-typos."""
@@ -84,7 +73,7 @@ def test_local_path_matches_distributed_on_hot_blocks_and_margins(spark):
         ],
         "alias string, canonical string, link_score double",
     )
-    dist, local = _both_paths(spark, surfaces, alias_dict)
+    dist, local = _both_paths(monkeypatch, surfaces, alias_dict)
     assert dist == local
     as_dict = dict(local)
     assert as_dict.get("Org004 Securities") == "Org004"
@@ -93,7 +82,7 @@ def test_local_path_matches_distributed_on_hot_blocks_and_margins(spark):
     assert as_dict.get("Bobby Person000001") == "Bob Person000001"
 
 
-def test_long_chain_component_matches_union_find(spark):
+def test_long_chain_component_matches_union_find(spark, monkeypatch):
     """r4 ADVICE: a >4-diameter edit-distance-1 chain ('abbbbb Smith' ..
     'aaaaaa Smith', each adjacent pair one typo apart) must collapse to
     ONE representative on BOTH paths — the distributed CC used to stop
@@ -103,7 +92,7 @@ def test_long_chain_component_matches_union_find(spark):
     alias_dict = spark.createDataFrame(
         [], "alias string, canonical string, link_score double"
     )
-    dist, local = _both_paths(spark, surfaces, alias_dict)
+    dist, local = _both_paths(monkeypatch, surfaces, alias_dict)
     assert dist == local
     as_dict = dict(dist)
     reps = set(as_dict.values())
@@ -116,17 +105,9 @@ def test_long_chain_component_matches_union_find(spark):
         assert not (reps & mapped)
 
 
-def test_gate_forces_distributed_beyond_threshold(spark):
+def test_gate_forces_distributed_beyond_threshold(spark, monkeypatch):
     """With the gate at 1, the distributed path runs (probe collects at
     most gate+1 rows) and still produces the same map."""
-    from stanford_relation_extractor_spark.operators.canonicalize import (
-        build_canon_map,
-    )
-    from stanford_relation_extractor_spark.sources.synthetic import (
-        CORP_SUFFIXES,
-        NICKNAMES,
-    )
-
     surfaces = spark.createDataFrame(
         [("Acme Corp", "ORGANIZATION"), ("Acme", "ORGANIZATION")],
         "surface string, ner string",
@@ -134,14 +115,12 @@ def test_gate_forces_distributed_beyond_threshold(spark):
     alias_dict = spark.createDataFrame(
         [], "alias string, canonical string, link_score double"
     )
-    os.environ["SPARK_GRAFT_CANON_LOCAL_MAX"] = "1"
-    try:
-        out = {
-            (r.node, r.rep)
-            for r in build_canon_map(
-                surfaces, alias_dict, NICKNAMES, CORP_SUFFIXES
-            ).collect()
-        }
-    finally:
-        del os.environ["SPARK_GRAFT_CANON_LOCAL_MAX"]
-    assert out == {("Acme Corp", "Acme")}
+    monkeypatch.setattr(canonicalize, "CANON_LOCAL_MAX_SURFACES", 1)
+    local_calls = []
+    local = canonicalize.build_canon_map_local
+    monkeypatch.setattr(
+        canonicalize, "build_canon_map_local",
+        lambda *a: local_calls.append(a) or local(*a),
+    )
+    assert _canon_map(surfaces, alias_dict) == {("Acme Corp", "Acme")}
+    assert not local_calls

@@ -48,6 +48,28 @@ def test_threshold_is_inclusive(spark):
     assert vals == {"S1", "34"}
 
 
+def test_map_lookups_raise_no_future_warning(spark):
+    """Per-relation map lookups index with ``map[col]``: PySpark 4.1
+    deprecates ``getItem(col)`` with a FutureWarning and announces its
+    removal, which would break these filters on upgrade."""
+    import warnings
+
+    from stanford_relation_extractor_spark.operators.corpus_stats import (
+        slot_given_relation_probs,
+    )
+    from stanford_relation_extractor_spark.operators.worldknowledge import (
+        check_geo_consistency,
+    )
+
+    df = _triples(spark, [("E", "PERSON", "per:age", "34", "NUMBER", 1, 0.97)])
+    geo = spark.createDataFrame([], "city string, country string")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        threshold_filter(df)
+        slot_given_relation_probs(df)
+        check_geo_consistency(df, geo)
+
+
 def test_single_cardinality_top1_with_tiebreak(spark):
     rows = [
         ("E", "PERSON", "per:age", "34", "NUMBER", 2, 0.95),
@@ -75,20 +97,20 @@ def test_full_battery_composes(spark):
     assert got == {("per:age", "34"), ("per:title", "president")}
 
 
-def test_sanity_check_filters(spark):
-    from stanford_relation_extractor_spark.operators.consistency import sanity_check
+def test_sanity_check_filters():
+    from stanford_relation_extractor_spark.operators.extractors import slot_sanity_ok
 
-    rows = [
-        ("E", "PERSON", "per:age", "34", "NUMBER", 1, 0.9),
-        ("E", "PERSON", "per:age", "200", "NUMBER", 1, 0.9),  # >125
-        ("E", "PERSON", "per:age", "3.5", "NUMBER", 1, 0.9),  # decimal
-        ("O", "ORGANIZATION", "org:number_of_employees/members", "10", "NUMBER", 1, 0.9),  # <25
-        ("O", "ORGANIZATION", "org:number_of_employees/members", "400", "NUMBER", 1, 0.9),
-        ("X", "PERSON", "per:spouse", "X", "PERSON", 1, 0.9),  # self-fill
-        ("Y", "PERSON", "per:title", "t" * 81, "TITLE", 1, 0.9),  # too long
+    cases = [  # (relation, slot_value, entity_name) -> kept
+        (("per:age", "34", "E"), True),
+        (("per:age", "200", "E"), False),  # >125
+        (("per:age", "3.5", "E"), False),  # decimal
+        (("org:number_of_employees/members", "10", "O"), False),  # <25
+        (("org:number_of_employees/members", "400", "O"), True),
+        (("per:spouse", "X", "X"), False),  # self-fill
+        (("per:title", "t" * 81, "Y"), False),  # too long
     ]
-    out = {(r["entity_name"], r["slot_value"]) for r in sanity_check(_triples(spark, rows)).collect()}
-    assert out == {("E", "34"), ("O", "400")}
+    for args, kept in cases:
+        assert slot_sanity_ok(*args) is kept, args
 
 
 def test_incompatibilities_drop_lower_ranked(spark):

@@ -1,5 +1,5 @@
 """J8 same-entity cascade, F4 acronyms, stage-5 canonicalization, and
-the statistical extractor (A6/A8)."""
+the statistical trainer's A8 feature-count filter."""
 
 from __future__ import annotations
 
@@ -73,46 +73,6 @@ def test_canonicalize_entities_merges_variants(spark):
     assert "Zenith Labs" in names
 
 
-def test_statistical_extractor_roundtrip(spark):
-    from stanford_relation_extractor_spark.operators.statistical import (
-        feature_count_filter,
-        featurize_pairs,
-        score_statistical,
-        train_weights,
-    )
-
-    sentences = spark.createDataFrame(
-        [("c1", 0, "user", 0, "Alice Person000001 works for Org001 .", [])],
-        "conv_id string, turn_idx int, role string, sent_idx int, sent_text string, "
-        "mentions array<struct<begin:int,end:int,surface:string,ner:string>>",
-    )
-    pairs = spark.createDataFrame(
-        [("c1", 0, 0, "Alice Person000001", "PERSON", 0, 18,
-          "Org001", "ORGANIZATION", 29, 35)],
-        "conv_id string, turn_idx int, sent_idx int, entity_name string, entity_type string, "
-        "entity_begin int, entity_end int, slot_value string, slot_ner string, "
-        "slot_begin int, slot_end int",
-    )
-    feats = featurize_pairs(pairs, sentences)
-    got = {r["feature"] for r in feats.collect()}
-    assert "arg_order:e_before_s" in got
-    assert "type_pair:PERSON:ORGANIZATION" in got
-    assert "between:works" in got
-
-    labeled = feats.withColumn(
-        "relation", feats.conv_id.substr(0, 0).cast("string")
-    )  # placeholder col, replaced below
-    labeled = feats.selectExpr("*", "'per:employee_of' AS relation")
-    weights = train_weights(labeled)
-    assert weights["between:works"]["per:employee_of"] > 0
-
-    votes = score_statistical(feats, weights, ["per:employee_of", "per:member_of"])
-    rows = votes.collect()
-    by_rel = {r["relation"]: r["score"] for r in rows}
-    assert by_rel["per:employee_of"] > by_rel.get("per:member_of", 0.0)
-    assert all(r["extractor"] == "statistical" for r in rows)
-
-
 def test_feature_count_threshold(spark):
     from stanford_relation_extractor_spark.operators.statistical import (
         feature_count_filter,
@@ -126,26 +86,3 @@ def test_feature_count_threshold(spark):
     )
     kept = {r["feature"] for r in feature_count_filter(feats).collect()}
     assert kept == {"common"}
-
-
-def test_word_cluster_features(spark):
-    from stanford_relation_extractor_spark.operators.statistical import featurize_pairs
-
-    sentences = spark.createDataFrame(
-        [("c1", 0, "user", 0, "Alice Person000001 works for Org001 .", [])],
-        "conv_id string, turn_idx int, role string, sent_idx int, sent_text string, "
-        "mentions array<struct<begin:int,end:int,surface:string,ner:string>>",
-    )
-    pairs = spark.createDataFrame(
-        [("c1", 0, 0, "Alice Person000001", "PERSON", 0, 18,
-          "Org001", "ORGANIZATION", 29, 35)],
-        "conv_id string, turn_idx int, sent_idx int, entity_name string, entity_type string, "
-        "entity_begin int, entity_end int, slot_value string, slot_ner string, "
-        "slot_begin int, slot_end int",
-    )
-    feats = {
-        r["feature"]
-        for r in featurize_pairs(pairs, sentences, clusters={"works": 17, "for": 3}).collect()
-    }
-    assert "between_cluster:17" in feats
-    assert "between_cluster:3" in feats

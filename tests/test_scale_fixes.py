@@ -1,7 +1,8 @@
 """Round-2 scale-fix coverage (VERDICT.md 'What's wrong' items):
 
 * distributed weight estimation (no driver collect of raw counts),
-* large-star/small-star connected components + reliable checkpointing,
+* label-propagation connected components: brute-force parity, a loud
+  failure when not converged, reliable checkpointing,
 * frequency-capped prefix blocking (hot-block skew guard),
 * PR-curve / AUC scoring (KBPScore.java:21-68 analog).
 """
@@ -10,13 +11,13 @@ from __future__ import annotations
 
 import math
 
+import pytest
+
 from pyspark.sql import functions as F
 
 
 def test_train_weights_df_matches_log_odds(spark):
     from stanford_relation_extractor_spark.operators.statistical import (
-        top_k_weights,
-        train_weights,
         train_weights_df,
     )
 
@@ -30,15 +31,6 @@ def test_train_weights_df_matches_log_odds(spark):
     wdf = {(r["feature"], r["relation"]): r["weight"] for r in train_weights_df(labeled).collect()}
     assert wdf[("f_a", "per:age")] == round(math.log(9.5 / 1.5), 6)
     assert wdf[("f_b", "per:age")] == round(math.log(2.5 / 8.5), 6)
-    # nested-dict path agrees with the distributed table
-    wmap = train_weights(labeled)
-    assert wmap["f_a"]["per:age"] == wdf[("f_a", "per:age")]
-    # top-k bound: keep only the strongest feature per relation
-    top = top_k_weights(train_weights_df(labeled), 1)
-    per_rel = {}
-    for r in top.collect():
-        per_rel.setdefault(r["relation"], []).append(r["feature"])
-    assert all(len(v) == 1 for v in per_rel.values())
 
 
 def _brute_components(edges: list[tuple[str, str]]) -> dict[str, str]:
@@ -76,33 +68,25 @@ def test_cc_star_matches_label_and_bruteforce(spark):
     expected = _brute_components(edges)
     df = spark.createDataFrame(edges, "src string, dst string")
 
-    star = {
-        r["node"]: r["component"]
-        for r in connected_components(df, algorithm="star", max_iter=15).collect()
-    }
-    assert star == expected
-
     label = {
         r["node"]: r["component"]
-        for r in connected_components(
-            df, algorithm="label", max_iter=50, check_every=4
-        ).collect()
+        for r in connected_components(df, max_iter=50).collect()
     }
     assert label == expected
 
 
 def test_cc_star_converges_on_deep_chain_in_log_rounds(spark):
-    """A 64-deep chain needs 64 label-prop rounds but only O(log^2 n)
-    star rounds — max_iter=10 must suffice for the star variant."""
+    """A 64-deep chain needs 64 label-propagation rounds: with
+    max_iter=10 the labels are still changing, and truncated labels
+    must fail loudly rather than come back as components."""
     from stanford_relation_extractor_spark.operators.canonicalize import (
         connected_components,
     )
 
     edges = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(64)]
     df = spark.createDataFrame(edges, "src string, dst string")
-    out = connected_components(df, algorithm="star", max_iter=10).collect()
-    assert all(r["component"] == "n000" for r in out)
-    assert len(out) == 65
+    with pytest.raises(RuntimeError, match=r"65 nodes .*max_iter=10"):
+        connected_components(df, max_iter=10)
 
 
 def test_cc_reliable_checkpoint(spark, tmp_path):
@@ -115,7 +99,7 @@ def test_cc_reliable_checkpoint(spark, tmp_path):
     out = {
         r["node"]: r["component"]
         for r in connected_components(
-            df, algorithm="star", checkpoint_dir=str(tmp_path / "ckpt")
+            df, checkpoint_dir=str(tmp_path / "ckpt")
         ).collect()
     }
     assert out == {"a": "a", "b": "a", "c": "a", "d": "d", "e": "d"}
