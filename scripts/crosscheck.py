@@ -74,7 +74,8 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from stanford_relation_extractor_spark.session import get_spark
 
-    spark = get_spark("crosscheck", cpus=8, shuffle_partitions=8)
+    # cpus and shuffle partitions default to session.DEFAULT_CPUS
+    spark = get_spark("crosscheck")
     con = duck_con(sf_dir)
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     n_fail = 0

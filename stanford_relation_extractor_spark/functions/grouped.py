@@ -34,7 +34,6 @@ def map_groups_in_pandas(
     keys: list[str],
     fn: Callable[[pd.DataFrame], pd.DataFrame],
     schema,
-    n_parts: int | None = None,
 ) -> DataFrame:
     """Apply ``fn`` once per distinct ``keys`` group of ``df``.
 
@@ -53,11 +52,7 @@ def map_groups_in_pandas(
                 f"map_groups_in_pandas: key column {k!r} has non-atomic type "
                 f"{t.simpleString()}"
             )
-    parts = (
-        n_parts
-        if n_parts is not None
-        else df.sparkSession.sparkContext.defaultParallelism
-    )
+    parts = df.sparkSession.sparkContext.defaultParallelism
     src = df.repartition(parts, *keys).sortWithinPartitions(*keys)
 
     def runner(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

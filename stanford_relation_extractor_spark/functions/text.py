@@ -7,8 +7,10 @@ forms (where a built-in exists) are preferred in plans:
 * F3 token-level Levenshtein — `common/Utils.java:241-290` (string form
   uses the built-in `F.levenshtein`)
 * F4 acronym build/match — `entitylinking/AcronymMatcher.java:19-131`
-* F5 corporate-suffix strip — `entitylinking/EntityLinker.java:114-133`
-  (column form in operators/linking.py)
+* `strip_corp` — the case-insensitive corporate-suffix/determiner strip
+  the cascade compares under (the F5 dictionary rewrite,
+  `entitylinking/EntityLinker.java:114-133`, is
+  `operators/canonicalize.py:_dict_rewrite`)
 * J8 `same_entity` — the linker cascade of
   `entitylinking/EntityLinker.java:67-84,189-331`: exact/caseless match,
   acronym match, token-overlap score with type-specific thresholds,
@@ -35,11 +37,11 @@ def strip_corp(s: str) -> str:
 
 
 # Normalization memos (guide §4.5 heavy-init-once analog at call level):
-# the cascade judges each surface against up to `max_block` partners, so
-# a surface's normalized form / token split / digit signature is
-# recomputed O(block) times both in the driver-local canon twin and in
-# the Arrow-batched judges. Bounded LRU keeps executor memory flat on
-# real corpora (surfaces per task are far under the cap anyway).
+# the cascade judges each surface against up to `MAX_BLOCK` partners
+# (operators/canonicalize.py), so a surface's normalized form / token
+# split / digit signature would be recomputed O(block) times on either
+# canon path. Bounded LRU keeps executor memory flat on real corpora
+# (surfaces per task are far under the cap anyway).
 @lru_cache(maxsize=1 << 18)
 def _corp_tokens(s: str) -> tuple[str, ...]:
     """strip_corp(s).split() with original case (acronym matching needs

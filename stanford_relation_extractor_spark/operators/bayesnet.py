@@ -64,6 +64,7 @@ from collections.abc import Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .canonicalize import connected_components, union_find_components
 from .inference import DEFAULT_MLN, Literal, Rule, parse_mln
 
 LOG_LO = math.log(1e-4)
@@ -333,24 +334,18 @@ def _log_score(assign, factors) -> float:
 
 
 def _components(n: int, factors) -> list[list[int]]:
-    parent = list(range(n))
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for v, _prior, rules in factors:
-        for _arity, antes, _lpt in rules:
-            for a in antes:
-                ra, rv = find(a), find(v)
-                if ra != rv:
-                    parent[max(ra, rv)] = min(ra, rv)
+    """The factor graph's connected components over variables 0..n-1,
+    isolated variables included: each sorted, ordered by minimum."""
+    comp = union_find_components(
+        (a, v)
+        for v, _prior, rules in factors
+        for _arity, antes, _lpt in rules
+        for a in antes
+    )
     comps: dict[int, list[int]] = {}
     for v in range(n):
-        comps.setdefault(find(v), []).append(v)
-    return [sorted(vs) for _r, vs in sorted(comps.items())]
+        comps.setdefault(comp.get(v, v), []).append(v)
+    return [vs for _r, vs in sorted(comps.items())]
 
 
 def _solve_exact_np(
@@ -467,8 +462,6 @@ def infer_map_triples(
     small nets, one ``map_groups_in_pandas`` pass over the cluster id. The
     gazetteer broadcasts as plain Python (bounded: a dimension table).
     """
-    from .canonicalize import connected_components
-
     predicates, rules = parse_mln(mln_text)
     rules = admit_rules(rules)
     if acyclic:
@@ -553,6 +546,3 @@ def infer_map_triples(
 
     return map_groups_in_pandas(keyed, ["_cluster"], run, OUT_SCHEMA)
 
-
-def _kbp_preds(predicates: dict[str, tuple[str, str]]) -> set[str]:
-    return {p for p in predicates if not p.startswith("geo:")}

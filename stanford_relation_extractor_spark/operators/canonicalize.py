@@ -15,12 +15,32 @@ representative, rewrite edges) as:
    object-store) so executor loss mid-computation cannot kill the job
    — ``localCheckpoint`` (executor-local) is only the sandbox default.
 3. triple rewrite: replace entity by its component representative.
+
+The canon map (``build_canon_map``) has two paths, picked by the size
+gate ``CANON_LOCAL_MAX_SURFACES``: a driver-local one and a distributed
+one. Both run the same pure-Python rule functions, so each rule is
+written once: ``_dict_rewrite`` (J6 nickname + F5 suffix strip),
+``_block_keys``/``_blocks``/``_block_pairs`` (J8 blocking and pairing)
+and ``same_entity`` (J8 judging). The distributed path runs them inside
+Arrow batch passes, paying the Python boundary once per batch.
 """
 
 from __future__ import annotations
 
+import re
+from collections import Counter
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.text import (
+    blocking_key,
+    blocking_key_ext,
+    blocking_key_first,
+    blocking_key_first_ext,
+    is_valid_alternate_name,
+    same_entity,
+)
 
 
 def _lineage_cut(df: DataFrame, checkpoint_dir: str | None) -> DataFrame:
@@ -96,8 +116,6 @@ def vote_surfaces(votes: DataFrame) -> DataFrame:
     """(surface, ner): distinct PERSON/ORGANIZATION surfaces observed in
     the vote stream (entity side always; slot side when entity-typed) —
     the node universe for canonicalization."""
-    from pyspark.sql import functions as F
-
     ent = votes.select(
         F.col("entity_name").alias("surface"), F.col("entity_type").alias("ner")
     )
@@ -119,8 +137,10 @@ def vote_surfaces(votes: DataFrame) -> DataFrame:
 # distributed path.
 CANON_LOCAL_MAX_SURFACES = 250_000
 
-# J8 candidate-block cap and sorted-neighborhood width, shared by the
-# distributed cascade (``blocked_candidate_pairs``) and its driver twin
+# J8 candidate-block cap and sorted-neighborhood width (``_blocks``,
+# ``_block_pairs``): blocks over MAX_BLOCK re-key by their extended key;
+# blocks still over it pair each member with its NEIGHBORHOOD sorted
+# successors only, so pair volume stays O(n * NEIGHBORHOOD)
 MAX_BLOCK = 64
 NEIGHBORHOOD = 8
 
@@ -154,71 +174,74 @@ def _local_wikidict_link(
     return out
 
 
-def _local_dict_rewrite(
+def _dict_rewrite(
     surface: str, nicknames: dict[str, str], suffixes: tuple[str, ...]
 ) -> str:
-    """Driver twin of nickname_canonical + strip_corporate_suffix."""
-    import re
-
+    """The dictionary rewrite of one surface: J6 nickname
+    canonicalization of the leading token
+    (`entitylinking/EntityLinker.java:46-55,135-161`), then the F5
+    corporate-suffix strip (`EntityLinker.java:114-133`)."""
     first, sep, rest = surface.partition(" ")
-    mapped = nicknames.get(first, first)
-    s = mapped + sep + rest
+    s = nicknames.get(first, first) + sep + rest
     return re.sub(f" ({'|'.join(suffixes)})$", "", s)
 
 
-def _local_cascade_edges(surfaces: list[tuple[str, str]]) -> list[tuple[str, str]]:
-    """Driver twin of blocked_candidate_pairs + same_entity judging
-    (both key families, hot-block re-key, sorted-neighborhood tier)."""
-    from ..functions.text import (
-        blocking_key,
-        blocking_key_ext,
-        blocking_key_first,
-        blocking_key_first_ext,
-        same_entity,
-    )
+def _block_keys(name: str, et: str) -> list[tuple[str, str]]:
+    """J8 blocking keys of one surface as (block, block_ext): the
+    last-token family, plus the first-token family for ORGANIZATIONs so
+    nested names ("Bank of America Securities") meet their containment
+    parent ("Bank of America"), a pair last-token blocking alone never
+    generates. Empty keys are dropped. A pair sharing both families'
+    blocks is judged twice; the duplicate edge is harmless."""
+    keys = [(blocking_key(name), blocking_key_ext(name))]
+    if et == "ORGANIZATION":
+        keys.append((blocking_key_first(name), blocking_key_first_ext(name)))
+    return [k for k in keys if k[0]]
 
-    keyed: list[tuple[str, str, str, str]] = []  # (name, et, block, block_ext)
-    for name, et in surfaces:
-        b = blocking_key(name)
-        if b:
-            keyed.append((name, et, b, blocking_key_ext(name)))
-        if et == "ORGANIZATION":
-            bf = blocking_key_first(name)
-            if bf:
-                keyed.append((name, et, bf, blocking_key_first_ext(name)))
-    counts: dict[tuple[str, str], int] = {}
-    for _n, et, b, _e in keyed:
-        counts[(et, b)] = counts.get((et, b), 0) + 1
-    rekeyed = [
-        (n, et, e if counts[(et, b)] > MAX_BLOCK else b) for n, et, b, e in keyed
-    ]
+
+def _blocks(surfaces: list[tuple[str, str]]) -> dict[tuple[str, str], list[str]]:
+    """(entity_type, block) -> member names over (name, entity_type)
+    surfaces. Blocks over ``MAX_BLOCK`` members re-key by their
+    extended key (last token + 3-char prefix), as
+    `datapipe/dedup.py` prefix_block_jaccard does."""
+    keyed = [(n, et, b, e) for n, et in surfaces for b, e in _block_keys(n, et)]
+    counts = Counter((et, b) for _n, et, b, _e in keyed)
     blocks: dict[tuple[str, str], list[str]] = {}
-    for n, et, b in rekeyed:
-        blocks.setdefault((et, b), []).append(n)
-    edges: list[tuple[str, str]] = []
-    for (et, _b), members in blocks.items():
-        if len(members) <= MAX_BLOCK:
-            ms = sorted(members)
-            for i, a in enumerate(ms):
-                for b2 in ms[i + 1:]:
-                    if a != b2 and same_entity(a, b2, et):
-                        edges.append((a, b2))
-        else:
-            ms = sorted(members)
-            for i, a in enumerate(ms):
-                for d in range(1, NEIGHBORHOOD + 1):
-                    if i + d < len(ms) and same_entity(a, ms[i + d], et):
-                        edges.append((a, ms[i + d]))
-    return edges
+    for n, et, b, e in keyed:
+        blocks.setdefault((et, e if counts[(et, b)] > MAX_BLOCK else b), []).append(n)
+    return blocks
 
 
-def _local_components(
-    edges: list[tuple[str, str]]
-) -> dict[str, str]:
-    """Driver twin of connected_components: node -> min-node component."""
-    parent: dict[str, str] = {}
+def _block_pairs(members: list[str]) -> list[tuple[str, str]]:
+    """Candidate pairs (a, b), a < b, of one block: full pairing up to
+    ``MAX_BLOCK`` members. A block still over the cap after re-keying
+    (a million "John Smith" variants) pairs each sorted member with its
+    ``NEIGHBORHOOD`` successors only: lexicographically-near surfaces,
+    the ones the cascade can merge, sort adjacent. The recall trade is
+    the one the base key already makes at its 1-char prefix."""
+    ms = sorted(members)
+    width = len(ms) if len(ms) <= MAX_BLOCK else NEIGHBORHOOD
+    return [(a, b) for i, a in enumerate(ms) for b in ms[i + 1 : i + 1 + width]]
 
-    def find(x: str) -> str:
+
+def _local_cascade_edges(surfaces: list[tuple[str, str]]) -> list[tuple[str, str]]:
+    """J8 cascade edges over (name, entity_type) surfaces on the driver:
+    the blocked candidate pairs that ``same_entity`` accepts."""
+    return [
+        (a, b)
+        for (et, _b), members in _blocks(surfaces).items()
+        for a, b in _block_pairs(members)
+        if same_entity(a, b, et)
+    ]
+
+
+def union_find_components(edges) -> dict:
+    """node -> its component's minimum node, over undirected ``edges``
+    (pairs of comparable node ids); the driver-side connected
+    components of the canon map and the BayesNet factor graph."""
+    parent: dict = {}
+
+    def find(x):
         while parent[x] != x:
             parent[x] = parent[parent[x]]
             x = parent[x]
@@ -230,7 +253,7 @@ def _local_components(
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    comp: dict[str, list[str]] = {}
+    comp: dict = {}
     for n in parent:
         comp.setdefault(find(n), []).append(n)
     return {n: min(members) for members in comp.values() for n in members}
@@ -243,9 +266,9 @@ def build_canon_map_local(
     nicknames: dict[str, str],
     suffixes: tuple[str, ...],
 ) -> DataFrame:
-    """Driver-local twin of ``build_canon_map`` for surface sets under
-    the size gate: identical edge generation (dictionary rewrites,
-    wikidict margin links, capped-block cascade), connected components,
+    """Driver-local path of ``build_canon_map`` for surface sets under
+    the size gate: the same rule functions (dictionary rewrites, capped-
+    block cascade), the wikidict margin links, union-find components
     and pure-target representative selection — asserted row-identical
     to the distributed path by tests/test_canon_local_parity.py and by
     the driver's canonical_map oracle."""
@@ -253,12 +276,12 @@ def build_canon_map_local(
     names = [s for s, _ in surfaces]
     directed: list[tuple[str, str]] = []
     for s in names:
-        dst = _local_dict_rewrite(s, nicknames, suffixes)
+        dst = _dict_rewrite(s, nicknames, suffixes)
         if dst != s:
             directed.append((s, dst))
     linked = _local_wikidict_link(sorted(set(names)), alias_rows)
     directed += [(s, c) for s, c in linked.items()]
-    comp = _local_components(directed + _local_cascade_edges(surfaces))
+    comp = union_find_components(directed + _local_cascade_edges(surfaces))
     sources = {s for s, _d in directed}
     targets = {d for _s, d in directed}
     pure = targets - sources
@@ -292,8 +315,8 @@ def build_canon_map(
 
     1. directed dictionary rewrites (J6 nickname + F5 suffix strip,
        `entitylinking/EntityLinker.java:46-55,114-161`): surface ->
-       rewritten form, as pure column expressions over DISTINCT surfaces
-       (never the vote stream);
+       ``_dict_rewrite`` form, over DISTINCT surfaces (never the vote
+       stream);
     2. directed wikidict links (J5 margin rule,
        `shallowdive/TextOps.java:304-349`): broadcast alias join;
     3. undirected same-entity cascade edges (J8) from blocked candidate
@@ -309,9 +332,9 @@ def build_canon_map(
     O(|distinct surfaces|); broadcast it into the vote rewrite at
     sandbox scale, shuffle-join with salting beyond broadcast size.
     """
-    from pyspark.sql import functions as F
+    import pandas as pd
 
-    from .linking import nickname_canonical, strip_corporate_suffix, wikidict_link
+    from .linking import wikidict_link
 
     # size-gated driver-local fast path (see CANON_LOCAL_MAX_SURFACES):
     # ONE collect job replaces the edges/CC/rep chain of driver-
@@ -348,13 +371,17 @@ def build_canon_map(
             )
 
     surf = surfaces.select("surface", "ner").distinct()
-    dict_dst = strip_corporate_suffix(
-        nickname_canonical("surface", nicknames), suffixes
-    )
-    e_dict = surf.select(
-        F.col("surface").alias("src"), dict_dst.alias("dst")
-    ).filter(F.col("src") != F.col("dst"))
-    linked = wikidict_link(surf.select("surface").distinct(), alias_dict)
+    names = surf.select("surface").distinct()
+
+    def rewrite(batches):
+        for pdf in batches:
+            pairs = [(s, _dict_rewrite(s, nicknames, suffixes)) for s in pdf["surface"]]
+            yield pd.DataFrame(
+                [(s, d) for s, d in pairs if s != d], columns=["src", "dst"]
+            )
+
+    e_dict = names.mapInPandas(rewrite, schema="src string, dst string")
+    linked = wikidict_link(names, alias_dict)
     e_link = linked.filter(
         F.col("linked").isNotNull() & (F.col("linked") != F.col("surface"))
     ).select(F.col("surface").alias("src"), F.col("linked").alias("dst"))
@@ -362,7 +389,7 @@ def build_canon_map(
     # feed FOUR plan branches (CC sym, sources, targets, rep selection)
     # and the cascade edges are re-consumed by EVERY CC iteration —
     # without the cut Catalyst replays the wikidict aggregation and the
-    # whole blocked-pair cascade (joins + window + Arrow judge) per
+    # whole blocked-pair cascade (keying, window, block judge) per
     # branch per iteration (measured: canon build 145s -> ~10s at
     # sf0.001 when the cascade subtree is cut before CC).
     cascade = same_entity_edges(
@@ -406,8 +433,6 @@ def build_canon_map(
 def rewrite_votes(votes: DataFrame, canon_map: DataFrame) -> DataFrame:
     """Rewrite entity_name and slot_value to their component
     representatives (two broadcast left joins over the vote stream)."""
-    from pyspark.sql import functions as F
-
     m_e = F.broadcast(
         canon_map.select(F.col("node").alias("_ne"), F.col("rep").alias("_re"))
     )
@@ -427,9 +452,7 @@ def rewrite_votes(votes: DataFrame, canon_map: DataFrame) -> DataFrame:
 ALTERNATE_NAME_SCORE = 0.9
 
 
-def emit_alternate_names(
-    canon_map: DataFrame, surfaces: DataFrame, score: float = ALTERNATE_NAME_SCORE
-) -> DataFrame:
+def emit_alternate_names(canon_map: DataFrame, surfaces: DataFrame) -> DataFrame:
     """AlternateNamesExtractor (`evaluate/AlternateNamesExtractor.java:1-159`,
     invoked from `SimpleSlotFiller.java:256-288`; graph form at
     `GraphConsistencyPostProcessors.java:115-126`): every merged surface
@@ -445,10 +468,6 @@ def emit_alternate_names(
     from collections.abc import Iterator
 
     import pandas as pd
-
-    from pyspark.sql import functions as F
-
-    from ..functions.text import is_valid_alternate_name
 
     pairs = canon_map.join(
         surfaces.select(F.col("surface").alias("node"), "ner").distinct(), "node"
@@ -472,173 +491,56 @@ def emit_alternate_names(
         F.col("node").alias("slot_value"),
         F.col("ner").alias("slot_ner"),
         F.lit(1).alias("n_agree"),
-        F.lit(score).alias("score"),
+        F.lit(ALTERNATE_NAME_SCORE).alias("score"),
         F.lit("linker").alias("provenance_extractor"),
     )
 
 
-def blocked_candidate_pairs(
-    entities: DataFrame, max_block: int = MAX_BLOCK, neighborhood: int = NEIGHBORHOOD
-) -> DataFrame:
-    """J8 candidate generation with a hot-block cap — never O(n^2).
-
-    ``entities``: (entity_name, entity_type) distinct. Three tiers:
-
-    1. base blocking key (normalized last token + first char,
-       `functions/text.py:blocking_key`) — full within-block pairing for
-       blocks of <= ``max_block`` members;
-    2. blocks over the cap re-key by the extended key (last token +
-       3-char prefix) — one small groupBy over the KEY set, mirroring
-       `datapipe/dedup.py` prefix_block_jaccard's max_block re-key;
-    3. blocks STILL over the cap after re-keying (a million "John
-       Smith…" variants) fall back to sorted-neighborhood pairing:
-       rank surfaces by name within the block and pair only ranks
-       (r, r+d), d <= ``neighborhood`` — pair volume n*d instead of
-       n^2/2, and lexicographically-near surfaces (the ones the cascade
-       can actually merge) sort adjacent. Documented recall trade, the
-       same one the base key already makes at its 1-char prefix.
-
-    ORGANIZATION surfaces with a distinct first token additionally key
-    into the FIRST-token block (``blocking_key_first``), so nested names
-    ("Bank of America Securities") meet their containment parent ("Bank
-    of America" / "Org003") — the pair the reference's token-overlap
-    cascade must judge but last-token blocking alone never generates.
-    A multi-token pair sharing BOTH first and last tokens can surface
-    twice (once per key family); the duplicate edge is judged twice and
-    deduplicated by connected-components' DISTINCT — bounded waste, no
-    correctness effect.
-
-    Output: (src, dst, et) with src < dst within a block.
+def same_entity_edges(entities: DataFrame) -> DataFrame:
+    """J8 at scale over distinct (entity_name, entity_type) rows: keys
+    each surface with ``_block_keys`` in one Arrow pass, re-keys blocks
+    over ``MAX_BLOCK`` by a window count, then judges each block's
+    ``_block_pairs`` with ``same_entity`` (EntityLinker.java:67-84
+    cascade) in one clustered Arrow pass. Output: undirected (src, dst)
+    edges for connected components, src < dst.
     """
-    from collections.abc import Iterator
-
     import pandas as pd
 
     from pyspark.sql import Window
 
-    from ..functions.text import (
-        blocking_key,
-        blocking_key_ext,
-        blocking_key_first,
-        blocking_key_first_ext,
-    )
+    from ..functions.grouped import map_groups_in_pandas
 
-    def add_block(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def key(batches):
         for pdf in batches:
-            pdf = pdf.copy()
-            pdf["block"] = pdf["entity_name"].map(blocking_key)
-            pdf["block_ext"] = pdf["entity_name"].map(blocking_key_ext)
-            is_org = pdf["entity_type"] == "ORGANIZATION"
-            pdf["block_first"] = ""
-            pdf["block_first_ext"] = ""
-            pdf.loc[is_org, "block_first"] = pdf.loc[is_org, "entity_name"].map(
-                blocking_key_first
+            yield pd.DataFrame(
+                [
+                    (n, et, b, e)
+                    for n, et in zip(pdf["entity_name"], pdf["entity_type"])
+                    for b, e in _block_keys(n, et)
+                ],
+                columns=["entity_name", "entity_type", "block", "block_ext"],
             )
-            pdf.loc[is_org, "block_first_ext"] = pdf.loc[is_org, "entity_name"].map(
-                blocking_key_first_ext
-            )
-            yield pdf
 
-    keyed_raw = entities.select("entity_name", "entity_type").mapInPandas(
-        add_block,
-        schema=(
-            "entity_name string, entity_type string, block string, "
-            "block_ext string, block_first string, block_first_ext string"
-        ),
+    keyed = entities.select("entity_name", "entity_type").mapInPandas(
+        key,
+        schema="entity_name string, entity_type string, block string, block_ext string",
     )
-    keyed0 = (
-        keyed_raw.select("entity_name", "entity_type", "block", "block_ext")
-        .unionByName(
-            keyed_raw.filter(F.col("block_first") != "").select(
-                "entity_name",
-                "entity_type",
-                F.col("block_first").alias("block"),
-                F.col("block_first_ext").alias("block_ext"),
-            )
+    size = F.count("*").over(Window.partitionBy("entity_type", "block"))
+    blocks = keyed.select(
+        "entity_name",
+        "entity_type",
+        F.when(size > MAX_BLOCK, F.col("block_ext"))
+        .otherwise(F.col("block"))
+        .alias("block"),
+    )
+
+    def judge(pdf: pd.DataFrame) -> pd.DataFrame:
+        et = pdf["entity_type"].iloc[0]
+        pairs = _block_pairs(pdf["entity_name"].tolist())
+        return pd.DataFrame(
+            [(a, b) for a, b in pairs if same_entity(a, b, et)], columns=["src", "dst"]
         )
-        .filter(F.col("block") != "")
+
+    return map_groups_in_pandas(
+        blocks, ["entity_type", "block"], judge, "src string, dst string"
     )
-    counts = keyed0.groupBy("entity_type", "block").agg(F.count("*").alias("_n0"))
-    keyed = (
-        keyed0.join(counts, ["entity_type", "block"])
-        .select(
-            "entity_name",
-            "entity_type",
-            F.when(F.col("_n0") > max_block, F.col("block_ext"))
-            .otherwise(F.col("block"))
-            .alias("block"),
-        )
-    )
-    counts2 = keyed.groupBy("entity_type", "block").agg(F.count("*").alias("_n"))
-    keyed = keyed.join(counts2, ["entity_type", "block"])
-
-    cold = keyed.filter(F.col("_n") <= max_block)
-    a = cold.select(
-        F.col("entity_name").alias("src"), F.col("entity_type").alias("et"), "block"
-    )
-    b = cold.select(
-        F.col("entity_name").alias("dst"),
-        F.col("entity_type").alias("et_b"),
-        F.col("block").alias("block_b"),
-    )
-    pairs_cold = a.join(
-        b,
-        (F.col("block") == F.col("block_b"))
-        & (F.col("et") == F.col("et_b"))
-        & (F.col("src") < F.col("dst")),
-    ).select("src", "dst", "et")
-
-    hot = keyed.filter(F.col("_n") > max_block)
-    w = Window.partitionBy("entity_type", "block").orderBy("entity_name")
-    ranked = hot.withColumn("_r", F.row_number().over(w))
-    offsets = F.explode(
-        F.array(*[F.lit(d) for d in range(1, neighborhood + 1)])
-    ).alias("_d")
-    left = ranked.select(
-        F.col("entity_name").alias("src"),
-        F.col("entity_type").alias("et"),
-        "block",
-        "_r",
-        offsets,
-    )
-    right = ranked.select(
-        F.col("entity_name").alias("dst"),
-        F.col("entity_type").alias("et_b"),
-        F.col("block").alias("block_b"),
-        F.col("_r").alias("_r_b"),
-    )
-    pairs_hot = left.join(
-        right,
-        (F.col("block") == F.col("block_b"))
-        & (F.col("et") == F.col("et_b"))
-        & (F.col("_r_b") == F.col("_r") + F.col("_d")),
-    ).select("src", "dst", "et")
-
-    return pairs_cold.unionByName(pairs_hot)
-
-
-def same_entity_edges(
-    entities: DataFrame, max_block: int = MAX_BLOCK, neighborhood: int = NEIGHBORHOOD
-) -> DataFrame:
-    """J8 at scale: candidate pairs by capped blocking
-    (``blocked_candidate_pairs``), judged by ``same_entity``
-    (EntityLinker.java:67-84 cascade) inside an Arrow batch. Output:
-    undirected (src, dst) edges for connected components.
-    """
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from ..functions.text import same_entity
-
-    pairs = blocked_candidate_pairs(entities, max_block, neighborhood)
-
-    def judge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mask = [
-                same_entity(s, d, t)
-                for s, d, t in zip(pdf["src"], pdf["dst"], pdf["et"])
-            ]
-            yield pdf[pd.Series(mask, index=pdf.index)][["src", "dst"]]
-
-    return pairs.mapInPandas(judge, schema="src string, dst string")

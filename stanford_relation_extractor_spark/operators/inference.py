@@ -293,13 +293,3 @@ def infer_triples(
     aux = {"geo:city_country": geo_cities.select("city", "country")}
     return apply_mln_rules(triples, predicates, rules, aux, rounds=rounds)
 
-
-def intersect_with_inferred(
-    triples: DataFrame, inferred: DataFrame
-) -> DataFrame:
-    """O5 IntersectSlotFiller over SIMPLE x INFERENTIAL: fills the
-    inference rules independently corroborate (here: derivable both
-    ways)."""
-    from .evaluate import intersect_triples
-
-    return intersect_triples(triples, inferred)

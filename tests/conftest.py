@@ -20,13 +20,6 @@ def spark():
 
 @pytest.fixture(scope="session")
 def duck():
-    import duckdb
+    from scripts.crosscheck import duck_con
 
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    return con
+    return duck_con(SF_DIR)

@@ -22,7 +22,7 @@ def _stages(spark):
     return build_stages(spark, SF_DIR)
 
 
-def test_same_surname_pair_is_generated_and_rejected(spark):
+def test_same_surname_pair_is_generated_and_rejected():
     """k22 precision: the surname-sake pair shares a J8 block (same
     surname token + first char), IS judged, and is correctly refused —
     capping the cascade can't be achieved by never comparing."""
@@ -31,17 +31,16 @@ def test_same_surname_pair_is_generated_and_rejected(spark):
         same_entity,
     )
     from stanford_relation_extractor_spark.operators.canonicalize import (
-        blocked_candidate_pairs,
+        _block_pairs,
+        _blocks,
     )
 
     a, b = "Alma Person000123", "Alice Person000123"
     assert blocking_key(a) == blocking_key(b)  # same block
     assert not same_entity(a, b, "PERSON")  # judged: distinct
 
-    ents = spark.createDataFrame(
-        [(a, "PERSON"), (b, "PERSON")], "entity_name string, entity_type string"
-    )
-    pairs = blocked_candidate_pairs(ents).collect()
+    blocks = _blocks([(a, "PERSON"), (b, "PERSON")])
+    pairs = [p for members in blocks.values() for p in _block_pairs(members)]
     assert len(pairs) == 1  # the pair IS generated (not dodged)
 
 

@@ -3,10 +3,11 @@
 Each query runs through ``__spark_entry__.queries()`` and its twin
 through ``oracle_sql()``, compared by ``scripts/crosscheck.py``'s
 ``compare`` (row count, columns, order-insensitive values). The queries
-here run the production code of three operators: the statistical member
+here run the production code of the statistical member
 (``extractors.votes_for_sentence`` -> ``statistical.pair_feature_list``
--> ``combined_relation_probs``), the size-gated canon map, and
-label-propagation connected components.
+-> ``combined_relation_probs``), the J5 wikidict margin link, the
+size-gated canon map, alternate-name emission, label-propagation
+connected components and the end-to-end triples (stage 6 included).
 """
 
 from __future__ import annotations
@@ -18,7 +19,15 @@ from scripts.crosscheck import compare
 
 
 @pytest.mark.parametrize(
-    "name", ["statistical_votes", "canonical_map", "connected_components"]
+    "name",
+    [
+        "statistical_votes",
+        "wikidict_link",
+        "canonical_map",
+        "alternate_names",
+        "connected_components",
+        "final_triples",
+    ],
 )
 def test_query_matches_oracle(spark, duck, name):
     import __spark_entry__ as entry

@@ -179,26 +179,29 @@ def test_same_entity_blocking_hot_block_capped(spark):
     """VERDICT r2 #2: a hot blocking key ('smith:j' on real name
     distributions) must not go quadratic. 420 same-prefix surfaces share
     base AND extended keys, so they hit the sorted-neighborhood tier:
-    pair volume <= n * neighborhood, not n^2/2."""
+    pair volume <= n * NEIGHBORHOOD, not n^2/2."""
     from stanford_relation_extractor_spark.operators.canonicalize import (
-        blocked_candidate_pairs,
+        MAX_BLOCK,
+        NEIGHBORHOOD,
+        _block_pairs,
+        _blocks,
         same_entity_edges,
     )
 
-    n, cap, k = 420, 50, 4
+    n = 420
     hot = [(f"John{i:03d} Smith", "PERSON") for i in range(n)]
     cold = [("Acme Corp", "ORGANIZATION"), ("Acme Corporation", "ORGANIZATION")]
-    ents = spark.createDataFrame(hot + cold, "entity_name string, entity_type string")
+    assert n > MAX_BLOCK
+    # one block even after the extended re-key: the neighborhood tier
+    assert [len(m) for m in _blocks(hot).values()] == [n]
 
-    pairs = blocked_candidate_pairs(ents, max_block=cap, neighborhood=k)
-    pair_set = {(r["src"], r["dst"]) for r in pairs.collect()}
-    assert 0 < len(pair_set) <= n * k + 1  # +1 for the cold Acme pair
+    pair_set = set(_block_pairs([name for name, _ in hot]))
+    assert 0 < len(pair_set) <= n * NEIGHBORHOOD
     # adjacent hot-block members are still JUDGED (pair generated) ...
     assert ("John000 Smith", "John001 Smith") in pair_set
     # the cold block is untouched by the cap: full pairing finds Acme
-    edges = {(r["src"], r["dst"]) for r in same_entity_edges(
-        ents, max_block=cap, neighborhood=k
-    ).collect()}
+    ents = spark.createDataFrame(hot + cold, "entity_name string, entity_type string")
+    edges = {(r["src"], r["dst"]) for r in same_entity_edges(ents).collect()}
     assert ("Acme Corp", "Acme Corporation") in edges
     # ... but digit-differing surfaces are NOT typos (round-4 digit
     # guard): John000 and John001 are distinct people
@@ -212,19 +215,17 @@ def test_same_entity_blocking_hot_block_capped(spark):
     ).isEmpty()
 
 
-def test_same_entity_blocking_cold_path_unchanged(spark):
+def test_same_entity_blocking_cold_path_unchanged():
     """Below the cap the full within-block pairing is preserved — the
     flagship corpus never hits the hot tier, so canonical_map semantics
     are bit-identical to round 2."""
     from stanford_relation_extractor_spark.operators.canonicalize import (
-        blocked_candidate_pairs,
+        _block_pairs,
+        _blocks,
     )
 
-    ents = spark.createDataFrame(
-        [("Jane Smith", "PERSON"), ("J. Smith", "PERSON"), ("Jim Smith", "PERSON")],
-        "entity_name string, entity_type string",
-    )
-    got = {(r["src"], r["dst"]) for r in blocked_candidate_pairs(ents).collect()}
+    ents = [("Jane Smith", "PERSON"), ("J. Smith", "PERSON"), ("Jim Smith", "PERSON")]
+    got = {p for members in _blocks(ents).values() for p in _block_pairs(members)}
     assert got == {
         ("J. Smith", "Jane Smith"),
         ("J. Smith", "Jim Smith"),
