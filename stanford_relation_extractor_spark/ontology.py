@@ -18,8 +18,6 @@ from __future__ import annotations
 from dataclasses import dataclass
 from functools import lru_cache
 
-from pyspark.sql import DataFrame, SparkSession
-
 # --- NE tags (NERTag.java:8-28) --------------------------------------------
 NER_TAGS: tuple[str, ...] = (
     "CAUSE_OF_DEATH",
@@ -204,14 +202,16 @@ def compatible_relations(entity_type: str, slot_ner: str) -> tuple[str, ...]:
     )
 
 
-def relation_schema_df(spark: SparkSession) -> DataFrame:
-    """The relation ontology as a (broadcastable) DataFrame dimension."""
-    rows = [
-        (r.name, r.entity_type, r.cardinality, list(r.valid_slot_ners), list(r.valid_pos_prefixes), r.prior)
-        for r in RELATIONS
-    ]
-    return spark.createDataFrame(
-        rows,
-        "relation string, entity_type string, cardinality string, "
-        "valid_slot_ners array<string>, valid_pos_prefixes array<string>, prior double",
+# P6's relation signatures (entity type, valid slot NE tags) as ONE SQL
+# VALUES list: ``spark.sql`` turns it into a local relation inside the
+# JVM, so no table is built from Python rows.
+RELATION_SIGNATURES_SQL = (
+    "SELECT * FROM VALUES {} AS signatures(relation, rs_entity_type, valid_slot_ners)".format(
+        ", ".join(
+            "('{}', '{}', array({}))".format(
+                r.name, r.entity_type, ", ".join(f"'{t}'" for t in r.valid_slot_ners)
+            )
+            for r in RELATIONS
+        )
     )
+)

@@ -131,6 +131,13 @@ def _surfaces_cut(df: DataFrame, spark: SparkSession) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
+def _in_session(spark: SparkSession, name: str, build: Callable[[], DataFrame]) -> DataFrame:
+    """How both walkers materialize a stage they do not store: the
+    surface set is cut once for its consumers, the rest stay lazy."""
+    df = build()
+    return _surfaces_cut(df, spark) if name == "surfaces" else df
+
+
 class LazyStages(dict):
     """Stage dict whose missing keys are built (and memoized) on first
     access — canonicalization runs Spark actions, so building it at
@@ -188,7 +195,7 @@ def stage_graph(spark: SparkSession, sf_dir: str, combination: str) -> list[Stag
         )),
         Stage("alt_names", ("canon_map", "surfaces"), emit_alternate_names),
         Stage("triples", ("candidates", "alt_names"), lambda c, a: apply_consistency(
-            c.unionByName(a, allowMissingColumns=True), spark
+            c.unionByName(a, allowMissingColumns=True)
         )),
     ]
 
@@ -243,9 +250,7 @@ def build_stages(
     stages = _walk(
         stage_graph(spark, sf_dir, combination),
         reads={"sentences": "transcripts", "votes": "votes_cut"},
-        materialize=lambda name, build: (
-            _surfaces_cut(build(), spark) if name == "surfaces" else build()
-        ),
+        materialize=functools.partial(_in_session, spark),
     )
     stages.builders["votes_cut"] = lambda: _parquet_spool(stages["votes"], spark, "votes")
     if transcripts is not None:
@@ -259,7 +264,8 @@ def final_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Stages run_pipeline persists, in graph order; the others stay lazy
 # views over them (the surface set and alternate names are cheap
-# aggregates of the stored votes and canon map).
+# aggregates of the stored votes and canon map), materialized as
+# build_stages does (``_in_session``).
 STORED_STAGES = ("sentences", "votes", "canon_map", "linked_votes", "candidates", "triples")
 
 
@@ -291,7 +297,7 @@ def run_pipeline(
 
     def materialize(name: str, build: Callable[[], DataFrame]) -> DataFrame:
         if name not in STORED_STAGES:
-            return build()
+            return _in_session(spark, name, build)
         return checkpoint_stage(
             spark, build, os.path.join(checkpoint_dir, name), fps[name],
             partition_by="relation" if name == "triples" else None,

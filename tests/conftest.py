@@ -1,7 +1,10 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
+import types
+import uuid
 
 import pytest
 
@@ -23,3 +26,26 @@ def duck():
     from scripts.crosscheck import duck_con
 
     return duck_con(SF_DIR)
+
+
+@contextlib.contextmanager
+def spark_jobs(spark):
+    """Count the Spark jobs launched inside the block (job-group ids from
+    the status tracker), including AQE stage and broadcast jobs::
+
+        with spark_jobs(spark) as jobs:
+            df.collect()
+        assert jobs.count == 1
+    """
+    sc = spark.sparkContext
+    props = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    saved = {k: sc.getLocalProperty(k) for k in props}
+    group = f"counted-{uuid.uuid4().hex}"
+    counted = types.SimpleNamespace(count=None)
+    sc.setJobGroup(group, "jobs counted by a test")
+    try:
+        yield counted
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+        counted.count = len(sc.statusTracker().getJobIdsForGroup(group))

@@ -28,9 +28,10 @@ def test_type_check_rejects_bad_signature(spark):
             ("E", "PERSON", "per:age", "34", "NUMBER", 2, 0.9),
             ("E", "PERSON", "per:age", "Org001", "ORGANIZATION", 2, 0.9),  # bad slot ner
             ("E", "ORGANIZATION", "per:age", "34", "NUMBER", 2, 0.9),  # bad entity type
+            ("E", "PERSON", "per:not_in_ontology", "34", "NUMBER", 2, 0.9),  # unknown relation
         ],
     )
-    out = type_check(df, spark).collect()
+    out = type_check(df).collect()
     assert len(out) == 1 and out[0]["slot_value"] == "34"
 
 
@@ -78,7 +79,7 @@ def test_single_cardinality_top1_with_tiebreak(spark):
         ("E", "PERSON", "per:employee_of", "Org001", "ORGANIZATION", 2, 0.9),
         ("E", "PERSON", "per:employee_of", "Org002", "ORGANIZATION", 2, 0.8),  # LIST keeps both
     ]
-    df = type_check(_triples(spark, rows), spark)
+    df = type_check(_triples(spark, rows))
     out = greedy_consistency(df)
     ages = [r["slot_value"] for r in out.filter("relation = 'per:age'").collect()]
     assert ages == ["34"]
@@ -92,7 +93,7 @@ def test_full_battery_composes(spark):
         ("E", "PERSON", "per:age", "99", "NUMBER", 1, 0.4),  # below threshold
         ("E", "PERSON", "per:title", "president", "TITLE", 2, 0.99),
     ]
-    out = apply_consistency(_triples(spark, rows), spark)
+    out = apply_consistency(_triples(spark, rows))
     got = {(r["relation"], r["slot_value"]) for r in out.collect()}
     assert got == {("per:age", "34"), ("per:title", "president")}
 
@@ -123,7 +124,7 @@ def test_incompatibilities_drop_lower_ranked(spark):
         ("E", "PERSON", "per:country_of_birth", "NATION_2", "COUNTRY", 2, 0.9),
         ("E", "PERSON", "per:country_of_death", "NATION_2", "COUNTRY", 2, 0.8),
     ]
-    ranked = type_check(_triples(spark, rows), spark)
+    ranked = type_check(_triples(spark, rows))
     out = {r["relation"] for r in greedy_consistency(ranked).collect()}
     # country_of_death passes the pairwise check but then falls to the
     # loc-of-death hold-one-out: its entity's only date_of_death dropped
@@ -178,5 +179,5 @@ def test_greedy_follows_w1_on_depth3_chain(spark):
         ("E", "PERSON", "per:origin", "NATION_2", "COUNTRY", 2, 0.98),
         ("E", "PERSON", "per:employee_of", "NATION_2", "COUNTRY", 2, 0.97),
     ]
-    out = {r["relation"] for r in apply_consistency(_triples(spark, rows), spark).collect()}
+    out = {r["relation"] for r in apply_consistency(_triples(spark, rows)).collect()}
     assert out == {"per:countries_of_residence", "per:employee_of"}

@@ -8,7 +8,13 @@ import shutil
 
 import pytest
 
-from conftest import SF_DIR
+from conftest import SF_DIR, spark_jobs
+
+# Spark jobs one fresh sf0.001 store launches once the session's alias
+# dictionary is cut (local[4], 4 shuffle partitions): each stored stage
+# costs its write job, the rest is the stages' own work (extraction,
+# canonicalization, the ensemble and consistency shuffles).
+FRESH_STORE_JOBS = 23
 
 
 @pytest.fixture(scope="module")
@@ -129,3 +135,71 @@ def test_stored_triples_match_in_session(spark, tmp_path):
     for stage in ("candidates", "triples"):
         shutil.rmtree(os.path.join(store, stage))
     assert _rows(run_pipeline(spark, SF_DIR, store)["triples"]) == want
+
+
+def test_manifest_contract(spark, ckpt):
+    """Each manifest, read off the parquet footers the write produced,
+    agrees with a Spark read of the stored table: the row count, the
+    schema ``spark.read.parquet`` infers, and the triples' rows per
+    relation, whose names hold ':' and '/' (escaped on disk)."""
+    from pyspark.sql.types import StructType
+
+    from stanford_relation_extractor_spark.plans.pipeline import STORED_STAGES, run_pipeline
+
+    manifests = run_pipeline(spark, SF_DIR, ckpt)["manifests"]
+    for stage in STORED_STAGES:
+        m = manifests[stage]
+        stored = spark.read.parquet(os.path.join(ckpt, stage))
+        assert m["row_count"] == stored.count() > 0, stage
+        assert sum(m["partition_rows"].values()) == m["row_count"], stage
+        assert StructType.fromJson(m["schema"]) == stored.schema, stage
+    triples = spark.read.parquet(os.path.join(ckpt, "triples"))
+    per_relation = {r["relation"]: r["count"] for r in triples.groupBy("relation").count().collect()}
+    assert manifests["triples"]["partition_rows"] == per_relation
+    assert any(":" in r and "/" in r for r in per_relation)
+
+
+def test_valid_store_launches_no_jobs(spark, ckpt):
+    """Reading valid stored stages runs no Spark job: the manifest holds
+    the schema, so there is no inference pass and no read-back."""
+    from stanford_relation_extractor_spark.plans.pipeline import run_pipeline
+
+    run_pipeline(spark, SF_DIR, ckpt)  # rebuilds what earlier tests invalidated
+    with spark_jobs(spark) as jobs:
+        out = run_pipeline(spark, SF_DIR, ckpt)
+    assert jobs.count == 0
+    assert out["triples"].count() == out["manifests"]["triples"]["row_count"]
+
+
+def test_fresh_store_job_count(spark, tmp_path):
+    """A fresh store launches no job beyond each stage's write and the
+    stages' own work (capped at the count measured at sf0.001)."""
+    from stanford_relation_extractor_spark.plans.pipeline import run_pipeline
+    from stanford_relation_extractor_spark.sources.synthetic import alias_dict_df
+
+    alias_dict_df(spark, SF_DIR)  # the session-wide alias cut, paid once per session
+    with spark_jobs(spark) as jobs:
+        run_pipeline(spark, SF_DIR, str(tmp_path / "fresh"))
+    assert 0 < jobs.count <= FRESH_STORE_JOBS
+
+
+def test_manifest_without_schema_rebuilds(spark, ckpt):
+    """A manifest written before the schema was recorded is stale: its
+    stage rebuilds, the stages before it stay untouched."""
+    from stanford_relation_extractor_spark.plans.pipeline import run_pipeline
+
+    run_pipeline(spark, SF_DIR, ckpt)
+    mpath = os.path.join(ckpt, "linked_votes", "_MANIFEST.json")
+    with open(mpath) as fh:
+        manifest = json.load(fh)
+    del manifest["schema"]
+    with open(mpath, "w") as fh:
+        json.dump(manifest, fh)
+    before = _mtimes(ckpt)
+
+    out = run_pipeline(spark, SF_DIR, ckpt)
+    after = _mtimes(ckpt)
+    assert after["linked_votes"] != before["linked_votes"]
+    for stage in ("sentences", "votes", "canon_map"):
+        assert after[stage] == before[stage], stage
+    assert "schema" in out["manifests"]["linked_votes"]
