@@ -410,8 +410,8 @@ def _real_queries_2013(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = queries_df(spark, fh.read())
     # The driver's rows-only canonicalizer sorts a pandas frame; an
     # array<string> column is unhashable there (r4 err trace).  Project a
-    # stable scalar shape for the check — engine consumers
-    # (filter_ignored_slots) keep the array column via queries_df itself.
+    # stable scalar shape for the check; queries_df itself keeps the
+    # array column.
     return q.withColumn(
         "ignored_slots", F.array_join(F.sort_array("ignored_slots"), " ")
     )

@@ -1,15 +1,11 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Images/audio/video ride Spark as `binary` columns with a metadata
-struct; decode / feature-extraction run as Arrow-batched pandas UDFs
-over `mapInPandas` (bytes transfer via Arrow buffers, never Python
-pickling per row). Uncompressed formats (24-bit BMP, PCM16 WAV) decode
-through pure-Python struct parsers — the codec path itself is exercised
-end to end (`image_features`/`audio_features`). Compressed codecs
-(JPEG/PNG/MP3/...) need PIL/soundfile/ffmpeg, absent from this
-container: those branches are clearly-marked stubs behind try-imports.
-`byte_features` keeps a codec-free deterministic path for the driver
-oracle.
+struct; feature extraction runs as an Arrow-batched pandas UDF over
+`mapInPandas` (bytes transfer via Arrow buffers, never Python pickling
+per row). `byte_features` is the codec-free deterministic path the
+driver oracle checks; codec decoders (BMP/WAV/JPEG/...) are not
+implemented, since no query decodes a payload.
 """
 
 from __future__ import annotations
@@ -32,133 +28,6 @@ def attach_payload(docs: DataFrame, mime: str = "application/octet-stream") -> D
             F.length(F.encode(F.col("text"), "utf-8")).alias("n_bytes"),
         ).alias("meta"),
     )
-
-
-def decode_image(payload: bytes) -> dict:
-    """Decode an image payload. Uncompressed 24-bit BMP is decoded by
-    the pure-Python parser below (the codec path IS exercised end to
-    end); every other format needs PIL/opencv, absent from this
-    container — a clearly-marked stub."""
-    if payload[:2] == b"BM":
-        return decode_bmp(payload)
-    try:
-        from PIL import Image  # noqa: F401
-    except ImportError as exc:  # pragma: no cover - env-dependent
-        raise NotImplementedError(
-            "non-BMP image decode requires pillow; BMP decodes natively"
-        ) from exc
-    raise NotImplementedError("wire PIL.Image.open(io.BytesIO(payload)) here")  # pragma: no cover
-
-
-def decode_audio(payload: bytes) -> dict:
-    """Decode an audio payload. PCM16 RIFF/WAVE is decoded by the pure
-    parser below; compressed codecs would need soundfile/ffmpeg."""
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        return decode_wav(payload)
-    raise NotImplementedError(
-        "non-WAV audio decode requires soundfile/ffmpeg; PCM WAV decodes natively"
-    )
-
-
-def decode_bmp(payload: bytes) -> dict:
-    """Pure-Python uncompressed 24-bit BMP parser (BITMAPFILEHEADER +
-    BITMAPINFOHEADER + bottom-up BGR rows, 4-byte row padding)."""
-    import struct
-
-    if payload[:2] != b"BM":
-        raise ValueError("not a BMP payload")
-    data_offset = struct.unpack_from("<I", payload, 10)[0]
-    width, height = struct.unpack_from("<ii", payload, 18)
-    planes, bpp = struct.unpack_from("<HH", payload, 26)
-    compression = struct.unpack_from("<I", payload, 30)[0]
-    if bpp != 24 or compression != 0:
-        raise NotImplementedError("only uncompressed 24-bit BMP supported")
-    row_stride = (width * 3 + 3) // 4 * 4
-    total = 0
-    n = 0
-    for row in range(abs(height)):
-        base = data_offset + row * row_stride
-        px = payload[base : base + width * 3]
-        total += sum(px)
-        n += len(px)
-    return {
-        "width": width,
-        "height": abs(height),
-        "bpp": bpp,
-        "mean_px": round(total / n, 6) if n else 0.0,
-    }
-
-
-def decode_wav(payload: bytes) -> dict:
-    """Pure-Python PCM16 RIFF/WAVE parser (fmt + data chunk walk)."""
-    import struct
-
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a WAV payload")
-    pos = 12
-    channels = sample_rate = bits = None
-    samples: list[int] = []
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        size = struct.unpack_from("<I", payload, pos + 4)[0]
-        body = payload[pos + 8 : pos + 8 + size]
-        if cid == b"fmt ":
-            fmt, channels, sample_rate = struct.unpack_from("<HHI", body, 0)
-            bits = struct.unpack_from("<H", body, 14)[0]
-            if fmt != 1 or bits != 16:
-                raise NotImplementedError("only PCM16 WAV supported")
-        elif cid == b"data":
-            samples = list(struct.unpack(f"<{size // 2}h", body[: size // 2 * 2]))
-        pos += 8 + size + (size % 2)
-    return {
-        "channels": channels,
-        "sample_rate": sample_rate,
-        "n_samples": len(samples),
-        "mean_abs": round(sum(abs(s) for s in samples) / len(samples), 6) if samples else 0.0,
-    }
-
-
-IMAGE_FEATURES_SCHEMA = "doc_id bigint, width int, height int, bpp int, mean_px double"
-AUDIO_FEATURES_SCHEMA = (
-    "doc_id bigint, channels int, sample_rate int, n_samples int, mean_abs double"
-)
-
-
-def image_features(multimodal: DataFrame) -> DataFrame:
-    """Arrow-batched BMP decode + feature extraction over the binary
-    payload column — the real codec path, same batch shape as
-    byte_features."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                m = decode_image(bytes(payload))
-                rows.append((doc_id, m["width"], m["height"], m["bpp"], m["mean_px"]))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "bpp", "mean_px"]
-            )
-
-    return multimodal.mapInPandas(run, schema=IMAGE_FEATURES_SCHEMA)
-
-
-def audio_features(multimodal: DataFrame) -> DataFrame:
-    """Arrow-batched PCM16 WAV decode + amplitude features."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                m = decode_audio(bytes(payload))
-                rows.append(
-                    (doc_id, m["channels"], m["sample_rate"], m["n_samples"], m["mean_abs"])
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "channels", "sample_rate", "n_samples", "mean_abs"],
-            )
-
-    return multimodal.mapInPandas(run, schema=AUDIO_FEATURES_SCHEMA)
 
 
 def byte_features(multimodal: DataFrame) -> DataFrame:

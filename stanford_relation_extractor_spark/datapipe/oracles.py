@@ -140,13 +140,17 @@ ranked AS (
 )
 SELECT query_id, CAST(rank AS INT) AS rank, neighbor_id FROM ranked WHERE rank <= 3"""
 
-_LSH_SIG = """
+
+def _lsh_sig_sql(n_bits: int) -> str:
+    """Parameterized hyperplane-signature CTE (md5-derived +-1 planes,
+    byte-identical to similarity.hyperplane_signs)."""
+    return f"""
 planes AS (
   SELECT j, d,
          CASE WHEN substr(md5(CAST(j AS STRING) || ':' || CAST(d AS STRING)), 1, 1)
                    IN ('8','9','a','b','c','d','e','f')
               THEN 1.0 ELSE -1.0 END AS w
-  FROM (SELECT unnest(range(0, 8)) AS j) js
+  FROM (SELECT unnest(range(0, {n_bits})) AS j) js
   CROSS JOIN (SELECT unnest(range(0, 64)) AS d) ds
 ),
 comps AS (
@@ -163,6 +167,9 @@ sig AS (
          string_agg(CASE WHEN dot >= 0 THEN '1' ELSE '0' END, '' ORDER BY j) AS bucket
   FROM dots GROUP BY vec_id
 )"""
+
+
+_LSH_SIG = _lsh_sig_sql(8)
 
 LSH_KNN = f"""WITH {_LSH_SIG},
 q AS (
@@ -288,34 +295,6 @@ ALL = {
     "events_sessions": EVENTS_SESSIONS,
     "multimodal_features": MULTIMODAL_FEATURES,
 }
-
-
-def _lsh_sig_sql(n_bits: int) -> str:
-    """Parameterized hyperplane-signature CTE (md5-derived +-1 planes,
-    byte-identical to similarity.hyperplane_signs)."""
-    return f"""
-planes AS (
-  SELECT j, d,
-         CASE WHEN substr(md5(CAST(j AS STRING) || ':' || CAST(d AS STRING)), 1, 1)
-                   IN ('8','9','a','b','c','d','e','f')
-              THEN 1.0 ELSE -1.0 END AS w
-  FROM (SELECT unnest(range(0, {n_bits})) AS j) js
-  CROSS JOIN (SELECT unnest(range(0, 64)) AS d) ds
-),
-comps AS (
-  SELECT vec_id, d, CAST(embedding[d + 1] AS DOUBLE) AS x
-  FROM embeddings CROSS JOIN (SELECT unnest(range(0, 64)) AS d) ds
-),
-dots AS (
-  SELECT c.vec_id, p.j, sum(c.x * p.w) AS dot
-  FROM comps c JOIN planes p ON c.d = p.d
-  GROUP BY c.vec_id, p.j
-),
-sig AS (
-  SELECT vec_id,
-         string_agg(CASE WHEN dot >= 0 THEN '1' ELSE '0' END, '' ORDER BY j) AS bucket
-  FROM dots GROUP BY vec_id
-)"""
 
 
 LSH_KNN_BANDED = f"""WITH {_lsh_sig_sql(16)},

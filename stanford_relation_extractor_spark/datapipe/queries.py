@@ -69,7 +69,10 @@ def q_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_lsh_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings")
-    return similarity.lsh_knn(emb, _queries_vec(spark, sf_dir), k=3)
+    # a single band of all 8 bits: candidates share the whole signature
+    return similarity.lsh_knn_banded(
+        emb, _queries_vec(spark, sf_dir), k=3, n_bits=8, band_bits=8
+    )
 
 
 def q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

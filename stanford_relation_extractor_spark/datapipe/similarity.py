@@ -106,40 +106,6 @@ def lsh_bucket_signatures(
     )
 
 
-def lsh_knn(
-    vectors: DataFrame, queries: DataFrame, k: int = 3, n_bits: int = 8, dim: int = 64
-) -> DataFrame:
-    """Approximate top-k: exact cosine ranking restricted to the query's
-    LSH bucket (candidates sharing all n_bits)."""
-    sig = lsh_bucket_signatures(vectors, n_bits, dim)
-    vec_b = vectors.join(sig, "vec_id")
-    qsig = (
-        queries.withColumnRenamed("query_vec", "embedding")
-        .withColumnRenamed("query_id", "vec_id")
-    )
-    q_b = (
-        lsh_bucket_signatures(qsig, n_bits, dim)
-        .withColumnRenamed("vec_id", "query_id")
-        .withColumnRenamed("bucket", "qbucket")
-        .join(queries, "query_id")
-    )
-    joined = vec_b.join(
-        F.broadcast(q_b),
-        (F.col("bucket") == F.col("qbucket")) & (F.col("vec_id") != F.col("query_id")),
-    )
-    scored = joined.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        cosine(F.col("query_vec"), F.col("embedding")).alias("sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id")
-    )
-
-
 def _banded(sig: DataFrame, id_col: str, n_bits: int, band_bits: int) -> DataFrame:
     """Explode a bit-string signature into (id, band_idx, band_value)."""
     n_bands = n_bits // band_bits

@@ -4,8 +4,6 @@ Python forms are used inside Arrow-batched UDFs and unit tests; column
 forms (where a built-in exists) are preferred in plans:
 
 * F2 `no_special_chars`  — Utils.noSpecialChars (`common/Utils.java:367-395`)
-* F3 token-level Levenshtein — `common/Utils.java:241-290` (string form
-  uses the built-in `F.levenshtein`)
 * F4 acronym build/match — `entitylinking/AcronymMatcher.java:19-131`
 * `strip_corp` — the case-insensitive corporate-suffix/determiner strip
   the cascade compares under (the F5 dictionary rewrite,
@@ -68,20 +66,6 @@ def is_acronym_of(short: str, long_tokens: list[str]) -> bool:
     """AcronymMatcher.isAcronym: short form == initials of the long form."""
     s = _NON_ALPHA_RX.sub("", short).upper()
     return len(s) > 1 and s == acronym(long_tokens)
-
-
-def token_levenshtein(a: list[str], b: list[str]) -> int:
-    """Edit distance over token sequences (Utils.java:241-290)."""
-    m, n = len(a), len(b)
-    prev = list(range(n + 1))
-    for i in range(1, m + 1):
-        cur = [i] + [0] * n
-        for j in range(1, n + 1):
-            cur[j] = min(
-                prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (a[i - 1] != b[j - 1])
-            )
-        prev = cur
-    return prev[n]
 
 
 # type-specific token-overlap acceptance thresholds (EntityLinker cascade)
@@ -167,28 +151,6 @@ def is_valid_alternate_name(name1: str, name2: str) -> bool:
     ) != remove_disallowed_alternate_name_variants(name2)
 
 
-_YEAR_RX = re.compile(r"^(1[0-9]{3}|2[0-9]{3})$")
-_YM_RX = re.compile(r"^(1[0-9]{3}|2[0-9]{3})[-/](\d{1,2})$")
-_YMD_RX = re.compile(r"^(1[0-9]{3}|2[0-9]{3})[-/](\d{1,2})[-/](\d{1,2})$")
-
-
-def normalize_date_slot(value: str) -> str | None:
-    """F7 — simplified SUTime/Timex normalization
-    (`shallowdive/TextOps.java:360-375`): YEAR -> 'YYYY',
-    YEAR-MONTH -> 'YYYY-MM', full date -> 'YYYY-MM-DD'; None when the
-    value is not an absolute date."""
-    v = value.strip()
-    if _YEAR_RX.match(v):
-        return v
-    m = _YM_RX.match(v)
-    if m:
-        return f"{m.group(1)}-{int(m.group(2)):02d}"
-    m = _YMD_RX.match(v)
-    if m:
-        return f"{m.group(1)}-{int(m.group(2)):02d}-{int(m.group(3)):02d}"
-    return None
-
-
 def blocking_key(name: str) -> str:
     """Candidate-pair blocking key (J8 at scale): normalized last token
     + first character — never O(n^2) pair generation."""
@@ -198,39 +160,31 @@ def blocking_key(name: str) -> str:
     return f"{toks[-1]}:{n[:1]}"
 
 
-def blocking_key_ext(name: str) -> str:
-    """Extended blocking key for hot blocks: normalized last token +
-    first THREE characters. Real name distributions make the base key
-    quadratic ('smith:j'); blocks over the cap re-key here, trading the
-    pairs that differ inside the 3-char prefix (same recall trade the
-    base key already makes at 1 char)."""
+def block_keys(name: str, entity_type: str) -> list[tuple[str, str]]:
+    """J8 blocking keys of one surface as (block, block_ext), from one
+    normalization. The last-token family is ``blocking_key`` plus its
+    extended key for hot blocks: normalized last token + first THREE
+    characters. Real name distributions make the base key quadratic
+    ('smith:j'); blocks over the cap re-key there, trading the pairs
+    that differ inside the 3-char prefix (the recall trade the base key
+    already makes at 1 char).
+
+    ORGANIZATIONs add the first-token family (first token + 1- and
+    3-char prefix, the same key space), so "Org003 Securities" lands in
+    single-token "Org003"'s block and nested names ("Bank of America
+    Securities") meet their containment parent ("Bank of America"): they
+    share no LAST token, but the reference's containment cascade
+    (EntityLinker token overlap >= 0.75) must see the pair to merge it.
+    Single-token names have no first-token key (their last-token key
+    already is it). PERSONs never use it: the PERSON cascade requires a
+    shared surname (last token), so first-name blocks could never merge.
+    A name that normalizes to no tokens has no keys. A pair sharing
+    both families' blocks is judged twice; the duplicate edge is
+    harmless."""
     n, toks, _ = _norm_parts(name)
     if not toks:
-        return ""
-    return f"{toks[-1]}:{n[:3]}"
-
-
-def blocking_key_first(name: str) -> str:
-    """Secondary ORG blocking key: normalized FIRST token + first char,
-    same key space as ``blocking_key`` so "Org003 Securities"
-    (first token org003) lands in single-token "Org003"'s block. Nested
-    organization names ("Bank of America Securities" vs "Bank of
-    America") share no LAST token, so last-token blocking alone never
-    pairs them — but the reference's containment cascade
-    (EntityLinker token overlap >= 0.75) must see the pair to merge it.
-    Empty for single-token names (their last-token key already IS this
-    key) — PERSONs never use it: the PERSON cascade requires a shared
-    surname (last token), so first-name blocks could never merge."""
-    n, toks, _ = _norm_parts(name)
-    if len(toks) < 2 or toks[0] == toks[-1]:
-        return ""
-    return f"{toks[0]}:{n[:1]}"
-
-
-def blocking_key_first_ext(name: str) -> str:
-    """Hot-block re-key for the first-token family (first token + 3-char
-    prefix), mirroring ``blocking_key_ext``."""
-    n, toks, _ = _norm_parts(name)
-    if len(toks) < 2 or toks[0] == toks[-1]:
-        return ""
-    return f"{toks[0]}:{n[:3]}"
+        return []
+    keys = [(f"{toks[-1]}:{n[:1]}", f"{toks[-1]}:{n[:3]}")]
+    if entity_type == "ORGANIZATION" and toks[0] != toks[-1]:
+        keys.append((f"{toks[0]}:{n[:1]}", f"{toks[0]}:{n[:3]}"))
+    return keys

@@ -18,28 +18,6 @@ from __future__ import annotations
 from dataclasses import dataclass
 from functools import lru_cache
 
-# --- NE tags (NERTag.java:8-28) --------------------------------------------
-NER_TAGS: tuple[str, ...] = (
-    "CAUSE_OF_DEATH",
-    "CITY",
-    "COUNTRY",
-    "CRIMINAL_CHARGE",
-    "DATE",
-    "DURATION",
-    "IDEOLOGY",
-    "LOCATION",
-    "MISC",
-    "MODIFIER",
-    "NATIONALITY",
-    "NUMBER",
-    "ORGANIZATION",
-    "PERSON",
-    "RELIGION",
-    "STATE_OR_PROVINCE",
-    "TITLE",
-    "URL",
-)
-
 SINGLE = "SINGLE"
 LIST = "LIST"
 

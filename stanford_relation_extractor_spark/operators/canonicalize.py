@@ -20,7 +20,7 @@ The canon map (``build_canon_map``) has two paths, picked by the size
 gate ``CANON_LOCAL_MAX_SURFACES``: a driver-local one and a distributed
 one. Both run the same pure-Python rule functions, so each rule is
 written once: ``_dict_rewrite`` (J6 nickname + F5 suffix strip),
-``_block_keys``/``_blocks``/``_block_pairs`` (J8 blocking and pairing)
+``block_keys``/``_blocks``/``_block_pairs`` (J8 blocking and pairing)
 and ``same_entity`` (J8 judging). The distributed path runs them inside
 Arrow batch passes, paying the Python boundary once per batch.
 """
@@ -33,14 +33,7 @@ from collections import Counter
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import (
-    blocking_key,
-    blocking_key_ext,
-    blocking_key_first,
-    blocking_key_first_ext,
-    is_valid_alternate_name,
-    same_entity,
-)
+from ..functions.text import block_keys, is_valid_alternate_name, same_entity
 
 
 def _lineage_cut(df: DataFrame, checkpoint_dir: str | None) -> DataFrame:
@@ -186,25 +179,12 @@ def _dict_rewrite(
     return re.sub(f" ({'|'.join(suffixes)})$", "", s)
 
 
-def _block_keys(name: str, et: str) -> list[tuple[str, str]]:
-    """J8 blocking keys of one surface as (block, block_ext): the
-    last-token family, plus the first-token family for ORGANIZATIONs so
-    nested names ("Bank of America Securities") meet their containment
-    parent ("Bank of America"), a pair last-token blocking alone never
-    generates. Empty keys are dropped. A pair sharing both families'
-    blocks is judged twice; the duplicate edge is harmless."""
-    keys = [(blocking_key(name), blocking_key_ext(name))]
-    if et == "ORGANIZATION":
-        keys.append((blocking_key_first(name), blocking_key_first_ext(name)))
-    return [k for k in keys if k[0]]
-
-
 def _blocks(surfaces: list[tuple[str, str]]) -> dict[tuple[str, str], list[str]]:
     """(entity_type, block) -> member names over (name, entity_type)
     surfaces. Blocks over ``MAX_BLOCK`` members re-key by their
     extended key (last token + 3-char prefix), as
     `datapipe/dedup.py` prefix_block_jaccard does."""
-    keyed = [(n, et, b, e) for n, et in surfaces for b, e in _block_keys(n, et)]
+    keyed = [(n, et, b, e) for n, et in surfaces for b, e in block_keys(n, et)]
     counts = Counter((et, b) for _n, et, b, _e in keyed)
     blocks: dict[tuple[str, str], list[str]] = {}
     for n, et, b, e in keyed:
@@ -498,7 +478,7 @@ def emit_alternate_names(canon_map: DataFrame, surfaces: DataFrame) -> DataFrame
 
 def same_entity_edges(entities: DataFrame) -> DataFrame:
     """J8 at scale over distinct (entity_name, entity_type) rows: keys
-    each surface with ``_block_keys`` in one Arrow pass, re-keys blocks
+    each surface with ``block_keys`` in one Arrow pass, re-keys blocks
     over ``MAX_BLOCK`` by a window count, then judges each block's
     ``_block_pairs`` with ``same_entity`` (EntityLinker.java:67-84
     cascade) in one clustered Arrow pass. Output: undirected (src, dst)
@@ -516,7 +496,7 @@ def same_entity_edges(entities: DataFrame) -> DataFrame:
                 [
                     (n, et, b, e)
                     for n, et in zip(pdf["entity_name"], pdf["entity_type"])
-                    for b, e in _block_keys(n, et)
+                    for b, e in block_keys(n, et)
                 ],
                 columns=["entity_name", "entity_type", "block", "block_ext"],
             )

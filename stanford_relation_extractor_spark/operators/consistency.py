@@ -208,18 +208,6 @@ def conform_to_guidelines(triples: DataFrame) -> DataFrame:
     return triples.filter(keep)
 
 
-def normalize_scores(df: DataFrame, group_cols: list[str], score_col: str = "score") -> DataFrame:
-    """A4 Counters.normalize (`RelationClassifier.java:42-52`): rescale
-    scores to sum 1 within each group (window sum, no extra shuffle when
-    grouped on a prefix of the current partitioning)."""
-    w = Window.partitionBy(*group_cols)
-    return df.withColumn(
-        score_col, F.round(F.col(score_col) / F.sum(score_col).over(w), 6)
-    )
-
-
-
-
 def greedy_consistency(triples: DataFrame) -> DataFrame:
     """W1 — the reference's greedy activation loop
     (`HeuristicSlotfillPostProcessor.java:69-200`): per entity, walk

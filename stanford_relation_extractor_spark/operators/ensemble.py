@@ -32,7 +32,6 @@ from pyspark.sql import functions as F
 GROUP_KEY = ["entity_name", "entity_type", "relation", "slot_value", "slot_ner"]
 
 EXTRACTORS = ("pattern", "trigger", "window", "statistical")
-N_EXTRACTORS = len(EXTRACTORS)
 FIRST_EXTRACTOR = EXTRACTORS[0]  # AGREE_FIRST's classifier[0]
 
 AGREE_ANY = "AGREE_ANY"

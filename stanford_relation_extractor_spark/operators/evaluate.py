@@ -10,8 +10,6 @@
   (`spec/OfficialOutputWriter.java:47-113`): every (query, relation)
   with no surviving fill emits a NIL marker, via a left anti join
   against the full query x relation grid.
-* ``intersect_triples`` — IntersectSlotFiller (O5): triples agreed on
-  by two independent pipeline outputs.
 """
 
 from __future__ import annotations
@@ -52,72 +50,6 @@ def pr_score(guesses: DataFrame, gold: DataFrame) -> DataFrame:
     return spark.createDataFrame(
         [(n_guessed, n_gold, n_correct, round(precision, 6), round(recall, 6), round(f1, 6))],
         "n_guessed long, n_gold_classes long, n_correct long, precision double, recall double, f1 double",
-    )
-
-
-def pr_curve(guesses: DataFrame, gold: DataFrame) -> DataFrame:
-    """The KBPScore score sweep (`KBPScore.java:21-68`) as ONE window
-    pass — no driver loop: rank guesses by score desc (W4-stable ties),
-    then cumulative precision / equivalence-class recall at every rank.
-
-    Returns (rank, score, precision, recall, d_recall) rows. The global
-    ordering window is deliberate: the sweep runs over one evaluation's
-    guess set (bounded — the reference holds it in memory), not over
-    corpus-scale data.
-    """
-    key = ["entity_name", "relation", "slot_value"]
-    g = guesses.groupBy(*key).agg(F.max("score").alias("score"))
-    marked = g.join(
-        gold.groupBy(*key).agg(F.min("equiv_class").alias("equiv_class")),
-        key,
-        "left",
-    ).withColumn("_correct", F.col("equiv_class").isNotNull().cast("int"))
-    order = [F.desc("score"), F.asc("entity_name"), F.asc("relation"), F.asc("slot_value")]
-    w = Window.orderBy(*order)
-    # a correct guess scores a NEW equivalence class only at its
-    # best-ranked occurrence
-    w_class = Window.partitionBy("entity_name", "relation", "equiv_class").orderBy(*order)
-    marked = marked.withColumn(
-        "_new_class",
-        F.when(
-            (F.col("_correct") == 1) & (F.row_number().over(w_class) == 1), F.lit(1)
-        ).otherwise(F.lit(0)),
-    )
-    n_gold = gold.select("entity_name", "relation", "equiv_class").distinct().count()
-    cum = marked.select(
-        F.row_number().over(w).alias("rank"),
-        "score",
-        F.sum("_correct").over(w.rowsBetween(Window.unboundedPreceding, 0)).alias("_cum_correct"),
-        F.sum("_new_class").over(w.rowsBetween(Window.unboundedPreceding, 0)).alias("_cum_classes"),
-        F.col("_new_class").alias("_new"),
-    )
-    return cum.select(
-        "rank",
-        "score",
-        F.round(F.col("_cum_correct") / F.col("rank"), 6).alias("precision"),
-        F.round(F.col("_cum_classes") / F.lit(max(n_gold, 1)), 6).alias("recall"),
-        F.round(F.col("_new") / F.lit(max(n_gold, 1)), 6).alias("d_recall"),
-    )
-
-
-def pr_auc(guesses: DataFrame, gold: DataFrame) -> DataFrame:
-    """One-row (auc, best_f1, best_threshold): area under the PR sweep
-    (step integration sum(P@k * dR@k), the KBPScore 'area under the
-    smoothed curve' analog) and the optimal operating point."""
-    curve = pr_curve(guesses, gold)
-    f1 = F.when(
-        F.col("precision") + F.col("recall") > 0,
-        2 * F.col("precision") * F.col("recall") / (F.col("precision") + F.col("recall")),
-    ).otherwise(F.lit(0.0))
-    scored = curve.withColumn("_f1", f1)
-    w = Window.orderBy(F.desc("_f1"), F.asc("rank"))
-    best = scored.withColumn("_r", F.row_number().over(w)).filter(F.col("_r") == 1)
-    auc = scored.agg(F.round(F.sum(F.col("precision") * F.col("d_recall")), 6).alias("auc"))
-    return auc.crossJoin(
-        best.select(
-            F.round(F.col("_f1"), 6).alias("best_f1"),
-            F.col("score").alias("best_threshold"),
-        )
     )
 
 
@@ -378,9 +310,3 @@ def nil_padded_output(triples: DataFrame, queries: DataFrame, spark: SparkSessio
         F.coalesce(F.col("slot_value"), F.lit("NIL")).alias("slot_value"),
         F.coalesce(F.col("score"), F.lit(0.0)).alias("score"),
     ).orderBy("query_id", "relation", F.desc("score"), "slot_value")
-
-
-def intersect_triples(a: DataFrame, b: DataFrame) -> DataFrame:
-    """O5: fills proposed by both pipelines (key equality on the triple)."""
-    key = ["entity_name", "entity_type", "relation", "slot_value"]
-    return a.join(b.select(*key).distinct(), key, "left_semi")

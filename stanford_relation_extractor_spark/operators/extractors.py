@@ -436,8 +436,6 @@ def votes_for_sentence(
 def extract_votes(
     source: DataFrame,
     config: list[tuple[str, str]] | None = None,
-    with_statistical: bool = True,
-    resolve_pronouns: bool = True,
 ) -> DataFrame:
     """Sentences or transcripts -> long votes table, in ONE Arrow pass.
 
@@ -449,10 +447,9 @@ def extract_votes(
     skipping the Arrow round trip of the mentions column (the in-session
     hot path). The statistical member rides the same pass.
 
-    ``resolve_pronouns`` clusters the input per conversation (one
-    repartition + in-partition sort) so the pass can carry the
-    antecedent state across a conversation's turns; without it the pass
-    is shuffle-free and pronoun mentions drop. At 10^12-turn scale a
+    The input is clustered per conversation (one repartition +
+    in-partition sort) so the pass can carry the antecedent state
+    across a conversation's turns. At 10^12-turn scale a
     single giant conversation would bottleneck its partition; shard such
     conversations upstream on (conv_id, turn_idx div B) — antecedents
     then reset per B-turn block, the per-document propagation scope the
@@ -467,20 +464,19 @@ def extract_votes(
     else:
         keys = ("conv_id", "turn_idx")
         src = source.select(*keys, "text")
-    if resolve_pronouns:
-        # EXPLICIT partition count: a bare repartition("conv_id") lets
-        # AQE coalesce the exchange to ~64MB partitions — sized for
-        # JVM-cheap operators, catastrophically coarse for a Python
-        # regex stage (measured: extraction pinned at ~8-wide no matter
-        # how many executors). 2x total cores keeps every slot fed.
-        n_parts = 2 * source.sparkSession.sparkContext.defaultParallelism
-        src = src.repartition(n_parts, "conv_id").sortWithinPartitions(*keys)
+    # EXPLICIT partition count: a bare repartition("conv_id") lets AQE
+    # coalesce the exchange to ~64MB partitions — sized for JVM-cheap
+    # operators, catastrophically coarse for a Python regex stage
+    # (measured: extraction pinned at ~8-wide no matter how many
+    # executors). 2x total cores keeps every slot fed.
+    n_parts = 2 * source.sparkSession.sparkContext.defaultParallelism
+    src = src.repartition(n_parts, "conv_id").sortWithinPartitions(*keys)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         matchers = None if stored else [(ner, re.compile(rx)) for ner, rx in config]
         pbank = _compiled_pattern_bank()
         tbank = _compiled_trigger_bank()
-        stat = _stat_context() if with_statistical else None
+        stat = _stat_context()
         state = AntecedentState()
         for pdf in batches:
             if stored:
@@ -496,8 +492,7 @@ def extract_votes(
                     continue
                 if stored:
                     mentions = [dict(m) for m in mentions]
-                if resolve_pronouns:
-                    mentions = state.resolve(conv_id, mentions)
+                mentions = state.resolve(conv_id, mentions)
                 if len(mentions) < 2:
                     continue
                 head = (conv_id, turn_idx, sent_idx)

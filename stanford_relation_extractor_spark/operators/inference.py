@@ -35,8 +35,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-RULE_CONFIDENCE = 0.9
-
 _OUT_COLS = [
     "entity_name", "entity_type", "relation", "slot_value", "slot_ner",
     "score", "rule",

@@ -10,7 +10,7 @@ The rest of the linker cascade lives in ``operators/canonicalize.py``:
 the F5 corporate-suffix strip and J6 nickname canonicalization
 (`entitylinking/EntityLinker.java:46-55,114-161`) are
 ``canonicalize._dict_rewrite``, and J8 blocking and judging are
-``canonicalize._block_keys``/``_block_pairs`` with
+``functions/text.py:block_keys``, ``canonicalize._block_pairs`` and
 ``functions/text.py:same_entity`` — one function per rule for both
 canon paths.
 """

@@ -10,8 +10,8 @@ never a global sort.
 
 `turn_seq` is a contiguity check column: the north-rule invariant
 "per-turn text equality under stable ordering" is `turn_idx == turn_seq`
-plus text equality per key, validated in tests and recorded in stage
-lineage metrics.
+plus text equality per key. Both halves are checks on the engine, not
+pipeline stages: they live in `tests/test_ordering.py`.
 """
 
 from __future__ import annotations
@@ -30,28 +30,4 @@ def with_turn_order(transcripts: DataFrame) -> DataFrame:
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
     return transcripts.withColumn(
         "turn_seq", (F.row_number().over(w) - F.lit(1)).cast("int")
-    )
-
-
-def ordering_violations(transcripts: DataFrame) -> DataFrame:
-    """Turns whose turn_idx is not contiguous-from-0 within conv."""
-    return with_turn_order(transcripts).filter(F.col("turn_idx") != F.col("turn_seq"))
-
-
-def turn_text_mismatches(before: DataFrame, after: DataFrame) -> DataFrame:
-    """Per-turn text-equality invariant between two pipeline snapshots.
-
-    Full outer join on the stable key; any row here is a violation.
-    At scale both sides are bucketed on conv_id, so this is a
-    co-partitioned join.
-    """
-    a = before.select("conv_id", "turn_idx", F.col("text").alias("text_before"))
-    b = after.select("conv_id", "turn_idx", F.col("text").alias("text_after"))
-    return (
-        a.join(b, ["conv_id", "turn_idx"], "full_outer")
-        .filter(
-            F.col("text_before").isNull()
-            | F.col("text_after").isNull()
-            | (F.col("text_before") != F.col("text_after"))
-        )
     )

@@ -152,49 +152,6 @@ def feature_count_filter(features: DataFrame, threshold: int = FEATURE_COUNT_THR
     return features.join(F.broadcast(frequent), "feature", "left_semi")
 
 
-def training_labels(
-    pairs: DataFrame, kb: DataFrame, negative_subsample_mod: int = 0
-) -> DataFrame:
-    """A9 — distant-supervision label computation
-    (`stanford-kbp/.../slotfilling/train/KBPTrainer.java:374-527`):
-
-    * positive: the KB holds (entity, rel, slotValue) for the pair;
-    * negative: the KB holds rel for the entity with a DIFFERENT slot
-      value and rel is SINGLE-cardinality (the observed fill contradicts
-      the known one);
-    * unknown otherwise (dropped from training).
-
-    Optional deterministic negative subsampling keeps every Nth negative
-    (`train.negatives.subsampleratio`, `common/Props.java:238` — we use
-    a hash-mod rather than RNG for reproducibility).
-    """
-    from ..ontology import RELATION_BY_NAME
-
-    singles = [n for n, r in RELATION_BY_NAME.items() if r.cardinality == "SINGLE"]
-    pos = (
-        pairs.join(
-            kb.select("entity_name", "relation", "slot_value").distinct(),
-            ["entity_name", "slot_value"],
-        )
-        .withColumn("label", F.lit("positive"))
-    )
-    kb_rel = kb.select(
-        "entity_name", F.col("relation").alias("kb_rel"),
-        F.col("slot_value").alias("kb_slot"),
-    ).filter(F.col("kb_rel").isin(*singles)).distinct()
-    neg = (
-        pairs.join(kb_rel, "entity_name")
-        .filter(F.col("slot_value") != F.col("kb_slot"))
-        .select(*pairs.columns, F.col("kb_rel").alias("relation"))
-        .withColumn("label", F.lit("negative"))
-    )
-    if negative_subsample_mod > 1:
-        neg = neg.filter(
-            F.pmod(F.hash("entity_name", "slot_value", "relation"), F.lit(negative_subsample_mod)) == 0
-        )
-    return pos.unionByName(neg, allowMissingColumns=True)
-
-
 def train_weights_df(
     labeled_features: DataFrame,
     smoothing: float = 0.5,
@@ -367,188 +324,3 @@ def miml_train(
             weights = refit(assign, weighted=True)
         weights = weights.localCheckpoint(eager=True)
     return weights
-
-
-# ---------------------------------------------------------------------------
-# JointBayes z/y two-level decomposition (A7's full architecture,
-# `classify/JointBayesRelationExtractor.java:429-560` EM +
-# `:1996-2120` inference). The z level is the per-mention classifier
-# miml_train already fits; the y level is one binary classifier PER
-# RELATION over bag-level features of the z-label multiset
-# (`extractYFeatures:~1840-1900`): 'atleastonce' when some mention
-# proposes y, 'none' when none does, and co-occurrence features
-# `co:s|<y>|d|<z>|` for every OTHER non-NIL label in the bag (the
-# shipped default Y_FEATURE_CLASS set {ATLEAST_ONCE, COOC},
-# `common/Props.java:294`). At inference P(y | z*) = the y classifier
-# on the bag's argmax-z labels (OUTDISTRIBUTION Y_GIVEN_ZSTAR,
-# `classifyRelation:1996-2002`).
-#
-# Documented approximation (as the module docstring notes for the EM
-# itself): our E-step does not condition z on y (the reference's
-# inferZLabelsStable Gibbs pass does), so interleaving the y refit into
-# the epoch loop equals training y once on the final z assignment —
-# which is what miml_train_zy does. Production ensemble scoring stays
-# on the frozen z-level model; the y layer is the bag-level output
-# surface (`score_bags_zy`).
-# ---------------------------------------------------------------------------
-
-Y_ATLEASTONCE = "atleastonce"  # JointBayesRelationExtractor.java:71
-Y_NONE = "none"                # :72
-Y_BIG_WEIGHT = 10.0            # BIG_WEIGHT, :1440
-
-
-def _y_cooc(y: F.Column, z: F.Column) -> F.Column:
-    # makeCoocurrenceFeature: "co:s|" + src + "|d|" + dst + "|"  (:263)
-    return F.concat(F.lit("co:s|"), y, F.lit("|d|"), z, F.lit("|"))
-
-
-def y_features_col(y: F.Column, zs: F.Column) -> F.Column:
-    """Bag-level y-feature array from the distinct non-NIL z-label set
-    ``zs`` (Counter semantics: duplicates collapse to 1.0, so a set is
-    exact). Pure built-in expressions — no UDF."""
-    others = F.filter(zs, lambda z: (z != y) & (z != F.lit(NIL)))
-    return F.when(
-        ~F.array_contains(zs, y), F.array(F.lit(Y_NONE))
-    ).otherwise(
-        F.concat(
-            F.array(F.lit(Y_ATLEASTONCE)),
-            F.transform(F.array_sort(others), lambda z: _y_cooc(y, z)),
-        )
-    )
-
-
-def bag_z_sets(z_assign: DataFrame) -> DataFrame:
-    """(bag key, zs array<string>): the distinct non-NIL argmax-z labels
-    per bag — one hash aggregation."""
-    return (
-        z_assign.filter(F.col("z") != NIL)
-        .groupBy(*BAG_KEY)
-        .agg(F.array_sort(F.collect_set("z")).alias("zs"))
-    )
-
-
-def build_y_dataset(z_assign: DataFrame, bag_labels: DataFrame) -> DataFrame:
-    """(y_label, feature, is_pos) datums, `addYDatum:1005-1017`:
-    positives are the bag's distant-supervision labels; negatives the
-    z-proposed labels the KB does not confirm (the informative subset of
-    the reference's negLabels — our bag_labels carries no
-    determined-negative sets)."""
-    zs = bag_z_sets(z_assign)
-    pos = bag_labels.select(*BAG_KEY, "relation").distinct().join(zs, BAG_KEY)
-    pos = pos.select(
-        F.col("relation").alias("y_label"), "zs", F.lit(1).alias("is_pos")
-    )
-    neg = (
-        zs.select(*BAG_KEY, F.explode("zs").alias("y_label"), "zs")
-        .join(
-            bag_labels.select(
-                *BAG_KEY, F.col("relation").alias("y_label")
-            ).distinct(),
-            [*BAG_KEY, "y_label"],
-            "left_anti",
-        )
-        .select("y_label", "zs", F.lit(0).alias("is_pos"))
-    )
-    both = pos.unionByName(neg)
-    return both.select(
-        "y_label",
-        F.explode(y_features_col(F.col("y_label"), F.col("zs"))).alias("feature"),
-        "is_pos",
-    )
-
-
-def train_y_weights(y_data: DataFrame, smoothing: float = 0.5) -> DataFrame:
-    """Per-(y_label, feature) log-odds of positive vs UNRELATED — the
-    same naive log-odds family as ``train_weights_df`` (the reference
-    fits an L2 LR per label, `yFactory`, :465; log-odds is this table's
-    closed-form analog and keeps training one aggregation)."""
-    tot = y_data.groupBy("y_label").agg(
-        F.sum("is_pos").alias("_pt"),
-        F.sum(1 - F.col("is_pos")).alias("_nt"),
-    )
-    cnt = y_data.groupBy("y_label", "feature").agg(
-        F.sum("is_pos").alias("_p"),
-        F.sum(1 - F.col("is_pos")).alias("_n"),
-    )
-    s = F.lit(float(smoothing))
-    return cnt.join(tot, "y_label").select(
-        "y_label",
-        "feature",
-        F.round(
-            F.log((F.col("_p") + s) / (F.col("_pt") + 2 * s))
-            - F.log((F.col("_n") + s) / (F.col("_nt") + 2 * s)),
-            6,
-        ).alias("weight"),
-    )
-
-
-def initial_y_weights(relations: list[str], spark) -> DataFrame:
-    """The pre-EM at-least-once model
-    (`initializeYClassifiersWithAtLeastOnce:1421-1470` +
-    `setYWeightsForAtLeastOnce`): +10 on 'atleastonce' toward the
-    relation, +10 on 'none' toward UNRELATED (= -10 log-odds here)."""
-    rows = []
-    for rel in sorted(relations):
-        rows.append((rel, Y_ATLEASTONCE, Y_BIG_WEIGHT))
-        rows.append((rel, Y_NONE, -Y_BIG_WEIGHT))
-    return spark.createDataFrame(rows, "y_label string, feature string, weight double")
-
-
-def score_bags_zy(z_assign: DataFrame, y_weights: DataFrame) -> DataFrame:
-    """P(y | z*) per (bag, z-proposed relation): sigmoid of the summed
-    y-feature log-odds (binary LR probability,
-    `classifyRelations:2076-2090`). Only z-proposed labels can score —
-    a label no mention proposed has only the 'none' feature and the
-    reference never emits it (`sumZGivenX` collects argmax labels
-    only)."""
-    zs = bag_z_sets(z_assign)
-    cand = zs.select(*BAG_KEY, F.explode("zs").alias("relation"), "zs")
-    feats = cand.select(
-        *BAG_KEY,
-        "relation",
-        F.explode(
-            y_features_col(F.col("relation"), F.col("zs"))
-        ).alias("feature"),
-    )
-    scored = (
-        feats.join(
-            F.broadcast(y_weights.withColumnRenamed("y_label", "relation")),
-            ["relation", "feature"],
-            "left",
-        )
-        .groupBy(*BAG_KEY, "relation")
-        .agg(F.sum(F.coalesce(F.col("weight"), F.lit(0.0))).alias("_s"))
-    )
-    prob = F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("_s")))
-    return scored.select(
-        *BAG_KEY, "relation", F.round(prob, 6).alias("y_prob")
-    )
-
-
-def final_z_assignment(
-    features: DataFrame, bag_labels: DataFrame, weights: DataFrame
-) -> DataFrame:
-    """One hard E-step against a fitted z-weight table: candidate set =
-    bag labels + NIL, at-least-once pinning, argmax elsewhere — the
-    assignment the last EM epoch trained on."""
-    mentions = features.select(*MENTION_KEY).distinct()
-    labels = bag_labels.select(*BAG_KEY, "relation").distinct()
-    return _hard_assignment(*_score_candidates(features, mentions, labels, weights))
-
-
-def miml_train_zy(
-    features: DataFrame,
-    bag_labels: DataFrame,
-    epochs: int = 2,
-    smoothing: float = 0.5,
-    mode: str = "hard",
-) -> tuple[DataFrame, DataFrame]:
-    """The two-level JointBayes fit: z weights via the EM loop
-    (``miml_train``), then the y layer trained on the final z
-    assignment (equal to the last interleaved refit under our
-    y-unconditioned E-step — see block comment above). Returns
-    (z_weights, y_weights)."""
-    z_weights = miml_train(features, bag_labels, epochs, smoothing, mode)
-    assign = final_z_assignment(features, bag_labels, z_weights)
-    y_data = build_y_dataset(assign, bag_labels)
-    return z_weights, train_y_weights(y_data, smoothing)

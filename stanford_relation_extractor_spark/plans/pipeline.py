@@ -90,6 +90,8 @@ def _parquet_spool(df: DataFrame, spark: SparkSession, name: str) -> DataFrame:
     import os
     import tempfile
 
+    from ..sources.sinks import _read_schema
+
     # SPARK_GRAFT_SCRATCH points spools at fast scratch (e.g. /dev/shm
     # on the single-disk sandbox — a stand-in for the per-executor NVMe
     # a real cluster gives each shuffle/spill dir). The pid in the
@@ -109,7 +111,9 @@ def _parquet_spool(df: DataFrame, spark: SparkSession, name: str) -> DataFrame:
     )
     _SPOOL_DIRS.append(d)
     df.write.mode("overwrite").parquet(d)
-    return spark.read.parquet(d)
+    # read back through the schema the write implies, as checkpoint_stage
+    # does: no schema-inference job
+    return spark.read.schema(_read_schema(df.schema, None)).parquet(d)
 
 
 def _surfaces_cut(df: DataFrame, spark: SparkSession) -> DataFrame:

@@ -11,7 +11,6 @@ so a parse drift in either engine fails the driver's cross-check.
 from __future__ import annotations
 
 from .gazetteers import (
-    ABBREV2CITY_TAB,
     ALT_COUNTRY_TAB,
     CITIES_TAB,
     CITY_NICKNAMES_TAB,
@@ -19,7 +18,6 @@ from .gazetteers import (
     CODE2REGION_TAB,
     FEMALE_NAMES_TXT,
     MALE_NAMES_TXT,
-    NATIONALITY_TAB,
 )
 
 
@@ -130,22 +128,6 @@ def city_nicknames_sql() -> str:
 SELECT coalesce(c1, '') AS wiki_title, coalesce(c2, '') AS gloss,
        coalesce(c3, '') AS city, coalesce(c4, '') AS nickname
 FROM {_read_cols(CITY_NICKNAMES_TAB, 4)}
-"""
-
-
-def abbrev2city_sql() -> str:
-    return f"""
-SELECT upper(c1) AS abbrev, lower(trim(c2)) AS city
-FROM {_read_cols(ABBREV2CITY_TAB, 2)}
-WHERE lower(trim(c2)) IN (SELECT c1 FROM {_read_cols(CITIES_TAB, 4)})
-"""
-
-
-def nationalities_sql() -> str:
-    return f"""
-SELECT DISTINCT upper(c1) AS country_code, trim(n) AS nationality
-FROM (SELECT c1, unnest(string_split(c2, '|')) AS n
-      FROM {_read_cols(NATIONALITY_TAB, 2)})
 """
 
 

@@ -23,11 +23,6 @@ into Spark dimension tables:
   width): alternate name -> canonical country, with the reference's
   length>4-lowercases-the-key rule (short names stay CASE-SENSITIVE)
   and the countries-set membership guard.
-* ``abbrev2city`` — `kbp_abbreviation2city.tab`: upper-cased
-  abbreviation -> lower-cased city, kept only when the city is in the
-  cities gazetteer.
-* ``nationalities`` — `kbp_countrycode2nationality.tab`: country code
-  -> pipe-separated nationality list, exploded.
 * ``name_nicknames`` — `kbp_male_names.txt` / `kbp_female_names.txt`
   (EntityLinker.readNicknames): every comma/tab-separated name on a
   line maps to the line's FIRST name (the canonical given name).
@@ -58,8 +53,6 @@ CITIES_TAB = f"{REFERENCE_KBP_DIR}/kbp_cities.tab"
 CODE2COUNTRY_TAB = f"{REFERENCE_KBP_DIR}/kbp_code2country.tab"
 CODE2REGION_TAB = f"{REFERENCE_KBP_DIR}/kbp_code2region.tab"
 ALT_COUNTRY_TAB = f"{REFERENCE_KBP_DIR}/kbp_alternate_country_names.tab"
-ABBREV2CITY_TAB = f"{REFERENCE_KBP_DIR}/kbp_abbreviation2city.tab"
-NATIONALITY_TAB = f"{REFERENCE_KBP_DIR}/kbp_countrycode2nationality.tab"
 MALE_NAMES_TXT = f"{REFERENCE_KBP_DIR}/kbp_male_names.txt"
 FEMALE_NAMES_TXT = f"{REFERENCE_KBP_DIR}/kbp_female_names.txt"
 CITY_NICKNAMES_TAB = f"{REFERENCE_KBP_DIR}/citynicknames.tab"
@@ -197,43 +190,6 @@ def alt_country_names(spark: SparkSession, path: str = ALT_COUNTRY_TAB) -> DataF
     )
 
 
-def abbrev2city(spark: SparkSession, path: str = ABBREV2CITY_TAB) -> DataFrame:
-    """(abbrev, city): city abbreviations
-    (WorldKnowledgePostProcessor.java:195-204) — abbreviation
-    upper-cased, city lower-cased-and-trimmed, kept only when the city
-    exists in the cities gazetteer (the containsKey guard)."""
-    f = _split()
-    pairs = (
-        spark.read.text(path)
-        .filter(F.size(f) >= 2)
-        .select(
-            F.upper(F.element_at(f, 1)).alias("abbrev"),
-            F.lower(F.trim(F.element_at(f, 2))).alias("city"),
-        )
-    )
-    known = cities_raw(spark).select("city").distinct()
-    return pairs.join(F.broadcast(known), "city", "left_semi").select(
-        "abbrev", "city"
-    )
-
-
-def nationalities(spark: SparkSession, path: str = NATIONALITY_TAB) -> DataFrame:
-    """(country_code, nationality): country-code -> nationality list,
-    pipe-exploded and trimmed
-    (WorldKnowledgePostProcessor.java:206-217)."""
-    f = _split()
-    return (
-        spark.read.text(path)
-        .filter(F.size(f) >= 2)
-        .select(
-            F.upper(F.element_at(f, 1)).alias("country_code"),
-            F.explode(F.split(F.element_at(f, 2), r"\|")).alias("_n"),
-        )
-        .select("country_code", F.trim("_n").alias("nationality"))
-        .distinct()
-    )
-
-
 def name_nicknames(spark: SparkSession, path: str) -> DataFrame:
     """(name, canonical): EntityLinker.readNicknames
     (EntityLinker.java:135-161) — a line is tab-separated chunks of
@@ -279,36 +235,3 @@ def city_nicknames(spark: SparkSession, path: str = CITY_NICKNAMES_TAB) -> DataF
             F.element_at(f, 4).alias("nickname"),
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# driver-side dicts for the linker cascade (tiny files; insertion order
-# IS the reference's tie-break, so these parse in Python faithfully)
-# ---------------------------------------------------------------------------
-
-
-def read_first_name_groups(path: str) -> dict[str, str]:
-    """Faithful EntityLinker.readNicknames: lower-cased name ->
-    canonical (line-first) name, later lines overwriting earlier ones
-    exactly as the reference's HashMap.put does."""
-    names: dict[str, str] = {}
-    with open(path, encoding="utf-8") as fh:
-        for line in fh:
-            canonical: str | None = None
-            for chunk in line.rstrip("\n").split("\t"):
-                for name in chunk.split(","):
-                    if canonical is None:
-                        canonical = name
-                    names[name.lower()] = canonical
-    return names
-
-
-def same_first_name_group(
-    a: str, b: str, male: dict[str, str], female: dict[str, str]
-) -> bool:
-    """EntityLinker.java:206-208: two first names are compatible iff
-    they resolve to the SAME canonical name in the male map AND in the
-    female map (both-absent counts as same — the Java reference
-    compares interned strings with ==, where null == null)."""
-    al, bl = a.lower(), b.lower()
-    return male.get(al) == male.get(bl) and female.get(al) == female.get(bl)

@@ -19,8 +19,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-JUDGMENTS = ("C", "X", "R", "W")  # CustomSFScore constants; 'I' dropped
-
 # The reference SHIPS the real TAC evaluation data (public TAC content):
 # query XMLs under evaluation_queries/ and assessment .tab files under
 # evaluation_results/. These are the one ground-truth source authored by
@@ -237,29 +235,3 @@ def format_gold_tab(triples: DataFrame) -> DataFrame:
             F.dense_rank().over(w).cast("string"),
         ).alias("value")
     )
-
-
-def gold_to_pr_frame(
-    gold: DataFrame, queries: DataFrame | None = None
-) -> DataFrame:
-    """Reduce parsed assessments to the (entity_name, relation,
-    slot_value, equiv_class) frame ``pr_score``/``pr_curve`` consume:
-    keep CORRECT judgments only, resolve query ids to entity names via
-    the optional ``queries`` table (query_id, entity_name) — the
-    task-XML query map (S7). Without it the query id IS the entity name.
-
-    DIVERGENCE NOTE: this is SET-level P/R — the X (inexact) and R
-    (redundant) judgments and the wrong-fill anti-credit of the
-    official scorer are deliberately dropped here, so numbers will NOT
-    match published TAC scores. For the official counting semantics
-    (CustomSFScore X/R/W, single-valued first-response rule,
-    equivalence-class redundancy) use
-    ``operators.evaluate.official_score``."""
-    g = gold.filter(F.col("judgment") == "C")
-    if queries is not None:
-        g = (
-            g.join(F.broadcast(queries.select("query_id", "entity_name")), "query_id")
-        )
-    else:
-        g = g.withColumn("entity_name", F.col("query_id"))
-    return g.select("entity_name", "relation", "slot_value", "equiv_class").distinct()

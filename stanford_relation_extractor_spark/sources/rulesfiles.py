@@ -8,13 +8,11 @@ on any match — the per-line ``result:`` strings are IGNORED at runtime
 `per_country_of_death.rules:2` declares per:stateorprovinces_of_residence).
 ``defs.rules`` supplies shared macros ($TOP_TITLE, $AGE, ...).
 
-This module derives, per relation, the set of literal trigger lexemes
-the reference's patterns key on (token literals ``/word|word/``,
-``lemma:/.../``, ``word:/.../`` alternations, with referenced defs
-macros expanded). tests/test_rules_parity.py gates the engine's
-PATTERN_BANK against this lexicon so a bank edit that drifts from the
-`.rules`-derived surface semantics fails a test that the engine's
-author did not hand-mirror.
+This module parses the files and derives the per-relation pattern
+weights the extractors vote (``relation_pattern_weights``). The audits
+of the engine against the same files (the per-relation trigger
+lexicon, stale ``result:`` strings, the engine-only word ledger) are
+checks, not pipeline code: they live in tests/test_rules_parity.py.
 """
 
 from __future__ import annotations
@@ -33,32 +31,6 @@ FILENAME_FIXES = {
     "per:stateorprovinces_of_birth": "per:stateorprovince_of_birth",
 }
 
-_LITERAL_RX = re.compile(r"/((?:[^/\\]|\\.)*)/")
-_MACRO_RX = re.compile(r"\$([A-Z_]+)")
-_CHARCLASS_RX = re.compile(r"\[([A-Za-z])[A-Za-z]\]")  # [Yy]ears -> Years
-
-# core structural macros carrying no trigger lexemes
-_STRUCTURAL_MACROS = {
-    "ENTITY", "SLOT_VALUE", "SLOT_VALUE_ORG", "ORG", "PERSON", "DATE",
-    "CAPITALIZED", "URL",
-}
-
-
-def _lexemes(fragment: str) -> set[str]:
-    """Alpha lexemes (len >= 3, lowercase) from the literal token
-    regexes of one pattern fragment. Case-toggle classes collapse
-    ([cC][eE][oO] -> ceo); alternations split on |; anything left with
-    non-alpha residue is regex structure, not a lexeme."""
-    out: set[str] = set()
-    for lit in _LITERAL_RX.findall(fragment):
-        for alt in lit.split("|"):
-            alt = _CHARCLASS_RX.sub(r"\1", alt)
-            word = re.sub(r"[^A-Za-z]", "", alt)
-            if len(word) >= 3:
-                out.add(word.lower())
-    return out
-
-
 def relation_for_file(filename: str) -> str:
     """Filename -> canonical relation (TokensRegexExtractor.java:36-41
     binding, with the shipped ':'->'_' and '/'->'SLASH' spellings)."""
@@ -70,7 +42,7 @@ def relation_for_file(filename: str) -> str:
 def parse_rules_file(path: str) -> list[dict]:
     """[{relation_declared, pattern, weight}] — one entry per rule line.
     ``relation_declared`` is the in-file result: string (runtime ignores
-    it; kept for the stale-result audit), ``weight`` the optional
+    it; tests audit it), ``weight`` the optional
     trailing confidence."""
     rows: list[dict] = []
     for raw in open(path, encoding="utf-8"):
@@ -89,41 +61,6 @@ def parse_rules_file(path: str) -> list[dict]:
             "weight": float(wt.group(1)) if wt else None,
         })
     return rows
-
-
-def defs_macros(rules_dir: str = RULES_DIR) -> dict[str, set[str]]:
-    """$NAME -> trigger lexemes from defs.rules macro definitions."""
-    out: dict[str, set[str]] = {}
-    path = os.path.join(rules_dir, "defs.rules")
-    for raw in open(path, encoding="utf-8"):
-        line = raw.strip()
-        if line.startswith("#") or line.startswith("//"):
-            continue
-        m = re.match(r"\$([A-Z_]+)\s*=\s*(.*)$", line)
-        if m:
-            out[m.group(1)] = _lexemes(m.group(2))
-    return out
-
-
-def rules_lexicon(rules_dir: str = RULES_DIR) -> dict[str, set[str]]:
-    """canonical relation -> trigger lexemes across its `.rules` file,
-    with referenced defs macros expanded. Relations whose file has no
-    rule lines (org_alternate_names.rules is empty) map to set()."""
-    macros = defs_macros(rules_dir)
-    out: dict[str, set[str]] = {}
-    for fn in sorted(os.listdir(rules_dir)):
-        if not fn.endswith(".rules") or fn == "defs.rules":
-            continue
-        rel = relation_for_file(fn)
-        lex: set[str] = set()
-        for row in parse_rules_file(os.path.join(rules_dir, fn)):
-            frag = row["pattern"]
-            lex |= _lexemes(frag)
-            for mac in _MACRO_RX.findall(frag):
-                if mac not in _STRUCTURAL_MACROS:
-                    lex |= macros.get(mac, set())
-        out[rel] = out.get(rel, set()) | lex
-    return out
 
 
 @_functools.lru_cache(maxsize=4)
@@ -153,66 +90,4 @@ def relation_pattern_weights(rules_dir: str = RULES_DIR) -> dict[str, float]:
         ]
         if ws:
             out[rel] = max(out.get(rel, 0.0), max(ws))
-    return out
-
-
-def stale_results(rules_dir: str = RULES_DIR) -> dict[str, set[str]]:
-    """Audit: filename-relation -> set of DIFFERENT in-file result:
-    strings (the stale fields the runtime ignores)."""
-    out: dict[str, set[str]] = {}
-    for fn in sorted(os.listdir(rules_dir)):
-        if not fn.endswith(".rules") or fn == "defs.rules":
-            continue
-        rel = relation_for_file(fn)
-        declared = {
-            r["relation_declared"]
-            for r in parse_rules_file(os.path.join(rules_dir, fn))
-        }
-        wrong = {d for d in declared if d != rel}
-        if wrong:
-            out[rel] = wrong
-    return out
-
-
-def _stemmatch(a: str, b: str) -> bool:
-    """Inflection-tolerant lexeme match: equality or prefix after the
-    y->i spelling shift (marry ~ married, bury ~ buried)."""
-    if a == b:
-        return True
-    na = a[:-1] + "i" if a.endswith("y") else a
-    nb = b[:-1] + "i" if b.endswith("y") else b
-    lo, hi = sorted((na, nb), key=len)
-    return len(lo) >= 3 and hi.startswith(lo)
-
-
-def engine_only_words(
-    bank: dict[str, list[str]],
-    lexicon: dict[str, set[str]] | None = None,
-    stopwords: frozenset[str] = frozenset({
-        "the", "and", "who", "she", "was", "will", "for", "from", "are",
-        "with", "has", "have", "his", "her", "this", "that", "not",
-    }),
-) -> dict[str, set[str]]:
-    """Per relation: content lexemes in the engine's pattern regexes with
-    NO stem-match in the `.rules`-derived lexicon — the divergence
-    ledger the parity test freezes. Relations without a (non-empty)
-    rules file are skipped."""
-    lexicon = lexicon if lexicon is not None else rules_lexicon()
-    out: dict[str, set[str]] = {}
-    for rel, pats in bank.items():
-        lex = lexicon.get(rel)
-        if not lex:
-            continue
-        mine: set[str] = set()
-        for p in pats:
-            # \b \S \w etc. are regex structure, not lexeme characters
-            p = re.sub(r"\\[A-Za-z]", " ", p)
-            for w in re.findall(r"[A-Za-z]{3,}", p):
-                w = w.lower()
-                if w in stopwords:
-                    continue
-                mine.add(w)
-        only = {w for w in mine if not any(_stemmatch(w, r) for r in lex)}
-        if only:
-            out[rel] = only
     return out

@@ -60,16 +60,3 @@ def parse_query_xml(xml_text: str) -> list[tuple]:
 
 def queries_df(spark: SparkSession, xml_text: str) -> DataFrame:
     return spark.createDataFrame(parse_query_xml(xml_text), QUERY_SCHEMA)
-
-
-def filter_ignored_slots(triples: DataFrame, queries: DataFrame) -> DataFrame:
-    """P10 (HeuristicSlotfillPostProcessors.java:91-101): drop fills whose
-    relation the query declares ignored — left anti join vs the exploded
-    (entity, ignored_relation) pairs."""
-    from pyspark.sql import functions as F
-
-    ignored = queries.select(
-        F.col("name").alias("entity_name"),
-        F.explode_outer("ignored_slots").alias("relation"),
-    ).filter(F.col("relation").isNotNull())
-    return triples.join(F.broadcast(ignored), ["entity_name", "relation"], "left_anti")

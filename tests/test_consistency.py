@@ -55,9 +55,6 @@ def test_map_lookups_raise_no_future_warning(spark):
     removal, which would break these filters on upgrade."""
     import warnings
 
-    from stanford_relation_extractor_spark.operators.corpus_stats import (
-        slot_given_relation_probs,
-    )
     from stanford_relation_extractor_spark.operators.worldknowledge import (
         check_geo_consistency,
     )
@@ -67,7 +64,6 @@ def test_map_lookups_raise_no_future_warning(spark):
     with warnings.catch_warnings():
         warnings.simplefilter("error", FutureWarning)
         threshold_filter(df)
-        slot_given_relation_probs(df)
         check_geo_consistency(df, geo)
 
 

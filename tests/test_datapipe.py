@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
 
 from conftest import SF_DIR
 
@@ -130,13 +129,6 @@ def test_sessionize_gap_semantics(spark):
     )
     out = {(r["user_id"], r["session_idx"]): r["n_events"] for r in sessionize(df).collect()}
     assert out == {(7, 1): 2, (7, 2): 1, (8, 1): 1, (9, 1): 2, (9, 2): 1}
-
-
-def test_multimodal_decode_stubs_raise():
-    from stanford_relation_extractor_spark.datapipe.multimodal import decode_audio
-
-    with pytest.raises(NotImplementedError):
-        decode_audio(b"\x00\x01")
 
 
 def test_lsh_knn_banded_recall_beats_single_table(spark):

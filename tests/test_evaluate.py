@@ -1,4 +1,4 @@
-"""A10 P/R scoring, S10 NIL padding, O5 intersect, W5/W7/A5 selection."""
+"""A10 P/R scoring, S10 NIL padding, W5/W7/A5 selection."""
 
 from __future__ import annotations
 
@@ -48,16 +48,6 @@ def test_nil_padding_fills_grid(spark):
     assert by_rel["per:age"]["slot_value"] == "34"
     assert by_rel["per:spouse"]["slot_value"] == "NIL"
     assert all(r["relation"].startswith("per:") for r in out)
-
-
-def test_intersect_triples(spark):
-    from stanford_relation_extractor_spark.operators.evaluate import intersect_triples
-
-    key = "entity_name string, entity_type string, relation string, slot_value string"
-    a = spark.createDataFrame([("E", "PERSON", "per:age", "34"), ("E", "PERSON", "per:age", "35")], key)
-    b = spark.createDataFrame([("E", "PERSON", "per:age", "34")], key)
-    got = intersect_triples(a, b).collect()
-    assert len(got) == 1 and got[0]["slot_value"] == "34"
 
 
 def test_sentence_competition_keeps_best(spark):

@@ -107,7 +107,7 @@ def test_pronoun_antecedent_resolution_in_fused_path(spark):
     t = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
     )
-    votes = extract_votes(t, config, with_statistical=False).collect()
+    votes = extract_votes(t, config).collect()
     by_conv_turn = {}
     for r in votes:
         by_conv_turn.setdefault((r["conv_id"], r["turn_idx"]), set()).add(
@@ -139,7 +139,7 @@ def test_cataphoric_pronoun_never_resolves_forward(spark):
     t = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
     )
-    votes = extract_votes(t, config, with_statistical=False).collect()
+    votes = extract_votes(t, config).collect()
     pairs = {
         (r["conv_id"], r["entity_name"], r["slot_value"]) for r in votes
     }

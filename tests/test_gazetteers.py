@@ -1,7 +1,6 @@
 """Round-5: the reference's REAL gazetteer files as dimension tables
 (`WorldKnowledgePostProcessor.java:119-227`, `EntityLinker.java:47-54,
-135-161`) — parse fidelity, lookup semantics, and the real name maps
-(nicknames, first-name groups)."""
+135-161`) — parse fidelity, lookup semantics, and the real nickname maps."""
 
 from __future__ import annotations
 
@@ -11,16 +10,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from stanford_relation_extractor_spark.sources.gazetteers import (
-    FEMALE_NAMES_TXT,
-    MALE_NAMES_TXT,
-    abbrev2city,
     alt_country_names,
     cities_gazetteer,
     city_primary_region,
     name_nicknames_all,
-    nationalities,
-    read_first_name_groups,
-    same_first_name_group,
 )
 from stanford_relation_extractor_spark.sources.goldtab import REFERENCE_KBP_DIR
 
@@ -61,20 +54,6 @@ def test_alt_country_names_short_keys_stay_case_sensitive(spark):
 
 
 @needs_reference
-def test_abbrev2city_requires_known_city(spark):
-    ab = {r.abbrev: r.city for r in abbrev2city(spark).collect()}
-    assert ab.get("LA") == "los angeles"
-
-
-@needs_reference
-def test_nationalities_explode(spark):
-    rows = {
-        (r.country_code, r.nationality) for r in nationalities(spark).collect()
-    }
-    assert ("AF", "afghan") in rows
-
-
-@needs_reference
 def test_name_nicknames_map_to_line_first_name(spark):
     pairs = {
         (r.name, r.canonical)
@@ -82,22 +61,6 @@ def test_name_nicknames_map_to_line_first_name(spark):
     }
     assert ("bobby", "Robert") in pairs
     assert ("ron", "Ronald") in pairs
-
-
-@needs_reference
-def test_first_name_groups_driver_dict():
-    male = read_first_name_groups(MALE_NAMES_TXT)
-    female = read_first_name_groups(FEMALE_NAMES_TXT)
-    assert male["bob"] == "Robert"
-    # LAST line wins exactly as HashMap.put does: line 477
-    # ("Robby,Bobby,Robin,Rupert") remaps bobby off line 247's Robert
-    assert male["bobby"] == "Robby"
-    # EntityLinker.java:206-208 — same canonical in BOTH maps
-    assert same_first_name_group("Bob", "Rob", male, female)
-    assert not same_first_name_group("Bob", "Bill", male, female)
-    assert not same_first_name_group("Bobby", "Rob", male, female)
-    # absent names are compatible with themselves (null == null)
-    assert same_first_name_group("Xzqk", "Xzqk", male, female)
 
 
 @needs_reference

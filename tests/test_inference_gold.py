@@ -131,10 +131,7 @@ def test_mln_known_fills_stay_novel_only(spark):
 def test_gold_tab_parse_grok2013(spark):
     """12-field lines parse; 'I' judgments and short lines drop; the
     relation keeps its namespace colon; slot values keep spaces."""
-    from stanford_relation_extractor_spark.sources.goldtab import (
-        gold_to_pr_frame,
-        parse_gold_tab,
-    )
+    from stanford_relation_extractor_spark.sources.goldtab import parse_gold_tab
 
     lines = spark.createDataFrame(
         [
@@ -153,13 +150,6 @@ def test_gold_tab_parse_grok2013(spark):
     assert got[1]["judgment"] == "C" and got[1]["equiv_class"] == 3
     assert got[2]["slot_value"] == "chief executive"
     assert got[2]["judgment"] == "W"
-
-    queries = spark.createDataFrame(
-        [("SF13_ENG_001", "Alice Smith")], "query_id string, entity_name string"
-    )
-    pr = gold_to_pr_frame(parse_gold_tab(lines), queries).collect()
-    assert [(r["entity_name"], r["relation"], r["slot_value"], r["equiv_class"])
-            for r in pr] == [("Alice Smith", "per:age", "44", 3)]
 
 
 def test_gold_tab_roundtrip_identity(spark):
@@ -194,7 +184,6 @@ def test_gold_tab_pr_flow(spark):
     from stanford_relation_extractor_spark.operators.evaluate import pr_score
     from stanford_relation_extractor_spark.sources.goldtab import (
         format_gold_tab,
-        gold_to_pr_frame,
         parse_gold_tab,
     )
 
@@ -202,7 +191,9 @@ def test_gold_tab_pr_flow(spark):
         [("Alice", "per:age", "44"), ("Alice", "per:title", "engineer")],
         "entity_name string, relation string, slot_value string",
     )
-    gold = gold_to_pr_frame(parse_gold_tab(format_gold_tab(gold_triples)))
+    gold = parse_gold_tab(format_gold_tab(gold_triples)).select(
+        F.col("query_id").alias("entity_name"), "relation", "slot_value", "equiv_class"
+    )
     guesses = spark.createDataFrame(
         [("Alice", "per:age", "44"), ("Alice", "per:age", "99")],
         "entity_name string, relation string, slot_value string",

@@ -1,12 +1,9 @@
 """P3 mention sanity, J2 antecedents, O3 approx dedup, P8/P9 guidelines,
-A4 normalize, A9 training labels, S2 provenance parse, F6/F7 helpers."""
+F6 alternate-name validity."""
 
 from __future__ import annotations
 
-from stanford_relation_extractor_spark.functions.text import (
-    is_valid_alternate_name,
-    normalize_date_slot,
-)
+from stanford_relation_extractor_spark.functions.text import is_valid_alternate_name
 from stanford_relation_extractor_spark.operators.mentions import mention_sanity_ok
 
 
@@ -21,13 +18,6 @@ def test_mention_sanity_filters():
 def test_alternate_name_validity():
     assert not is_valid_alternate_name("Acme Corp.", "Acme")  # same after stripping
     assert is_valid_alternate_name("Acme Widgets", "Acme Gadgets")
-
-
-def test_date_normalization():
-    assert normalize_date_slot("1997") == "1997"
-    assert normalize_date_slot("1997-3") == "1997-03"
-    assert normalize_date_slot("1997/03/09") == "1997-03-09"
-    assert normalize_date_slot("next year") is None
 
 
 def test_antecedent_propagation():
@@ -91,63 +81,6 @@ def test_conform_to_guidelines(spark):
         ("per:date_of_birth", "1996"),
         ("org:website", "www.org7.com"),
     }
-
-
-def test_normalize_scores(spark):
-    from stanford_relation_extractor_spark.operators.consistency import normalize_scores
-
-    df = spark.createDataFrame(
-        [("E", "per:age", 0.6), ("E", "per:title", 0.2), ("F", "per:age", 0.5)],
-        "entity_name string, relation string, score double",
-    )
-    got = {
-        (r["entity_name"], r["relation"]): r["score"]
-        for r in normalize_scores(df, ["entity_name"]).collect()
-    }
-    assert got[("E", "per:age")] == 0.75
-    assert got[("F", "per:age")] == 1.0
-
-
-def test_training_labels(spark):
-    from stanford_relation_extractor_spark.operators.statistical import training_labels
-
-    pairs = spark.createDataFrame(
-        [("E", "34"), ("E", "50"), ("E", "Org001"), ("X", "7")],
-        "entity_name string, slot_value string",
-    )
-    kb = spark.createDataFrame(
-        [("E", "per:age", "34"), ("E", "per:employee_of", "Org001")],
-        "entity_name string, relation string, slot_value string",
-    )
-    got = {
-        (r["slot_value"], r["relation"]): r["label"]
-        for r in training_labels(pairs, kb).collect()
-    }
-    assert got[("34", "per:age")] == "positive"
-    assert got[("Org001", "per:employee_of")] == "positive"
-    # 50 contradicts the SINGLE-valued known age -> negative
-    assert got[("50", "per:age")] == "negative"
-    # employee_of is LIST -> no negative for it; X unknown -> absent
-    assert ("Org001", "per:age") in got  # Org001 also contradicts age 34
-    assert not any(k[0] == "7" for k in got)
-
-
-def test_provenance_roundtrip(spark):
-    from stanford_relation_extractor_spark.sources.provenance import (
-        format_provenance,
-        parse_provenance,
-    )
-
-    df = spark.createDataFrame(
-        [("conv_000001:5:0:0-18:21-23",)], "provenance_str string"
-    )
-    parsed = parse_provenance(df).select("provenance.*")
-    row = parsed.collect()[0]
-    assert (row["conv_id"], row["turn_idx"], row["entity_end"], row["slot_begin"]) == (
-        "conv_000001", 5, 18, 21,
-    )
-    back = format_provenance(parsed).collect()[0]["provenance_str"]
-    assert back == "conv_000001:5:0:0-18:21-23"
 
 
 def test_geo_consistency(spark):

@@ -5,12 +5,12 @@ from __future__ import annotations
 
 from stanford_relation_extractor_spark.functions.text import (
     acronym,
+    block_keys,
     blocking_key,
     is_acronym_of,
     no_special_chars,
     same_entity,
     strip_corp,
-    token_levenshtein,
 )
 
 
@@ -30,11 +30,6 @@ def test_acronym_match():
     assert not is_acronym_of("IBX", ["International", "Business", "Machines"])
 
 
-def test_token_levenshtein():
-    assert token_levenshtein(["a", "b", "c"], ["a", "x", "c"]) == 1
-    assert token_levenshtein(["a"], ["a", "b"]) == 1
-
-
 def test_same_entity_cascade():
     assert same_entity("Acme Widget Corp", "Acme Widget", "ORGANIZATION")
     assert same_entity("IBM", "International Business Machines", "ORGANIZATION")
@@ -46,6 +41,24 @@ def test_same_entity_cascade():
 
 def test_blocking_key_groups_variants():
     assert blocking_key("Acme Widget Corp") == blocking_key("Acme Widget")
+    # exact (block, block_ext) lists: the last-token family, plus the
+    # first-token family for multi-token ORGANIZATIONs
+    assert block_keys("Bank of America Securities", "ORGANIZATION") == [
+        ("securities:b", "securities:ban"),
+        ("bank:b", "bank:ban"),
+    ]
+    assert block_keys("Bank of America", "ORGANIZATION") == [
+        ("america:b", "america:ban"),
+        ("bank:b", "bank:ban"),
+    ]
+    assert block_keys("Org003", "ORGANIZATION") == [("org003:o", "org003:org")]
+    assert block_keys("John Q. Smith", "PERSON") == [("smith:j", "smith:joh")]
+    assert block_keys("--", "ORGANIZATION") == []  # normalizes to empty
+    assert block_keys("Boeing 737", "ORGANIZATION") == [
+        ("737:b", "737:boe"),
+        ("boeing:b", "boeing:boe"),
+    ]
+    assert block_keys("737", "ORGANIZATION") == [("737:7", "737:737")]
 
 
 def test_canonicalize_entities_merges_variants(spark):

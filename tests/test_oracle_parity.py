@@ -7,7 +7,10 @@ here run the production code of the statistical member
 (``extractors.votes_for_sentence`` -> ``statistical.pair_feature_list``
 -> ``combined_relation_probs``), the J5 wikidict margin link, the
 size-gated canon map, alternate-name emission, label-propagation
-connected components and the end-to-end triples (stage 6 included).
+connected components, the end-to-end triples (stage 6 included), both
+LSH k-NN queries (``lsh_knn`` is the banded search with one all-bits
+band; its oracle joins on the whole signature) and the multimodal byte
+features.
 """
 
 from __future__ import annotations
@@ -27,6 +30,9 @@ from scripts.crosscheck import compare
         "alternate_names",
         "connected_components",
         "final_triples",
+        "lsh_knn",
+        "lsh_knn_banded",
+        "multimodal_features",
     ],
 )
 def test_query_matches_oracle(spark, duck, name):

@@ -10,6 +10,7 @@ defs.rules` (shared macros), the 34 per-relation rules files.
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 
@@ -18,6 +19,134 @@ from stanford_relation_extractor_spark.sources import rulesfiles as rf
 needs_reference = pytest.mark.skipif(
     not os.path.isdir(rf.RULES_DIR), reason="reference data not mounted"
 )
+
+# Audits of the engine against the `.rules` files. The lexicon is the
+# set of literal trigger lexemes the reference's patterns key on (token
+# literals ``/word|word/``, ``lemma:/.../``, ``word:/.../`` alternations,
+# with referenced defs macros expanded).
+
+_LITERAL_RX = re.compile(r"/((?:[^/\\]|\\.)*)/")
+_MACRO_RX = re.compile(r"\$([A-Z_]+)")
+_CHARCLASS_RX = re.compile(r"\[([A-Za-z])[A-Za-z]\]")  # [Yy]ears -> Years
+
+# core structural macros carrying no trigger lexemes
+_STRUCTURAL_MACROS = {
+    "ENTITY", "SLOT_VALUE", "SLOT_VALUE_ORG", "ORG", "PERSON", "DATE",
+    "CAPITALIZED", "URL",
+}
+
+
+def _lexemes(fragment: str) -> set[str]:
+    """Alpha lexemes (len >= 3, lowercase) from the literal token
+    regexes of one pattern fragment. Case-toggle classes collapse
+    ([cC][eE][oO] -> ceo); alternations split on |; anything left with
+    non-alpha residue is regex structure, not a lexeme."""
+    out: set[str] = set()
+    for lit in _LITERAL_RX.findall(fragment):
+        for alt in lit.split("|"):
+            alt = _CHARCLASS_RX.sub(r"\1", alt)
+            word = re.sub(r"[^A-Za-z]", "", alt)
+            if len(word) >= 3:
+                out.add(word.lower())
+    return out
+
+
+def defs_macros(rules_dir: str = rf.RULES_DIR) -> dict[str, set[str]]:
+    """$NAME -> trigger lexemes from defs.rules macro definitions."""
+    out: dict[str, set[str]] = {}
+    path = os.path.join(rules_dir, "defs.rules")
+    for raw in open(path, encoding="utf-8"):
+        line = raw.strip()
+        if line.startswith("#") or line.startswith("//"):
+            continue
+        m = re.match(r"\$([A-Z_]+)\s*=\s*(.*)$", line)
+        if m:
+            out[m.group(1)] = _lexemes(m.group(2))
+    return out
+
+
+def rules_lexicon(rules_dir: str = rf.RULES_DIR) -> dict[str, set[str]]:
+    """canonical relation -> trigger lexemes across its `.rules` file,
+    with referenced defs macros expanded. Relations whose file has no
+    rule lines (org_alternate_names.rules is empty) map to set()."""
+    macros = defs_macros(rules_dir)
+    out: dict[str, set[str]] = {}
+    for fn in sorted(os.listdir(rules_dir)):
+        if not fn.endswith(".rules") or fn == "defs.rules":
+            continue
+        rel = rf.relation_for_file(fn)
+        lex: set[str] = set()
+        for row in rf.parse_rules_file(os.path.join(rules_dir, fn)):
+            frag = row["pattern"]
+            lex |= _lexemes(frag)
+            for mac in _MACRO_RX.findall(frag):
+                if mac not in _STRUCTURAL_MACROS:
+                    lex |= macros.get(mac, set())
+        out[rel] = out.get(rel, set()) | lex
+    return out
+
+
+def stale_results(rules_dir: str = rf.RULES_DIR) -> dict[str, set[str]]:
+    """Audit: filename-relation -> set of DIFFERENT in-file result:
+    strings (the stale fields the runtime ignores)."""
+    out: dict[str, set[str]] = {}
+    for fn in sorted(os.listdir(rules_dir)):
+        if not fn.endswith(".rules") or fn == "defs.rules":
+            continue
+        rel = rf.relation_for_file(fn)
+        declared = {
+            r["relation_declared"]
+            for r in rf.parse_rules_file(os.path.join(rules_dir, fn))
+        }
+        wrong = {d for d in declared if d != rel}
+        if wrong:
+            out[rel] = wrong
+    return out
+
+
+def _stemmatch(a: str, b: str) -> bool:
+    """Inflection-tolerant lexeme match: equality or prefix after the
+    y->i spelling shift (marry ~ married, bury ~ buried)."""
+    if a == b:
+        return True
+    na = a[:-1] + "i" if a.endswith("y") else a
+    nb = b[:-1] + "i" if b.endswith("y") else b
+    lo, hi = sorted((na, nb), key=len)
+    return len(lo) >= 3 and hi.startswith(lo)
+
+
+def engine_only_words(
+    bank: dict[str, list[str]],
+    lexicon: dict[str, set[str]] | None = None,
+    stopwords: frozenset[str] = frozenset({
+        "the", "and", "who", "she", "was", "will", "for", "from", "are",
+        "with", "has", "have", "his", "her", "this", "that", "not",
+    }),
+) -> dict[str, set[str]]:
+    """Per relation: content lexemes in the engine's pattern regexes with
+    NO stem-match in the `.rules`-derived lexicon — the divergence
+    ledger the parity test freezes. Relations without a (non-empty)
+    rules file are skipped."""
+    lexicon = lexicon if lexicon is not None else rules_lexicon()
+    out: dict[str, set[str]] = {}
+    for rel, pats in bank.items():
+        lex = lexicon.get(rel)
+        if not lex:
+            continue
+        mine: set[str] = set()
+        for p in pats:
+            # \b \S \w etc. are regex structure, not lexeme characters
+            p = re.sub(r"\\[A-Za-z]", " ", p)
+            for w in re.findall(r"[A-Za-z]{3,}", p):
+                w = w.lower()
+                if w in stopwords:
+                    continue
+                mine.add(w)
+        only = {w for w in mine if not any(_stemmatch(w, r) for r in lex)}
+        if only:
+            out[rel] = only
+    return out
+
 
 # The frozen engine-vs-rules divergence ledger: per relation, the
 # engine's pattern lexemes with NO stem-match in the `.rules`-derived
@@ -55,7 +184,7 @@ ENGINE_ONLY_LEDGER = {
 
 @needs_reference
 def test_rules_files_parse_as_data():
-    lex = rf.rules_lexicon()
+    lex = rules_lexicon()
     assert len(lex) == 34  # 35 shipped files minus defs.rules
     assert sum(1 for v in lex.values() if v) == 32  # org_alternate_names + org_website carry no lexemes
     age = rf.parse_rules_file(os.path.join(rf.RULES_DIR, "per_age.rules"))
@@ -74,7 +203,7 @@ def test_filename_binds_relation_result_strings_are_stale():
     birth/death files carry a stale per:stateorprovinces_of_residence
     result: field the runtime ignores — the parser must key on the
     filename, not the field."""
-    stale = rf.stale_results()
+    stale = stale_results()
     assert set(stale) == {
         "per:city_of_birth", "per:city_of_death", "per:country_of_birth",
         "per:country_of_death", "per:stateorprovince_of_birth",
@@ -85,11 +214,9 @@ def test_filename_binds_relation_result_strings_are_stale():
 
 @needs_reference
 def test_top_title_is_subset_of_defs_macro():
-    import re
-
     from stanford_relation_extractor_spark.operators.extractors import _TOP_TITLE
 
-    defs_titles = rf.defs_macros()["TOP_TITLE"]
+    defs_titles = defs_macros()["TOP_TITLE"]
     engine_titles = set(re.findall(r"[a-z]+", _TOP_TITLE.replace("(?:", "")))
     assert engine_titles <= defs_titles
     assert len(engine_titles) >= 10
@@ -99,7 +226,7 @@ def test_top_title_is_subset_of_defs_macro():
 def test_every_rules_relation_has_a_bank_entry():
     from stanford_relation_extractor_spark.operators.extractors import PATTERN_BANK
 
-    lex = rf.rules_lexicon()
+    lex = rules_lexicon()
     uncovered = [r for r, v in lex.items() if v and r not in PATTERN_BANK]
     assert uncovered == []
 
@@ -108,7 +235,7 @@ def test_every_rules_relation_has_a_bank_entry():
 def test_engine_only_ledger_frozen():
     from stanford_relation_extractor_spark.operators.extractors import PATTERN_BANK
 
-    eo = rf.engine_only_words(PATTERN_BANK)
+    eo = engine_only_words(PATTERN_BANK)
     assert eo == ENGINE_ONLY_LEDGER
 
 
@@ -120,7 +247,7 @@ def test_ledger_binds_on_bank_drift():
 
     drifted = dict(PATTERN_BANK)
     drifted["per:spouse"] = PATTERN_BANK["per:spouse"] + [r"E wedded S"]
-    eo = rf.engine_only_words(drifted)
+    eo = engine_only_words(drifted)
     assert "wedded" in eo.get("per:spouse", set())
 
 
@@ -131,8 +258,6 @@ def test_weighted_rules_vote_their_file_weight():
     weight instead of the uniform PATTERN_WEIGHT; unweighted files keep
     PATTERN_WEIGHT (extractors._pattern_weights <-
     rulesfiles.relation_pattern_weights)."""
-    import re
-
     from stanford_relation_extractor_spark.operators.extractors import (
         PATTERN_WEIGHT,
         _compiled_pattern_bank,

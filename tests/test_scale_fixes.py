@@ -4,7 +4,7 @@
 * label-propagation connected components: brute-force parity, a loud
   failure when not converged, reliable checkpointing,
 * frequency-capped prefix blocking (hot-block skew guard),
-* PR-curve / AUC scoring (KBPScore.java:21-68 analog).
+* parquet spool scratch: reaped, and read back without an inference job.
 """
 
 from __future__ import annotations
@@ -138,40 +138,6 @@ def test_prefix_block_hot_block_capped(spark):
             assert a_topic == b_topic
 
 
-def test_pr_auc_hand_fixture(spark):
-    """Hand-computed sweep: AUC = 1/3 + (2/3)(1/3) = 5/9; best F1 at
-    rank 4 (P=3/4, R=2/3)."""
-    from stanford_relation_extractor_spark.operators.evaluate import pr_auc, pr_curve
-
-    gold = spark.createDataFrame(
-        [
-            ("e1", "r", "s1", "c1"),
-            ("e1", "r", "s1b", "c1"),
-            ("e1", "r", "s3", "c2"),
-            ("e2", "r", "s5", "c3"),
-        ],
-        "entity_name string, relation string, slot_value string, equiv_class string",
-    )
-    guesses = spark.createDataFrame(
-        [
-            ("e1", "r", "s1", 0.9),
-            ("e1", "r", "sX", 0.8),
-            ("e1", "r", "s3", 0.7),
-            ("e1", "r", "s1b", 0.6),
-        ],
-        "entity_name string, relation string, slot_value string, score double",
-    )
-    curve = {r["rank"]: r for r in pr_curve(guesses, gold).collect()}
-    assert curve[1]["precision"] == 1.0 and curve[1]["recall"] == round(1 / 3, 6)
-    assert curve[3]["precision"] == round(2 / 3, 6) and curve[3]["recall"] == round(2 / 3, 6)
-    assert curve[4]["precision"] == 0.75 and curve[4]["recall"] == round(2 / 3, 6)
-
-    row = pr_auc(guesses, gold).collect()[0]
-    assert abs(row["auc"] - 5 / 9) < 1e-5
-    assert row["best_threshold"] == 0.6
-    assert abs(row["best_f1"] - (2 * 0.75 * (2 / 3) / (0.75 + 2 / 3))) < 1e-5
-
-
 # ---------------------------------------------------------------- round 3
 
 
@@ -272,6 +238,25 @@ def test_spool_dirs_cleaned(spark):
     P._cleanup_spools()
     assert not os.path.isdir(d)
     assert not P._SPOOL_DIRS
+
+
+def test_spool_launches_only_its_write_job(spark):
+    """The spool reads back through the schema its write implies: the
+    write is its only Spark job, and the schema is the one
+    ``spark.read.parquet`` infers."""
+    from conftest import spark_jobs
+
+    from stanford_relation_extractor_spark.plans import pipeline as P
+
+    df = spark.createDataFrame(
+        [(1, "a", ["x", "y"], (2, 0.5)), (2, None, [], (3, None))],
+        "id int not null, s string, xs array<string>, st struct<n: int, w: double>",
+    )
+    with spark_jobs(spark) as jobs:
+        out = P._parquet_spool(df, spark, "jobspool")
+    assert jobs.count == 1
+    assert out.schema == spark.read.parquet(P._SPOOL_DIRS[-1]).schema
+    assert sorted(out.collect()) == sorted(df.collect())
 
 
 def test_per_relation_threshold_binds(spark):

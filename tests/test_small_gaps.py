@@ -1,10 +1,7 @@
 """Round-2 small-gap coverage: the two previously pattern-less
-relations, the KB TSV source, and the real (pure-Python) multimodal
-codec path."""
+relations."""
 
 from __future__ import annotations
-
-import struct
 
 
 def _votes(sent: str, mentions: list[dict]) -> set[tuple[str, str]]:
@@ -34,75 +31,3 @@ def test_org_affiliation_patterns():
     got = _votes(sent, [_m(0, "Org001", "ORGANIZATION"), _m(26, "Buddhism", "RELIGION")])
     assert ("org:political/religious_affiliation", "pattern") in got
     assert ("org:political/religious_affiliation", "trigger") in got
-
-
-def test_read_kb_tsv(spark, tmp_path):
-    from stanford_relation_extractor_spark.sources.provenance import read_kb_tsv
-
-    p = tmp_path / "kb.tsv"
-    p.write_text(
-        "Alice Person000001\tper:age\t34\n"
-        "Org001\torg:founded\t1994\n"
-    )
-    rows = {tuple(r) for r in read_kb_tsv(spark, str(p)).collect()}
-    assert rows == {
-        ("Alice Person000001", "per:age", "34"),
-        ("Org001", "org:founded", "1994"),
-    }
-
-
-def make_bmp(width: int, height: int, pixel: int) -> bytes:
-    """Minimal uncompressed 24-bit BMP with constant pixel bytes."""
-    row_stride = (width * 3 + 3) // 4 * 4
-    img_size = row_stride * height
-    header = b"BM" + struct.pack("<IHHI", 54 + img_size, 0, 0, 54)
-    info = struct.pack("<IiiHHIIiiII", 40, width, height, 1, 24, 0, img_size, 0, 0, 0, 0)
-    rows = (bytes([pixel]) * (width * 3) + b"\x00" * (row_stride - width * 3)) * height
-    return header + info + rows
-
-
-def make_wav(samples: list[int], sample_rate: int = 8000) -> bytes:
-    data = struct.pack(f"<{len(samples)}h", *samples)
-    fmt = struct.pack("<HHIIHH", 1, 1, sample_rate, sample_rate * 2, 2, 16)
-    body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    body += b"data" + struct.pack("<I", len(data)) + data
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def test_bmp_decode_pure_python():
-    from stanford_relation_extractor_spark.datapipe.multimodal import decode_image
-
-    m = decode_image(make_bmp(5, 3, 200))
-    assert m == {"width": 5, "height": 3, "bpp": 24, "mean_px": 200.0}
-
-
-def test_wav_decode_pure_python():
-    from stanford_relation_extractor_spark.datapipe.multimodal import decode_audio
-
-    m = decode_audio(make_wav([100, -300, 200], sample_rate=16000))
-    assert m["channels"] == 1
-    assert m["sample_rate"] == 16000
-    assert m["n_samples"] == 3
-    assert m["mean_abs"] == 200.0
-
-
-def test_multimodal_codec_features_end_to_end(spark):
-    """The decode UDFs run as real Arrow batches over binary columns."""
-    from stanford_relation_extractor_spark.datapipe.multimodal import (
-        audio_features,
-        image_features,
-    )
-
-    imgs = spark.createDataFrame(
-        [(1, make_bmp(4, 2, 10)), (2, make_bmp(8, 8, 255))],
-        "doc_id long, payload binary",
-    )
-    got = {r["doc_id"]: r for r in image_features(imgs).collect()}
-    assert got[1]["width"] == 4 and got[1]["mean_px"] == 10.0
-    assert got[2]["height"] == 8 and got[2]["mean_px"] == 255.0
-
-    wavs = spark.createDataFrame(
-        [(1, make_wav([0, 1000, -1000, 0]))], "doc_id long, payload binary"
-    )
-    row = audio_features(wavs).collect()[0]
-    assert row["n_samples"] == 4 and row["mean_abs"] == 500.0

@@ -1,8 +1,6 @@
-"""S7 XML queries, P10 ignored slots, A11 probabilities, S3-S6 IR ops."""
+"""S7 XML queries."""
 
 from __future__ import annotations
-
-from conftest import SF_DIR
 
 SAMPLE_XML = """<?xml version='1.0'?>
 <kbpslotfill>
@@ -30,54 +28,3 @@ def test_parse_query_xml(spark):
     assert rows["SF13_ENG_001"]["ignored_slots"] == ["per:age", "per:date_of_birth"]
     assert rows["SF13_ENG_002"]["entity_type"] == "ORGANIZATION"
     assert rows["SF13_ENG_002"]["ignored_slots"] == []
-
-
-def test_filter_ignored_slots(spark):
-    from stanford_relation_extractor_spark.sources.taskxml import (
-        filter_ignored_slots,
-        queries_df,
-    )
-
-    triples = spark.createDataFrame(
-        [
-            ("Alice Person000001", "per:age", "34"),
-            ("Alice Person000001", "per:spouse", "Bob"),
-            ("Org001", "org:founded", "1997"),
-        ],
-        "entity_name string, relation string, slot_value string",
-    )
-    out = filter_ignored_slots(triples, queries_df(spark, SAMPLE_XML))
-    got = {(r["entity_name"], r["relation"]) for r in out.collect()}
-    assert got == {("Alice Person000001", "per:spouse"), ("Org001", "org:founded")}
-
-
-def test_slot_given_relation_probs(spark):
-    from stanford_relation_extractor_spark.operators.corpus_stats import (
-        slot_given_relation_probs,
-    )
-
-    triples = spark.createDataFrame(
-        [("E", "per:age", "34"), ("E2", "per:age", "34"), ("E3", "per:age", "50")],
-        "entity_name string, relation string, slot_value string",
-    )
-    rows = {r["slot_value"]: r for r in slot_given_relation_probs(triples).collect()}
-    assert rows["34"]["p_slot_given_rel"] == 0.666667
-    assert rows["34"]["prior"] == 0.04831599773229513
-
-
-def test_query_sentences_and_hits(spark):
-    from stanford_relation_extractor_spark.operators.corpus_stats import (
-        hit_count,
-        query_sentences,
-    )
-    from stanford_relation_extractor_spark.sources.synthetic import transcripts_df
-
-    t = transcripts_df(spark, SF_DIR)
-    some_person = t.filter(t.text.contains("Person")).first()["text"].split(" Person")[0].split()[-1]
-    entity_rows = query_sentences(t, f"{some_person} Person", k=5).collect()
-    assert 0 < len(entity_rows) <= 5
-    assert all(f"{some_person} Person" in r["text"] for r in entity_rows)
-    # stable order
-    keys = [(r["conv_id"], r["turn_idx"]) for r in entity_rows]
-    assert keys == sorted(keys)
-    assert hit_count(t, ["lives in"]) > 0
