@@ -136,7 +136,8 @@ times, stage_times = [], []
 max_spool = 0
 for _ in range({runs}):
     t0 = time.monotonic()
-    stages = build_stages(spark, {sf_dir!r}, transcripts=inp)
+    stages = build_stages(spark, {sf_dir!r})
+    stages["transcripts"] = inp              # the amplified input table
     stages["votes_cut"]                      # materializes the vote spool
     t_extract = round(time.monotonic() - t0, 3)
     sb = spool_bytes()

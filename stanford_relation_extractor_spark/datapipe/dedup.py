@@ -19,16 +19,23 @@ re-derive signatures exactly.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DEFAULT_NUM_HASHES = 8
-DEFAULT_BAND_ROWS = 2  # 8 hashes -> 4 bands of 2
+NUM_HASHES = 8
+BAND_ROWS = 2  # 8 hashes -> 4 bands of 2
 SHINGLE_WIDTH = 3
+JACCARD_THRESHOLD = 0.5  # near-dup floor of both Jaccard verifiers
+PREFIX_TOKENS = 3  # prefix-blocking key length
+MAX_BLOCK = 64  # prefix blocks larger than this are re-keyed ...
+EXTENDED_TOKENS = 6  # ... by this longer prefix
+SIMHASH_BITS = 32  # <= 63: the Hamming distance is a bit_count over one long
+SIMHASH_BANDS = 4  # > MAX_HAMMING: the pigeonhole guarantee of the band join
+MAX_HAMMING = 3
 
 
-def normalized_text(col: str = "text") -> F.Column:
-    return F.regexp_replace(F.lower(F.trim(F.col(col))), r"\s+", " ")
+def normalized_text() -> F.Column:
+    return F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
 
 
 def exact_dedup_groups(docs: DataFrame) -> DataFrame:
@@ -46,24 +53,24 @@ def exact_dedup_groups(docs: DataFrame) -> DataFrame:
     )
 
 
-def shingles(docs: DataFrame, width: int = SHINGLE_WIDTH) -> DataFrame:
+def shingles(docs: DataFrame) -> DataFrame:
     """(doc_id, shingle): word n-grams via sequence-positions explode.
 
     Stays in whole-stage codegen (no Python): split -> sequence ->
     explode -> concat of element_at slices.
     """
     toks = docs.select("doc_id", F.split(normalized_text(), " ").alias("ws"))
-    toks = toks.filter(F.size("ws") >= width)
+    toks = toks.filter(F.size("ws") >= SHINGLE_WIDTH)
     pos = toks.select(
         "doc_id",
         "ws",
-        F.explode(F.sequence(F.lit(1), F.size("ws") - (width - 1))).alias("i"),
+        F.explode(F.sequence(F.lit(1), F.size("ws") - (SHINGLE_WIDTH - 1))).alias("i"),
     )
-    parts = [F.element_at(F.col("ws"), F.col("i") + j) for j in range(width)]
+    parts = [F.element_at(F.col("ws"), F.col("i") + j) for j in range(SHINGLE_WIDTH)]
     return pos.select("doc_id", F.concat_ws(" ", *parts).alias("shingle"))
 
 
-def _minhash_wide(sh: DataFrame, num_hashes: int = DEFAULT_NUM_HASHES) -> DataFrame:
+def _minhash_wide(sh: DataFrame) -> DataFrame:
     """(doc_id, _mh0.._mhK): the k permutation minima as COLUMNS of one
     aggregation. The k permutations used to ride an explode — k x the
     rows through the shuffle and the aggregation (guide §2.3: shuffle
@@ -73,21 +80,19 @@ def _minhash_wide(sh: DataFrame, num_hashes: int = DEFAULT_NUM_HASHES) -> DataFr
         F.min(
             F.md5(F.concat_ws(":", F.lit(str(i)), F.col("shingle")))
         ).alias(f"_mh{i}")
-        for i in range(num_hashes)
+        for i in range(NUM_HASHES)
     ]
     return sh.groupBy("doc_id").agg(*cols)
 
 
-def minhash_signatures(
-    sh: DataFrame, num_hashes: int = DEFAULT_NUM_HASHES
-) -> DataFrame:
+def minhash_signatures(sh: DataFrame) -> DataFrame:
     """(doc_id, i, mh): per-permutation minhash = lexicographic min of
     md5(i || ':' || shingle). Computed wide (one aggregation over the
     shingle rows, no k-way explode) and unpivoted — the unpivot touches
     only #docs x k rows."""
-    wide = _minhash_wide(sh, num_hashes)
+    wide = _minhash_wide(sh)
     entries = []
-    for i in range(num_hashes):
+    for i in range(NUM_HASHES):
         entries.append(
             F.struct(F.lit(i).alias("i"), F.col(f"_mh{i}").alias("mh"))
         )
@@ -96,16 +101,14 @@ def minhash_signatures(
     ).select("doc_id", F.col("_e.i").alias("i"), F.col("_e.mh").alias("mh"))
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame, band_rows: int = DEFAULT_BAND_ROWS
-) -> DataFrame:
+def lsh_candidate_pairs(signatures: DataFrame) -> DataFrame:
     """(doc_a, doc_b): pairs sharing at least one LSH band bucket.
 
     Bucket join replaces the O(n^2) cross join; the self-join is on
     (band, bucket_key) with doc_a < doc_b, deduped across bands.
     """
     bands = (
-        signatures.withColumn("band", (F.col("i") / F.lit(band_rows)).cast("int"))
+        signatures.withColumn("band", (F.col("i") / F.lit(BAND_ROWS)).cast("int"))
         .groupBy("doc_id", "band")
         .agg(F.md5(F.concat_ws("|", F.sort_array(F.collect_list("mh")))).alias("bucket"))
     )
@@ -152,18 +155,12 @@ def exact_jaccard(sh: DataFrame, pairs: DataFrame) -> DataFrame:
     )
 
 
-def minhash_near_dups(
-    docs: DataFrame,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    band_rows: int = DEFAULT_BAND_ROWS,
-    threshold: float = 0.5,
-) -> DataFrame:
+def minhash_near_dups(docs: DataFrame) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: shingle -> sign -> band ->
     candidate -> exact-Jaccard verify -> threshold."""
     sh = shingles(docs)
-    sig = minhash_signatures(sh, num_hashes)
-    pairs = lsh_candidate_pairs(sig, band_rows)
-    return exact_jaccard(sh, pairs).filter(F.col("jaccard") >= threshold)
+    pairs = lsh_candidate_pairs(minhash_signatures(sh))
+    return exact_jaccard(sh, pairs).filter(F.col("jaccard") >= JACCARD_THRESHOLD)
 
 
 def _prefix_key(n: int) -> F.Column:
@@ -179,33 +176,27 @@ def _prefix_key(n: int) -> F.Column:
     return F.concat(*parts)
 
 
-def prefix_block_jaccard(
-    docs: DataFrame,
-    prefix_tokens: int = 3,
-    threshold: float = 0.5,
-    max_block: int = 64,
-    extended_tokens: int = 6,
-) -> DataFrame:
+def prefix_block_jaccard(docs: DataFrame) -> DataFrame:
     """n-gram Jaccard dedup with cheap prefix blocking (no MinHash):
-    candidate pairs share their first ``prefix_tokens`` tokens.
+    candidate pairs share their first ``PREFIX_TOKENS`` tokens.
 
     Skew guard: on natural text, boilerplate prefixes ("i think the")
     put millions of docs in one block, making within-block pair
-    generation quadratic. Blocks with more than ``max_block`` members
-    are re-keyed by a longer ``extended_tokens`` prefix (one extra
+    generation quadratic. Blocks with more than ``MAX_BLOCK`` members
+    are re-keyed by a longer ``EXTENDED_TOKENS`` prefix (one extra
     small groupBy on the block key — never a pass over pairs). Pairs
     that differ inside the extended prefix are sacrificed: a documented
     recall trade, mirrored exactly by the oracle.
     """
     keyed0 = docs.select(
         "doc_id",
-        _prefix_key(prefix_tokens).alias("block"),
-        _prefix_key(extended_tokens).alias("block_ext"),
+        _prefix_key(PREFIX_TOKENS).alias("block"),
+        _prefix_key(EXTENDED_TOKENS).alias("block_ext"),
     )
     counts = keyed0.groupBy("block").agg(F.count("*").alias("_n"))
     keyed = keyed0.join(counts, "block").select(
         "doc_id",
-        F.when(F.col("_n") > max_block, F.col("block_ext"))
+        F.when(F.col("_n") > MAX_BLOCK, F.col("block_ext"))
         .otherwise(F.col("block"))
         .alias("block"),
     )
@@ -215,10 +206,10 @@ def prefix_block_jaccard(
         a.join(b, (F.col("block") == F.col("block_b")) & (F.col("doc_a") < F.col("doc_b")))
         .select("doc_a", "doc_b")
     )
-    return exact_jaccard(shingles(docs), pairs).filter(F.col("jaccard") >= threshold)
+    return exact_jaccard(shingles(docs), pairs).filter(F.col("jaccard") >= JACCARD_THRESHOLD)
 
 
-def simhash_signatures(docs: DataFrame, bits: int = 32) -> DataFrame:
+def simhash_signatures(docs: DataFrame) -> DataFrame:
     """(doc_id, simhash): bit-string SimHash.
 
     Bit j of a token = whether hex char j of md5(token) is >= '8'
@@ -226,10 +217,10 @@ def simhash_signatures(docs: DataFrame, bits: int = 32) -> DataFrame:
     tokens. Hex-character derivation keeps the signature engine-portable.
 
     Plan shape: ONE hash aggregation over the token rows. The per-bit
-    explode form multiplied every token row by ``bits`` and needed a
+    explode form multiplied every token row by the bit count and needed a
     second shuffle to re-assemble the signature (measured 38s at sf0.1,
     guide §2.3/§2.4); here `translate` maps the md5 to a 0/1 string
-    once, the ``bits`` per-position sums ride one groupBy(doc_id), and
+    once, the per-position sums ride one groupBy(doc_id), and
     bit j = (2 * ones_j >= n_tokens) — the same majority vote
     (ones - zeros >= 0) with identical tie behavior.
     """
@@ -240,40 +231,31 @@ def simhash_signatures(docs: DataFrame, bits: int = 32) -> DataFrame:
     ).select("doc_id", tr.alias("tb"))
     aggs = [F.count("*").alias("_n")] + [
         F.sum(F.substring(F.col("tb"), j, 1).cast("int")).alias(f"_o{j}")
-        for j in range(1, bits + 1)
+        for j in range(1, SIMHASH_BITS + 1)
     ]
     per_doc = toks.groupBy("doc_id").agg(*aggs)
     bit_cols = [
         F.when(F.lit(2) * F.col(f"_o{j}") >= F.col("_n"), F.lit("1")).otherwise(
             F.lit("0")
         )
-        for j in range(1, bits + 1)
+        for j in range(1, SIMHASH_BITS + 1)
     ]
     return per_doc.select("doc_id", F.concat(*bit_cols).alias("simhash"))
 
 
-def simhash_near_dups(
-    docs: DataFrame, bits: int = 32, bands: int = 4, max_hamming: int = 3
-) -> DataFrame:
+def simhash_near_dups(docs: DataFrame) -> DataFrame:
     """(doc_a, doc_b, hamming): SimHash near-dup pairs via Hamming-band
     candidate join — the scale path the round-1 docstring promised.
 
-    Pigeonhole guarantee: two signatures within ``max_hamming`` bits
-    differ in at most max_hamming bands, so with
-    ``bands > max_hamming`` they MUST agree on at least one exact band —
-    the band equi-join loses NO pairs under the threshold (no recall
-    trade, unlike capped prefix blocking). Never an all-pairs join.
-
-    Raises ``ValueError`` when ``bands <= max_hamming`` (no pigeonhole
-    guarantee) or when ``bits > 63``: the Hamming distance is a
-    ``bit_count`` over the signature as one signed long.
+    Pigeonhole guarantee: two signatures within ``MAX_HAMMING`` bits
+    differ in at most MAX_HAMMING bands, so with
+    ``SIMHASH_BANDS > MAX_HAMMING`` they MUST agree on at least one
+    exact band — the band equi-join loses NO pairs under the threshold
+    (no recall trade, unlike capped prefix blocking). Never an
+    all-pairs join.
     """
-    if bands <= max_hamming:
-        raise ValueError("need bands > max_hamming for the pigeonhole guarantee")
-    if bits > 63:
-        raise ValueError("signature must fit a long for bit_count hamming")
-    width = bits // bands
-    sig = simhash_signatures(docs, bits)
+    width = SIMHASH_BITS // SIMHASH_BANDS
+    sig = simhash_signatures(docs)
     # Candidate volume is quadratic in bucket density (measured 10.4M
     # band-matched pairs from 6k templated docs at sf0.1), so the pair
     # stream is kept NARROW (two ids + one long) and the hamming filter
@@ -290,7 +272,7 @@ def simhash_near_dups(
     banded = sigl.select(
         "doc_id",
         "_sl",
-        F.explode(F.array(*[F.lit(b) for b in range(bands)])).alias("band"),
+        F.explode(F.array(*[F.lit(b) for b in range(SIMHASH_BANDS)])).alias("band"),
         "simhash",
     ).select(
         "doc_id",
@@ -310,7 +292,7 @@ def simhash_near_dups(
         a.join(b, (a["band"] == b["band_b"]) & (a["bv"] == b["bv_b"]))
         .filter(F.col("doc_a") < F.col("doc_b"))
         .withColumn("hamming", hamming.cast("int"))
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= MAX_HAMMING)
         .select("doc_a", "doc_b", "hamming")
         .distinct()
     )

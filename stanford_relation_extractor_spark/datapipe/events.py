@@ -14,12 +14,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+WINDOW_MINUTES = 60  # tumbling-window width
+SESSION_GAP_MINUTES = 30  # idle gap that starts a new session
 
-def tumbling_counts(events: DataFrame, minutes: int = 60) -> DataFrame:
+
+def tumbling_counts(events: DataFrame) -> DataFrame:
     """(event_type, window_start, n_events, sum_value) per tumbling window."""
     return (
         events.groupBy(
-            "event_type", F.window("ts", f"{minutes} minutes").alias("w")
+            "event_type", F.window("ts", f"{WINDOW_MINUTES} minutes").alias("w")
         )
         .agg(
             F.count("*").cast("int").alias("n_events"),
@@ -34,11 +37,11 @@ def tumbling_counts(events: DataFrame, minutes: int = 60) -> DataFrame:
     )
 
 
-def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """(user_id, session_idx, n_events, session_start): gap sessions.
 
     A new session starts when the gap to the previous event of the same
-    user exceeds ``gap_minutes``. lag + conditional cumsum over the
+    user exceeds ``SESSION_GAP_MINUTES``. lag + conditional cumsum over the
     per-user time order — the batch twin of
     applyInPandasWithState/session_window.
     """
@@ -48,7 +51,7 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     gap = epoch - F.lag(epoch).over(w)
     with_breaks = events.withColumn(
         "is_new",
-        F.when(gap.isNull() | (gap > gap_minutes * 60_000_000), F.lit(1)).otherwise(F.lit(0)),
+        F.when(gap.isNull() | (gap > SESSION_GAP_MINUTES * 60_000_000), F.lit(1)).otherwise(F.lit(0)),
     )
     with_sessions = with_breaks.withColumn(
         "session_idx", F.sum("is_new").over(w.rowsBetween(Window.unboundedPreceding, 0)).cast("int")

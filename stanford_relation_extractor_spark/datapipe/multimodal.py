@@ -18,13 +18,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def attach_payload(docs: DataFrame, mime: str = "application/octet-stream") -> DataFrame:
+def attach_payload(docs: DataFrame) -> DataFrame:
     """Simulate a multimodal table: utf-8 payload bytes + metadata struct."""
     return docs.select(
         "doc_id",
         F.encode(F.col("text"), "utf-8").alias("payload"),
         F.struct(
-            F.lit(mime).alias("mime"),
+            F.lit("application/octet-stream").alias("mime"),
             F.length(F.encode(F.col("text"), "utf-8")).alias("n_bytes"),
         ).alias("meta"),
     )

@@ -55,9 +55,10 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.simhash_signatures(_docs(spark, sf_dir))
 
 
-def _queries_vec(spark: SparkSession, sf_dir: str, n: int = 5) -> DataFrame:
+def _queries_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The first five embeddings, as (query_id, query_vec)."""
     emb = read_table(spark, sf_dir, "embeddings")
-    return emb.filter(F.col("vec_id") < n).select(
+    return emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
 

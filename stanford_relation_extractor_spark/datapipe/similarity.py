@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+EMBEDDING_DIM = 64  # width of the embeddings table's vectors
+
 
 def cosine(a: F.Column, b: F.Column) -> F.Column:
     """Cosine similarity of two array<float> columns, computed in double.
@@ -79,9 +81,7 @@ def hyperplane_signs(n_bits: int, dim: int) -> list[list[float]]:
     return planes
 
 
-def lsh_bucket_signatures(
-    vectors: DataFrame, n_bits: int = 8, dim: int = 64
-) -> DataFrame:
+def lsh_bucket_signatures(vectors: DataFrame, n_bits: int) -> DataFrame:
     """(vec_id, bucket): random-hyperplane LSH signature as a bit-string.
 
     numpy matmul inside an Arrow-batched pandas UDF — one pass, no
@@ -89,7 +89,7 @@ def lsh_bucket_signatures(
     """
     import numpy as np
 
-    planes = np.array(hyperplane_signs(n_bits, dim))  # (b, dim)
+    planes = np.array(hyperplane_signs(n_bits, EMBEDDING_DIM))  # (b, dim)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -124,7 +124,6 @@ def lsh_knn_banded(
     k: int = 3,
     n_bits: int = 16,
     band_bits: int = 4,
-    dim: int = 64,
 ) -> DataFrame:
     """Approximate top-k with banded (multi-probe) LSH: a candidate must
     share at least ONE band of the hyperplane signature instead of all
@@ -133,14 +132,14 @@ def lsh_knn_banded(
     neighbors). Candidate volume per band is ~n/2^band_bits; the union
     over n_bits/band_bits bands is still far from O(n^2) and every join
     is a plain equi-join on (band, band_value)."""
-    sig = lsh_bucket_signatures(vectors, n_bits, dim)
+    sig = lsh_bucket_signatures(vectors, n_bits)
     vb = _banded(sig, "vec_id", n_bits, band_bits)
     qsig = (
         queries.withColumnRenamed("query_vec", "embedding")
         .withColumnRenamed("query_id", "vec_id")
     )
     qb = _banded(
-        lsh_bucket_signatures(qsig, n_bits, dim), "vec_id", n_bits, band_bits
+        lsh_bucket_signatures(qsig, n_bits), "vec_id", n_bits, band_bits
     ).withColumnRenamed("vec_id", "query_id")
     cand = (
         vb.join(F.broadcast(qb), ["band", "bv"])

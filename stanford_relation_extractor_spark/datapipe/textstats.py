@@ -75,13 +75,13 @@ def fingerprints(docs: DataFrame) -> DataFrame:
     )
 
 
-def language_id(docs: DataFrame, profiles: dict[str, tuple[str, ...]] | None = None) -> DataFrame:
+def language_id(docs: DataFrame) -> DataFrame:
     """(doc_id, pred_lang, lang_score): stopword-profile language ID.
 
     Score = fraction of tokens in the language's stopword profile;
     prediction = argmax (ties broken alphabetically — deterministic).
     """
-    profs = {k: frozenset(v) for k, v in (profiles or LANG_PROFILES).items()}
+    profs = {k: frozenset(v) for k, v in LANG_PROFILES.items()}
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

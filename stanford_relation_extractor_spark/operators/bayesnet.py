@@ -30,9 +30,6 @@ Semantics mirrored from the reference (file:line cites):
 * probabilities clipped to [1e-4, 1-1e-4] (`clipLogProb:32-41`);
   consequents with no explicit prior default to p = 0.3
   (`GroundedRule.empty:464-466`, `Props.TEST_GRAPH_INFERENCE_PRIOR`).
-* acyclic BLN rule selection (`BayesianLogicNetwork.makeAcyclic:34-72`):
-  rules sorted ascending by weight, greedily kept unless one
-  antecedent's ancestor set intersects the consequents.
 * rule admission: |literals| <= depth+1 and |weight| >= cutoff
   (`ProbabilisticGraphInferenceEngine.java:84-89`; defaults
   `Props.java:397,427`).
@@ -44,7 +41,7 @@ the EXACT MAP by vectorized enumeration per factor-graph connected
 component (components are small: one entity cluster's candidate fills
 plus the rule-consequent closure), falling back to deterministic
 iterated conditional modes (fixed sweep order) past
-``max_exact_vars``. On nets with a unique MAP — every expectation the
+``MAX_EXACT_VARS`` free variables. On nets with a unique MAP — every expectation the
 reference's own `BayesNetTest.java:139-244` asserts — the two agree;
 our tests re-assert those cases against this solver.
 
@@ -97,39 +94,13 @@ def _sigmoid(w: float) -> float:
     return e / (1.0 + e)
 
 
-def make_acyclic(rules: list[Rule]) -> list[Rule]:
-    """`BayesianLogicNetwork.makeAcyclic:34-72`: sort ascending by
-    weight (the reference comparator — lowest first), greedily keep a
-    rule unless some antecedent's ancestor set already contains one of
-    its consequents, then fold the kept rule's antecedent ancestry into
-    the consequent's."""
-    ancestors: dict[str, set[str]] = {}
-
-    def anc(pred: str) -> set[str]:
-        return ancestors.setdefault(pred, {pred})
-
-    kept: list[Rule] = []
-    for rule in sorted(rules, key=lambda r: r.weight):
-        cons = {rule.head.pred}
-        ants = {lit.pred for lit in rule.body}
-        if any(anc(a) & cons for a in ants):
-            continue
-        kept.append(rule)
-        for c in cons:
-            for a in ants:
-                anc(c).update(anc(a))
-    return kept
-
-
-def admit_rules(
-    rules: list[Rule], cutoff: float = RULES_CUTOFF, depth: int = RULES_DEPTH
-) -> list[Rule]:
+def admit_rules(rules: list[Rule]) -> list[Rule]:
     """`ProbabilisticGraphInferenceEngine.java:84-89`: drop rules below
     the weight cutoff or with more than depth+1 literals."""
     return [
         r
         for r in rules
-        if abs(r.weight) >= cutoff and len(r.body) + 1 <= depth + 1
+        if abs(r.weight) >= RULES_CUTOFF and len(r.body) + 1 <= RULES_DEPTH + 1
     ]
 
 
@@ -292,14 +263,14 @@ def _ground(
     return net
 
 
-def _factors(net: _Net, default_prior: float = DEFAULT_PRIOR):
+def _factors(net: _Net):
     """(consequent, prior(lpt,lpf), [(arity, lpt) desc]) per variable
     with any rule; pure-prior variables yield empty rule lists."""
     by_cons: dict[int, list[tuple[int, tuple[int, ...], float]]] = {}
     for (name, antes, cons), (lpt, _lpf) in sorted(net.rules.items()):
         by_cons.setdefault(cons, []).append((len(antes), antes, lpt))
     out = []
-    d_lpt, d_lpf = _logit_pair(default_prior)
+    d_lpt, d_lpf = _logit_pair(DEFAULT_PRIOR)
     for v in range(len(net.keys)):
         prior = net.priors.get(v, (d_lpt, d_lpf))
         rules = sorted(by_cons.get(v, []), key=lambda t: -t[0])
@@ -388,11 +359,9 @@ def _solve_exact_np(
         assign[v] = bool((best >> j) & 1)
 
 
-def solve_map(
-    net: _Net, max_exact_vars: int = MAX_EXACT_VARS
-) -> tuple[list[bool], dict[int, float]]:
+def solve_map(net: _Net) -> tuple[list[bool], dict[int, float]]:
     """Exact MAP per factor-graph component (vectorized enumeration
-    over free variables, <= 2^max_exact_vars states); deterministic ICM
+    over free variables, <= 2^MAX_EXACT_VARS states); deterministic ICM
     with per-variable factor indexing beyond. Returns (assignment,
     per-variable P(true | MAP parents))."""
     n = len(net.keys)
@@ -407,7 +376,8 @@ def solve_map(
         comp_factors = [f for f in factors if f[0] in comp_set]
         if not free:
             continue
-        if len(free) <= max_exact_vars:
+        # read at call time, so a test can lower the gate to reach ICM
+        if len(free) <= MAX_EXACT_VARS:
             _solve_exact_np(comp, free, comp_factors, assign)
         else:
             # deterministic ICM: start at prior-MAP, fixed sweep order,
@@ -448,9 +418,6 @@ def infer_map_triples(
     triples: DataFrame,
     geo_cities: DataFrame,
     spark: SparkSession,
-    mln_text: str = DEFAULT_MLN,
-    acyclic: bool = False,
-    max_exact_vars: int = MAX_EXACT_VARS,
 ) -> DataFrame:
     """The distributed BLN pass: cluster the candidate store by
     entity<->entity-typed-slot connectivity, ground + MAP-solve each
@@ -462,10 +429,8 @@ def infer_map_triples(
     small nets, one ``map_groups_in_pandas`` pass over the cluster id. The
     gazetteer broadcasts as plain Python (bounded: a dimension table).
     """
-    predicates, rules = parse_mln(mln_text)
+    predicates, rules = parse_mln(DEFAULT_MLN)
     rules = admit_rules(rules)
-    if acyclic:
-        rules = make_acyclic(rules)
     world = {
         "geo:city_country": {
             (r["city"], r["country"])
@@ -522,7 +487,7 @@ def infer_map_triples(
         )
         base = {(r[2], r[0], r[3]) for r in rows}
         net = _ground(rows, rules_b, preds_b, world_b)
-        assign, probs = solve_map(net, max_exact_vars)
+        assign, probs = solve_map(net)
         for i, (pred, a1, a2) in enumerate(net.keys):
             if not assign[i] or pred not in preds_b or pred.startswith("geo:"):
                 continue

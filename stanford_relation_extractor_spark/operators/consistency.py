@@ -57,11 +57,7 @@ def type_check(triples: DataFrame) -> DataFrame:
     )
 
 
-def threshold_filter(
-    triples: DataFrame,
-    threshold: float = GLOBAL_SCORE_THRESHOLD,
-    per_relation: dict[str, float] | None = None,
-) -> DataFrame:
+def threshold_filter(triples: DataFrame) -> DataFrame:
     """P7: drop slots scored below their relation's threshold.
 
     FIXED_PER_RELATION semantics (KBPEvaluator.java:266-272): the
@@ -69,15 +65,12 @@ def threshold_filter(
     table rides the plan as a map LITERAL (41 keys max) — a coalesce
     over a map lookup, no join, stays in whole-stage codegen.
     """
-    table = PER_RELATION_THRESHOLDS if per_relation is None else per_relation
-    if not table:
-        return triples.filter(F.col("score") >= F.lit(threshold))
     flat: list = []
-    for rel in sorted(table):
+    for rel in sorted(PER_RELATION_THRESHOLDS):
         flat.append(F.lit(rel))
-        flat.append(F.lit(table[rel]))
+        flat.append(F.lit(PER_RELATION_THRESHOLDS[rel]))
     floor = F.coalesce(
-        F.create_map(*flat)[F.col("relation")], F.lit(threshold)
+        F.create_map(*flat)[F.col("relation")], F.lit(GLOBAL_SCORE_THRESHOLD)
     )
     return triples.filter(F.col("score") >= floor)
 
@@ -294,10 +287,7 @@ def greedy_consistency(triples: DataFrame) -> DataFrame:
     )
 
 
-def apply_consistency(
-    triples: DataFrame,
-    threshold: float = GLOBAL_SCORE_THRESHOLD,
-) -> DataFrame:
+def apply_consistency(triples: DataFrame) -> DataFrame:
     """Stage 6 in reference order (SlotfillPostProcessor.java:83-190):
     the unary filters first (cheap, prunes early), then the W1 greedy
     pass.
@@ -315,5 +305,5 @@ def apply_consistency(
     # P8/P9 guideline hygiene — unary predicates, corpus-active via the
     # k18 (unrelated org:website) and k19 (invalid per:title) templates
     out = conform_to_guidelines(out)
-    out = threshold_filter(out, threshold)
+    out = threshold_filter(out)
     return greedy_consistency(out)

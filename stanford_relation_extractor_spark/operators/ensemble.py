@@ -13,8 +13,8 @@ aggregates — no UDAF:
    the exchange, sort + final aggregate after it (see
    ``_vote_key_expr``).
 2. per group: ``n_agree`` = #extractors voting, combined score =
-   noisy-or ``1 - prod(1 - w_i)``, gate per AGREE_{ANY,ALL,MOST,TWO,
-   FIRST} (default AGREE_MOST, `common/Props.java:495`).
+   noisy-or ``1 - prod(1 - w_i)``, gated by AGREE_MOST (the reference
+   default, `common/Props.java:495`; the pipeline runs no other gate).
 3. provenance = the argmax-weight extractor's best vote, deterministic
    via total-order struct comparison (SURVEY.md §7).
 
@@ -32,13 +32,6 @@ from pyspark.sql import functions as F
 GROUP_KEY = ["entity_name", "entity_type", "relation", "slot_value", "slot_ner"]
 
 EXTRACTORS = ("pattern", "trigger", "window", "statistical")
-FIRST_EXTRACTOR = EXTRACTORS[0]  # AGREE_FIRST's classifier[0]
-
-AGREE_ANY = "AGREE_ANY"
-AGREE_ALL = "AGREE_ALL"
-AGREE_MOST = "AGREE_MOST"
-AGREE_TWO = "AGREE_TWO"
-AGREE_FIRST = "AGREE_FIRST"
 
 
 def _vote_key_expr() -> F.Column:
@@ -69,43 +62,28 @@ def _vote_key_expr() -> F.Column:
     )
 
 
-def combine_votes(
-    votes: DataFrame,
-    n_extractors: int | None = None,
-    combination: str = AGREE_MOST,
-    round_digits: int = 6,
-    extractors: tuple[str, ...] = EXTRACTORS,
-) -> DataFrame:
-    """votes -> gated, noisy-or-scored candidate triples with provenance."""
-    n_ext = n_extractors if n_extractors is not None else len(extractors)
-
+def combine_votes(votes: DataFrame) -> DataFrame:
+    """votes -> AGREE_MOST-gated, noisy-or-scored candidate triples with
+    provenance."""
     keyed = votes.withColumn("_vote_key", _vote_key_expr())
     aggs = []
-    for i, ex in enumerate(extractors):
+    for i, ex in enumerate(EXTRACTORS):
         cond = F.col("extractor") == ex
         aggs.append(F.max(F.when(cond, F.col("score"))).alias(f"_w{i}"))
         aggs.append(F.min(F.when(cond, F.col("_vote_key"))).alias(f"_p{i}"))
     agg = keyed.groupBy(*GROUP_KEY).agg(*aggs)
 
     ws = F.array_sort(
-        F.filter(F.array(*[F.col(f"_w{i}") for i in range(len(extractors))]), lambda x: x.isNotNull())
+        F.filter(F.array(*[F.col(f"_w{i}") for i in range(len(EXTRACTORS))]), lambda x: x.isNotNull())
     )
-    ws_desc = F.reverse(ws)
-    agg = agg.withColumn("_ws", ws_desc)
+    agg = agg.withColumn("_ws", F.reverse(ws))
 
     n_agree = F.size("_ws").alias("n_agree")
     noisy_or = F.round(
         F.lit(1.0)
         - F.aggregate(F.col("_ws"), F.lit(1.0), lambda acc, w: acc * (F.lit(1.0) - w)),
-        round_digits,
+        6,
     )
-    top1 = F.try_element_at(F.col("_ws"), F.lit(1))
-    top2 = F.coalesce(F.try_element_at(F.col("_ws"), F.lit(2)), F.lit(0.0))
-    top2_noisy_or = F.round(
-        F.lit(1.0) - (F.lit(1.0) - top1) * (F.lit(1.0) - top2), round_digits
-    )
-    first_idx = extractors.index(FIRST_EXTRACTOR) if FIRST_EXTRACTOR in extractors else 0
-    first_w = F.col(f"_w{first_idx}")
 
     # argmax-weight extractor's best vote: candidates sorted by
     # (neg weight, extractor name, vote position) — total order.
@@ -119,7 +97,7 @@ def combine_votes(
                     F.col(f"_p{i}").alias("best_vote"),
                 ),
             )
-            for i, ex in enumerate(extractors)
+            for i, ex in enumerate(EXTRACTORS)
         ]
     )
     best = F.try_element_at(
@@ -132,8 +110,6 @@ def combine_votes(
         *GROUP_KEY,
         n_agree.cast("int").alias("n_agree"),
         noisy_or.alias("score"),
-        top2_noisy_or.alias("_score_top2"),
-        F.round(first_w, round_digits).alias("_first_w"),
         F.col("_best.extractor").alias("provenance_extractor"),
         parts.getItem(1).alias("conv_id"),
         parts.getItem(2).cast("int").alias("turn_idx"),
@@ -143,23 +119,5 @@ def combine_votes(
         parts.getItem(6).cast("int").alias("slot_begin"),
         parts.getItem(7).cast("int").alias("slot_end"),
     )
-
-    if combination == AGREE_ANY:
-        gated = scored.filter(F.col("n_agree") > 0)
-    elif combination == AGREE_ALL:
-        gated = scored.filter(F.col("n_agree") >= n_ext)
-    elif combination == AGREE_MOST:
-        # Java integer division: classifiers.size() / 2
-        gated = scored.filter(F.col("n_agree") >= n_ext // 2)
-    elif combination == AGREE_TWO:
-        gated = scored.filter(F.col("n_agree") >= 2).withColumn(
-            "score", F.col("_score_top2")
-        )
-    elif combination == AGREE_FIRST:
-        gated = scored.filter(F.col("_first_w").isNotNull()).withColumn(
-            "score", F.col("_first_w")
-        )
-    else:
-        raise ValueError(f"unknown ensemble combination {combination!r}")
-
-    return gated.drop("_score_top2", "_first_w")
+    # AGREE_MOST in Java integer division: classifiers.size() / 2
+    return scored.filter(F.col("n_agree") >= len(EXTRACTORS) // 2)

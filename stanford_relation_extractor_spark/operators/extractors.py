@@ -350,9 +350,10 @@ def votes_for_sentence(
     mentions: list[dict[str, Any]],
     pattern_bank: dict[str, tuple[list[re.Pattern[str]], float]],
     trigger_bank: list[tuple[re.Pattern[str], dict[str, str]]],
-    stat: tuple[list[dict], list[str], dict] | None = None,
+    stat: tuple[list[dict], list[str], dict],
 ) -> list[tuple[Any, ...]]:
-    """All (entity, slot, relation, extractor, score) votes in one sentence."""
+    """All (entity, slot, relation, extractor, score) votes in one
+    sentence; ``stat`` is the statistical member's ``_stat_context()``."""
     out: list[tuple[Any, ...]] = []
     entities = [m for m in mentions if m["ner"] in ENTITY_TYPES]
     for ent in entities:
@@ -408,28 +409,27 @@ def votes_for_sentence(
             # surface features (A6 shape, one-vs-all + softmax). The
             # memo keys on the feature tuple — template-shaped corpora
             # hit it almost always, so scoring is amortized O(1)/pair.
-            if stat is not None:
-                bag_weights, softmax_support, memo = stat
-                from .statistical import combined_relation_probs, pair_feature_list
+            bag_weights, softmax_support, memo = stat
+            from .statistical import combined_relation_probs, pair_feature_list
 
-                feats = tuple(pair_feature_list(sent, mentions, ent, slot))
-                probs = memo.get(feats)
-                if probs is None:
-                    full = combined_relation_probs(
-                        list(feats), bag_weights, softmax_support
-                    )
-                    probs = {
-                        rel: round(p, 6)
-                        for rel, p in full.items()
-                        if rel != "NIL" and p >= STATISTICAL_MIN_PROB
-                    }
-                    if len(memo) >= STATISTICAL_MEMO_CAP:
-                        memo.pop(next(iter(memo)))
-                    memo[feats] = probs
-                for rel in rels:
-                    p = probs.get(rel)
-                    if p is not None and slot_sanity_ok(rel, slot["surface"], ent["surface"]):
-                        out.append(base + (rel, "statistical", p))
+            feats = tuple(pair_feature_list(sent, mentions, ent, slot))
+            probs = memo.get(feats)
+            if probs is None:
+                full = combined_relation_probs(
+                    list(feats), bag_weights, softmax_support
+                )
+                probs = {
+                    rel: round(p, 6)
+                    for rel, p in full.items()
+                    if rel != "NIL" and p >= STATISTICAL_MIN_PROB
+                }
+                if len(memo) >= STATISTICAL_MEMO_CAP:
+                    memo.pop(next(iter(memo)))
+                memo[feats] = probs
+            for rel in rels:
+                p = probs.get(rel)
+                if p is not None and slot_sanity_ok(rel, slot["surface"], ent["surface"]):
+                    out.append(base + (rel, "statistical", p))
     return out
 
 

@@ -39,6 +39,7 @@ _OUT_COLS = [
     "entity_name", "entity_type", "relation", "slot_value", "slot_ner",
     "score", "rule",
 ]
+CHAIN_ROUNDS = 2  # the store, then the store plus round-1 conclusions
 
 # The production rule set, in the reference's MLN text format
 # (MLNReader.java:14-38 syntax). geo:city_country is a world-knowledge
@@ -245,7 +246,6 @@ def apply_mln_rules(
     predicates: dict[str, tuple[str, str]],
     rules: list[Rule],
     aux: dict[str, DataFrame],
-    rounds: int = 2,
 ) -> DataFrame:
     """Bounded-chaining rule execution: round 1 over the store, round 2
     over (store UNION round-1 conclusions), keeping only keys novel to
@@ -253,7 +253,7 @@ def apply_mln_rules(
     # ONE lineage cut at the input store: every rule body literal (and
     # the novelty anti-join) re-reads `store`/`known`, so an uncut
     # triple-store plan — typically the WHOLE upstream pipeline — is
-    # replayed ~#rules x #literals x rounds times (measured 19s/run at
+    # replayed ~#rules x #literals x CHAIN_ROUNDS times (measured 19s/run at
     # sf0.01, ~15 full ensemble+consistency replays; 3.5s with the cut).
     # Same pattern as the canon edge cut (canonicalize.build_canon_map).
     triples = triples.select(*_KEY, "slot_ner", "score").localCheckpoint(
@@ -263,7 +263,7 @@ def apply_mln_rules(
     store = triples
     known = base_keys
     out: DataFrame | None = None
-    for _ in range(rounds):
+    for _ in range(CHAIN_ROUNDS):
         raw = None
         for rule in rules:
             c = _apply_rule(rule, predicates, store, aux)
@@ -281,13 +281,11 @@ def apply_mln_rules(
     return out.select(*_OUT_COLS)
 
 
-def infer_triples(
-    triples: DataFrame, geo_cities: DataFrame, rounds: int = 2
-) -> DataFrame:
+def infer_triples(triples: DataFrame, geo_cities: DataFrame) -> DataFrame:
     """The production inferential pipeline: DEFAULT_MLN rules +
-    gazetteer world knowledge, ``rounds`` of bounded chaining — one
+    gazetteer world knowledge, ``CHAIN_ROUNDS`` of bounded chaining — one
     W4-deterministic row per novel (entity, relation, slot)."""
     predicates, rules = parse_mln(DEFAULT_MLN)
     aux = {"geo:city_country": geo_cities.select("city", "country")}
-    return apply_mln_rules(triples, predicates, rules, aux, rounds=rounds)
+    return apply_mln_rules(triples, predicates, rules, aux)
 

@@ -17,15 +17,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+ENTITY_NERS = ("PERSON", "ORGANIZATION")  # the mention types that head slots
 
-def topk_sentences_per_entity(
-    sentences: DataFrame, k: int = 50, entity_ners: tuple[str, ...] = ("PERSON", "ORGANIZATION")
-) -> DataFrame:
+
+def topk_sentences_per_entity(sentences: DataFrame, k: int = 50) -> DataFrame:
     """(entity_name, conv_id, turn_idx, sent_idx, sent_text) — at most k
     distinct sentences per entity, stable order (W7)."""
     ent_sent = sentences.select(
         "conv_id", "turn_idx", "sent_idx", "sent_text", F.explode("mentions").alias("m")
-    ).filter(F.col("m.ner").isin(*entity_ners)).select(
+    ).filter(F.col("m.ner").isin(*ENTITY_NERS)).select(
         F.col("m.surface").alias("entity_name"),
         "conv_id", "turn_idx", "sent_idx", "sent_text",
     )

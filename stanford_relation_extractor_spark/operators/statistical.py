@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 FEATURE_COUNT_THRESHOLD = 5  # common/Props.java:227
+SMOOTHING = 0.5  # additive smoothing of the log-odds counts
 
 
 def features_from_between(
@@ -92,7 +93,6 @@ def softmax_scores(
     feats: list[str],
     weights: dict[str, dict[str, float]],
     relations: list[str],
-    gamma: float = 1.0,
 ) -> dict[str, float]:
     """relation -> softmax probability (RelationClassifier.java:109-115,
     gamma=1), in pure sequential Python float64 arithmetic so the engine
@@ -108,7 +108,7 @@ def softmax_scores(
             if i is not None:
                 s[i] += w
     m = max(s)
-    exps = [math.exp(gamma * (x - m)) for x in s]
+    exps = [math.exp(x - m) for x in s]
     tot = sum(exps)
     return {rel: exps[i] / tot for i, rel in enumerate(relations)}
 
@@ -117,7 +117,6 @@ def combined_relation_probs(
     feats: list[str],
     bag_weights: list[dict[str, dict[str, float]]],
     relations: list[str],
-    gamma: float = 1.0,
 ) -> dict[str, float]:
     """Per-relation probability of the BAGGED statistical member: each
     bootstrap model scores the pair (softmax), the per-relation
@@ -128,10 +127,10 @@ def combined_relation_probs(
     in list order, relations in support order — the oracle re-derives
     the identical floats."""
     if len(bag_weights) == 1:
-        return softmax_scores(feats, bag_weights[0], relations, gamma)
+        return softmax_scores(feats, bag_weights[0], relations)
     acc = {rel: 1.0 for rel in relations}
     for w in bag_weights:
-        p = softmax_scores(feats, w, relations, gamma)
+        p = softmax_scores(feats, w, relations)
         for rel in relations:
             acc[rel] *= 1.0 - p[rel]
     # strict cap below 1: a 7-fold consensus can noisy-or to 1-1e-10,
@@ -140,23 +139,19 @@ def combined_relation_probs(
     return {rel: min(1.0 - acc[rel], 0.999999) for rel in relations}
 
 
-def feature_count_filter(features: DataFrame, threshold: int = FEATURE_COUNT_THRESHOLD) -> DataFrame:
-    """A8: keep features appearing >= threshold times (semi join against
+def feature_count_filter(features: DataFrame) -> DataFrame:
+    """A8: keep features appearing >= FEATURE_COUNT_THRESHOLD times (semi join against
     the groupBy-count survivor set — shrinks the broadcast weight matrix)."""
     frequent = (
         features.groupBy("feature")
         .agg(F.count("*").alias("n"))
-        .filter(F.col("n") >= threshold)
+        .filter(F.col("n") >= FEATURE_COUNT_THRESHOLD)
         .select("feature")
     )
     return features.join(F.broadcast(frequent), "feature", "left_semi")
 
 
-def train_weights_df(
-    labeled_features: DataFrame,
-    smoothing: float = 0.5,
-    weight_col: str | None = None,
-) -> DataFrame:
+def train_weights_df(labeled_features: DataFrame, weight_col: str | None = None) -> DataFrame:
     """(feature, relation, weight) log-odds table, fully distributed.
 
     One hash aggregation on (feature, relation) + a window over feature
@@ -179,7 +174,7 @@ def train_weights_df(
         "feature",
         "relation",
         F.round(
-            F.log((F.col("n") + F.lit(smoothing)) / (total - F.col("n") + F.lit(smoothing))),
+            F.log((F.col("n") + F.lit(SMOOTHING)) / (total - F.col("n") + F.lit(SMOOTHING))),
             6,
         ).alias("weight"),
     )
@@ -250,7 +245,6 @@ def miml_train(
     features: DataFrame,
     bag_labels: DataFrame,
     epochs: int = 2,
-    smoothing: float = 0.5,
     mode: str = "hard",
 ) -> DataFrame:
     """A7 — MIML-lite bag-level training, the EM shape of
@@ -293,9 +287,7 @@ def miml_train(
         if weighted:
             cols.append("wt")
         labeled = features.join(assign, MENTION_KEY).select(*cols)
-        return train_weights_df(
-            labeled, smoothing, weight_col="wt" if weighted else None
-        )
+        return train_weights_df(labeled, weight_col="wt" if weighted else None)
 
     init = mentions.join(labels, BAG_KEY, "left").select(
         *MENTION_KEY, F.coalesce(F.col("relation"), F.lit(NIL)).alias("z")

@@ -30,7 +30,7 @@ from ..operators.canonicalize import (
     vote_surfaces,
 )
 from ..operators.consistency import apply_consistency
-from ..operators.ensemble import AGREE_MOST, combine_votes
+from ..operators.ensemble import combine_votes
 from ..operators.extractors import extract_votes
 from ..operators.mentions import detect_mentions
 from ..sources.synthetic import (
@@ -170,7 +170,7 @@ class Stage:
     build: Callable[..., DataFrame]
 
 
-def stage_graph(spark: SparkSession, sf_dir: str, combination: str) -> list[Stage]:
+def stage_graph(spark: SparkSession, sf_dir: str) -> list[Stage]:
     """The KG stage graph (SURVEY.md §7), in topological order. Both
     entry points walk it: ``build_stages`` in-session, ``run_pipeline``
     through checkpointed tables."""
@@ -194,9 +194,7 @@ def stage_graph(spark: SparkSession, sf_dir: str, combination: str) -> list[Stag
         # single-phase ensemble: the canonical rewrite is two broadcast
         # hash joins riding the same codegen stage as the aggregation's
         # map side, so pre-aggregating before the rewrite saves nothing
-        Stage("candidates", ("linked_votes",), lambda v: combine_votes(
-            v, combination=combination
-        )),
+        Stage("candidates", ("linked_votes",), combine_votes),
         Stage("alt_names", ("canon_map", "surfaces"), emit_alternate_names),
         Stage("triples", ("candidates", "alt_names"), lambda c, a: apply_consistency(
             c.unionByName(a, allowMissingColumns=True)
@@ -222,12 +220,7 @@ def _walk(
     return stages
 
 
-def build_stages(
-    spark: SparkSession,
-    sf_dir: str,
-    combination: str = AGREE_MOST,
-    transcripts: DataFrame | None = None,
-) -> dict[str, DataFrame]:
+def build_stages(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """The stage graph materialized in-session over the (synthetic)
     transcripts table.
 
@@ -252,13 +245,11 @@ def build_stages(
       wikidict, cascade and alternate-name branches.
     """
     stages = _walk(
-        stage_graph(spark, sf_dir, combination),
+        stage_graph(spark, sf_dir),
         reads={"sentences": "transcripts", "votes": "votes_cut"},
         materialize=functools.partial(_in_session, spark),
     )
     stages.builders["votes_cut"] = lambda: _parquet_spool(stages["votes"], spark, "votes")
-    if transcripts is not None:
-        stages["transcripts"] = transcripts
     return stages
 
 
@@ -273,12 +264,7 @@ def final_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 STORED_STAGES = ("sentences", "votes", "canon_map", "linked_votes", "candidates", "triples")
 
 
-def run_pipeline(
-    spark: SparkSession,
-    sf_dir: str,
-    checkpoint_dir: str,
-    combination: str = AGREE_MOST,
-) -> dict[str, object]:
+def run_pipeline(spark: SparkSession, sf_dir: str, checkpoint_dir: str) -> dict[str, object]:
     """Materialized, resumable execution of the stage graph.
 
     Each stored stage lands as a parquet table + lineage manifest under
@@ -293,8 +279,8 @@ def run_pipeline(
 
     from ..sources.sinks import checkpoint_stage, fingerprint, read_manifest
 
-    cfg = {"sf_dir": sf_dir, "combination": combination, "version": 4}
-    graph = stage_graph(spark, sf_dir, combination)
+    cfg = {"sf_dir": sf_dir, "version": 4}
+    graph = stage_graph(spark, sf_dir)
     fps: dict[str, str] = {}
     for st in graph:
         fps[st.name] = fingerprint(st.name, cfg, [fps[i] for i in st.inputs])

@@ -58,8 +58,8 @@ FEMALE_NAMES_TXT = f"{REFERENCE_KBP_DIR}/kbp_female_names.txt"
 CITY_NICKNAMES_TAB = f"{REFERENCE_KBP_DIR}/citynicknames.tab"
 
 
-def _split(column: str = "value") -> F.Column:
-    return F.split(F.col(column), "\t")
+def _split() -> F.Column:
+    return F.split(F.col("value"), "\t")
 
 
 def code2country(spark: SparkSession, path: str = CODE2COUNTRY_TAB) -> DataFrame:

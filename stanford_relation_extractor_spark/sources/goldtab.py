@@ -64,12 +64,12 @@ def official_cardinality_2013() -> dict[str, str]:
     return out
 
 
-def parse_gold_tab(lines: DataFrame, column: str = "value") -> DataFrame:
+def parse_gold_tab(lines: DataFrame) -> DataFrame:
     """(line_id, query_id, relation, docid, slot_value, judgment,
     equiv_class) from a one-string-column DataFrame of 2013.tab lines
     (``spark.read.text`` shape). Lines without exactly 12 fields and
     'I'-judged lines are dropped, mirroring grok2013's guard."""
-    f = F.split(F.col(column), "\t")
+    f = F.split(F.col("value"), "\t")
     qrel = F.element_at(f, 2)
     split2 = lines.filter(F.size(f) == 12).select(
         F.element_at(f, 1).cast("int").alias("line_id"),
@@ -94,7 +94,7 @@ def parse_gold_tab(lines: DataFrame, column: str = "value") -> DataFrame:
     return out.filter(F.col("judgment") != "I")
 
 
-def parse_gold_tab_2009(lines: DataFrame, column: str = "value") -> DataFrame:
+def parse_gold_tab_2009(lines: DataFrame) -> DataFrame:
     """(line_id, query_id, relation, docid, slot_value, judgment,
     equiv_class) from 2009/2010-format assessment lines —
     `GoldResponseSet.grokBefore2011` field layout (11 tab fields:
@@ -102,7 +102,7 @@ def parse_gold_tab_2009(lines: DataFrame, column: str = "value") -> DataFrame:
     value, [9] equivalence class, [10] integer judgment). The integer
     judgment maps to the 2013 letters via CustomSFScore's codes so
     downstream scoring is format-agnostic; unknown codes drop."""
-    f = F.split(F.col(column), "\t")
+    f = F.split(F.col("value"), "\t")
     judgment = F.element_at(f, 11).cast("int")
     letter = F.element_at(
         F.create_map(
@@ -132,7 +132,7 @@ def _judgment_letter(code: Column) -> Column:
     )
 
 
-def parse_gold_2011(lines: DataFrame, column: str = "value") -> DataFrame:
+def parse_gold_2011(lines: DataFrame) -> DataFrame:
     """(line_id, query_id, relation, docid, slot_value, judgment,
     equiv_class) from 2011-format per-query assessment files —
     `GoldResponseSet.grok2011`: WHITESPACE-separated fields
@@ -142,7 +142,7 @@ def parse_gold_2011(lines: DataFrame, column: str = "value") -> DataFrame:
     split/join collapses internal whitespace runs; its limit-11 tail
     preservation is provably a no-op on every shipped 2011 line —
     verified exhaustively — so both engines use the unlimited split)."""
-    f = F.split(F.col(column), r"\s+")
+    f = F.split(F.col("value"), r"\s+")
     qparts = F.split(F.element_at(f, 2), ":")
     return (
         lines.filter(F.size(f) >= 6)
@@ -161,13 +161,13 @@ def parse_gold_2011(lines: DataFrame, column: str = "value") -> DataFrame:
     )
 
 
-def parse_gold_2012(lines: DataFrame, column: str = "value") -> DataFrame:
+def parse_gold_2012(lines: DataFrame) -> DataFrame:
     """2012-format per-query assessment files —
     `GoldResponseSet.grok2012`: exactly 10 TAB fields, ``[0]`` line id,
     ``[1]`` ``QID:ns:rel``, ``[2]`` doc id, ``[3]`` integer judgment,
     ``[4]`` equivalence class, ``[5]`` slot value (UNtrimmed, exactly
     as the Java reader leaves it)."""
-    f = F.split(F.col(column), "\t")
+    f = F.split(F.col("value"), "\t")
     qparts = F.split(F.element_at(f, 2), ":")
     return (
         lines.filter(F.size(f) == 10)

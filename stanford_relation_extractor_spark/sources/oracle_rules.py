@@ -433,8 +433,9 @@ SENT0_TEXT_SQL: dict[int, str] = {
 }
 
 
-def topk_sentences_sql(k: int = 5) -> str:
-    """W7 oracle: per-entity sentence budget with text dedup."""
+def topk_sentences_sql() -> str:
+    """W7 oracle: per-entity sentence budget (5, the driver query's)
+    with text dedup."""
     branches = [
         f"SELECT {col} AS entity_name, conv_id, turn_idx, 0 AS sent_idx, "
         f"{SENT0_TEXT_SQL.get(kk, 'main_sent')} AS sent_text "
@@ -456,7 +457,7 @@ def topk_sentences_sql(k: int = 5) -> str:
                             ORDER BY conv_id, turn_idx, sent_idx) AS r
   FROM dedup WHERE d = 1
 )
-SELECT entity_name, conv_id, turn_idx, sent_idx, sent_text FROM budget WHERE r <= {k}
+SELECT entity_name, conv_id, turn_idx, sent_idx, sent_text FROM budget WHERE r <= 5
 """
     return duckdb_materialize(oracle_query(body))
 
@@ -714,22 +715,23 @@ def _allowed_pairs_values() -> str:
     return ", ".join(sorted(rows))
 
 
-def threshold_pred_sql(threshold: float = 0.5) -> str:
+def threshold_pred_sql() -> str:
     """P7 FIXED_PER_RELATION accept predicate (KBPEvaluator.java:266-272):
-    per-relation floors from the shared ontology table, global fallback —
-    the SQL twin of consistency.threshold_filter's map-literal coalesce."""
+    per-relation floors from the shared ontology table, global fallback
+    0.5 (Props.java:480) — the SQL twin of consistency.threshold_filter's
+    map-literal coalesce."""
     from ..ontology import PER_RELATION_THRESHOLDS
 
     if not PER_RELATION_THRESHOLDS:
-        return f"score >= {threshold!r}"
+        return "score >= 0.5"
     whens = " ".join(
         f"WHEN '{rel}' THEN {PER_RELATION_THRESHOLDS[rel]!r}"
         for rel in sorted(PER_RELATION_THRESHOLDS)
     )
-    return f"score >= (CASE relation {whens} ELSE {threshold!r} END)"
+    return f"score >= (CASE relation {whens} ELSE 0.5 END)"
 
 
-def _final_body(threshold: float = 0.5) -> str:
+def _final_body() -> str:
     """CTE chain ending in ``final_out`` — the consistency battery:
     ensemble -> threshold (P7) -> SINGLE-cardinality top-1 (W2/W4) ->
     declared-incompatibility drop (O6) -> loc-of-death mitigation."""
@@ -742,7 +744,7 @@ def _final_body(threshold: float = 0.5) -> str:
   -- conform_to_guidelines): invalid titles / top-employees / org alt
   -- names, DATE slot shape, org:website token-stem relatedness
   SELECT entity_name, entity_type, relation, slot_value, slot_ner, n_agree, score
-  FROM ens WHERE {threshold_pred_sql(threshold)}
+  FROM ens WHERE {threshold_pred_sql()}
     AND {conform_pred_sql()}
 ){_ALT_NAMES_CTE}
 , base2 AS (
@@ -800,22 +802,22 @@ def _final_body(threshold: float = 0.5) -> str:
 """
 
 
-def final_triples_sql(threshold: float = 0.5) -> str:
+def final_triples_sql() -> str:
     from .synthetic import oracle_query_linking
 
     return duckdb_materialize(
         oracle_query_linking(
-            _final_body(threshold) + "SELECT * FROM final_out", recursive=True
+            _final_body() + "SELECT * FROM final_out", recursive=True
         )
     )
 
 
-def nil_padded_sql(threshold: float = 0.5) -> str:
+def nil_padded_sql() -> str:
     """S10 oracle: full (person query x PER relation) grid, NIL-padded."""
     per_rels = ", ".join(
         f"('{name}')" for name in sorted(RELATION_BY_NAME) if name.startswith("per:")
     )
-    body = _final_body(threshold) + f"""
+    body = _final_body() + f"""
 , grid AS (
   SELECT p.person AS query_id, p.person AS entity_name, r.relation
   FROM (SELECT DISTINCT person FROM turns_base) p
@@ -1084,7 +1086,7 @@ FROM inf2
     return duckdb_materialize(oracle_query_linking(body, recursive=True))
 
 
-def official_score_pipeline_sql(threshold: float = 0.5) -> str:
+def official_score_pipeline_sql() -> str:
     """A10 end-to-end (`KBPEvaluator.java:310-340`): the engine's OWN
     final triples -> the deterministic perturbed response set
     (``evaluate.perturbed_response_set`` spec, mirrored clause for
@@ -1097,7 +1099,7 @@ def official_score_pipeline_sql(threshold: float = 0.5) -> str:
         f"('{name}', '{r.cardinality}')"
         for name, r in sorted(RELATION_BY_NAME.items())
     )
-    body = _final_body(threshold) + f"""
+    body = _final_body() + f"""
 , pt AS (
   SELECT DISTINCT entity_name AS query_id, relation, slot_value,
          length(entity_name) + length(relation) + length(slot_value) AS kl

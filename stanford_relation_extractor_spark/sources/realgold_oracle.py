@@ -232,9 +232,9 @@ FROM counts c, answers a
 """
 
 
-def official_score_2013_sql(path: str = GOLD_2013_TAB, modulus: int = 7) -> str:
+def official_score_2013_sql(path: str = GOLD_2013_TAB) -> str:
     """The full CustomSFScore pipeline in SQL over the real 2013 file,
-    with the deterministic response sample (line_id % modulus == 0) the
+    with the deterministic response sample (line_id % 7 == 0) the
     driver query uses: judgment-key resolution (first-C-wins, else
     last line), single-valued first-response rule, list-valued
     equivalence-class redundancy, unjudged->WRONG, NIL skip, fake
@@ -247,7 +247,7 @@ def official_score_2013_sql(path: str = GOLD_2013_TAB, modulus: int = 7) -> str:
 WITH gold AS ({gold_2013_sql(path)}),
 resp0 AS (
   SELECT query_id, relation, docid, slot_value, line_id AS resp_order
-  FROM gold WHERE line_id % {modulus} = 0
+  FROM gold WHERE line_id % 7 = 0
 ),
 {official_score_body(card_values)}
 """

@@ -12,6 +12,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.001"
 
+# tests that read the reference checkout's data files (rules, gold
+# assessments, gazetteers), skipped where it is not mounted
+from stanford_relation_extractor_spark.sources.goldtab import REFERENCE_KBP_DIR  # noqa: E402
+
+needs_reference = pytest.mark.skipif(
+    not os.path.isdir(REFERENCE_KBP_DIR), reason="reference data not mounted"
+)
+
 
 @pytest.fixture(scope="session")
 def spark():

@@ -1,18 +1,17 @@
 """BLN / BayesNet MAP solver (operators/bayesnet.py) — the net-level
 cases re-assert the reference's own `BayesNetTest.java:139-244`
 expectations (there reached via gibbsMAP+hillclimb; here via the exact
-deterministic MAP), plus the acyclic selection of
-`BayesianLogicNetworkTest.java` and the Spark-level clustered pass."""
+deterministic MAP), plus the Spark-level clustered pass."""
 
 from __future__ import annotations
 
 import math
 
+from stanford_relation_extractor_spark.operators import bayesnet
 from stanford_relation_extractor_spark.operators.bayesnet import (
     _ground,
     admit_rules,
     infer_map_triples,
-    make_acyclic,
     solve_map,
 )
 from stanford_relation_extractor_spark.operators.inference import parse_mln
@@ -31,10 +30,10 @@ welcomes(COUNTRY, PERSON)
 """
 
 
-def _map_set(rows, mln, world=None, **kw):
+def _map_set(rows, mln, world=None):
     predicates, rules = parse_mln(mln)
     net = _ground(rows, admit_rules(rules), predicates, world or {})
-    assign, _probs = solve_map(net, **kw)
+    assign, _probs = solve_map(net)
     return {k for i, k in enumerate(net.keys) if assign[i]}
 
 
@@ -104,19 +103,18 @@ origin(PERSON, COUNTRY)
     assert ("likes", "Julie", "Peru") not in out
 
 
-def test_icm_matches_exact_on_chain():
-    """Forcing the ICM fallback (max_exact_vars=1) reproduces the exact
+def test_icm_matches_exact_on_chain(monkeypatch):
+    """Forcing the ICM fallback (MAX_EXACT_VARS=1) reproduces the exact
     MAP on the chain net — the deterministic large-component path."""
     rows = [("Julie", "PERSON", "origin", "Canada", "COUNTRY", 1.0)]
-    assert _map_set(rows, CHAIN_MLN, max_exact_vars=1) == _map_set(
-        rows, CHAIN_MLN
-    )
+    exact = _map_set(rows, CHAIN_MLN)
+    monkeypatch.setattr(bayesnet, "MAX_EXACT_VARS", 1)
+    assert _map_set(rows, CHAIN_MLN) == exact
 
 
 def test_cyclic_rules_solve_and_acyclic_drops():
     """Symmetric spouse rules form the cycle bounded chaining cannot
-    express as one joint net: the MAP keeps both directions; makeAcyclic
-    (BayesianLogicNetwork.java:34-72) drops the self-symmetric rule."""
+    express as one joint net: the MAP keeps both directions."""
     mln = f"""
 per:spouse(PERSON, PERSON)
 {_logit(0.9)} !per:spouse(x, y) v per:spouse(y, x)
@@ -128,27 +126,6 @@ per:spouse(PERSON, PERSON)
     true_set = {k for i, k in enumerate(net.keys) if assign[i]}
     assert ("per:spouse", "Ann", "Bob") in true_set
     assert ("per:spouse", "Bob", "Ann") in true_set
-    assert make_acyclic(rules) == []
-
-
-def test_make_acyclic_reference_case():
-    """BayesianLogicNetworkTest.testMakeAcyclic: of the two symmetric
-    likes<->lives_in rules only the first-sorted survives; the chained
-    works_at rule survives."""
-    mln = """
-likes(PERSON, PLACE)
-lives_in(PERSON, PLACE)
-works_at(PERSON, ORGANIZATION)
-headquartered_at(ORGANIZATION, PLACE)
-0.9 !likes(x0, x1) v lives_in(x0, x1)
-0.9 !lives_in(x0, x1) v likes(x0, x1)
-0.9 !works_at(x0, x1) v !headquartered_at(x1, x2) v likes(x0, x2)
-"""
-    _preds, rules = parse_mln(mln)
-    kept = make_acyclic(rules)
-    heads = [r.head.pred for r in kept]
-    assert heads == ["lives_in", "likes"]
-    assert len(kept[1].body) == 2  # the works_at chain rule
 
 
 def test_spark_clustered_map_inference(spark):

@@ -145,10 +145,21 @@ def test_lsh_knn_banded_recall_beats_single_table(spark):
     assert len(banded & exact) >= int(0.4 * len(exact))  # usable recall on random vectors
 
 
+def test_simhash_constants_keep_their_guarantees():
+    """The band join is exact only with more bands than the Hamming
+    bound (pigeonhole), and the Hamming distance is a ``bit_count`` over
+    the signature as one signed long."""
+    from stanford_relation_extractor_spark.datapipe import dedup
+
+    assert dedup.SIMHASH_BANDS > dedup.MAX_HAMMING
+    assert dedup.SIMHASH_BITS <= 63
+
+
 def test_simhash_neardups_pigeonhole_exact(spark):
     """The Hamming-band candidate join loses nothing under the
-    threshold: brute-force pairs within max_hamming == banded pairs."""
+    threshold: brute-force pairs within MAX_HAMMING == banded pairs."""
     from stanford_relation_extractor_spark.datapipe.dedup import (
+        MAX_HAMMING,
         simhash_near_dups,
         simhash_signatures,
     )
@@ -170,7 +181,7 @@ def test_simhash_neardups_pigeonhole_exact(spark):
         for j in ids:
             if i < j:
                 h = sum(a != b for a, b in zip(sigs[i], sigs[j]))
-                if h <= 3:
+                if h <= MAX_HAMMING:
                     brute[(i, j)] = h
     assert got == brute
     assert got[(1, 4)] == 0  # exact dup

@@ -1,19 +1,13 @@
 """Ensemble combination semantics — mirrors the reference fixture style of
 `stanford-kbp/src/test/java/.../slotfilling/evaluate/EnsembleRelationExtractorTest.java:28-135`
-(stub classifiers voting fixed relations; assert gate outcomes + noisy-or)."""
+(stub classifiers voting fixed relations; assert the AGREE_MOST gate,
+the one the pipeline runs, and the noisy-or)."""
 
 from __future__ import annotations
 
 import pytest
 
-from stanford_relation_extractor_spark.operators.ensemble import (
-    AGREE_ALL,
-    AGREE_ANY,
-    AGREE_FIRST,
-    AGREE_MOST,
-    AGREE_TWO,
-    combine_votes,
-)
+from stanford_relation_extractor_spark.operators.ensemble import combine_votes
 
 VOTE_SCHEMA = (
     "conv_id string, turn_idx int, sent_idx int, "
@@ -35,7 +29,7 @@ def _votes_df(spark, rows):
 
 def test_noisy_or_and_agreement_count(spark):
     df = _votes_df(spark, [("pattern", "per:age", 0.9), ("trigger", "per:age", 0.8), ("window", "per:age", 0.4)])
-    out = combine_votes(df, combination=AGREE_ANY).collect()
+    out = combine_votes(df).collect()
     assert len(out) == 1
     row = out[0]
     assert row["n_agree"] == 3
@@ -43,55 +37,26 @@ def test_noisy_or_and_agreement_count(spark):
 
 
 def test_per_extractor_max_pooling(spark):
-    # same extractor voting twice -> max, not accumulation
-    df = _votes_df(spark, [("pattern", "per:age", 0.9), ("pattern", "per:age", 0.5, "c2", 1)])
-    row = combine_votes(df, combination=AGREE_ANY).collect()[0]
-    assert row["n_agree"] == 1
-    assert row["score"] == pytest.approx(0.9, abs=1e-6)
-
-
-def test_agree_all_requires_every_extractor(spark):
-    df = _votes_df(spark, [("pattern", "per:age", 0.9), ("trigger", "per:age", 0.8)])
-    assert combine_votes(df, combination=AGREE_ALL).count() == 0
-    df4 = _votes_df(
+    # same extractor voting twice -> max, not accumulation; the trigger
+    # vote is the second member the AGREE_MOST gate asks for
+    df = _votes_df(
         spark,
-        [("pattern", "per:age", 0.9), ("trigger", "per:age", 0.8),
-         ("window", "per:age", 0.4), ("statistical", "per:age", 0.7)],
+        [("pattern", "per:age", 0.9), ("pattern", "per:age", 0.5, "c2", 1),
+         ("trigger", "per:age", 0.5)],
     )
-    assert combine_votes(df4, combination=AGREE_ALL).count() == 1
+    row = combine_votes(df).collect()[0]
+    assert row["n_agree"] == 2
+    assert row["score"] == pytest.approx(1 - 0.1 * 0.5, abs=1e-6)
 
 
 def test_agree_most_java_integer_division(spark):
-    # default n_extractors=4 -> gate is >= 2 (4/2 in Java int division)
+    # 4 extractors -> gate is >= 2 (4/2 in Java int division)
     df = _votes_df(spark, [("window", "per:age", 0.4)])
-    assert combine_votes(df, combination=AGREE_MOST).count() == 0
+    assert combine_votes(df).count() == 0
     df2 = _votes_df(
         spark, [("window", "per:age", 0.4), ("statistical", "per:age", 0.6)]
     )
-    assert combine_votes(df2, combination=AGREE_MOST).count() == 1
-    # 3-member ensemble -> gate is >= 1 (3/2 == 1)
-    assert combine_votes(
-        df, combination=AGREE_MOST, extractors=("pattern", "trigger", "window")
-    ).count() == 1
-    # n_extractors=7 -> gate is >= 3
-    assert combine_votes(df, n_extractors=7, combination=AGREE_MOST).count() == 0
-
-
-def test_agree_two_uses_top_two_noisy_or(spark):
-    df = _votes_df(
-        spark,
-        [("pattern", "per:age", 0.9), ("trigger", "per:age", 0.8), ("window", "per:age", 0.4)],
-    )
-    row = combine_votes(df, combination=AGREE_TWO).collect()[0]
-    assert row["score"] == pytest.approx(1 - 0.1 * 0.2, abs=1e-6)  # top-2 only
-
-
-def test_agree_first_takes_first_classifier_weight(spark):
-    df = _votes_df(spark, [("pattern", "per:age", 0.9), ("trigger", "per:age", 0.8)])
-    row = combine_votes(df, combination=AGREE_FIRST).collect()[0]
-    assert row["score"] == pytest.approx(0.9, abs=1e-6)
-    df2 = _votes_df(spark, [("trigger", "per:age", 0.8)])
-    assert combine_votes(df2, combination=AGREE_FIRST).count() == 0
+    assert combine_votes(df2).count() == 1
 
 
 def test_provenance_from_argmax_extractor_deterministic(spark):
@@ -100,7 +65,7 @@ def test_provenance_from_argmax_extractor_deterministic(spark):
         [("trigger", "per:age", 0.8, "c9", 9), ("pattern", "per:age", 0.9, "c2", 2),
          ("pattern", "per:age", 0.9, "c1", 5), ("pattern", "per:age", 0.9, "c1", 3)],
     )
-    row = combine_votes(df, combination=AGREE_ANY).collect()[0]
+    row = combine_votes(df).collect()[0]
     assert row["provenance_extractor"] == "pattern"
     # ties on weight broken by (conv_id, turn_idx, ...) total order
     assert (row["conv_id"], row["turn_idx"]) == ("c1", 3)

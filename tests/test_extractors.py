@@ -7,6 +7,7 @@ import re
 from stanford_relation_extractor_spark.operators.extractors import (
     _compiled_pattern_bank,
     _compiled_trigger_bank,
+    _stat_context,
     mask,
     votes_for_sentence,
 )
@@ -20,7 +21,7 @@ MATCHERS = [(ner, re.compile(rx)) for ner, rx in detector_config(["NATION_2"])]
 
 def _votes(sent):
     mentions = detect(sent, MATCHERS)
-    return votes_for_sentence(sent, mentions, PBANK, TBANK)
+    return votes_for_sentence(sent, mentions, PBANK, TBANK, _stat_context())
 
 
 def _by(votes, extractor):
@@ -39,14 +40,23 @@ def test_per_age_comma_pattern():
     assert ("Alice Person000001", "per:age", "34") in _by(votes, "pattern")
     assert ("Alice Person000001", "per:countries_of_residence", "NATION_2") in _by(votes, "pattern")
     assert ("Alice Person000001", "per:countries_of_residence", "NATION_2") in _by(votes, "trigger")
+    assert _by(votes, "statistical") == {
+        ("Alice Person000001", "per:age", "34"),
+        ("Alice Person000001", "per:origin", "NATION_2"),
+    }
 
 
 def test_per_age_paren_and_years_old():
     v1 = _votes("Bob Person000002 ( 63 ) works for Org001 .")
     assert ("Bob Person000002", "per:age", "63") in _by(v1, "pattern")
     assert ("Bob Person000002", "per:employee_of", "Org001") in _by(v1, "pattern")
+    assert _by(v1, "statistical") == {
+        ("Bob Person000002", "per:age", "63"),
+        ("Bob Person000002", "per:member_of", "Org001"),
+    }
     v2 = _votes("Bob Person000002 is 63 years old .")
     assert ("Bob Person000002", "per:age", "63") in _by(v2, "pattern")
+    assert _by(v2, "statistical") == set()
 
 
 def test_spouse_directional():
@@ -64,6 +74,11 @@ def test_founded_by_vs_founded():
     assert ("Org005", "org:founded", "1997") in pat
     # the person does NOT get a birth date from this sentence
     assert ("Alice Person000001", "per:date_of_birth", "1997") not in pat
+    assert _by(votes, "statistical") == {
+        ("Org005", "org:shareholders", "Alice Person000001"),
+        ("Org005", "org:founded", "1997"),
+        ("Alice Person000001", "per:member_of", "Org005"),
+    }
 
 
 def test_window_weight_normalized_across_relations():

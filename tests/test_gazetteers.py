@@ -4,9 +4,7 @@
 
 from __future__ import annotations
 
-import os
-
-import pytest
+from conftest import needs_reference
 from pyspark.sql import functions as F
 
 from stanford_relation_extractor_spark.sources.gazetteers import (
@@ -14,11 +12,6 @@ from stanford_relation_extractor_spark.sources.gazetteers import (
     cities_gazetteer,
     city_primary_region,
     name_nicknames_all,
-)
-from stanford_relation_extractor_spark.sources.goldtab import REFERENCE_KBP_DIR
-
-needs_reference = pytest.mark.skipif(
-    not os.path.isdir(REFERENCE_KBP_DIR), reason="reference data not mounted"
 )
 
 

@@ -1,4 +1,4 @@
-"""Every top-level package definition has a production caller.
+"""Every top-level package definition and option has a production caller.
 
 A static scan over the package's top-level functions, classes and
 module constants. Production code is the driver contract
@@ -14,6 +14,15 @@ anywhere in reached code keeps every definition of that name.
 
 ``tests/`` is not a root: a definition only tests call fails here
 unless ``ALLOWLIST`` names it with a reason. No Spark needed.
+
+The second scan covers options: every defaulted parameter of a
+top-level package function or of a method of a top-level class (nested
+closures that bind ``x=x`` are not options). A parameter is set when a
+production call (in the roots or the package), matched by the callee's
+bare name, passes it by keyword, by position, through ``*``/``**``, or
+via ``functools.partial``. A parameter no production call sets is a
+constant in disguise and fails here unless ``PARAM_ALLOWLIST`` names it
+as ``"func(param)"`` with a reason.
 """
 
 from __future__ import annotations
@@ -28,6 +37,22 @@ ROOTS = ("__spark_entry__.py", "bench.py", "scripts", "perfbench")
 # name -> why it stays without a production caller
 ALLOWLIST: dict[str, str] = {
     "__version__": "package metadata, read by packaging tools",
+}
+
+
+# "func(param)" -> why the option stays without a production call setting it
+PARAM_ALLOWLIST: dict[str, str] = {
+    **{
+        f"{fn}(path)": "deployment path of reference data, kept configurable"
+        for fn in (
+            "code2country", "code2region", "cities_raw", "alt_country_names",
+            "city_nicknames", "read_slots_file", "gold_2009_sql", "gold_2011_sql",
+            "gold_2012_sql", "slots_2013_sql", "official_score_2013_sql",
+        )
+    },
+    "relation_pattern_weights(rules_dir)": "deployment path of the reference rules files",
+    "connected_components(checkpoint_dir)": "fault-recovery path: reliable checkpoints "
+    "instead of local ones, safety code for lost executors",
 }
 
 
@@ -111,3 +136,83 @@ def test_allowlist_is_not_stale():
     where, reached = scan()
     stale = sorted(n for n in ALLOWLIST if n not in where or n in reached)
     assert not stale, f"ALLOWLIST entries now reached or no longer defined: {stale}"
+
+
+def _package_functions() -> list[tuple[ast.FunctionDef, bool]]:
+    """(function, is_bound_method) for every top-level package function
+    and every method of a top-level package class."""
+    out = []
+    for f in _py_files(PACKAGE):
+        for stmt in ast.parse(f.read_text()).body:
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                out.append((stmt, False))
+            elif isinstance(stmt, ast.ClassDef):
+                for m in stmt.body:
+                    if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                        static = any(
+                            isinstance(d, ast.Name) and d.id == "staticmethod"
+                            for d in m.decorator_list
+                        )
+                        out.append((m, not static))
+    return out
+
+
+def _callee(node: ast.expr) -> str | None:
+    if isinstance(node, ast.Name):
+        return node.id
+    if isinstance(node, ast.Attribute):
+        return node.attr
+    return None
+
+
+def scan_params() -> tuple[set[str], set[str]]:
+    """(every defaulted parameter as "func(param)", those a production
+    call sets)."""
+    options: set[str] = set()
+    positional: dict[str, list[list[str]]] = {}
+    for fn, bound in _package_functions():
+        a = fn.args
+        pos = [p.arg for p in a.posonlyargs + a.args]
+        positional.setdefault(fn.name, []).append(pos[1:] if bound else pos)
+        defaulted = pos[len(pos) - len(a.defaults):] if a.defaults else []
+        defaulted += [k.arg for k, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+        options.update(f"{fn.name}({p})" for p in defaulted)
+
+    set_: set[str] = set()
+
+    def passes(name: str | None, args: list[ast.expr], keywords: list[ast.keyword]) -> None:
+        if name not in positional:
+            return
+        if any(isinstance(x, ast.Starred) for x in args) or any(k.arg is None for k in keywords):
+            set_.update(o for o in options if o.startswith(f"{name}("))
+            return
+        for pos in positional[name]:
+            set_.update(f"{name}({p})" for p in pos[: len(args)])
+        set_.update(f"{name}({k.arg})" for k in keywords)
+
+    sources = [f for root in ROOTS for f in _py_files(REPO / root)] + _py_files(PACKAGE)
+    for f in sources:
+        for node in ast.walk(ast.parse(f.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            if _callee(node.func) == "partial" and node.args:
+                passes(_callee(node.args[0]), node.args[1:], node.keywords)
+            else:
+                passes(_callee(node.func), node.args, node.keywords)
+    return options, set_
+
+
+def test_every_option_is_set_by_a_production_call():
+    options, set_ = scan_params()
+    unset = sorted(o for o in options - set_ if o not in PARAM_ALLOWLIST)
+    assert not unset, (
+        "defaulted parameters no production call sets (fold each into a "
+        "constant, give it a production caller, or add a PARAM_ALLOWLIST "
+        f"entry with a reason): {unset}"
+    )
+
+
+def test_param_allowlist_is_not_stale():
+    options, set_ = scan_params()
+    stale = sorted(o for o in PARAM_ALLOWLIST if o not in options or o in set_)
+    assert not stale, f"PARAM_ALLOWLIST entries now set or no longer defined: {stale}"

@@ -10,9 +10,8 @@ at `edu/stanford/nlp/kbp/evaluation_{queries,results}/`.
 
 from __future__ import annotations
 
-import os
-
 import pytest
+from conftest import needs_reference
 
 from stanford_relation_extractor_spark.sources.goldtab import (
     GOLD_2009_TAB,
@@ -20,10 +19,6 @@ from stanford_relation_extractor_spark.sources.goldtab import (
     QUERIES_2013_XML,
     official_cardinality_2013,
     read_gold_tab,
-)
-
-needs_reference = pytest.mark.skipif(
-    not os.path.exists(GOLD_2013_TAB), reason="reference data not mounted"
 )
 
 
@@ -83,12 +78,11 @@ def test_real_2013_query_xml(spark):
     assert rows["SF13_ENG_008"].ignored_slots
 
 
+@needs_reference
 def test_official_cardinality_2013_covers_real_gold(spark):
     """Every relation in the real 2013 assessments resolves through the
     OfficialOutputWriter-2013 rename of our ontology — no relation
     scores as slotType 'error'."""
-    if not os.path.exists(GOLD_2013_TAB):
-        pytest.skip("reference data not mounted")
     card = official_cardinality_2013()
     rels = [
         r["relation"]

@@ -60,16 +60,20 @@ def test_pipeline_checkpoints_and_resumes(spark, ckpt):
     assert t3["candidates"] != t1["candidates"]  # late stages rebuilt
 
 
-def test_config_change_invalidates(spark, ckpt):
-    from stanford_relation_extractor_spark.plans.pipeline import run_pipeline
+def test_config_change_invalidates(spark, ckpt, tmp_path):
+    """The same tables under another ``sf_dir`` are a new config: the
+    fingerprint covers every stage, so every stored stage rebuilds, to
+    the same triples."""
+    from stanford_relation_extractor_spark.plans.pipeline import STORED_STAGES, run_pipeline
 
+    n_before = run_pipeline(spark, SF_DIR, ckpt)["triples"].count()
     t_before = _mtimes(ckpt)
-    out = run_pipeline(spark, SF_DIR, ckpt, combination="AGREE_TWO")
+    alias = tmp_path / "sf_alias"
+    alias.symlink_to(SF_DIR)
+    out = run_pipeline(spark, str(alias), ckpt)
     t_after = _mtimes(ckpt)
-    # sentence stage config-independent of the gate? It isn't: cfg hash
-    # covers all stages, so everything rebuilds under a new combination.
-    assert t_after["candidates"] != t_before["candidates"]
-    assert out["triples"].count() > 0
+    assert all(t_after[st] != t_before[st] for st in STORED_STAGES)
+    assert out["triples"].count() == n_before
 
 
 def test_partition_values_roundtrip_special_chars(spark, ckpt):

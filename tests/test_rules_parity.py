@@ -12,13 +12,9 @@ from __future__ import annotations
 import os
 import re
 
-import pytest
+from conftest import needs_reference
 
 from stanford_relation_extractor_spark.sources import rulesfiles as rf
-
-needs_reference = pytest.mark.skipif(
-    not os.path.isdir(rf.RULES_DIR), reason="reference data not mounted"
-)
 
 # Audits of the engine against the `.rules` files. The lexicon is the
 # set of literal trigger lexemes the reference's patterns key on (token
@@ -262,6 +258,7 @@ def test_weighted_rules_vote_their_file_weight():
         PATTERN_WEIGHT,
         _compiled_pattern_bank,
         _compiled_trigger_bank,
+        _stat_context,
         votes_for_sentence,
     )
     from stanford_relation_extractor_spark.operators.mentions import detect
@@ -280,11 +277,11 @@ def test_weighted_rules_vote_their_file_weight():
     matchers = [(ner, re.compile(rx)) for ner, rx in detector_config(["NATION_2"])]
 
     sent = "Alice Person000001 is married to David Person500001 ."
-    votes = votes_for_sentence(sent, detect(sent, matchers), pbank, tbank)
+    votes = votes_for_sentence(sent, detect(sent, matchers), pbank, tbank, _stat_context())
     spouse = [v for v in votes if v[8] == "per:spouse" and v[9] == "pattern"]
     assert spouse and all(v[10] == weights["per:spouse"] for v in spouse)
 
     sent2 = "Alice Person000001 , 34 , arrived ."
-    votes2 = votes_for_sentence(sent2, detect(sent2, matchers), pbank, tbank)
+    votes2 = votes_for_sentence(sent2, detect(sent2, matchers), pbank, tbank, _stat_context())
     age = [v for v in votes2 if v[8] == "per:age" and v[9] == "pattern"]
     assert age and all(v[10] == PATTERN_WEIGHT for v in age)

@@ -105,11 +105,14 @@ def test_cc_reliable_checkpoint(spark, tmp_path):
     assert out == {"a": "a", "b": "a", "c": "a", "d": "d", "e": "d"}
 
 
-def test_prefix_block_hot_block_capped(spark):
+def test_prefix_block_hot_block_capped(spark, monkeypatch):
     """A boilerplate prefix shared by many docs must not stay one block:
     hot blocks re-key on the longer prefix, cold blocks keep the cheap
     3-token key (recall inside hot blocks is traded for boundedness)."""
+    from stanford_relation_extractor_spark.datapipe import dedup
     from stanford_relation_extractor_spark.datapipe.dedup import prefix_block_jaccard
+
+    monkeypatch.setattr(dedup, "MAX_BLOCK", 10)
 
     hot = [
         (i, f"i think the topic{i % 3} discussion point alpha beta gamma delta run {i}")
@@ -121,7 +124,7 @@ def test_prefix_block_hot_block_capped(spark):
             (201, "completely different text about something here now")]
     docs = spark.createDataFrame(hot + cold, "doc_id long, text string")
 
-    out = prefix_block_jaccard(docs, max_block=10, threshold=0.5).collect()
+    out = prefix_block_jaccard(docs).collect()
     found = {(r["doc_a"], r["doc_b"]) for r in out}
     # the planted near-dup pair shares the extended prefix -> still found
     assert (0, 100) in found
@@ -130,7 +133,8 @@ def test_prefix_block_hot_block_capped(spark):
 
     # cap actually bounds candidate generation: with the hot block split
     # on 6 tokens, no candidate pair crosses topic0/topic1/topic2
-    all_pairs = prefix_block_jaccard(docs, max_block=10, threshold=0.0).collect()
+    monkeypatch.setattr(dedup, "JACCARD_THRESHOLD", 0.0)
+    all_pairs = prefix_block_jaccard(docs).collect()
     for r in all_pairs:
         if r["doc_a"] < 200:
             a_topic = r["doc_a"] % 3 if r["doc_a"] < 100 else 0

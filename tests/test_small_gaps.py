@@ -8,10 +8,13 @@ def _votes(sent: str, mentions: list[dict]) -> set[tuple[str, str]]:
     from stanford_relation_extractor_spark.operators.extractors import (
         _compiled_pattern_bank,
         _compiled_trigger_bank,
+        _stat_context,
         votes_for_sentence,
     )
 
-    out = votes_for_sentence(sent, mentions, _compiled_pattern_bank(), _compiled_trigger_bank())
+    out = votes_for_sentence(
+        sent, mentions, _compiled_pattern_bank(), _compiled_trigger_bank(), _stat_context()
+    )
     return {(v[8], v[9]) for v in out}  # (relation, extractor)
 
 
@@ -24,6 +27,10 @@ def test_per_other_family_patterns():
     got = _votes(sent, [_m(0, "Alice Person000001", "PERSON"), _m(31, "Emma Person000501", "PERSON")])
     assert ("per:other_family", "pattern") in got
     assert ("per:other_family", "trigger") in got
+    assert {rel for rel, ex in got if ex == "statistical"} == {
+        "per:alternate_names", "per:children", "per:other_family", "per:parents",
+        "per:siblings",
+    }
 
 
 def test_org_affiliation_patterns():
@@ -31,3 +38,4 @@ def test_org_affiliation_patterns():
     got = _votes(sent, [_m(0, "Org001", "ORGANIZATION"), _m(26, "Buddhism", "RELIGION")])
     assert ("org:political/religious_affiliation", "pattern") in got
     assert ("org:political/religious_affiliation", "trigger") in got
+    assert ("org:political/religious_affiliation", "statistical") in got
