@@ -143,7 +143,7 @@ def _topk_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from stanford_relation_extractor_spark.plans.pipeline import build_stages
 
-    return topk_sentences_per_entity(build_stages(spark, sf_dir)["sentences"], k=5)
+    return topk_sentences_per_entity(build_stages(spark, sf_dir)["sentences"])
 
 
 def _ner_majority(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -90,9 +90,7 @@ def main() -> None:
         # deterministic ~75% bag subsample per fold (bagging stand-in:
         # hash-mod instead of resampling-with-replacement — reproducible)
         keep = F.pmod(F.hash("entity_name", "slot_value", F.lit(b)), F.lit(4)) != 0
-        weights = miml_train(
-            feats.filter(keep), kb.filter(keep), epochs=epochs, mode="soft"
-        )
+        weights = miml_train(feats.filter(keep), kb.filter(keep), epochs=epochs)
         by_feature: dict[str, dict[str, float]] = {}
         for r in weights.collect():
             by_feature.setdefault(r["feature"], {})[r["relation"]] = r["weight"]

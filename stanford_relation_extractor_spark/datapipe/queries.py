@@ -65,14 +65,14 @@ def _queries_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings")
-    return similarity.knn_bruteforce(emb, _queries_vec(spark, sf_dir), k=3)
+    return similarity.knn_bruteforce(emb, _queries_vec(spark, sf_dir))
 
 
 def q_lsh_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings")
     # a single band of all 8 bits: candidates share the whole signature
     return similarity.lsh_knn_banded(
-        emb, _queries_vec(spark, sf_dir), k=3, n_bits=8, band_bits=8
+        emb, _queries_vec(spark, sf_dir), n_bits=8, band_bits=8
     )
 
 
@@ -106,7 +106,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_lsh_knn_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings")
-    return similarity.lsh_knn_banded(emb, _queries_vec(spark, sf_dir), k=3)
+    return similarity.lsh_knn_banded(emb, _queries_vec(spark, sf_dir))
 
 
 def q_simhash_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:

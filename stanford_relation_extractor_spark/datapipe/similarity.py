@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 EMBEDDING_DIM = 64  # width of the embeddings table's vectors
+KNN_K = 3  # neighbors per query, both the exact and the LSH search
 
 
 def cosine(a: F.Column, b: F.Column) -> F.Column:
@@ -42,10 +43,8 @@ def cosine(a: F.Column, b: F.Column) -> F.Column:
     return dot / (norm(a) * norm(b))
 
 
-def knn_bruteforce(
-    vectors: DataFrame, queries: DataFrame, k: int = 3
-) -> DataFrame:
-    """(query_id, rank, neighbor_id): exact top-k cosine neighbors.
+def knn_bruteforce(vectors: DataFrame, queries: DataFrame) -> DataFrame:
+    """(query_id, rank, neighbor_id): exact top-``KNN_K`` cosine neighbors.
 
     ``queries``: (query_id, query_vec). The query side is broadcast, so
     the "cross join" is a map-side nested loop over each partition —
@@ -60,7 +59,7 @@ def knn_bruteforce(
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= KNN_K)
         .select("query_id", "rank", "neighbor_id")
     )
 
@@ -121,17 +120,17 @@ def _banded(sig: DataFrame, id_col: str, n_bits: int, band_bits: int) -> DataFra
 def lsh_knn_banded(
     vectors: DataFrame,
     queries: DataFrame,
-    k: int = 3,
     n_bits: int = 16,
     band_bits: int = 4,
 ) -> DataFrame:
-    """Approximate top-k with banded (multi-probe) LSH: a candidate must
-    share at least ONE band of the hyperplane signature instead of all
-    n_bits — the standard recall fix for single-table hyperplane LSH
-    (round-1 oracle showed all-bits matching returns 7/15 of the exact
-    neighbors). Candidate volume per band is ~n/2^band_bits; the union
-    over n_bits/band_bits bands is still far from O(n^2) and every join
-    is a plain equi-join on (band, band_value)."""
+    """Approximate top-``KNN_K`` with banded (multi-probe) LSH: a
+    candidate must share at least ONE band of the hyperplane signature
+    instead of all n_bits — the standard recall fix for single-table
+    hyperplane LSH (round-1 oracle showed all-bits matching returns 7/15
+    of the exact neighbors). Candidate volume per band is
+    ~n/2^band_bits; the union over n_bits/band_bits bands is still far
+    from O(n^2) and every join is a plain equi-join on (band,
+    band_value)."""
     sig = lsh_bucket_signatures(vectors, n_bits)
     vb = _banded(sig, "vec_id", n_bits, band_bits)
     qsig = (
@@ -159,6 +158,6 @@ def lsh_knn_banded(
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= KNN_K)
         .select("query_id", "rank", "neighbor_id")
     )

@@ -1,16 +1,21 @@
-"""groupBy().applyInPandas semantics at mapInPandas cost.
+"""Grouped scans over one clustered Arrow stream.
 
 ``groupBy(keys).applyInPandas(fn)`` ships every group as its own Arrow
 exchange and Python call — measured ~1-3ms of pure overhead per group,
 i.e. ~15s for a few thousand tiny groups (guide §4: the boundary cost,
-not the compute). ``map_groups_in_pandas`` clusters the stream on the
-group key once (one explicit scale-derived repartition + in-partition
-sort), then iterates the groups INSIDE each Arrow batch:
+not the compute). The grouped operators here instead cluster the stream
+on the group key once (one explicit scale-derived repartition +
+in-partition sort) and pay the Python boundary once per Arrow batch:
 
-* a group that straddles an Arrow batch boundary is carried over to the
-  next batch, so every group is judged exactly once on complete rows;
-* per-group outputs are buffered and emitted as consolidated frames so
-  the return path is a few Arrow batches per task, not one per group.
+* ``complete_groups`` turns the clustered batches into frames of
+  complete groups: the group at the end of each batch may continue in
+  the next one, so it is carried over and handed on there, and every
+  group is seen exactly once on complete rows. It is the one copy of
+  that carry-over: ``map_groups_in_pandas`` and
+  ``consistency.greedy_consistency`` both scan through it.
+* ``map_groups_in_pandas`` applies a pandas function per group and
+  buffers the outputs into consolidated frames, so the return path is a
+  few Arrow batches per task, not one per group.
 
 Row ORDER differs from applyInPandas (group iteration order inside
 partitions); row SET is identical — callers of this helper are
@@ -27,6 +32,34 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import ArrayType, MapType, StructType
 
 _EMIT_ROWS = 4096
+
+
+def complete_groups(
+    batches: Iterator[pd.DataFrame], keys: list[str]
+) -> Iterator[pd.DataFrame]:
+    """Frames of complete ``keys`` groups from batches clustered on
+    ``keys``: the rows sharing the last row's key are held back and
+    prepended to the next batch (a non-empty frame is yielded only when
+    it ends on a group boundary or the stream ends)."""
+    carry: pd.DataFrame | None = None
+    for pdf in batches:
+        if carry is not None and len(carry):
+            pdf = pd.concat([carry, pdf], ignore_index=True)
+        if not len(pdf):
+            continue
+        is_last = None
+        for k in keys:
+            v = pdf[k].iloc[-1]
+            # NaN-safe: `col == NaN` is all-False, which would split a
+            # NULL-keyed group across batches instead of carrying it.
+            cond = pdf[k].isna() if pd.isna(v) else (pdf[k] == v)
+            is_last = cond if is_last is None else (is_last & cond)
+        carry = pdf[is_last]
+        body = pdf[~is_last]
+        if len(body):
+            yield body
+    if carry is not None and len(carry):
+        yield carry
 
 
 def map_groups_in_pandas(
@@ -56,12 +89,9 @@ def map_groups_in_pandas(
     src = df.repartition(parts, *keys).sortWithinPartitions(*keys)
 
     def runner(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        leftover: pd.DataFrame | None = None
         buffer: list[pd.DataFrame] = []
         buffered = 0
-
-        def emit_groups(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
-            nonlocal buffered
+        for pdf in complete_groups(batches, keys):
             # dropna=False: groupBy().applyInPandas treats NULL keys as a
             # group; pandas silently drops NaN groups by default.
             for _, g in pdf.groupby(keys, sort=False, dropna=False):
@@ -73,25 +103,6 @@ def map_groups_in_pandas(
                     yield pd.concat(buffer, ignore_index=True)
                     buffer.clear()
                     buffered = 0
-
-        for pdf in batches:
-            if leftover is not None and len(leftover):
-                pdf = pd.concat([leftover, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            last_key = tuple(pdf[k].iloc[-1] for k in keys)
-            is_last = None
-            for k, v in zip(keys, last_key):
-                # NaN-safe: `col == NaN` is all-False, which would split a
-                # NULL-keyed group across batches instead of carrying it.
-                cond = pdf[k].isna() if pd.isna(v) else (pdf[k] == v)
-                is_last = cond if is_last is None else (is_last & cond)
-            leftover = pdf[is_last]
-            body = pdf[~is_last]
-            if len(body):
-                yield from emit_groups(body)
-        if leftover is not None and len(leftover):
-            yield from emit_groups(leftover)
         if buffer:
             yield pd.concat(buffer, ignore_index=True)
 

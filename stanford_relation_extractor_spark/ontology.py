@@ -105,10 +105,6 @@ PER_RELATION_THRESHOLDS: dict[str, float] = {
     "org:dissolved": 0.75,
 }
 
-# Entity-slot max token distance (Props.java:837 / Utils.java:353-365).
-MAX_ENTITY_SLOT_DISTANCE = 1000
-
-
 # Declared plausibly-overlapping relation pairs -- the raw map of
 # `RelationType.plausibleOverlappingRelations` (RelationType.java:319-345),
 # before the static-init cleanup at RelationType.java:347-355 (which drops

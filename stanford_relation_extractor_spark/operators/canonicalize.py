@@ -35,6 +35,10 @@ from pyspark.sql import functions as F
 
 from ..functions.text import block_keys, is_valid_alternate_name, same_entity
 
+# Label-propagation round ceiling of ``connected_components``: every caller
+# needs convergence, so one ceiling, read at call time (tests lower it).
+CC_MAX_ITER = 50
+
 
 def _lineage_cut(df: DataFrame, checkpoint_dir: str | None) -> DataFrame:
     if checkpoint_dir is not None:
@@ -45,9 +49,7 @@ def _lineage_cut(df: DataFrame, checkpoint_dir: str | None) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 25, checkpoint_dir: str | None = None
-) -> DataFrame:
+def connected_components(edges: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
     """(node, component) with component = min node id in the component.
 
     ``edges`` (src, dst) is treated as undirected; node ids are strings
@@ -55,7 +57,7 @@ def connected_components(
     Convergence is tested every 4 rounds (each test is a driver
     round-trip) and lineage is cut every 8 (see module docstring).
     Raises ``RuntimeError`` when labels still change in round
-    ``max_iter``: truncated labels would map nodes onto
+    ``CC_MAX_ITER``: truncated labels would map nodes onto
     non-representatives.
     """
     sym = (
@@ -72,7 +74,7 @@ def connected_components(
     labels = _lineage_cut(labels, checkpoint_dir)
     sym = _lineage_cut(sym, checkpoint_dir)
 
-    for it in range(max_iter):
+    for it in range(CC_MAX_ITER):
         nbr_min = (
             sym.join(labels, sym["a"] == labels["node"])
             .groupBy(F.col("b").alias("node2"))
@@ -88,7 +90,7 @@ def connected_components(
                 (F.col("nbr_component") < F.col("component")).alias("_changed"),
             )
         )
-        last = it == max_iter - 1
+        last = it == CC_MAX_ITER - 1
         if (it + 1) % 8 == 0 or last:
             new_labels = _lineage_cut(new_labels, checkpoint_dir)
         labels = new_labels.drop("_changed")
@@ -98,7 +100,7 @@ def connected_components(
             return labels
     raise RuntimeError(
         f"connected components did not converge: labels of {labels.count()} "
-        f"nodes still changed in round max_iter={max_iter}"
+        f"nodes still changed in round CC_MAX_ITER={CC_MAX_ITER}"
     )
 
 
@@ -392,7 +394,7 @@ def build_canon_map(
     # connected_components raises rather than truncate. Its first
     # convergence test (round 4) already passes on the typical
     # diameter<=3 alias/link graph.
-    comps = connected_components(edges, max_iter=50)
+    comps = connected_components(edges)
     sources = directed.select(F.col("src").alias("node")).distinct()
     targets = directed.select(F.col("dst").alias("node")).distinct()
     pure = targets.join(sources, "node", "left_anti")

@@ -213,12 +213,13 @@ def greedy_consistency(triples: DataFrame) -> DataFrame:
     by entity then W4, and one ``mapInPandas`` pass that scans the sorted
     rows linearly: the Python boundary is paid once per Arrow batch, not
     once per entity group (a pandas call per group made the in-session
-    pipeline's warm run ~1.6x dearer). The entity group at the
-    end of a batch may continue in the next one, so it is carried over
-    and judged there on complete rows.
+    pipeline's warm run ~1.6x dearer). ``functions.grouped.complete_groups``
+    carries the entity group at the end of a batch into the next one, so
+    every group is judged on complete rows.
     """
     import pandas as pd
 
+    from ..functions.grouped import complete_groups
     from ..ontology import RELATION_BY_NAME, plausibly_cooccurs
 
     single = {n for n, r in RELATION_BY_NAME.items() if r.cardinality == "SINGLE"}
@@ -262,19 +263,8 @@ def greedy_consistency(triples: DataFrame) -> DataFrame:
         return keep
 
     def scan(batches):
-        carry = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            last = (pdf["entity_name"] == pdf["entity_name"].iloc[-1]) & (
-                pdf["entity_type"] == pdf["entity_type"].iloc[-1]
-            )
-            carry, body = pdf[last], pdf[~last]
-            yield body.loc[keep_mask(body)]
-        if carry is not None:
-            yield carry.loc[keep_mask(carry)]
+        for pdf in complete_groups(batches, ["entity_name", "entity_type"]):
+            yield pdf.loc[keep_mask(pdf)]
 
     # EXPLICIT partition count: a bare keyed repartition is AQE-coalesced
     # to ~64MB partitions — measured 4 tasks carrying the whole tail at

@@ -63,8 +63,6 @@ def official_score(
     responses: DataFrame,
     gold: DataFrame,
     cardinality: dict[str, str],
-    all_query_ids: list[str] | None = None,
-    anydoc: bool = False,
 ) -> DataFrame:
     """The official TAC slot-filling scorer (`evaluate/CustomSFScore.java:137-510`,
     the SFScore2010 clone), re-expressed as joins/windows — full X/R/W
@@ -72,7 +70,7 @@ def official_score(
 
     * judgments key on (query, relation, doc, slot); equivalence class 0
       generates a fresh singleton class (``eclass_generator``); duplicate
-      keys resolve first-CORRECT-wins, else last-line-wins (the anydoc
+      keys resolve first-CORRECT-wins, else last-line-wins (the
       keep-correct rule, CustomSFScore.java:228-233);
     * **single-valued slots** score only the FIRST system response
       (responseList.get(0)); NIL responses count nothing;
@@ -83,10 +81,10 @@ def official_score(
     * unjudged responses default WRONG; X (inexact) and R (redundant)
       count against precision but never as correct (the anti-credit the
       set-level ``pr_score`` cannot express);
-    * recall denominator: with ``all_query_ids`` the TRUE recall over
-      every query x relation (single-valued: has-a-correct-answer;
-      list-valued: #equivalence classes); without it the reference's
-      "fake recall" over answered slots only;
+    * recall denominator: the reference's "fake recall" over answered
+      slots only (single-valued: has-a-correct-answer; list-valued:
+      #equivalence classes). Its any-doc switch and its query list for
+      true recall are not ported: no run here scores either way;
     * relations missing from ``cardinality`` score as slotType 'error'
       and are excluded (CustomSFScore.java:981-995).
 
@@ -95,9 +93,8 @@ def official_score(
     ``parse_gold_tab`` frame. Returns one row (OFFICIAL_SCORE_SCHEMA).
     """
     spark = responses.sparkSession
-    doc = (F.lit("*") if anydoc else F.col("docid")).alias("docid")
     g = gold.select(
-        "line_id", "query_id", "relation", doc, "slot_value", "judgment",
+        "line_id", "query_id", "relation", "docid", "slot_value", "judgment",
         F.when(
             F.col("equiv_class").isNull() | (F.col("equiv_class") == 0),
             F.concat(F.lit("g"), F.col("line_id")),
@@ -119,9 +116,7 @@ def official_score(
         )
     )
     resp = responses.select(
-        "query_id", "relation",
-        (F.lit("*") if anydoc else F.col("docid")).alias("docid"),
-        "slot_value", "resp_order",
+        "query_id", "relation", "docid", "slot_value", "resp_order"
     ).join(card, "relation")
 
     # single-valued: first response only
@@ -160,16 +155,11 @@ def official_score(
     n_inexact = jc.get("X", 0)
     n_responses = sum(jc.values())
 
-    gold_c = g.filter(F.col("judgment") == "C")
-    if all_query_ids is not None:
-        scope = F.broadcast(
-            spark.createDataFrame([(q,) for q in all_query_ids], "query_id string")
-        )
-        in_scope = gold_c.join(scope, "query_id", "left_semi")
-    else:
-        # fake recall: only slots the system actually answered
-        slots = resp.select("query_id", "relation").distinct()
-        in_scope = gold_c.join(slots, ["query_id", "relation"], "left_semi")
+    # fake recall: only slots the system actually answered
+    slots = resp.select("query_id", "relation").distinct()
+    in_scope = g.filter(F.col("judgment") == "C").join(
+        slots, ["query_id", "relation"], "left_semi"
+    )
     sv_ans = (
         in_scope.join(card, "relation")
         .filter(F.col("card") == "SINGLE")

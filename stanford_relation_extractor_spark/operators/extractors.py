@@ -26,7 +26,8 @@ rows produced by stage 1:
 Pair generation itself mirrors `RelationMentionAnnotator.java:95-251`:
 entity mentions are PERSON/ORGANIZATION spans; slots are all other
 mentions in the same sentence (plausibility-gated by the relation
-signature table, P4), subject to the span-distance predicate (P5).
+signature table, P4). The span-distance predicate (P5) needs no check:
+the sentence-length cap (``mentions.MAX_SENT_TOKENS``) implies it.
 The per-sentence cross join happens *inside* the Arrow batch — mention
 lists are tiny, so no shuffle join is ever issued for pairing (J3).
 
@@ -44,7 +45,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from ..ontology import MAX_ENTITY_SLOT_DISTANCE, compatible_relations
+from ..ontology import compatible_relations
 
 E = "⟨E⟩"
 S = "⟨S⟩"
@@ -359,11 +360,6 @@ def votes_for_sentence(
     for ent in entities:
         for slot in mentions:
             if slot is ent:
-                continue
-            # span-distance predicate (P5, Utils.java:353-365) — token
-            # distance approximated by whitespace distance.
-            gap = sent[min(ent["end"], slot["end"]) : max(ent["begin"], slot["begin"])]
-            if gap.count(" ") > MAX_ENTITY_SLOT_DISTANCE:
                 continue
             rels = compatible_relations(ent["ner"], slot["ner"])
             if not rels:

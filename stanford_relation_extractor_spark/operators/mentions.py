@@ -42,8 +42,10 @@ SENTENCES_SCHEMA = (
 # the CoreNLP-ssplit-style abbreviation guard.
 _SENT_SPLIT = re.compile(r"(?<=[.!?])(?<![A-Z]\.)\s+")
 
-# Default sentence-length cap, tokens (reference drops sentences >150
-# tokens on the provenance path, SimpleSlotFiller.java:550).
+# Sentence-length cap, tokens (reference drops sentences >150 tokens on
+# the provenance path, SimpleSlotFiller.java:550). It also implies the
+# reference's P5 entity-slot distance limit (1000 tokens, Props.java:837):
+# no two mentions of a kept sentence are that far apart.
 MAX_SENT_TOKENS = 150
 
 

@@ -3,8 +3,8 @@
 * ``topk_sentences_per_entity`` — the per-entity sentence budget of
   `stanford-kbp/.../slotfilling/evaluate/SimpleSlotFiller.java:366-423`
   (TEST_SENTENCES_PER_ENTITY, Props.java:169): dedup by sentence text,
-  then keep the first k sentences per entity in stable
-  (conv_id, turn_idx, sent_idx) order.
+  then keep the first ``SENTENCES_PER_ENTITY`` sentences per entity in
+  stable (conv_id, turn_idx, sent_idx) order.
 * ``sentence_competition`` — GraphConsistencyPostProcessors.java:470-510
   (W5): among votes for the same entity pair within one sentence, keep
   only the best-scoring relation mention.
@@ -18,11 +18,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 ENTITY_NERS = ("PERSON", "ORGANIZATION")  # the mention types that head slots
+SENTENCES_PER_ENTITY = 5  # the per-entity sentence budget (W7)
 
 
-def topk_sentences_per_entity(sentences: DataFrame, k: int = 50) -> DataFrame:
-    """(entity_name, conv_id, turn_idx, sent_idx, sent_text) — at most k
-    distinct sentences per entity, stable order (W7)."""
+def topk_sentences_per_entity(sentences: DataFrame) -> DataFrame:
+    """(entity_name, conv_id, turn_idx, sent_idx, sent_text) — at most
+    ``SENTENCES_PER_ENTITY`` distinct sentences per entity, stable order
+    (W7)."""
     ent_sent = sentences.select(
         "conv_id", "turn_idx", "sent_idx", "sent_text", F.explode("mentions").alias("m")
     ).filter(F.col("m.ner").isin(*ENTITY_NERS)).select(
@@ -41,7 +43,7 @@ def topk_sentences_per_entity(sentences: DataFrame, k: int = 50) -> DataFrame:
     budget_w = Window.partitionBy("entity_name").orderBy("conv_id", "turn_idx", "sent_idx")
     return (
         deduped.withColumn("_r", F.row_number().over(budget_w))
-        .filter(F.col("_r") <= k)
+        .filter(F.col("_r") <= SENTENCES_PER_ENTITY)
         .drop("_r")
     )
 

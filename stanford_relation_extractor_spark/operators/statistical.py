@@ -18,8 +18,10 @@ per-mention features -> linear scores against frozen weight tables
 * Training is offline (scripts/train_statistical.py):
   ``feature_count_filter`` (A8, drop features with corpus frequency < 5,
   `Props.featureCountThreshold`, `common/Props.java:227`), then
-  ``miml_train`` — distributed EM over (entity, slot) bags, refitting the
-  log-odds table ``train_weights_df`` each round.
+  ``miml_train`` — distributed soft EM over (entity, slot) bags,
+  refitting the log-odds table ``train_weights_df`` from posterior mass
+  each round. The reference's hard (Viterbi) EM is not ported: the
+  frozen model was trained with soft EM only.
 """
 
 from __future__ import annotations
@@ -126,8 +128,6 @@ def combined_relation_probs(
     defaults `common/Props.java:308-312`). Deterministic: bags iterate
     in list order, relations in support order — the oracle re-derives
     the identical floats."""
-    if len(bag_weights) == 1:
-        return softmax_scores(feats, bag_weights[0], relations)
     acc = {rel: 1.0 for rel in relations}
     for w in bag_weights:
         p = softmax_scores(feats, w, relations)
@@ -188,68 +188,15 @@ BAG_KEY = ["entity_name", "slot_value"]
 NIL = "NIL"
 
 
-def _score_candidates(
-    features: DataFrame, mentions: DataFrame, labels: DataFrame, weights: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """The E-step both training modes share. Returns ``(cscored,
-    forced)``: every mention paired with each candidate label (its bag's
-    labels plus NIL) and the summed feature weight ``s``; and the
-    at-least-once pins, the best-scoring mention of each (bag, positive
-    label) assigned that label
-    (`JointBayesRelationExtractor.java:1500-1560`)."""
-    from pyspark.sql import Window
-
-    scores = (
-        features.join(weights, "feature")
-        .groupBy(*MENTION_KEY, "relation")
-        .agg(F.sum("weight").alias("s"))
-    )
-    cand = (
-        mentions.join(labels, BAG_KEY)
-        .select(*MENTION_KEY, "relation")
-        .unionByName(mentions.select(*MENTION_KEY, F.lit(NIL).alias("relation")))
-    )
-    cscored = cand.join(scores, [*MENTION_KEY, "relation"], "left").fillna({"s": 0.0})
-    w_rel = Window.partitionBy(*BAG_KEY, "relation").orderBy(
-        F.col("s").desc(), *[F.col(c).asc() for c in MENTION_KEY]
-    )
-    forced = (
-        cscored.filter(F.col("relation") != NIL)
-        .withColumn("_rn", F.row_number().over(w_rel))
-        .filter(F.col("_rn") == 1)
-        .select(*MENTION_KEY, F.col("relation").alias("z"))
-    )
-    return cscored, forced
-
-
-def _hard_assignment(cscored: DataFrame, forced: DataFrame) -> DataFrame:
-    """(mention key, z): the pins, and the argmax label (NIL admissible)
-    for every other mention."""
-    from pyspark.sql import Window
-
-    w_m = Window.partitionBy(*MENTION_KEY).orderBy(
-        F.col("s").desc(), F.col("relation").asc()
-    )
-    argmax = (
-        cscored.withColumn("_rn", F.row_number().over(w_m))
-        .filter(F.col("_rn") == 1)
-        .select(*MENTION_KEY, F.col("relation").alias("z"))
-    )
-    rest = argmax.join(
-        forced.select(*MENTION_KEY).distinct(), MENTION_KEY, "left_anti"
-    )
-    return forced.unionByName(rest)
-
-
 def miml_train(
     features: DataFrame,
     bag_labels: DataFrame,
     epochs: int = 2,
-    mode: str = "hard",
 ) -> DataFrame:
     """A7 — MIML-lite bag-level training, the EM shape of
     `classify/JointBayesRelationExtractor.java:429-560` (z-labels per
-    mention, y-labels per bag) re-expressed as DataFrame rounds:
+    mention, y-labels per bag) re-expressed as DataFrame rounds of soft
+    EM:
 
     * bag = (entity_name, slot_value) group of mentions (`KBPDataset`
       grouping, SURVEY.md A7); ``bag_labels`` holds the
@@ -259,16 +206,14 @@ def miml_train(
       datums).
     * E-step: re-score every mention against the current weight table
       (join on feature — never a driver collect), restrict candidates
-      to the bag's labels ∪ {NIL}. ``mode="hard"`` takes the argmax z
-      per mention; ``mode="soft"`` keeps the FULL posterior over the
-      candidate set (softmax of the linear scores — the
-      posterior-weighted inner loop of JointBayes's EM rather than its
-      Viterbi approximation). In both modes each (bag, positive label)
-      pins its best-scoring mention to that label with mass 1 (the
-      at-least-once constraint,
+      to the bag's labels ∪ {NIL} and keep the FULL posterior over them
+      (softmax of the linear scores — the posterior-weighted inner loop
+      of JointBayes's EM; the reference's Viterbi approximation is not
+      ported). Each (bag, positive label) pins its best-scoring mention
+      to that label with mass 1 (the at-least-once constraint,
       `JointBayesRelationExtractor.java:1500-1560` y-aggregation).
-    * M-step: refit the log-odds table from (feature, z) — counts in
-      hard mode, posterior mass in soft mode.
+    * M-step: refit the log-odds table from (feature, z) weighted by
+      posterior mass.
 
     Everything is joins/windows/aggregations over DataFrames; the model
     never leaves the cluster. Returns the final (feature, relation,
@@ -276,11 +221,17 @@ def miml_train(
     """
     from pyspark.sql import Window
 
-    if mode not in ("hard", "soft"):
-        raise ValueError(f"unknown miml_train mode {mode!r}")
-
     mentions = features.select(*MENTION_KEY).distinct()
     labels = bag_labels.select(*BAG_KEY, "relation").distinct()
+    cand = (
+        mentions.join(labels, BAG_KEY)
+        .select(*MENTION_KEY, "relation")
+        .unionByName(mentions.select(*MENTION_KEY, F.lit(NIL).alias("relation")))
+    )
+    w_rel = Window.partitionBy(*BAG_KEY, "relation").orderBy(
+        F.col("s").desc(), *[F.col(c).asc() for c in MENTION_KEY]
+    )
+    w_m = Window.partitionBy(*MENTION_KEY)
 
     def refit(assign: DataFrame, weighted: bool) -> DataFrame:
         cols = ["feature", F.col("z").alias("relation")]
@@ -299,20 +250,24 @@ def miml_train(
     weights = refit(init, weighted=False).localCheckpoint(eager=True)
 
     for _ in range(epochs):
-        cscored, forced = _score_candidates(features, mentions, labels, weights)
-        if mode == "hard":
-            weights = refit(_hard_assignment(cscored, forced), weighted=False)
-        else:
-            # soft posterior over the candidate set: softmax of the
-            # linear scores within each mention's window
-            w_m_all = Window.partitionBy(*MENTION_KEY)
-            soft = cscored.withColumn(
-                "_e", F.exp(F.col("s") - F.max("s").over(w_m_all))
-            ).withColumn("wt", F.col("_e") / F.sum("_e").over(w_m_all))
-            rest = soft.join(
-                forced.select(*MENTION_KEY).distinct(), MENTION_KEY, "left_anti"
-            ).select(*MENTION_KEY, F.col("relation").alias("z"), "wt")
-            assign = forced.withColumn("wt", F.lit(1.0)).unionByName(rest)
-            weights = refit(assign, weighted=True)
-        weights = weights.localCheckpoint(eager=True)
+        scores = (
+            features.join(weights, "feature")
+            .groupBy(*MENTION_KEY, "relation")
+            .agg(F.sum("weight").alias("s"))
+        )
+        cscored = cand.join(scores, [*MENTION_KEY, "relation"], "left").fillna({"s": 0.0})
+        forced = (
+            cscored.filter(F.col("relation") != NIL)
+            .withColumn("_rn", F.row_number().over(w_rel))
+            .filter(F.col("_rn") == 1)
+            .select(*MENTION_KEY, F.col("relation").alias("z"))
+        )
+        soft = cscored.withColumn(
+            "_e", F.exp(F.col("s") - F.max("s").over(w_m))
+        ).withColumn("wt", F.col("_e") / F.sum("_e").over(w_m))
+        rest = soft.join(
+            forced.select(*MENTION_KEY).distinct(), MENTION_KEY, "left_anti"
+        ).select(*MENTION_KEY, F.col("relation").alias("z"), "wt")
+        assign = forced.withColumn("wt", F.lit(1.0)).unionByName(rest)
+        weights = refit(assign, weighted=True).localCheckpoint(eager=True)
     return weights

@@ -69,3 +69,25 @@ def test_provenance_from_argmax_extractor_deterministic(spark):
     assert row["provenance_extractor"] == "pattern"
     # ties on weight broken by (conv_id, turn_idx, ...) total order
     assert (row["conv_id"], row["turn_idx"]) == ("c1", 3)
+
+
+def test_agree_most_gate_holds_through_stage_6(spark):
+    """A lone strong pattern vote clears the global 0.5 threshold on its
+    own (0.9), so only the AGREE_MOST gate keeps it out of the final
+    triples; a two-extractor key on the same entity and relation is the
+    control that stage 6 keeps."""
+    from stanford_relation_extractor_spark.operators.consistency import apply_consistency
+
+    rel = "per:cities_of_residence"  # PERSON -> CITY, LIST, global threshold
+    votes = [
+        ("c1", 0, 0, "John Smith", "PERSON", 0, 10, slot, "CITY", 20, 30, rel, ex, w)
+        for slot, ex, w in (
+            ("Shelbyville", "pattern", 0.9),
+            ("Springfield", "pattern", 0.9),
+            ("Springfield", "trigger", 0.8),
+        )
+    ]
+    out = apply_consistency(combine_votes(spark.createDataFrame(votes, VOTE_SCHEMA)))
+    assert {(r["relation"], r["slot_value"]) for r in out.collect()} == {
+        (rel, "Springfield")
+    }

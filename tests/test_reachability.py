@@ -19,10 +19,14 @@ The second scan covers options: every defaulted parameter of a
 top-level package function or of a method of a top-level class (nested
 closures that bind ``x=x`` are not options). A parameter is set when a
 production call (in the roots or the package), matched by the callee's
-bare name, passes it by keyword, by position, through ``*``/``**``, or
-via ``functools.partial``. A parameter no production call sets is a
-constant in disguise and fails here unless ``PARAM_ALLOWLIST`` names it
-as ``"func(param)"`` with a reason.
+bare name, passes it by keyword, by position, through ``**``, or via
+``functools.partial``; a ``*`` argument reaches no defaulted parameter.
+Each call also gives the parameter a value: the literal it passes, the
+default when it leaves the parameter out, or "varies" for any other
+expression (and for ``**``). A parameter no production call sets, or one
+whose production values are a single literal, is a constant in disguise
+and fails here unless ``PARAM_ALLOWLIST`` names it as ``"func(param)"``
+with a reason.
 """
 
 from __future__ import annotations
@@ -40,7 +44,7 @@ ALLOWLIST: dict[str, str] = {
 }
 
 
-# "func(param)" -> why the option stays without a production call setting it
+# "func(param)" -> why the option stays without production calls varying it
 PARAM_ALLOWLIST: dict[str, str] = {
     **{
         f"{fn}(path)": "deployment path of reference data, kept configurable"
@@ -165,30 +169,61 @@ def _callee(node: ast.expr) -> str | None:
     return None
 
 
-def scan_params() -> tuple[set[str], set[str]]:
+VARIES = "<varies>"
+
+
+def _value(node: ast.expr) -> str:
+    """A literal's repr, or ``VARIES`` for any other expression."""
+    try:
+        return repr(ast.literal_eval(node))
+    except (ValueError, TypeError):
+        return VARIES
+
+
+def scan_params() -> tuple[set[str], set[str], dict[str, set[str]]]:
     """(every defaulted parameter as "func(param)", those a production
-    call sets)."""
+    call sets, the values production calls give each).
+
+    A call gives a defaulted parameter the literal it passes (by
+    position or keyword), the default when it leaves the parameter out,
+    and ``VARIES`` for any other expression. A ``*`` argument reaches
+    no defaulted parameter (nor do positional arguments after it); a
+    ``**`` argument sets them all to ``VARIES``. ``functools.partial``
+    records only the parameters it binds."""
     options: set[str] = set()
-    positional: dict[str, list[list[str]]] = {}
+    # bare name -> per definition: (positional params, {defaulted param: default})
+    sigs: dict[str, list[tuple[list[str], dict[str, ast.expr]]]] = {}
     for fn, bound in _package_functions():
         a = fn.args
         pos = [p.arg for p in a.posonlyargs + a.args]
-        positional.setdefault(fn.name, []).append(pos[1:] if bound else pos)
-        defaulted = pos[len(pos) - len(a.defaults):] if a.defaults else []
-        defaulted += [k.arg for k, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
-        options.update(f"{fn.name}({p})" for p in defaulted)
+        defaults = dict(zip(pos[len(pos) - len(a.defaults):], a.defaults))
+        defaults.update((k.arg, d) for k, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None)
+        sigs.setdefault(fn.name, []).append((pos[1:] if bound else pos, defaults))
+        options.update(f"{fn.name}({p})" for p in defaults)
 
     set_: set[str] = set()
+    values: dict[str, set[str]] = {}
 
-    def passes(name: str | None, args: list[ast.expr], keywords: list[ast.keyword]) -> None:
-        if name not in positional:
+    def passes(
+        name: str | None, args: list[ast.expr], keywords: list[ast.keyword], partial: bool
+    ) -> None:
+        if name not in sigs:
             return
-        if any(isinstance(x, ast.Starred) for x in args) or any(k.arg is None for k in keywords):
-            set_.update(o for o in options if o.startswith(f"{name}("))
-            return
-        for pos in positional[name]:
-            set_.update(f"{name}({p})" for p in pos[: len(args)])
-        set_.update(f"{name}({k.arg})" for k in keywords)
+        args = args[: next((i for i, x in enumerate(args) if isinstance(x, ast.Starred)), None)]
+        splat = any(k.arg is None for k in keywords)
+        by_kw = {k.arg: k.value for k in keywords if k.arg is not None}
+        for pos, defaults in sigs[name]:
+            given = {**dict(zip(pos, args)), **by_kw}
+            for p, default in defaults.items():
+                option = f"{name}({p})"
+                if splat or p in given:
+                    set_.add(option)
+                    value = VARIES if splat else _value(given[p])
+                elif partial:
+                    continue
+                else:
+                    value = _value(default)
+                values.setdefault(option, set()).add(value)
 
     sources = [f for root in ROOTS for f in _py_files(REPO / root)] + _py_files(PACKAGE)
     for f in sources:
@@ -196,14 +231,14 @@ def scan_params() -> tuple[set[str], set[str]]:
             if not isinstance(node, ast.Call):
                 continue
             if _callee(node.func) == "partial" and node.args:
-                passes(_callee(node.args[0]), node.args[1:], node.keywords)
+                passes(_callee(node.args[0]), node.args[1:], node.keywords, True)
             else:
-                passes(_callee(node.func), node.args, node.keywords)
-    return options, set_
+                passes(_callee(node.func), node.args, node.keywords, False)
+    return options, set_, values
 
 
 def test_every_option_is_set_by_a_production_call():
-    options, set_ = scan_params()
+    options, set_, _ = scan_params()
     unset = sorted(o for o in options - set_ if o not in PARAM_ALLOWLIST)
     assert not unset, (
         "defaulted parameters no production call sets (fold each into a "
@@ -212,7 +247,23 @@ def test_every_option_is_set_by_a_production_call():
     )
 
 
+def _single_valued(values: dict[str, set[str]]) -> set[str]:
+    """Options every production call gives the same literal."""
+    return {o for o, vs in values.items() if len(vs) == 1 and VARIES not in vs}
+
+
+def test_no_option_has_a_single_production_value():
+    options, set_, values = scan_params()
+    single = sorted(o for o in _single_valued(values) & set_ if o not in PARAM_ALLOWLIST)
+    assert not single, (
+        "defaulted parameters every production call gives the same literal "
+        "(fold each into a module constant, or add a PARAM_ALLOWLIST entry "
+        f"with a reason): {single}"
+    )
+
+
 def test_param_allowlist_is_not_stale():
-    options, set_ = scan_params()
-    stale = sorted(o for o in PARAM_ALLOWLIST if o not in options or o in set_)
-    assert not stale, f"PARAM_ALLOWLIST entries now set or no longer defined: {stale}"
+    options, set_, values = scan_params()
+    varied = set_ - _single_valued(values)
+    stale = sorted(o for o in PARAM_ALLOWLIST if o not in options or o in varied)
+    assert not stale, f"PARAM_ALLOWLIST entries now varied by production or no longer defined: {stale}"

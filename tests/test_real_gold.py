@@ -96,8 +96,7 @@ def test_official_cardinality_2013_covers_real_gold(spark):
 def test_official_score_hand_computed(spark):
     """CustomSFScore semantics on a hand-worked fixture: sv first-response
     rule, X/R/W anti-credit, repeated-equivalence-class redundancy,
-    unjudged->WRONG, NIL skip, unknown-relation exclusion, fake vs true
-    recall."""
+    unjudged->WRONG, NIL skip, unknown-relation exclusion, fake recall."""
     from stanford_relation_extractor_spark.operators.evaluate import official_score
 
     gold = spark.createDataFrame([
@@ -131,18 +130,6 @@ def test_official_score_hand_computed(spark):
     assert row.precision == pytest.approx(0.2)
     assert row.recall == pytest.approx(0.25)
     assert row.f1 == pytest.approx(2 * 0.2 * 0.25 / 0.45, abs=1e-6)
-
-    # true recall over q1+q2: q2's unanswered per:age joins the denominator
-    row_t = official_score(responses, gold, card, all_query_ids=["q1", "q2"]).first()
-    assert row_t.n_answers == 4 and row_t.recall == pytest.approx(0.25)
-
-    # anydoc: doc ids collapse; the sv first response ("45" @ D2) still
-    # judges X, but "44" would now match from any doc
-    responses_anydoc = spark.createDataFrame(
-        [("q1", "per:age", "D_OTHER", "44", 1)], RESP_SCHEMA
-    )
-    row_a = official_score(responses_anydoc, gold, card, anydoc=True).first()
-    assert row_a.n_correct == 1
 
 
 @needs_reference
