@@ -554,20 +554,6 @@ def _gazoracle():
     return gazetteer_oracle
 
 
-def _duckdb_materialize(sql: str) -> str:
-    """Force DuckDB to materialize the hot shared CTEs once instead of
-    re-inlining them per branch (the vote-union oracles reference
-    turns_base ~100x; inlining re-opens the parquet inputs per branch
-    and exhausts file descriptors). DuckDB-only syntax — these strings
-    are never run under Spark."""
-    for cte in (
-        "turns_base", "alias_dict", "vsurf",
-        "final_out", "inf1_raw", "inf1", "store2", "inf2_raw",
-    ):
-        sql = sql.replace(f"{cte} AS (", f"{cte} AS MATERIALIZED (", 1)
-    return sql
-
-
 def oracle_sql() -> dict[str, str]:
     from stanford_relation_extractor_spark.sources import oracle_rules as orc
     from stanford_relation_extractor_spark.sources.synthetic import (
@@ -576,7 +562,7 @@ def oracle_sql() -> dict[str, str]:
     )
 
     def finish(d: dict[str, str]) -> dict[str, str]:
-        return {k: _duckdb_materialize(v) for k, v in d.items()}
+        return {k: orc.duckdb_materialize(v) for k, v in d.items()}
 
     return finish({
         "transcripts_synth": oracle_query(

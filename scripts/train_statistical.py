@@ -61,7 +61,7 @@ def main() -> None:
         transcripts_df,
     )
 
-    spark = get_spark("train_statistical", cpus=16, shuffle_partitions=16)
+    spark = get_spark("train_statistical")
     t = transcripts_df(spark, sf_dir)
     config = detector_config(country_gazetteer(spark, sf_dir))
 

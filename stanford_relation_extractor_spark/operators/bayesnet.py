@@ -307,16 +307,15 @@ def _log_score(assign, factors) -> float:
 def _components(n: int, factors) -> list[list[int]]:
     """The factor graph's connected components over variables 0..n-1,
     isolated variables included: each sorted, ordered by minimum."""
-    comp = union_find_components(
+    comps = union_find_components(
         (a, v)
         for v, _prior, rules in factors
         for _arity, antes, _lpt in rules
         for a in antes
     )
-    comps: dict[int, list[int]] = {}
-    for v in range(n):
-        comps.setdefault(comp.get(v, v), []).append(v)
-    return [vs for _r, vs in sorted(comps.items())]
+    linked = {v for members in comps for v in members}
+    comps += [[v] for v in range(n) if v not in linked]
+    return sorted(sorted(members) for members in comps)
 
 
 def _solve_exact_np(
@@ -443,10 +442,10 @@ def infer_map_triples(
         "entity_name", "entity_type", "relation", "slot_value", "slot_ner",
         "score",
     )
-    # lineage cut: `t` feeds the cluster-edge derivation (which the CC
-    # loop re-reads) AND the keyed grounding join — uncut, the upstream
-    # pipeline replays ~4x (measured 8s build + 6s run at sf0.01 vs
-    # ~3s total with the cut)
+    # lineage cut: `t` feeds the cluster-edge derivation (read once by
+    # connected_components' size probe, every round beyond its gate) AND
+    # the keyed grounding join; a caller's triples may be a lazy pipeline
+    # plan (the driver query's are), which uncut would replay per read
     t = t.localCheckpoint(eager=True)
     # cluster only through slots that can themselves head rules
     # (PERSON/ORGANIZATION): a COUNTRY or CITY slot value never appears

@@ -7,13 +7,13 @@ representative, rewrite edges) as:
 1. an undirected same-entity edge table (produced by the linker cascade
    or supplied directly);
 2. deterministic connected components (no GraphFrames dependency,
-   SURVEY.md §4) by min-label propagation: each node adopts the minimum
-   component id among itself and its neighbors. O(diameter) rounds of
-   one co-partitioned join each — alias/link chains have diameter <= 3
-   on transcripts. Lineage is cut every 8 rounds; with a
-   ``checkpoint_dir`` the cut is a *reliable* ``checkpoint()`` (HDFS/
-   object-store) so executor loss mid-computation cannot kill the job
-   — ``localCheckpoint`` (executor-local) is only the sandbox default.
+   SURVEY.md §4), component id = minimum node: union-find on the driver
+   for edge sets under ``CANON_LOCAL_MAX_SURFACES``, else min-label
+   propagation: O(diameter) rounds of one co-partitioned join each —
+   alias/link chains have diameter <= 3 on transcripts. Lineage is cut
+   every 8 rounds; with a ``checkpoint_dir`` the cut is a *reliable*
+   ``checkpoint()`` (HDFS/object-store) so executor loss mid-computation
+   cannot kill the job — ``localCheckpoint`` is only the sandbox default.
 3. triple rewrite: replace entity by its component representative.
 
 The canon map (``build_canon_map``) has two paths, picked by the size
@@ -39,6 +39,18 @@ from ..functions.text import block_keys, is_valid_alternate_name, same_entity
 # needs convergence, so one ceiling, read at call time (tests lower it).
 CC_MAX_ITER = 50
 
+# Size gate of the driver-local paths — the broadcast-join threshold
+# analog: below it, the whole canon dictionary/link/cascade/CC chain
+# runs as one driver computation instead of ~15 driver-sequenced
+# small-stage Spark jobs (measured ~8s of pure serial window at
+# local[32], ~13s at executor-count-scaling protocols, on a surface set
+# of only ~75k rows — THE Amdahl term that held N->4N efficiency at
+# 0.74), and connected_components runs union-find over edge sets under
+# it. Above the gate the distributed paths run and the window scales
+# with executors. Read at call time, so a test can lower it to force
+# the distributed paths.
+CANON_LOCAL_MAX_SURFACES = 250_000
+
 
 def _lineage_cut(df: DataFrame, checkpoint_dir: str | None) -> DataFrame:
     if checkpoint_dir is not None:
@@ -53,13 +65,25 @@ def connected_components(edges: DataFrame, checkpoint_dir: str | None = None) ->
     """(node, component) with component = min node id in the component.
 
     ``edges`` (src, dst) is treated as undirected; node ids are strings
-    ordered lexicographically (deterministic representative selection).
-    Convergence is tested every 4 rounds (each test is a driver
-    round-trip) and lineage is cut every 8 (see module docstring).
+    ordered lexicographically (deterministic representative selection);
+    self-loops and NULL endpoints add no node. Up to
+    ``CANON_LOCAL_MAX_SURFACES`` edges run union-find on the driver.
+    Beyond, label propagation tests convergence every 4 rounds (each a
+    driver round-trip) and cuts lineage every 8 (see module docstring).
     Raises ``RuntimeError`` when labels still change in round
     ``CC_MAX_ITER``: truncated labels would map nodes onto
     non-representatives.
     """
+    import pandas as pd
+
+    pdf = edges.select("src", "dst").limit(CANON_LOCAL_MAX_SURFACES + 1).toPandas()
+    if len(pdf) <= CANON_LOCAL_MAX_SURFACES:
+        pdf = pdf.dropna().query("src != dst")
+        comps = union_find_components(zip(pdf["src"], pdf["dst"]))
+        rows = [(n, min(members)) for members in comps for n in members]
+        return edges.sparkSession.createDataFrame(
+            pd.DataFrame(rows, columns=["node", "component"]), "node string, component string"
+        )
     sym = (
         edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .union(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
@@ -119,18 +143,6 @@ def vote_surfaces(votes: DataFrame) -> DataFrame:
     )
     return ent.union(slot).distinct()
 
-
-# Size gate for the driver-local canon-map fast path — the broadcast-
-# join threshold analog: below it, the whole dictionary/link/cascade/CC
-# chain runs as one driver computation instead of ~15 driver-sequenced
-# small-stage Spark jobs (measured ~8s of pure serial window at
-# local[32], ~13s at executor-count-scaling protocols, on a surface set
-# of only ~75k rows — THE Amdahl term that held N->4N efficiency at
-# 0.74). Above the gate (real corpora: surfaces grow with data) the
-# distributed path runs and the window scales with executors instead of
-# being fixed. Read at call time, so a test can lower it to force the
-# distributed path.
-CANON_LOCAL_MAX_SURFACES = 250_000
 
 # J8 candidate-block cap and sorted-neighborhood width (``_blocks``,
 # ``_block_pairs``): blocks over MAX_BLOCK re-key by their extended key;
@@ -217,10 +229,11 @@ def _local_cascade_edges(surfaces: list[tuple[str, str]]) -> list[tuple[str, str
     ]
 
 
-def union_find_components(edges) -> dict:
-    """node -> its component's minimum node, over undirected ``edges``
-    (pairs of comparable node ids); the driver-side connected
-    components of the canon map and the BayesNet factor graph."""
+def union_find_components(edges) -> list[list]:
+    """The member lists of the connected components over undirected
+    ``edges`` (pairs of comparable node ids): the driver kernel of
+    ``connected_components``, the canon map and the BayesNet factor
+    graph."""
     parent: dict = {}
 
     def find(x):
@@ -238,7 +251,7 @@ def union_find_components(edges) -> dict:
     comp: dict = {}
     for n in parent:
         comp.setdefault(find(n), []).append(n)
-    return {n: min(members) for members in comp.values() for n in members}
+    return list(comp.values())
 
 
 def build_canon_map_local(
@@ -263,17 +276,10 @@ def build_canon_map_local(
             directed.append((s, dst))
     linked = _local_wikidict_link(sorted(set(names)), alias_rows)
     directed += [(s, c) for s, c in linked.items()]
-    comp = union_find_components(directed + _local_cascade_edges(surfaces))
-    sources = {s for s, _d in directed}
-    targets = {d for _s, d in directed}
-    pure = targets - sources
-    by_comp: dict[str, list[str]] = {}
-    for n, c in comp.items():
-        by_comp.setdefault(c, []).append(n)
+    pure = {d for _s, d in directed} - {s for s, _d in directed}
     rows: list[tuple[str, str]] = []
-    for c, members in by_comp.items():
-        pure_members = [m for m in members if m in pure]
-        rep = min(pure_members) if pure_members else c
+    for members in union_find_components(directed + _local_cascade_edges(surfaces)):
+        rep = min([m for m in members if m in pure] or members)
         rows.extend((n, rep) for n in members if n != rep)
     if not rows:
         return spark.createDataFrame([], "node string, rep string")

@@ -151,7 +151,7 @@ def feature_count_filter(features: DataFrame) -> DataFrame:
     return features.join(F.broadcast(frequent), "feature", "left_semi")
 
 
-def train_weights_df(labeled_features: DataFrame, weight_col: str | None = None) -> DataFrame:
+def train_weights_df(labeled_features: DataFrame) -> DataFrame:
     """(feature, relation, weight) log-odds table, fully distributed.
 
     One hash aggregation on (feature, relation) + a window over feature
@@ -160,14 +160,13 @@ def train_weights_df(labeled_features: DataFrame, weight_col: str | None = None)
     a 100 TB scale-killer: the pre-threshold feature vocabulary is
     unbounded). Apply ``feature_count_filter`` (A8) upstream.
 
-    With ``weight_col`` the counts are fractional — each row contributes
-    its posterior mass instead of 1 (the soft-EM M-step).
+    Each row counts its ``wt`` mass: 1.0 for a hard label, the
+    posterior in the soft-EM M-step.
     """
     from pyspark.sql import Window
 
-    n_expr = F.count("*") if weight_col is None else F.sum(weight_col)
     counts = labeled_features.groupBy("feature", "relation").agg(
-        n_expr.alias("n")
+        F.sum("wt").alias("n")
     )
     total = F.sum("n").over(Window.partitionBy("feature"))
     return counts.select(
@@ -233,21 +232,22 @@ def miml_train(
     )
     w_m = Window.partitionBy(*MENTION_KEY)
 
-    def refit(assign: DataFrame, weighted: bool) -> DataFrame:
-        cols = ["feature", F.col("z").alias("relation")]
-        if weighted:
-            cols.append("wt")
-        labeled = features.join(assign, MENTION_KEY).select(*cols)
-        return train_weights_df(labeled, weight_col="wt" if weighted else None)
+    def refit(assign: DataFrame) -> DataFrame:
+        labeled = features.join(assign, MENTION_KEY).select(
+            "feature", F.col("z").alias("relation"), "wt"
+        )
+        return train_weights_df(labeled)
 
     init = mentions.join(labels, BAG_KEY, "left").select(
-        *MENTION_KEY, F.coalesce(F.col("relation"), F.lit(NIL)).alias("z")
+        *MENTION_KEY,
+        F.coalesce(F.col("relation"), F.lit(NIL)).alias("z"),
+        F.lit(1.0).alias("wt"),
     )
     # the weight table is tiny (post-A8 features x relations) but its
     # lineage doubles per epoch (scores join the previous round's
     # weights); one eager cut per round keeps the final collect from
     # replaying the whole EM history
-    weights = refit(init, weighted=False).localCheckpoint(eager=True)
+    weights = refit(init).localCheckpoint(eager=True)
 
     for _ in range(epochs):
         scores = (
@@ -269,5 +269,5 @@ def miml_train(
             forced.select(*MENTION_KEY).distinct(), MENTION_KEY, "left_anti"
         ).select(*MENTION_KEY, F.col("relation").alias("z"), "wt")
         assign = forced.withColumn("wt", F.lit(1.0)).unionByName(rest)
-        weights = refit(assign, weighted=True).localCheckpoint(eager=True)
+        weights = refit(assign).localCheckpoint(eager=True)
     return weights

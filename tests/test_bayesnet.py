@@ -154,3 +154,28 @@ def test_spark_clustered_map_inference(spark):
     assert not kept.novel and abs(kept.score - 0.95) < 1e-6
     assert ("Zed", "per:country_of_birth", "Peru") in out
     assert not any(rel.startswith("geo:") for _e, rel, _s in out)
+
+
+def test_map_clustering_same_rows_under_both_cc_kernels(spark, monkeypatch):
+    """``infer_map_triples`` clusters through ``connected_components``:
+    over one materialized copy of the sf0.001 triples, the driver union-find
+    kernel and label propagation (gate 0, patched around the BayesNet
+    call only) give the same MAP rows. ``bayesnet_map`` has no SQL
+    oracle, so this pins its clustering."""
+    from conftest import SF_DIR
+
+    from stanford_relation_extractor_spark.operators import canonicalize
+    from stanford_relation_extractor_spark.operators.worldknowledge import geo_cities_df
+    from stanford_relation_extractor_spark.plans.pipeline import build_stages
+
+    triples = build_stages(spark, SF_DIR)["triples"].localCheckpoint(eager=True)
+    geo = geo_cities_df(spark, SF_DIR)
+
+    def rows():
+        return sorted(tuple(r) for r in infer_map_triples(triples, geo, spark).collect())
+
+    driver = rows()
+    with monkeypatch.context() as m:
+        m.setattr(canonicalize, "CANON_LOCAL_MAX_SURFACES", 0)
+        assert rows() == driver
+    assert len(driver) > 100

@@ -1,8 +1,9 @@
 """Round-2 scale-fix coverage (VERDICT.md 'What's wrong' items):
 
 * distributed weight estimation (no driver collect of raw counts),
-* label-propagation connected components: brute-force parity, a loud
-  failure when not converged, reliable checkpointing,
+* connected components: brute-force parity, a loud failure when label
+  propagation does not converge, reliable checkpointing, and the
+  driver union-find kernel row-identical to label propagation,
 * frequency-capped prefix blocking (hot-block skew guard),
 * parquet spool scratch: reaped, and read back without an inference job.
 """
@@ -27,7 +28,9 @@ def test_train_weights_df_matches_log_odds(spark):
         + [("f_b", "per:age")] * 2
         + [("f_b", "NIL")] * 8
     )
-    labeled = spark.createDataFrame(rows, "feature string, relation string")
+    labeled = spark.createDataFrame(
+        [(f, r, 1.0) for f, r in rows], "feature string, relation string, wt double"
+    )
     wdf = {(r["feature"], r["relation"]): r["weight"] for r in train_weights_df(labeled).collect()}
     assert wdf[("f_a", "per:age")] == round(math.log(9.5 / 1.5), 6)
     assert wdf[("f_b", "per:age")] == round(math.log(2.5 / 8.5), 6)
@@ -53,10 +56,14 @@ def _brute_components(edges: list[tuple[str, str]]) -> dict[str, str]:
     return {n: min(members) for root, members in comp.items() for n in members}
 
 
-def test_cc_star_matches_label_and_bruteforce(spark):
+def test_cc_star_matches_label_and_bruteforce(spark, monkeypatch):
+    from stanford_relation_extractor_spark.operators import canonicalize
     from stanford_relation_extractor_spark.operators.canonicalize import (
         connected_components,
     )
+
+    # gate 0: label propagation (the driver kernel has its own parity test)
+    monkeypatch.setattr(canonicalize, "CANON_LOCAL_MAX_SURFACES", 0)
 
     # deterministic pseudo-random graph: chains + merges + isolated pairs
     edges = []
@@ -81,6 +88,7 @@ def test_cc_star_converges_on_deep_chain_in_log_rounds(spark, monkeypatch):
     must fail loudly rather than come back as components."""
     from stanford_relation_extractor_spark.operators import canonicalize
 
+    monkeypatch.setattr(canonicalize, "CANON_LOCAL_MAX_SURFACES", 0)
     monkeypatch.setattr(canonicalize, "CC_MAX_ITER", 10)
     edges = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(64)]
     df = spark.createDataFrame(edges, "src string, dst string")
@@ -88,10 +96,13 @@ def test_cc_star_converges_on_deep_chain_in_log_rounds(spark, monkeypatch):
         canonicalize.connected_components(df)
 
 
-def test_cc_reliable_checkpoint(spark, tmp_path):
+def test_cc_reliable_checkpoint(spark, tmp_path, monkeypatch):
+    from stanford_relation_extractor_spark.operators import canonicalize
     from stanford_relation_extractor_spark.operators.canonicalize import (
         connected_components,
     )
+
+    monkeypatch.setattr(canonicalize, "CANON_LOCAL_MAX_SURFACES", 0)
 
     edges = [("a", "b"), ("b", "c"), ("d", "e")]
     df = spark.createDataFrame(edges, "src string, dst string")
@@ -102,6 +113,45 @@ def test_cc_reliable_checkpoint(spark, tmp_path):
         ).collect()
     }
     assert out == {"a": "a", "b": "a", "c": "a", "d": "d", "e": "d"}
+
+
+def test_cc_driver_kernel_matches_label_propagation(spark, monkeypatch):
+    """Under the size gate ``connected_components`` runs union-find on
+    the driver; its rows equal label propagation's (gate 0) on seeded
+    random graphs with self-loops, a NULL endpoint, and duplicate and
+    reversed edges, and a small call costs one probe job."""
+    import random
+
+    from conftest import spark_jobs
+
+    from stanford_relation_extractor_spark.operators import canonicalize
+
+    def rows(df):
+        return sorted(tuple(r) for r in canonicalize.connected_components(df).collect())
+
+    for seed in range(3):
+        rng = random.Random(seed)
+        nodes = [f"v{i:03d}" for i in range(60)]
+        edges = [tuple(rng.sample(nodes, 2)) for _ in range(45)]
+        edges += [(b, a) for a, b in edges[:5]] + edges[5:10]  # reversed, duplicate
+        edges += [("v000", "v000"), ("loop", "loop"), ("v001", None), (None, None)]
+        df = spark.createDataFrame(edges, "src string, dst string")
+        driver = rows(df)
+        with monkeypatch.context() as m:
+            m.setattr(canonicalize, "CANON_LOCAL_MAX_SURFACES", 0)
+            assert driver == rows(df)
+        assert "loop" not in {n for n, _c in driver}
+
+    small = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("d", "e"), ("c", "a"), ("f", "f")],
+        "src string, dst string",
+    )
+    with spark_jobs(spark) as jobs:
+        out = canonicalize.connected_components(small)
+    assert jobs.count == 1
+    assert sorted(tuple(r) for r in out.collect()) == [
+        ("a", "a"), ("b", "a"), ("c", "a"), ("d", "d"), ("e", "d"),
+    ]
 
 
 def test_prefix_block_hot_block_capped(spark, monkeypatch):
